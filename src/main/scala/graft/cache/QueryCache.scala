@@ -574,33 +574,8 @@ final class ParquetQueryCache(rootDir: String,
     // the loser's directory becomes an orphan collected by cleanup below)
     val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val dataPath = new Path(dir, dataDir)
-    // state files carry their own timestamp type regardless of session
-    // defaults: Spark still defaults parquet timestamps to INT96, which
-    // has NO column statistics — a replay-side bucket-range filter
-    // (range subsumption, the late re-scan band) could then never
-    // row-group-prune large state. Same discipline as Layouts writes.
-    // The override rides an ISOLATED cloned session, not a set/restore on
-    // the shared one: a concurrent query's parquet write inside the
-    // window would silently inherit the override, and two overlapping
-    // puts could restore in the wrong order and corrupt the session conf
-    // permanently.
-    // size-coalesced state files: aggregated state is orders of magnitude
-    // smaller than its input, but the final stage inherits the session's
-    // shuffle-partition count, and AQE's parallelismFirst default keeps
-    // those tiny partitions for CPU spread — so a few-hundred-row state
-    // wrote one near-empty parquet file PER PARTITION (32 here), paying
-    // task-commit latency on the write and per-file open cost on every
-    // later state read. parallelismFirst=false makes AQE coalesce the
-    // pre-write shuffle to its advisory byte size instead — one file for
-    // KB-scale state, and still one task per ~64 MB for genuinely large
-    // row-grain states (size-derived, not a core-count tune).
-    org.apache.spark.sql.graftshim.Shims.withIsolatedConf(spark,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") { s =>
-      org.apache.spark.sql.graftshim.Shims.ofRows(s,
-        org.apache.spark.sql.graftshim.Shims.queryExecution(state).logical)
-        .write.mode("overwrite").parquet(dataPath.toString)
-    }
+    // timestamp type and file sizing: see writeState
+    val rows = writeState(state, dataPath)
     // source tables persisted in the meta: invalidateForTable then works
     // from ANY process, not just the writer's (the state plan reads the
     // source table on both cold and warm runs; the cache's own replay
@@ -630,7 +605,10 @@ final class ParquetQueryCache(rootDir: String,
       .getOrElse(("", Seq.empty))
     writeMetaAtomic(fs, dir,
       Meta(timestampMicros, dataDir, state.schema, srcPaths,
-        fingerprint, baseFp, measures), version)
+        fingerprint, baseFp, measures,
+        // the full state's row count, so the first putAppend after this
+        // put (a compaction, on an append chain) reads no footer of it
+        segRows = if (rows >= 0) Seq(dataDir -> rows) else Nil), version)
     // DEFERRED cleanup: a reader that resolved the previous meta — or a
     // long warm scan still streaming an older data-<v> — must not get
     // FileNotFound mid-read. Superseded versions stay on disk until they
@@ -641,8 +619,53 @@ final class ParquetQueryCache(rootDir: String,
     spark.read.schema(state.schema).parquet(dataPath.toString)
   }
 
+  /** Write one state segment to `path` and return its row count (-1 if
+    * unknown), taken from the write itself, not from its footers.
+    *
+    * State files carry their own timestamp type regardless of session
+    * defaults: Spark still defaults parquet timestamps to INT96, which
+    * has NO column statistics — a replay-side bucket-range filter (range
+    * subsumption, the late re-scan band) could then never row-group-prune
+    * large state. Same discipline as Layouts writes. The override rides
+    * an ISOLATED cloned session, not a set/restore on the shared one: a
+    * concurrent query's parquet write inside the window would silently
+    * inherit the override, and two overlapping writes could restore in
+    * the wrong order and corrupt the session conf permanently.
+    *
+    * Size-coalesced state files: aggregated state is orders of magnitude
+    * smaller than its input, but the final stage inherits the session's
+    * shuffle-partition count, and AQE's parallelismFirst default keeps
+    * those tiny partitions for CPU spread — so a few-hundred-row state
+    * wrote one near-empty parquet file PER PARTITION (32 here), paying
+    * task-commit latency on the write and per-file open cost on every
+    * later state read. parallelismFirst=false makes AQE coalesce the
+    * pre-write shuffle to its advisory byte size instead — one file for
+    * KB-scale state, and still one task per ~64 MB for genuinely large
+    * row-grain states (size-derived, not a core-count tune). It acts
+    * only where AQE is on: the executor's warm-commit confs turn AQE off,
+    * and their shuffle-partition count then sets the file count.
+    * `adaptive` turns AQE back on for the write, so it coalesces by size
+    * whatever the caller's confs: append segments take it (a segment
+    * written as one file per shuffle partition multiplied the files every
+    * answer over the chain opens; paired runs were faster with it). Full
+    * puts keep the caller's choice (forcing AQE there made probe-served
+    * ad-hoc commits slower). */
+  private def writeState(df: DataFrame, path: Path,
+      adaptive: Boolean = false): Long =
+    org.apache.spark.sql.graftshim.Shims.withIsolatedConf(df.sparkSession,
+      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") ++
+        (if (adaptive) Seq("spark.sql.adaptive.enabled" -> "true")
+         else Nil): _*) { s =>
+      org.apache.spark.sql.graftshim.Shims.writeParquet(
+        org.apache.spark.sql.graftshim.Shims.ofRows(s,
+          org.apache.spark.sql.graftshim.Shims.queryExecution(df).analyzed),
+        path.toString)
+    }
+
   /** footer-derived row count of one segment (driver-side, no Spark
-    * job); -1 = unknown */
+    * job); -1 = unknown. Only for segments whose meta carries no count
+    * (written before counts were recorded). */
   private def footerRows(fs: org.apache.hadoop.fs.FileSystem,
       conf: org.apache.hadoop.conf.Configuration, dir: Path,
       seg: String): Long = try {
@@ -683,23 +706,18 @@ final class ParquetQueryCache(rootDir: String,
     val version = math.max(timestampMicros, old.version + 1)
     val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val dataPath = new Path(dir, dataDir)
-    // same size-coalesced write discipline as put() above: a delta
-    // segment is small by construction (one refresh band's aggregate)
-    org.apache.spark.sql.graftshim.Shims.withIsolatedConf(spark,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") { s =>
-      org.apache.spark.sql.graftshim.Shims.ofRows(s,
-        org.apache.spark.sql.graftshim.Shims.queryExecution(delta).logical)
-        .write.mode("overwrite").parquet(dataPath.toString)
-    }
+    // a delta segment is small by construction (one refresh band's
+    // aggregate): one size-coalesced file, even under AQE-off commit confs
+    val written = writeState(delta, dataPath, adaptive = true)
     // an all-empty delta (a no-op refresh) must not grow the chain — an
     // empty segment per refresh would force a full-view compaction every
-    // appendChainMax refreshes of an UNCHANGED view. The written files'
-    // parquet footers give the row count driver-side, no Spark job; on
+    // appendChainMax refreshes of an UNCHANGED view. The write's own
+    // row count decides (footers only if the write reported none); on
     // zero the segment is dropped, no meta commits, and the watermark
     // intentionally stays put (the next delta scan prunes to the same
     // nothing).
-    val deltaRows = footerRows(fs, conf, dir, dataDir)
+    val deltaRows =
+      if (written >= 0) written else footerRows(fs, conf, dir, dataDir)
     if (deltaRows == 0L) {
       try fs.delete(dataPath, true) catch { case _: Exception => () }
       val paths = old.allDataDirs.map(d => new Path(dir, d).toString)
@@ -830,21 +848,15 @@ final class ParquetQueryCache(rootDir: String,
     // refresh, the band part is the declared tolerance.
     if (keep.size + 2 >= appendChainMax) return None // full put compacts
     val version = math.max(timestampMicros, old.version + 1)
-    val floorCol = org.apache.spark.sql.graftshim.Shims.column(
-      org.apache.spark.sql.catalyst.expressions.Literal(floorMicros,
-        org.apache.spark.sql.types.TimestampType))
+    val floorCol = graft.plans.RunBound.timestamp(floorMicros)
+    // settled/band segments are state-sized, not input-sized; each
+    // write's row count is learned from the write (footers as fallback)
+    val writtenRows = scala.collection.mutable.Map.empty[String, Long]
     def writeSeg(df: DataFrame, tag: String): String = {
       val name =
         s"data-$version-$tag${java.util.UUID.randomUUID.toString.take(8)}"
-      // same size-coalesced write discipline as put(): settled/band
-      // segments are state-sized, not input-sized
-      org.apache.spark.sql.graftshim.Shims.withIsolatedConf(spark,
-        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") { s =>
-        org.apache.spark.sql.graftshim.Shims.ofRows(s,
-          org.apache.spark.sql.graftshim.Shims.queryExecution(df).logical)
-          .write.mode("overwrite").parquet(new Path(dir, name).toString)
-      }
+      val n = writeState(df, new Path(dir, name))
+      writtenRows(name) = if (n >= 0) n else footerRows(fs, conf, dir, name)
       name
     }
     val settledDir: Option[String] = if (straddle.isEmpty) None else {
@@ -853,7 +865,7 @@ final class ParquetQueryCache(rootDir: String,
           .parquet(straddle.map(x => new Path(dir, x).toString): _*)
           .filter(col(temporalCol) < floorCol || col(temporalCol).isNull),
         "s")
-      if (footerRows(fs, conf, dir, d) == 0L) { // straddlers held only band rows
+      if (writtenRows(d) == 0L) { // straddlers held only band rows
         try fs.delete(new Path(dir, d), true) catch { case _: Exception => () }
         None
       } else Some(d)
@@ -864,7 +876,7 @@ final class ParquetQueryCache(rootDir: String,
     // chain toward a pointless compaction (same hazard putAppend guards
     // against)
     if (settledDir.isEmpty && straddle.isEmpty &&
-        footerRows(fs, conf, dir, bandDir) == 0L) {
+        writtenRows(bandDir) == 0L) {
       try fs.delete(new Path(dir, bandDir), true)
       catch { case _: Exception => () }
       val paths = old.allDataDirs.map(d => new Path(dir, d).toString)
@@ -876,7 +888,7 @@ final class ParquetQueryCache(rootDir: String,
     val segMax = tail.flatMap(s => resolved.get(s).flatten.orElse(
       footerMax(s)).map(s -> _)) ++
       footerMax(bandDir).map(bandDir -> _).toSeq
-    val recordedRows = old.segRows.toMap
+    val recordedRows = old.segRows.toMap ++ writtenRows
     val segRowCounts = (tail :+ bandDir).map(s =>
       s -> recordedRows.getOrElse(s, footerRows(fs, conf, dir, s)))
       .filter(_._2 >= 0)

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.{StructType, TimestampType}
 import graft.QueryCacheConfig
 import graft.analysis.{Fingerprint, Stability, TemporalGroupBy}
 import graft.cache.CacheCapacityExceeded
+import graft.plans.RunBound
 import graft.rewrite.Decompose
 import graft.rewrite.Decompose.Decomposed
 
@@ -501,7 +502,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     // S1 strict mode: bound the caching scan above by `now` so future-dated
     // rows can't be double-counted on the next run (SURVEY §2.4 S1)
     val childDF =
-      if (config.strictUpperBound) childDF0.filter(tsCol < timestamp_micros(lit(now)))
+      if (config.strictUpperBound) childDF0.filter(tsCol < RunBound.timestamp(now))
       else childDF0
 
     val groupCols = c.agg.groupingExpressions.zipWithIndex.map {
@@ -625,7 +626,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
                     if (isStruct) col(s"$gName.start") else col(gName)
                   graft.cache.CachedState(b, cs.schema, s =>
                     cs.read(s).filter(
-                      keyCol < Shims.column(Literal(b, tDt)) ||
+                      keyCol < Shims.column(new RunBound(b, tDt)) ||
                         keyCol.isNull))
               }
           }
@@ -798,7 +799,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
                     org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>
                   n.expressions.flatMap(_.references)
               }.flatten.toSeq))
-        val newData0 = deltaForAppend.filter(tsCol >= timestamp_micros(lit(cs.timestampMicros)))
+        // the watermark is a RunBound: it changes on every refresh, and
+        // inlined as a plain literal it made the delta-scan stage's
+        // generated code new on every refresh (a compile per refresh on
+        // the driver and on every executor)
+        val wmBound = RunBound.timestamp(cs.timestampMicros)
+        val newData0 = deltaForAppend.filter(tsCol >= wmBound)
         // derived partition predicate: with a declared DATE partition
         // column (= CAST(ts AS DATE), see Layouts.writeTimeSeriesPartitioned)
         // the watermark bound implies part >= date(wm) — date() is monotone
@@ -816,8 +822,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         val newData = pcAttrOpt match {
           case Some(pcAttr) =>
             newData0.filter(Shims.column(pcAttr) >=
-              org.apache.spark.sql.functions.to_date(
-                timestamp_micros(lit(cs.timestampMicros))))
+              org.apache.spark.sql.functions.to_date(wmBound))
           case None => newData0
         }
         // repair re-scan: the covering bucket windows JOIN the append
@@ -839,17 +844,16 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
           else {
             import org.apache.spark.sql.functions.to_date
             val appendCond = {
-              val raw = tsCol >= timestamp_micros(lit(cs.timestampMicros))
+              val raw = tsCol >= wmBound
               pcAttrOpt match {
                 case Some(pcAttr) =>
-                  raw && Shims.column(pcAttr) >=
-                    to_date(timestamp_micros(lit(cs.timestampMicros)))
+                  raw && Shims.column(pcAttr) >= to_date(wmBound)
                 case None => raw
               }
             }
             deltaDF.filter(repairScanRanges.map { case (lo, hi) =>
-              val raw = tsCol >= timestamp_micros(lit(lo)) &&
-                tsCol < timestamp_micros(lit(hi))
+              val raw = tsCol >= RunBound.timestamp(lo) &&
+                tsCol < RunBound.timestamp(hi)
               pcAttrOpt match {
                 case Some(pcAttr) =>
                   raw &&
@@ -934,8 +938,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
                 c.child.output.zip(readPlan.output).map { case (oo, na) =>
                   Alias(na, oo.name)(exprId = oo.exprId) }, readPlan)
               Shims.ofRows(spark, aligned).unionByName(
-                childDF.filter(tsCol >=
-                  timestamp_micros(lit(rcs.timestampMicros))))
+                childDF.filter(tsCol >= RunBound.timestamp(rcs.timestampMicros)))
             }
           } else None
         // the partial aggregation already yields exactly one state row per

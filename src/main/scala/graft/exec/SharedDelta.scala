@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.functions.{lit, timestamp_micros, to_date}
+import org.apache.spark.sql.functions.to_date
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.storage.StorageLevel
 
@@ -253,9 +253,9 @@ object SharedDelta {
           return deltaDF
         }
         val raw = Shims.ofRows(spark, lr)
-        val bound = Shims.column(leafTs) >= timestamp_micros(lit(wmMicros))
-        val pcBound = pcAttr.map(a => Shims.column(a) >=
-          to_date(timestamp_micros(lit(wmMicros))))
+        val wm = graft.plans.RunBound.timestamp(wmMicros)
+        val bound = Shims.column(leafTs) >= wm
+        val pcBound = pcAttr.map(a => Shims.column(a) >= to_date(wm))
         val delta0 = raw.filter(pcBound.map(bound && _).getOrElse(bound))
           .select(needed.map(a => Shims.column(a)): _*)
         val par = math.max(1, spark.sparkContext.defaultParallelism)

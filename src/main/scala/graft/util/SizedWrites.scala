@@ -24,6 +24,13 @@ import org.apache.spark.sql.graftshim.Shims
   * caller's read-before-append ordering may depend on. No effect on
   * plans without an exchange (their layout is the upstream partitioning,
   * which the caller controls).
+  *
+  * The setting acts only where AQE is on. The cache's state writes use
+  * the same discipline, but the incremental executor commits warm state
+  * under its own confs (`stateConfs`: AQE off, a fixed shuffle-partition
+  * count), which override it there: a warm full put is written with one
+  * file per shuffle partition. `ParquetQueryCache.putAppend` turns AQE
+  * back on for its segment write, so an append segment is one file.
   */
 object SizedWrites {
   def sizeCoalesced(df: DataFrame): DataFrame =
