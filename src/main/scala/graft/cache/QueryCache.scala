@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Scale note: state is exchanged as a DataFrame, not rows, so a durable
   * implementation can read/write it fully distributed — the driver never
-  * has to hold the state (one row per group) in memory unless the
+  * has to hold large state (one row per group) in memory unless the
   * in-memory impl is chosen.
   */
 final case class CachedState(
@@ -450,14 +450,22 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
   * reference's "TODO disk cache" (src/cache.rs:176) / ObjectStoreQueryCache
   * (README.md:25), done Spark-style:
   *
-  *   <root>/<fp-hash>/data-<ts>/   parquet state, written DISTRIBUTED
-  *   <root>/<fp-hash>/meta.json    {timestampMicros, dataDir, schema}
+  *   <root>/<fp-hash>/data-<v>-<uuid>/   parquet state segment
+  *   <root>/<fp-hash>/meta-<v>.json      {timestampMicros, dataDirs, schema, …}
   *
   * The meta file is committed via write-temp + atomic rename, so readers
-  * either see the previous complete version or the new one. State never
-  * passes through the driver: at 100 TB / millions of groups the put is a
-  * parallel parquet write and the warm read is a parallel parquet scan
-  * that unions straight into the partial-merge aggregation.
+  * either see the previous complete version or the new one. Large state
+  * never passes through the driver: at 100 TB / millions of groups the
+  * put is a parallel parquet write and the warm read is a parallel
+  * parquet scan that unions straight into the partial-merge aggregation.
+  * SMALL state does: when both the state job's leaf-scan bytes after
+  * partition pruning and the state's collected rows fit within
+  * [[ParquetQueryCache.driverStateMaxBytes]] (a leaf of unknown size,
+  * such as a persisted scan, counts as large), the state is collected
+  * once as internal rows and written from the driver as one parquet
+  * file, and `put` answers from those rows as a local relation. A collect
+  * that passes the bound, or that `spark.driver.maxResultSize` aborts,
+  * falls back to the distributed write (see [[writeState]]).
   *
   * Global bounds (all OFF by default; the durable counterpart of
   * [[MemoryQueryCache]]'s maxEntries/ttlMs, which previously had no disk
@@ -574,8 +582,9 @@ final class ParquetQueryCache(rootDir: String,
     // the loser's directory becomes an orphan collected by cleanup below)
     val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val dataPath = new Path(dir, dataDir)
-    // timestamp type and file sizing: see writeState
-    val rows = writeState(state, dataPath)
+    // driver or distributed write, timestamp type, file sizing: see
+    // writeState
+    val written = writeState(state, dataPath)
     // source tables persisted in the meta: invalidateForTable then works
     // from ANY process, not just the writer's (the state plan reads the
     // source table on both cold and warm runs; the cache's own replay
@@ -608,7 +617,9 @@ final class ParquetQueryCache(rootDir: String,
         fingerprint, baseFp, measures,
         // the full state's row count, so the first putAppend after this
         // put (a compaction, on an append chain) reads no footer of it
-        segRows = if (rows >= 0) Seq(dataDir -> rows) else Nil), version)
+        segRows =
+          if (written.rows >= 0) Seq(dataDir -> written.rows) else Nil),
+      version)
     // DEFERRED cleanup: a reader that resolved the previous meta — or a
     // long warm scan still streaming an older data-<v> — must not get
     // FileNotFound mid-read. Superseded versions stay on disk until they
@@ -616,11 +627,41 @@ final class ParquetQueryCache(rootDir: String,
     // then are their meta + data (and any orphaned data dirs) deleted.
     try cleanup(fs, dir) catch { case _: Exception => () }
     try globalSweep(fs) catch { case _: Exception => () }
-    spark.read.schema(state.schema).parquet(dataPath.toString)
+    // rows written from the driver answer as a LocalRelation: the
+    // finalize projection folds onto it and the answer runs no job
+    written.local.fold(spark.read.schema(state.schema)
+      .parquet(dataPath.toString))(rows =>
+      org.apache.spark.sql.graftshim.Shims.localRows(spark, state.schema,
+        rows.toSeq))
   }
 
-  /** Write one state segment to `path` and return its row count (-1 if
-    * unknown), taken from the write itself, not from its footers.
+  /** Write one state segment to `path`, deciding by size.
+    *
+    * SMALL state goes through the driver. Both bounds are
+    * [[ParquetQueryCache.driverStateMaxBytes]]: the state job's leaf-scan
+    * bytes after partition pruning
+    * ([[org.apache.spark.sql.graftshim.Shims.scanBytes]]) must fit it
+    * (a leaf of unknown size, like a persisted shared delta, counts as
+    * large), and so must the bytes of the rows the collect brings back —
+    * compressed parquet input can decode to many times its size, so the
+    * input alone bounds nothing the driver holds. The state is collected
+    * once as internal rows, in one job under the caller's confs
+    * ([[org.apache.spark.sql.graftshim.Shims.collectWithin]]: tasks and
+    * driver stop holding rows past the bound), and written from the
+    * driver as ONE parquet file plus `_SUCCESS`. Spark's file-write
+    * protocol — a write job, a Hadoop conf per task, `_temporary`
+    * renames — buys nothing here: the meta rename is the only commit
+    * point. The rows come back in [[Written.local]], so `put` answers
+    * from them instead of re-reading the file. A collect that passes the
+    * bound, or that `spark.driver.maxResultSize` aborts, falls back to
+    * the distributed write (never to an uncached run), which runs the
+    * state job again: at most one job over a small input is repeated.
+    *
+    * LARGER state keeps the distributed write, whose row count comes from
+    * the write's own metric (footers only when it reports none).
+    *
+    * `keep` sees the row count first: on the driver path a refused count
+    * writes nothing, on the distributed path its files are deleted again.
     *
     * State files carry their own timestamp type regardless of session
     * defaults: Spark still defaults parquet timestamps to INT96, which
@@ -632,36 +673,72 @@ final class ParquetQueryCache(rootDir: String,
     * inherit the override, and two overlapping writes could restore in
     * the wrong order and corrupt the session conf permanently.
     *
-    * Size-coalesced state files: aggregated state is orders of magnitude
-    * smaller than its input, but the final stage inherits the session's
-    * shuffle-partition count, and AQE's parallelismFirst default keeps
-    * those tiny partitions for CPU spread — so a few-hundred-row state
-    * wrote one near-empty parquet file PER PARTITION (32 here), paying
-    * task-commit latency on the write and per-file open cost on every
-    * later state read. parallelismFirst=false makes AQE coalesce the
-    * pre-write shuffle to its advisory byte size instead — one file for
-    * KB-scale state, and still one task per ~64 MB for genuinely large
-    * row-grain states (size-derived, not a core-count tune). It acts
-    * only where AQE is on: the executor's warm-commit confs turn AQE off,
-    * and their shuffle-partition count then sets the file count.
-    * `adaptive` turns AQE back on for the write, so it coalesces by size
-    * whatever the caller's confs: append segments take it (a segment
-    * written as one file per shuffle partition multiplied the files every
-    * answer over the chain opens; paired runs were faster with it). Full
-    * puts keep the caller's choice (forcing AQE there made probe-served
+    * Size-coalesced state files (distributed path): aggregated state is
+    * orders of magnitude smaller than its input, but the final stage
+    * inherits the session's shuffle-partition count, and AQE's
+    * parallelismFirst default keeps those tiny partitions for CPU spread
+    * — so a few-hundred-row state wrote one near-empty parquet file PER
+    * PARTITION. parallelismFirst=false makes AQE coalesce the pre-write
+    * shuffle to its advisory byte size instead — still one task per
+    * ~64 MB for genuinely large row-grain states. It acts only where AQE
+    * is on: the executor's warm-commit confs turn AQE off, and their
+    * shuffle-partition count then sets the file count. `adaptive` turns
+    * AQE back on for a distributed write, so it coalesces by size
+    * whatever the caller's confs: append segments take it. Full puts
+    * keep the caller's choice (forcing AQE there made probe-served
     * ad-hoc commits slower). */
-  private def writeState(df: DataFrame, path: Path,
-      adaptive: Boolean = false): Long =
-    org.apache.spark.sql.graftshim.Shims.withIsolatedConf(df.sparkSession,
-      Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false") ++
-        (if (adaptive) Seq("spark.sql.adaptive.enabled" -> "true")
-         else Nil): _*) { s =>
-      org.apache.spark.sql.graftshim.Shims.writeParquet(
-        org.apache.spark.sql.graftshim.Shims.ofRows(s,
-          org.apache.spark.sql.graftshim.Shims.queryExecution(df).analyzed),
-        path.toString)
+  private def writeState(df: DataFrame, path: Path, adaptive: Boolean = false,
+      keep: Long => Boolean = _ => true): Written = {
+    import org.apache.spark.sql.graftshim.Shims
+    val spark = df.sparkSession
+    val confs = Seq(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
+    driverRows(df) match {
+      case Some(rows) =>
+        val kept = keep(rows.length)
+        if (kept) Shims.withIsolatedConf(spark, confs: _*)(s =>
+          Shims.writeParquetFile(s, rows.toSeq, df.schema, path.toString))
+        Written(rows.length, Some(rows), kept)
+      case None =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        val fs = path.getFileSystem(conf)
+        val n = Shims.withIsolatedConf(spark, confs ++
+            (if (adaptive) Seq("spark.sql.adaptive.enabled" -> "true")
+             else Nil): _*) { s =>
+          Shims.writeParquet(
+            Shims.ofRows(s, Shims.queryExecution(df).analyzed), path.toString)
+        } match {
+          case n if n >= 0 => n
+          case _ => footerRows(fs, conf, path.getParent, path.getName)
+        }
+        val kept = keep(n)
+        if (!kept) try fs.delete(path, true) catch { case _: Exception => () }
+        Written(n, None, kept)
     }
+  }
+
+  /** The state of `df` collected to the driver when it is small (see
+    * [[writeState]]); None → distributed write. */
+  private def driverRows(df: DataFrame)
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.graftshim.Shims
+    val limit = driverStateMaxBytes
+    if (limit <= 0 || !Shims.scanBytes(df).exists(_ <= limit)) None
+    else try {
+      val rows = Shims.collectWithin(df, limit)
+      if (rows.isEmpty) System.err.println("[query-cache] state rows " +
+        s"passed $limit bytes in the collect; writing them distributed")
+      rows
+    } catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(t =>
+            Option(t.getMessage).exists(_.contains("maxResultSize"))) =>
+        System.err.println("[query-cache] state collect aborted by " +
+          s"spark.driver.maxResultSize; writing it distributed: ${e.getMessage}")
+        None
+    }
+  }
 
   /** footer-derived row count of one segment (driver-side, no Spark
     * job); -1 = unknown. Only for segments whose meta carries no count
@@ -706,41 +783,39 @@ final class ParquetQueryCache(rootDir: String,
     val version = math.max(timestampMicros, old.version + 1)
     val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val dataPath = new Path(dir, dataDir)
-    // a delta segment is small by construction (one refresh band's
-    // aggregate): one size-coalesced file, even under AQE-off commit confs
-    val written = writeState(delta, dataPath, adaptive = true)
-    // an all-empty delta (a no-op refresh) must not grow the chain — an
-    // empty segment per refresh would force a full-view compaction every
-    // appendChainMax refreshes of an UNCHANGED view. The write's own
-    // row count decides (footers only if the write reported none); on
-    // zero the segment is dropped, no meta commits, and the watermark
-    // intentionally stays put (the next delta scan prunes to the same
-    // nothing).
-    val deltaRows =
-      if (written >= 0) written else footerRows(fs, conf, dir, dataDir)
-    if (deltaRows == 0L) {
-      try fs.delete(dataPath, true) catch { case _: Exception => () }
-      val paths = old.allDataDirs.map(d => new Path(dir, d).toString)
-      return Some(spark.read.schema(old.schema).parquet(paths: _*))
-    }
     // per-segment row counts: memoized values first, footers once for
     // legacy segments (feeds the fraction rule and future appends)
-    val recordedRows = old.segRows.toMap
-    val chainRows: Seq[(String, Long)] = old.allDataDirs.map(s =>
-      s -> recordedRows.getOrElse(s, footerRows(fs, conf, dir, s)))
+    lazy val chainRows: Seq[(String, Long)] = {
+      val recordedRows = old.segRows.toMap
+      old.allDataDirs.map(s =>
+        s -> recordedRows.getOrElse(s, footerRows(fs, conf, dir, s)))
+    }
     // delta-fraction compaction (aggregate chains): a delta this large
     // re-merges about as cheaply as it chains, and chaining it would
     // multiply answer-time state reads — decline, the caller's full put
     // compacts. Unknown counts (-1) disable the rule conservatively.
-    val declineForFraction = compactIfDeltaFraction.exists { f =>
-      val oldTotal = chainRows.map(_._2).sum
-      deltaRows > 0 && oldTotal >= 0 && chainRows.forall(_._2 >= 0) &&
-        deltaRows.toDouble >= f * (oldTotal + deltaRows)
-    }
-    if (declineForFraction) {
-      try fs.delete(dataPath, true) catch { case _: Exception => () }
-      return None
-    }
+    def declineForFraction(deltaRows: Long): Boolean =
+      compactIfDeltaFraction.exists { f =>
+        val oldTotal = chainRows.map(_._2).sum
+        deltaRows > 0 && oldTotal >= 0 && chainRows.forall(_._2 >= 0) &&
+          deltaRows.toDouble >= f * (oldTotal + deltaRows)
+      }
+    // a delta segment is small by construction (one refresh band's
+    // aggregate): one file, from the driver or size-coalesced even under
+    // AQE-off commit confs. An all-empty delta (a no-op refresh) must
+    // not grow the chain — an empty segment per refresh would force a
+    // full-view compaction every appendChainMax refreshes of an
+    // UNCHANGED view. The delta's row count decides both that and the
+    // fraction rule before anything is kept (on the driver path, before
+    // anything is written); an empty delta commits no meta and the
+    // watermark intentionally stays put (the next delta scan prunes to
+    // the same nothing).
+    val written = writeState(delta, dataPath, adaptive = true,
+      keep = n => n != 0L && !declineForFraction(n))
+    if (!written.kept) return (if (written.rows != 0L) None
+      else Some(spark.read.schema(old.schema)
+        .parquet(old.allDataDirs.map(d => new Path(dir, d).toString): _*)))
+    val deltaRows = written.rows
     writeMetaAtomic(fs, dir,
       Meta(timestampMicros, dataDir, old.schema, old.sourcePaths,
         fingerprint, old.baseFp, old.measures,
@@ -754,8 +829,11 @@ final class ParquetQueryCache(rootDir: String,
           (if (deltaRows >= 0) Seq(dataDir -> deltaRows) else Nil)),
       version)
     try cleanup(fs, dir) catch { case _: Exception => () }
-    val paths = (dataDir +: old.allDataDirs).map(d => new Path(dir, d).toString)
-    Some(spark.read.schema(old.schema).parquet(paths: _*))
+    // one scan of the whole chain, the new segment included, on both
+    // write paths: the old chain must be read anyway, and a union with
+    // the segment's rows answered slower than the single scan
+    Some(spark.read.schema(old.schema).parquet(
+      (dataDir +: old.allDataDirs).map(d => new Path(dir, d).toString): _*))
   }
 
   /** Segment-grain banded refresh — see the trait doc. Keep test: a
@@ -850,38 +928,32 @@ final class ParquetQueryCache(rootDir: String,
     val version = math.max(timestampMicros, old.version + 1)
     val floorCol = graft.plans.RunBound.timestamp(floorMicros)
     // settled/band segments are state-sized, not input-sized; each
-    // write's row count is learned from the write (footers as fallback)
+    // segment's row count is learned from its write
     val writtenRows = scala.collection.mutable.Map.empty[String, Long]
-    def writeSeg(df: DataFrame, tag: String): String = {
+    def writeSeg(df: DataFrame, tag: String,
+        keep: Long => Boolean): Option[String] = {
       val name =
         s"data-$version-$tag${java.util.UUID.randomUUID.toString.take(8)}"
-      val n = writeState(df, new Path(dir, name))
-      writtenRows(name) = if (n >= 0) n else footerRows(fs, conf, dir, name)
-      name
+      val w = writeState(df, new Path(dir, name), keep = keep)
+      writtenRows(name) = w.rows
+      Some(name).filter(_ => w.kept)
     }
-    val settledDir: Option[String] = if (straddle.isEmpty) None else {
-      val d = writeSeg(
+    // straddlers that held only band rows settle nothing
+    val settledDir: Option[String] = if (straddle.isEmpty) None else
+      writeSeg(
         spark.read.schema(old.schema)
           .parquet(straddle.map(x => new Path(dir, x).toString): _*)
           .filter(col(temporalCol) < floorCol || col(temporalCol).isNull),
-        "s")
-      if (writtenRows(d) == 0L) { // straddlers held only band rows
-        try fs.delete(new Path(dir, d), true) catch { case _: Exception => () }
-        None
-      } else Some(d)
-    }
-    val bandDir = writeSeg(bandDelta, "b")
-    // no-op refresh: nothing settled AND the band re-scan found nothing —
-    // committing an empty segment per dashboard refresh would grow the
+        "s", _ != 0L)
+    // no-op refresh: nothing straddles AND the band re-scan found nothing
+    // — committing an empty segment per dashboard refresh would grow the
     // chain toward a pointless compaction (same hazard putAppend guards
     // against)
-    if (settledDir.isEmpty && straddle.isEmpty &&
-        writtenRows(bandDir) == 0L) {
-      try fs.delete(new Path(dir, bandDir), true)
-      catch { case _: Exception => () }
-      val paths = old.allDataDirs.map(d => new Path(dir, d).toString)
-      return Some(spark.read.schema(old.schema).parquet(paths: _*))
-    }
+    val bandDir = writeSeg(bandDelta, "b", n => n != 0L || straddle.nonEmpty)
+      .getOrElse {
+        val paths = old.allDataDirs.map(d => new Path(dir, d).toString)
+        return Some(spark.read.schema(old.schema).parquet(paths: _*))
+      }
     // memoize every max this refresh learned (kept + settled segments'
     // values are final — segments are immutable) plus the band's own
     val tail = settledDir.toSeq ++ keep
@@ -992,6 +1064,13 @@ final class ParquetQueryCache(rootDir: String,
   /** delete superseded/orphaned versions past the retention window */
   private def cleanup(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Unit = {
     val entries = fs.listStatus(dir)
+    val now = System.currentTimeMillis()
+    // every deletion below needs an entry older than graceMs (metas, data
+    // dirs) or abandonedMs (temp files): with none that old — a dashboard
+    // refreshing every few seconds inside the grace window — stop here,
+    // before reading any meta
+    if (entries.forall(e =>
+        now - e.getModificationTime <= math.min(graceMs, abandonedMs))) return
     val metas = entries
       .filter(e => e.getPath.getName.startsWith("meta-") &&
         e.getPath.getName.endsWith(".json"))
@@ -1017,7 +1096,7 @@ final class ParquetQueryCache(rootDir: String,
     val liveDataDirs: Set[String] =
       keptMetas.flatMap(m => metaDataDirs.getOrElse(m._1, Nil)).toSet
     val referencedDirs: Set[String] = metaDataDirs.values.flatten.toSet
-    val cutoff = System.currentTimeMillis() - graceMs
+    val cutoff = now - graceMs
     metas.drop(keepN).foreach { case (v, e) =>
       if (e.getModificationTime < cutoff) {
         try {
@@ -1036,7 +1115,7 @@ final class ParquetQueryCache(rootDir: String,
     entries.filter(e => e.isDirectory && e.getPath.getName.startsWith("data-"))
       .foreach { e =>
         val name = e.getPath.getName
-        val age = System.currentTimeMillis() - e.getModificationTime
+        val age = now - e.getModificationTime
         lazy val completed =
           try fs.exists(new Path(e.getPath, "_SUCCESS"))
           catch { case _: Exception => false }
@@ -1051,7 +1130,7 @@ final class ParquetQueryCache(rootDir: String,
           e.getPath.getName.startsWith(".repair-"))
         && e.getPath.getName.endsWith(".tmp"))
       .foreach { e =>
-        if (System.currentTimeMillis() - e.getModificationTime > abandonedMs)
+        if (now - e.getModificationTime > abandonedMs)
           try fs.delete(e.getPath, false) catch { case _: Exception => () }
       }
   }
@@ -1220,6 +1299,22 @@ final class ParquetQueryCache(rootDir: String,
 }
 
 object ParquetQueryCache {
+  /** Largest state a commit writes from the driver (see `writeState`),
+    * in bytes of its scanned input and, again, of its collected rows. A
+    * constant, not a user option, set from paired measurements of both
+    * paths (put plus answer of row-grain states, local[4]): the driver
+    * write won every pair at 1–4 MB of rows, about half at 5 MB, and
+    * lost every pair from 6 MB on (at 48 MB it took 3.6x as long). Tests
+    * set it to 0 to take the distributed write. */
+  @volatile private[graft] var driverStateMaxBytes: Long = 4L << 20
+
+  /** One state segment's write: its row count (-1 = unknown), the rows in
+    * hand when the driver wrote them, and whether the segment was kept
+    * (a refused segment leaves no files). */
+  private final case class Written(rows: Long,
+      local: Option[Array[org.apache.spark.sql.catalyst.InternalRow]],
+      kept: Boolean)
+
   final case class Meta(timestampMicros: Long, dataDir: String,
       schema: StructType, sourcePaths: Seq[String] = Seq.empty,
       fingerprint: String = "", baseFp: String = "",

@@ -733,13 +733,14 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val repairActive = repairScanRanges.nonEmpty
 
     // (merged state, delta partials when the warm commit may CHAIN):
-    // `merged` is the full answer state; `deltaPartials` is just this
-    // run's append in state form — a putAppend-capable cache commits it
-    // as an O(append) segment instead of rewriting O(groups) state, and
-    // the answer merges the chain (the same merge the hit path already
-    // runs over state ∪ delta, so chains are sound for every whitelisted
-    // state). Banded runs never chain: the band DROPPED buckets from the
-    // effective state, and old chain segments would resurrect them.
+    // `merged` builds the full answer state (for the full put only);
+    // `deltaPartials` is just this run's append in state form — a
+    // putAppend-capable cache commits it as an O(append) segment instead
+    // of rewriting O(groups) state, and the answer merges the chain
+    // (the same merge the hit path already runs over state ∪ delta, so
+    // chains are sound for every whitelisted state). Banded runs never
+    // chain: the band DROPPED buckets from the effective state, and old
+    // chain segments would resurrect them.
     val (merged, deltaPartials) = afterRepair match {
       case Some(cs) =>
         config.cache.stats.recordHit()
@@ -839,7 +840,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         // Expand pushdown rule only moves filters whose references are
         // child passthrough attributes — a unioned grouping-set repair
         // branch would silently re-scan the whole history.
-        val newDataR =
+        // Lazy, like `state` and `mergedState` below: only the full put
+        // runs the merged state, so a chained commit never lists the
+        // chain for it nor analyzes its plan.
+        lazy val newDataR =
           if (!repairActive) newData
           else {
             import org.apache.spark.sql.functions.to_date
@@ -870,7 +874,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         // skipping the separate partial-aggregate exchange+stage; merge
         // over units equals merge over partials by the StateSpec.unit
         // contract. HLL states have no unit form and take the 2-agg path.
-        val state =
+        lazy val state =
           if (stateSpecs.forall(_.unit.isDefined)) {
             val unitCols = groupCols ++ stateSpecs.map(s =>
               s.unit.get.cast(Decompose.nullTolerant(
@@ -878,7 +882,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
             cs.read(spark).unionByName(newDataR.select(unitCols: _*))
           } else cs.read(spark).unionByName(partialState(newDataR))
         val mergeCols = stateSpecs.map(s => Decompose.mergeColumn(s, stateSchema))
-        val mergedState =
+        lazy val mergedState =
           if (groupCols.isEmpty) state.agg(mergeCols.head, mergeCols.tail: _*)
           else state.groupBy(groupCols.indices.map(j => col(s"_g$j")): _*)
             .agg(mergeCols.head, mergeCols.tail: _*)
@@ -895,7 +899,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         // offered too, but ONLY when the floor cuts on a bucket column
         // (bandRefreshKey) — they then go through refreshBand, never
         // putAppend (appending a re-read band would duplicate it).
-        (mergedState,
+        (() => mergedState,
           if (!config.aggregateStateAppend) None
           else if (repairActive) None // old segments would resurrect buckets
           else if (bandActive && bandRefreshKey.isEmpty) None
@@ -944,7 +948,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         // the partial aggregation already yields exactly one state row per
         // group, and every merge op is identity on a single row — the
         // miss path skips the merge exchange+aggregation entirely
-        (partialState(mvSrc.getOrElse(childDF)), None)
+        (() => partialState(mvSrc.getOrElse(childDF)), None)
     }
 
     // store merged state stamped with this run's start time — hit or miss
@@ -1026,9 +1030,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
           .agg(mergeCols.head, mergeCols.tail: _*)
       case None => phase("cache.put")(
         Shims.withIsolatedConf(spark, stateConfs: _*) { s =>
-          val state = phase("put.rebind")(
-            if (s eq spark) merged
-            else Shims.ofRows(s, Shims.queryExecution(merged).analyzed))
+          val state = phase("put.rebind") {
+            val m = merged()
+            if (s eq spark) m
+            else Shims.ofRows(s, Shims.queryExecution(m).analyzed)
+          }
           phase("put.store")(config.cache.put(c.fingerprint, now, state))
         })
     }

@@ -193,6 +193,130 @@ object Shims {
     }.flatten.getOrElse(-1L)
   }
 
+  /** On-disk bytes the physical plan of `df` scans: each file scan's
+    * files after partition pruning, summed over every leaf (subqueries
+    * too). None when some leaf's size is unknown — an in-memory
+    * (persisted) relation, an RDD or range, a v2 scan. Plans `df` in its
+    * own session; a later [[collectWithin]] runs that same plan. */
+  def scanBytes(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.execution._
+    def bytes(p: SparkPlan): Option[Long] = p match {
+      case a: adaptive.AdaptiveSparkPlanExec => bytes(a.executedPlan)
+      case q: adaptive.QueryStageExec => bytes(q.plan)
+      case s: FileSourceScanExec => Some(s.selectedPartitions.totalFileSize)
+      case l: LocalTableScanExec =>
+        Some(l.rows.size.toLong * (8L + l.output.map(_.dataType.defaultSize).sum))
+      // the reused exchange's own scan is counted where it first appears
+      case _: exchange.ReusedExchangeExec => Some(0L)
+      case leaf if leaf.children.isEmpty => None
+      case other =>
+        (other.children ++ other.subqueries).foldLeft(Option(0L)) {
+          (acc, c) => for (a <- acc; b <- bytes(c)) yield a + b
+        }
+    }
+    bytes(queryExecution(df).executedPlan)
+  }
+
+  /** Run `df` as ONE job in one SQL execution, the way `Dataset.collect`
+    * runs it, and return its internal rows — or None once they pass
+    * `maxBytes` (each `UnsafeRow`'s bytes plus 4 for its length). The
+    * bound is kept where the rows
+    * are made: a task stops copying its partition past it and returns
+    * nothing, and the driver drops what it holds as soon as the sum
+    * passes it, so the driver never holds more than about twice
+    * `maxBytes`, whatever `spark.driver.maxResultSize` says. */
+  def collectWithin(df: DataFrame, maxBytes: Long)
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    val qe = queryExecution(df)
+    val numFields = qe.executedPlan.output.length
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some("collect")) {
+      val rows = qe.executedPlan.execute()
+      val parts = new Array[(Int, Array[Byte])](rows.getNumPartitions)
+      var held = 0L
+      var over = false
+      rows.sparkContext.runJob(rows,
+        // a partition as (row count, length-prefixed row bytes), or None
+        // when it alone passes the bound
+        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+          val bytes = new java.io.ByteArrayOutputStream()
+          val out = new java.io.DataOutputStream(bytes)
+          val buf = new Array[Byte](4096)
+          var n = 0
+          while (it.hasNext && bytes.size <= maxBytes) {
+            val r = it.next().asInstanceOf[UnsafeRow]
+            out.writeInt(r.getSizeInBytes)
+            r.writeToStream(out, buf)
+            n += 1
+          }
+          out.flush()
+          if (bytes.size > maxBytes) None else Some((n, bytes.toByteArray))
+        },
+        (i: Int, part: Option[(Int, Array[Byte])]) => part match {
+          case Some(p @ (_, b)) if !over && held + b.length <= maxBytes =>
+            held += b.length
+            parts(i) = p
+          case _ =>
+            over = true
+            parts.indices.foreach(parts(_) = null)
+        })
+      if (over) None
+      else Some(parts.flatMap { case (n, b) =>
+        val in = new java.io.DataInputStream(
+          new java.io.ByteArrayInputStream(b))
+        Array.fill[org.apache.spark.sql.catalyst.InternalRow](n) {
+          val row = new Array[Byte](in.readInt())
+          in.readFully(row)
+          val u = new UnsafeRow(numFields)
+          u.pointTo(row, row.length)
+          u
+        }
+      })
+    }
+  }
+
+  /** Write internal rows of `schema` as ONE parquet file into the new
+    * directory `dir`, then an empty `_SUCCESS`: Spark's own parquet
+    * writer (`ParquetFileFormat.prepareWrite`), run on the driver. The
+    * writer takes its parquet settings (timestamp type, compression) from
+    * `spark`'s conf; columns are written nullable, as Spark's file writes
+    * write them. */
+  def writeParquetFile(spark: SparkSession,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType, dir: String): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    val s = spark.asInstanceOf[ClassicSparkSession]
+    s.withActive {
+      val job = Job.getInstance(s.sessionState.newHadoopConf())
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[org.apache.spark.sql.catalyst.InternalRow])
+      val dataSchema = schema.asNullable
+      val factory = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat().prepareWrite(s, job, Map.empty, dataSchema)
+      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        job.getConfiguration, new TaskAttemptID(
+          new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+      val file = new org.apache.hadoop.fs.Path(dir,
+        s"part-00000-${java.util.UUID.randomUUID}-c000" +
+          factory.getFileExtension(ctx))
+      val w = factory.newInstance(file.toString, dataSchema, ctx)
+      try rows.foreach(w.write) finally w.close()
+      val success = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+      success.getFileSystem(job.getConfiguration).create(success, true).close()
+    }
+  }
+
+  /** `rows` (internal rows of `schema`) as a DataFrame over a
+    * `LocalRelation`: answered on the driver wherever the plan above it
+    * folds onto it. */
+  def localRows(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+      rows))
+
   /** Catalyst's own predicate-pushdown rule, applied to a subtree — used
     * to push a filter that was hoisted below a custom marker node down
     * through the finalize Project / merge Aggregate to the scan (the

@@ -35,12 +35,18 @@ class CacheSpec extends AnyFunSuite {
     assert(cache.get("fp1").isEmpty)
   }
 
+  /** a ParquetQueryCache test, registered once per state-write path */
+  private def pqTest(name: String)(body: => Unit): Unit =
+    stateWritePaths.foreach { case (suffix, bound) =>
+      test(name + suffix)(withDriverStateMaxBytes(bound)(body))
+    }
+
   test("MemoryQueryCache contract")(roundTrip(new MemoryQueryCache()))
 
-  test("ParquetQueryCache contract")(
+  pqTest("ParquetQueryCache contract")(
     roundTrip(new ParquetQueryCache(tmpDir("pqcache"))))
 
-  test("ParquetQueryCache putAppend chains delta segments, compacts at the cap") {
+  pqTest("ParquetQueryCache putAppend chains delta segments, compacts at the cap") {
     import spark.implicits._
     val dir = tmpDir("pq-append")
     val c = new ParquetQueryCache(dir, appendChainMax = 3, graceMs = 0L)
@@ -140,7 +146,7 @@ class CacheSpec extends AnyFunSuite {
     assert(forever.get("fp").nonEmpty)
   }
 
-  test("ParquetQueryCache defers deletion of superseded versions") {
+  pqTest("ParquetQueryCache defers deletion of superseded versions") {
     val dir = tmpDir("pqdefer")
     val fsPath = new org.apache.hadoop.fs.Path(dir)
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -166,7 +172,160 @@ class CacheSpec extends AnyFunSuite {
     assert(tight.get("fp").get.timestampMicros == 4L)
   }
 
-  test("ParquetQueryCache evicts least-recently-written entries past maxEntries") {
+  test("ParquetQueryCache commits inside the grace window read no meta " +
+      "during cleanup") {
+    val root = s"${OpenCountingFs.Scheme}://${tmpDir("pq-cleanup")}"
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${OpenCountingFs.Scheme}.impl", classOf[OpenCountingFs].getName)
+    val c = new ParquetQueryCache(root, appendChainMax = 4)
+    import spark.implicits._
+    def rows(r: Range) = r.map(i => (i.toLong, s"v$i")).toDF("id", "s")
+    OpenCountingFs.reset()
+    c.put("fp", 1L, rows(0 until 3))
+    (2 to 4).foreach(v => assert(c.putAppend("fp", v.toLong,
+      rows(v * 10 until v * 10 + 2)).isDefined))
+    c.put("fp", 5L, rows(0 until 9))
+    c.put("fp", 6L, rows(0 until 9))
+    // each commit after the first reads the head meta it builds on, once;
+    // inside the grace window cleanup reads none
+    assert(OpenCountingFs.metaOpens.get == 5,
+      s"${OpenCountingFs.metaOpens.get} meta reads for 6 commits")
+    assert(c.get("fp").get.read(spark).count() == 9)
+  }
+
+  test("ParquetQueryCache writes small state from the driver as one file " +
+      "with TIMESTAMP_MICROS stats and its row count; input over the " +
+      "bound or of unknown size goes distributed") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("pq-paths")
+    val c = new ParquetQueryCache(dir)
+    def dayCounts = Tables.events(spark, sf0001)
+      .groupBy(date_trunc("day", col("ts")).as("_g0"))
+      .agg(count(lit(1)).as("_s0_cnt"))
+    val state = dayCounts
+    def fromDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+      org.apache.spark.sql.graftshim.Shims.queryExecution(df).analyzed
+        .collectFirst { case _: LocalRelation => () }.isDefined
+    val entry = new java.io.File(dir, graft.cache.QueryCache.keyHash("fp"))
+    def headSeg(): java.io.File = {
+      val head = entry.listFiles().map(_.getName)
+        .filter(n => n.startsWith("meta-") && n.endsWith(".json"))
+        .maxBy(_.stripPrefix("meta-").stripSuffix(".json").toLong)
+      val json = new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(entry, head).toPath))
+      new java.io.File(entry,
+        json.split("\"dataDir\":\"").last.takeWhile(_ != '"'))
+    }
+    val expect = state.collect().map(_.toString).sorted.toSeq
+    val stored = c.put("fp", 1L, state)
+    assert(fromDriver(stored), "small state was not answered from its rows")
+    assert(stored.collect().map(_.toString).sorted.toSeq == expect)
+    val seg = headSeg()
+    val parquet = seg.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(parquet.length == 1 && new java.io.File(seg, "_SUCCESS").exists,
+      seg.listFiles().map(_.getName).toSeq)
+    // the footer carries micros timestamps with min/max stats on the
+    // bucket column: the refreshBand keep test reads them
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(parquet.head.toURI),
+      spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val footer = r.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      assert(schema.getType(schema.getFieldIndex("_g0"))
+        .getLogicalTypeAnnotation == org.apache.parquet.schema
+        .LogicalTypeAnnotation.timestampType(true,
+          org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS))
+      val st = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == "_g0").map(_.getStatistics)
+      val days = state.select(expr("unix_micros(_g0)")).collect()
+        .map(_.getLong(0))
+      assert(st.nonEmpty && st.forall(_.hasNonNullValue))
+      assert(st.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue)
+        .min == days.min)
+      assert(st.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+        .max == days.max)
+    } finally r.close()
+    // the recorded segment row count is the segment's row count
+    val metaJson = entry.listFiles().filter(_.getName.startsWith("meta-"))
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath)))
+      .mkString
+    assert(metaJson.contains(s"${seg.getName}|${expect.size}\""), metaJson)
+    assert(spark.read.parquet(seg.toString).count() == expect.size)
+    // input over the bound: the distributed write, answered from files
+    withDriverStateMaxBytes(Some(1024L)) {
+      val big = c.put("fp", 2L, state)
+      assert(!fromDriver(big), "input over the bound took the driver path")
+      assert(big.collect().map(_.toString).sorted.toSeq == expect)
+    }
+    // a persisted input (the in-memory relation a SharedDelta scan
+    // plans) has no known scan size: distributed too
+    val persisted = dayCounts.persist()
+    try {
+      persisted.count()
+      val p = c.put("fp", 3L, persisted)
+      assert(!fromDriver(p), "a persisted input took the driver path")
+      assert(p.collect().map(_.toString).sorted.toSeq == expect)
+    } finally { persisted.unpersist(); () }
+  }
+
+  test("ParquetQueryCache bounds the driver path by the bytes it collects, " +
+      "not only by its input, with spark.driver.maxResultSize unlimited") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.graftshim.Shims
+    // a row-grain state whose parquet input is a few KB (dictionary +
+    // run-length encoded) but whose decoded rows are ~700 KB
+    val table = tmpDir("pq-rowgrain")
+    spark.range(0, 20000).select((col("id") % 10).as("k"),
+      lit("constant").as("s")).write.mode("overwrite").parquet(table)
+    val state = spark.read.parquet(table)
+    val inputBytes = Shims.scanBytes(state).get
+    // the collect's measure: each row's bytes plus its 4-byte length
+    val rowBytes = Shims.queryExecution(state).toRdd
+      .map(_.asInstanceOf[UnsafeRow].getSizeInBytes + 4L).sum().toLong
+    assert(inputBytes * 10 < rowBytes, s"$inputBytes B in, $rowBytes B rows")
+    val expect = state.collect().map(_.toString).sorted.toSeq
+    val c = new ParquetQueryCache(tmpDir("pq-rowgrain-cache"))
+    def fromDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+      Shims.queryExecution(df).analyzed
+        .collectFirst { case _: LocalRelation => () }.isDefined
+    org.apache.spark.DriverConfForTests.withMaxResultSize(
+        spark.sparkContext, "0") {
+      // rows exactly at the bound: the driver path
+      val at = withDriverStateMaxBytes(Some(rowBytes))(c.put("fp", 1L, state))
+      assert(fromDriver(at), "state at the bound did not take the driver path")
+      assert(at.collect().map(_.toString).sorted.toSeq == expect)
+      // one byte under the rows, far over the input: distributed
+      val over =
+        withDriverStateMaxBytes(Some(rowBytes - 1))(c.put("fp", 2L, state))
+      assert(!fromDriver(over), "rows over the bound took the driver path")
+      assert(over.collect().map(_.toString).sorted.toSeq == expect)
+    }
+    assert(c.get("fp").get.read(spark).count() == expect.size)
+  }
+
+  test("ParquetQueryCache: a state collect aborted by spark.driver." +
+      "maxResultSize falls back to the distributed write") {
+    val c = new ParquetQueryCache(tmpDir("pq-maxresult"))
+    // ~1k groups: far more than 2 KiB of collected rows, while each task
+    // of the distributed write returns a few hundred bytes
+    val state = Tables.events(spark, sf0001)
+      .groupBy(col("event_id").as("_g0")).agg(count(lit(1)).as("_s0_cnt"))
+    val expect = state.collect().map(_.toString).sorted.toSeq
+    val stored = org.apache.spark.DriverConfForTests.withMaxResultSize(
+      spark.sparkContext, "2k")(c.put("fp", 1L, state))
+    assert(org.apache.spark.sql.graftshim.Shims.queryExecution(stored)
+      .analyzed.collectFirst {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
+      }.isEmpty, "the aborted collect still answered from driver rows")
+    assert(stored.collect().map(_.toString).sorted.toSeq == expect)
+    assert(c.get("fp").get.read(spark).count() == expect.size)
+  }
+
+  pqTest("ParquetQueryCache evicts least-recently-written entries past maxEntries") {
     val dir = tmpDir("pq-evict")
     val c = new ParquetQueryCache(dir, maxEntries = 2, sweepIntervalMs = 0L)
     val one = stateDF.limit(1)
@@ -228,7 +387,7 @@ class CacheSpec extends AnyFunSuite {
     assert(hit.read(spark).count() == stateDF.count())
   }
 
-  test("ParquetQueryCache: concurrent same-fp writers with a live reader") {
+  pqTest("ParquetQueryCache: concurrent same-fp writers with a live reader") {
     // the versioned-meta + per-writer-data-dir + deferred-deletion design
     // claims: two sessions putting the SAME fingerprint while a third
     // reads can never hand the reader a torn or missing version. Writers

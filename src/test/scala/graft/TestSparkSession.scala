@@ -24,6 +24,21 @@ object TestSparkSession {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
+  /** ParquetQueryCache's two state-write paths, as (test-name suffix,
+    * driver-write bound override): the driver path at the default bound
+    * (every test state here is small), the distributed write at 0. */
+  val stateWritePaths: Seq[(String, Option[Long])] =
+    Seq("" -> None, " [distributed state writes]" -> Some(0L))
+
+  /** run `f` with ParquetQueryCache's driver-write bound set to `bytes`
+    * (None: unchanged) */
+  def withDriverStateMaxBytes[A](bytes: Option[Long])(f: => A): A = {
+    import graft.cache.ParquetQueryCache
+    val old = ParquetQueryCache.driverStateMaxBytes
+    bytes.foreach(ParquetQueryCache.driverStateMaxBytes = _)
+    try f finally ParquetQueryCache.driverStateMaxBytes = old
+  }
+
   def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-$tag-")
     d.toFile.deleteOnExit()

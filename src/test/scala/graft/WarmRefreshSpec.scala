@@ -45,23 +45,43 @@ class WarmRefreshSpec extends AnyFunSuite {
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** count job starts during f (listener bus is async: poll to quiesce) */
+  private def countJobs[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = f
+      var prev = -1; var cur = n.get(); var i = 0
+      while (cur != prev && i < 30) {
+        Thread.sleep(100); prev = cur; cur = n.get(); i += 1
+      }
+      (a, cur)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  for ((suffix, bound) <- stateWritePaths)
   test("warm ParquetQueryCache refreshes compile nothing and read no footer " +
       "after the first append and the first compaction; the watermark " +
-      "still reaches parquet pushdown") {
+      "still reaches parquet pushdown" + suffix) {
+    withDriverStateMaxBytes(bound)(warmRefreshes(bound.isEmpty))
+  }
+
+  /** six warm refreshes; `fromDriver`: small state is committed from the
+    * driver (the default bound) rather than by a distributed write */
+  private def warmRefreshes(fromDriver: Boolean): Unit = {
     val table = tmpDir("warm-table")
-    val cacheRoot = s"${FooterCountingFs.Scheme}://${tmpDir("warm-cache")}"
+    val cacheDir = tmpDir("warm-cache")
+    val cacheRoot = s"${OpenCountingFs.Scheme}://$cacheDir"
     spark.sparkContext.hadoopConfiguration.set(
-      s"fs.${FooterCountingFs.Scheme}.impl", classOf[FooterCountingFs].getName)
+      s"fs.${OpenCountingFs.Scheme}.impl", classOf[OpenCountingFs].getName)
     // a chain of 3: refreshes 0, 1, 3, 4 append a segment, 2 and 5 compact
     val cache = new ParquetQueryCache(cacheRoot, appendChainMax = 3)
     slice(0, 10).write.mode("overwrite").parquet(table)
-    def refresh(nowUs: Long): Unit = {
-      val q = query(spark.read.parquet(table))
-      val got = QueryCacheSession(spark, QueryCacheConfig(cache,
-        defaultTemporalColumn = "ts", overrideNowMicros = Some(nowUs))).run(q)
-      assert(sorted(got) == sorted(q))
-    }
-    refresh(StartUs + 10 * DayUs) // cold priming
     val plans = new ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(
@@ -71,33 +91,66 @@ class WarmRefreshSpec extends AnyFunSuite {
         case _ =>
       }
     }
-    val compiles = (0 until 6).map { k =>
+    /** one refresh (its plans recorded when `watch`), checked against
+      * vanilla; returns the jobs its answer launched */
+    def refresh(nowUs: Long, watch: Boolean = false): Int = {
+      val q = query(spark.read.parquet(table))
+      if (watch) spark.sparkContext.addSparkListener(listener)
+      val (got, answerJobs) = try {
+        val answer = QueryCacheSession(spark, QueryCacheConfig(cache,
+          defaultTemporalColumn = "ts", overrideNowMicros = Some(nowUs))).run(q)
+        countJobs(sorted(answer))
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got == sorted(q))
+      answerJobs
+    }
+    refresh(StartUs + 10 * DayUs) // cold priming
+    val runs = (0 until 6).map { k =>
       slice(10 + k, 1).write.mode("append").parquet(table)
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      FooterCountingFs.reset()
-      if (k == 4) spark.sparkContext.addSparkListener(listener)
-      try refresh(StartUs + (11 + k) * DayUs)
-      finally spark.sparkContext.removeSparkListener(listener)
+      OpenCountingFs.reset()
+      val answerJobs = refresh(StartUs + (11 + k) * DayUs, watch = k == 4)
       // every refresh, the first warm one too: the chain's row counts
       // come from the writes, so no footer is opened on the driver
-      assert(FooterCountingFs.driverOpens.get == 0,
-        s"refresh $k re-read ${FooterCountingFs.driverOpens.get} footers")
-      assert(FooterCountingFs.taskOpens.get > 0) // the answer read state
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      assert(OpenCountingFs.driverOpens.get == 0,
+        s"refresh $k re-read ${OpenCountingFs.driverOpens.get} footers")
+      assert(OpenCountingFs.taskOpens.get > 0) // the refresh read state
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, answerJobs)
     }
+    val compiles = runs.map(_._1)
     // the first append and the first compaction compile their plans once
     assert(Seq(1, 3, 4, 5).forall(compiles(_) == 0),
       s"classes compiled per warm refresh: $compiles")
-    // the warm delta scan (the plan of the segment write, which reads
-    // the table) still pushes the watermark bound into the parquet scan
-    def deltaScan: Option[String] = plans.asScala.find(p =>
-      p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(table))
+    // the warm delta scan (the plan that reads the table) still pushes
+    // the watermark bound into the parquet scan
+    def deltaScan: Option[String] = plans.asScala.find(_.contains(table))
     val deadline = System.currentTimeMillis() + 10000
     while (deltaScan.isEmpty && System.currentTimeMillis() < deadline)
       Thread.sleep(50) // the listener bus delivers asynchronously
-    val plan = deltaScan.getOrElse(fail(s"no write reading $table: $plans"))
+    val plan = deltaScan.getOrElse(fail(s"no plan reading $table: $plans"))
     assert(plan.split("\n").exists(
       _.matches("PushedFilters: \\[.*GreaterThanOrEqual\\(ts,.*")), plan)
+    val answerJobs = runs.map(_._2)
+    // appends answer over the chain's files
+    assert(Seq(0, 1, 3, 4).forall(answerJobs(_) > 0), answerJobs)
+    val writes = plans.asScala.exists(_.contains("InsertIntoHadoopFsRelationCommand"))
+    val segments = new java.io.File(cacheDir).listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles())
+      .filter(d => d.isDirectory && d.getName.startsWith("data-"))
+    if (fromDriver) {
+      // a small refresh commits from the driver: no file-write command,
+      // one parquet file per segment, and a compaction answers from the
+      // rows it stored without a Spark job
+      assert(!writes, s"a small warm refresh planned a file write: $plans")
+      assert(segments.nonEmpty && segments.forall(
+        _.listFiles().count(_.getName.endsWith(".parquet")) == 1),
+        segments.map(d => d.getName -> d.list().toSeq).toSeq)
+      assert(answerJobs(2) == 0 && answerJobs(5) == 0,
+        s"compaction answers launched jobs: $answerJobs")
+    } else {
+      assert(writes, s"no distributed segment write planned: $plans")
+      assert(answerJobs(2) > 0 && answerJobs(5) > 0, answerJobs)
+    }
   }
 
   private val K = "spark.sql.shuffle.partitions"
@@ -152,25 +205,27 @@ class WarmRefreshSpec extends AnyFunSuite {
 }
 
 /** The local file system under its own scheme, counting opens of parquet
-  * files: on executor task threads (scans) apart from any other thread
-  * (driver-side footer reads). */
-final class FooterCountingFs extends RawLocalFileSystem {
-  override def getScheme: String = FooterCountingFs.Scheme
+  * files — on executor task threads (scans) apart from any other thread
+  * (driver-side footer reads) — and of cache metas (`meta-<v>.json`). */
+final class OpenCountingFs extends RawLocalFileSystem {
+  override def getScheme: String = OpenCountingFs.Scheme
   override def getUri: java.net.URI =
-    java.net.URI.create(s"${FooterCountingFs.Scheme}:///")
+    java.net.URI.create(s"${OpenCountingFs.Scheme}:///")
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     if (f.getName.endsWith(".parquet")) {
       if (Thread.currentThread.getName.startsWith("Executor task launch"))
-        FooterCountingFs.taskOpens.incrementAndGet()
-      else FooterCountingFs.driverOpens.incrementAndGet()
-    }
+        OpenCountingFs.taskOpens.incrementAndGet()
+      else OpenCountingFs.driverOpens.incrementAndGet()
+    } else if (f.getName.startsWith("meta-") && f.getName.endsWith(".json"))
+      OpenCountingFs.metaOpens.incrementAndGet()
     super.open(f, bufferSize)
   }
 }
 
-object FooterCountingFs {
-  val Scheme = "footcount"
+object OpenCountingFs {
+  val Scheme = "opencount"
   val driverOpens = new AtomicLong
   val taskOpens = new AtomicLong
-  def reset(): Unit = { driverOpens.set(0); taskOpens.set(0) }
+  val metaOpens = new AtomicLong
+  def reset(): Unit = { driverOpens.set(0); taskOpens.set(0); metaOpens.set(0) }
 }
