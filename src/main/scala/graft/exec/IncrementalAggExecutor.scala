@@ -33,10 +33,12 @@ import graft.rewrite.Decompose.Decomposed
   *
   * Execution properties at scale: the partial aggregation over appended
   * rows keeps Spark's map-side combine and whole-stage codegen; the merge
-  * aggregation shuffles only state rows (≤ one per group); a Parquet cache
-  * reads/writes state fully distributed, so nothing here funnels through
-  * the driver (the reference coalesces to 1 partition instead,
-  * src/aggregate.rs:392 — its state is equally tiny).
+  * aggregation shuffles only state rows (≤ one per group). A Parquet
+  * cache reads state distributed. It commits small state (input scan and
+  * collected rows both within `ParquetQueryCache.driverStateMaxBytes`)
+  * by collecting it to the driver and writing one file from there, and
+  * larger state by a distributed write (the reference always coalesces
+  * to 1 partition, src/aggregate.rs:392 — its state is equally tiny).
   *
   * A query that fails any decision branch runs vanilla, with the reason
   * logged (reference decision points, src/aggregate.rs:97-203).
@@ -44,7 +46,7 @@ import graft.rewrite.Decompose.Decomposed
 final class IncrementalAggExecutor(val config: QueryCacheConfig) {
 
   /** Capture-mode fingerprint suffix, shared by the direct lookup and
-    * both subsumption probes: strict-mode state covers a different band
+    * every subsumption twin: strict-mode state covers a different band
     * (see decide), and exact-percentile mode (percentileSketchState=off)
     * must never warm-merge sketch-mode state — the two states share a
     * schema, so only the key can keep them apart. */
@@ -528,45 +530,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         None
       case other => other
     }
-    // bucket-granular SUBSUMPTION: on an exact-fingerprint miss, a
-    // coarse temporal grain can replay the warm state of its FINER twin
-    // (day from hour): the regrained state re-aggregates through the
-    // normal merge below, and the put stores coarse-grain state under
-    // THIS fingerprint, so the next run hits directly.
-    val entry = direct
-      .orElse(
-        if (config.regrainFromFinerState) finerGrainState(c, stateSchema)
-        else None)
-      // range subsumption: an aligned time-window slice answered from
-      // the UNBOUNDED twin's warm state sliced on the bucket key
-      .orElse(rerangeBucketState(c, stateSchema))
-      // hop subsumption: a sliding-window aggregate answered from the
-      // tumbling-at-the-slide twin's warm state exploded into its hops
-      .orElse(rehopFromSlideState(c, stateSchema))
-      // tumbling-grain subsumption: a coarse tumbling window answered
-      // from a finer tumbling twin's warm state re-bucketed
-      .orElse(retumbleFromFinerState(c, stateSchema))
-      // re-spelling: a tumbling window answered from the date_trunc
-      // spelling's warm state re-keyed to window structs
-      .orElse(rewindowFromTruncState(c, stateSchema))
-      // grouping-set subsumption: a rollup/cube answered from the plain
-      // full-grain drill-down's warm state re-expanded per grouping set
-      .orElse(regroupFromDrilldownState(c, stateSchema))
-      // dimension subsumption: a roll-up answered from its drill-down's
-      // warm state by merging the extra key away (opt-in via
-      // config.redimDimensionColumns)
-      .orElse(supersetDimState(c, stateSchema))
-      // filter subsumption: an equality/IN slice on a declared dimension
-      // answered from the UNFILTERED drill-down's warm state — the state
-      // rows with matching dim keys are exactly this query's groups
-      .orElse(dimFilterState(c, stateSchema))
-      // join subsumption: a dim-attribute breakdown over a fact ⋈
-      // static-dim join answered from the fact query's join-key-grained
-      // warm state, re-joined to the dim
-      .orElse(rejoinFactState(c, stateSchema))
-      // measure subsumption: a subset-measure query answered by
-      // projecting the needed state columns out of a warm superset entry
-      .orElse(supersetMeasureState(c, stateSchema))
+    // SUBSUMPTION: on an exact-fingerprint miss, a warm twin's state
+    // adapted to this query (see subsume); the put then stores it under
+    // THIS fingerprint, so the next run hits directly
+    val entry = direct.orElse(subsume(c, stateSchema))
 
     // ---- late re-scan band (closes S1's late-data miss within a declared
     // tolerance; see QueryCacheConfig.lateRescanBandMicros): lower the
@@ -988,7 +955,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     // measure-index row recorded BEFORE the put so a durable cache can
     // persist it in the same meta commit (ParquetQueryCache reads the
     // recorded row inside put)
-    if (config.remeasureFromSupersetState) phase("put.recordMeasures")(
+    phase("put.recordMeasures")(
       config.cache.recordMeasures(c.fingerprint, baseFingerprint(c.agg),
         measureRows(c)))
     // confs go on a CLONED session (never mutate the user's session —
@@ -1123,6 +1090,91 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     }
   }
 
+  // ------------------------------------------------ subsumption search
+
+  /** A plan whose warm state answers the probing query once `adapt` has
+    * turned it into the prober's state. `c` keeps the probing query's
+    * fingerprint (every log line stays keyed by the query being
+    * answered); `fp` is the twin's own, `schema` its state layout and
+    * `hit` the line logged when its state serves. */
+  private class Twin(val c: Cacheable, val schema: StructType,
+      val fp: String, val hit: String,
+      val adapt: graft.cache.CachedState => graft.cache.CachedState) {
+    /** whether a stored state of this twin has the expected layout */
+    def fits(stored: StructType): Boolean = schemaCompatible(stored, schema)
+  }
+
+  /** One subsumption rule: the twins of a query with a given state
+    * schema, in the order they are tried. */
+  private final class Probe(val name: String,
+      val twins: (Cacheable, StructType) => Iterator[Twin])
+
+  private val regrain = new Probe("regrain", regrainTwins)
+  private val redim = new Probe("redim", redimTwins)
+  private val refilter = new Probe("refilter", refilterTwins)
+  private val rerange = new Probe("rerange", rerangeTwins)
+  private val rehop = new Probe("rehop", rehopTwins)
+  private val retumble = new Probe("retumble", retumbleTwins)
+  private val rewindow = new Probe("rewindow", rewindowTwins)
+  private val regroup = new Probe("regroup", regroupTwins)
+  private val rejoin = new Probe("rejoin", rejoinTwins)
+  private val remeasure = new Probe("remeasure", remeasureTwins)
+
+  /** The composition graph: the probes tried on a query ("top") and, in
+    * the row of the probe that derived it, on each twin, in order. A new
+    * edge changes which states a miss searches. */
+  private val follows: Map[String, Seq[Probe]] = Map(
+    "top" -> Seq(regrain, rerange, rehop, retumble, rewindow, regroup,
+      redim, refilter, rejoin, remeasure),
+    "regrain" -> Seq(remeasure),
+    "redim" -> Seq(regrain, redim, rerange, remeasure),
+    "refilter" -> Seq(regrain, redim, refilter, rerange, remeasure),
+    "rerange" -> Seq(regrain, redim, refilter, remeasure),
+    "rehop" -> Seq(redim, refilter, remeasure, retumble),
+    "retumble" -> Seq(redim, refilter, remeasure),
+    "rewindow" -> Seq(regrain, redim, refilter, remeasure),
+    "regroup" -> Seq(redim, refilter, remeasure),
+    "rejoin" -> Seq(remeasure),
+    "remeasure" -> Nil)
+
+  /** The most probe steps between a query and the twin whose state
+    * serves it: three dimension, filter or range steps, then regrain,
+    * then remeasure. Each redim/refilter step multiplies the twins by the
+    * declared dimensions, so the bound keeps a miss cheap under a large
+    * declaration. */
+  private val MaxProbeDepth = 5
+
+  /** On an exact-fingerprint miss: a depth-first search of the twins the
+    * probes derive, in `follows` order, for the first with warm state;
+    * that state is adapted back through every step of the path. Each
+    * step is exact on its own (see the probe), so every path is. A twin
+    * with pending repair ranges counts as absent ([[twinState]]); the
+    * memo looks each twin fingerprint up once per query, however many
+    * paths reach it. */
+  private def subsume(c0: Cacheable,
+      stateSchema: StructType): Option[graft.cache.CachedState] = {
+    val memo = scala.collection.mutable.HashMap
+      .empty[String, Option[graft.cache.CachedState]]
+    def search(c: Cacheable, schema: StructType, row: String, depth: Int)
+        : Option[(graft.cache.CachedState, List[String])] =
+      if (depth > MaxProbeDepth) None
+      else follows(row).iterator.flatMap { p =>
+        p.twins(c, schema).flatMap { t =>
+          memo.getOrElseUpdate(t.fp, twinState(t.fp))
+            .filter(cs => t.fits(cs.schema)).map((_, List.empty[String]))
+            .orElse(search(t.c, t.schema, p.name, depth + 1))
+            .map { case (cs, path) =>
+              config.log.info(c0.fingerprint, t.hit)
+              (t.adapt(cs), p.name :: path)
+            }
+        }
+      }.nextOption()
+    search(c0, stateSchema, "top", 1).map { case (cs, path) =>
+      config.log.info(c0.fingerprint, s"probe path: ${path.mkString(" > ")}")
+      cs
+    }
+  }
+
   // ------------------------------------------------ grain subsumption
 
   /** date_trunc format aliases → canonical grain */
@@ -1153,127 +1205,116 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * any other state re-aggregation. Tries each nesting grain in both
     * common literal casings (the literal's text is part of the
     * fingerprint; canonicalization does not fold it). */
-  private def finerGrainState(c: Cacheable,
-      stateSchema: StructType): Option[graft.cache.CachedState] = {
+  private def regrainTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
-    val gIdx = c.temporalGroupIdx.getOrElse(return None)
+    val gIdx = c.temporalGroupIdx.getOrElse(return Iterator.empty)
     val groupKey = c.agg.groupingExpressions(gIdx)
     val groupExpr = TemporalGroupBy.resolveThroughChild(groupKey, c.agg.child)
-    val fmt = groupExpr match {
+    val f = (groupExpr match {
       case t: TruncTimestamp if t.format.foldable =>
         Option(t.format.eval()).map(_.toString)
       case _ => None
+    }).getOrElse(return Iterator.empty)
+    val coarse = grainAliases.get(f.toUpperCase(java.util.Locale.ROOT))
+      .getOrElse(return Iterator.empty)
+    def isMatch(e: Expression): Boolean = e match {
+      case t: TruncTimestamp => t.format.foldable &&
+        Option(t.format.eval()).exists(v => grainAliases
+          .get(v.toString.toUpperCase(java.util.Locale.ROOT))
+          .contains(coarse)) &&
+        t.timestamp.references.exists(_.semanticEquals(c.temporalAttr))
+      case _ => false
     }
-    fmt.flatMap { f =>
-      val coarse = grainAliases.get(f.toUpperCase(java.util.Locale.ROOT))
-        .getOrElse(return None)
-      def isMatch(e: Expression): Boolean = e match {
-        case t: TruncTimestamp => t.format.foldable &&
-          Option(t.format.eval()).exists(v => grainAliases
-            .get(v.toString.toUpperCase(java.util.Locale.ROOT))
-            .contains(coarse)) &&
-          t.timestamp.references.exists(_.semanticEquals(c.temporalAttr))
-        case _ => false
+    def matchesIn(e: Expression): Int = {
+      var n = 0; e.foreach(x => if (isMatch(x)) n += 1); n
+    }
+    // The grain substitution is only sound at sites the replay later
+    // COMPENSATES by re-truncating _g$gIdx: the gIdx grouping key itself
+    // (or, for a pulled-out `_groupingexpression` attribute, its defining
+    // alias in the child Project) and output subtrees semantically equal
+    // to that key — exactly the subtrees `rewrite` maps to _g$gIdx at
+    // finalize time. A coarse trunc ANYWHERE else (a filter below the
+    // aggregate, inside an aggregate function, inside another grouping
+    // key) means the finer twin computed something semantically DIFFERENT
+    // at that site, so regrain must bail to a plain miss rather than
+    // silently change answers.
+    var total = 0
+    c.agg.foreach(node => node.expressions.foreach(e => total += matchesIn(e)))
+    def safeInOutput(e: Expression): Int =
+      if (e.semanticEquals(groupKey)) matchesIn(e)
+      else e match {
+        // replay maps a whole AggregateExpression to a finalizer over
+        // stored state — a trunc INSIDE one is never re-truncated
+        case _: AggregateExpression => 0
+        case _ => e.children.map(safeInOutput).sum
       }
-      def matchesIn(e: Expression): Int = {
-        var n = 0; e.foreach(x => if (isMatch(x)) n += 1); n
-      }
-      // The grain substitution is only sound at sites the replay later
-      // COMPENSATES by re-truncating _g$gIdx: the gIdx grouping key itself
-      // (or, for a pulled-out `_groupingexpression` attribute, its defining
-      // alias in the child Project) and output subtrees semantically equal
-      // to that key — exactly the subtrees `rewrite` maps to _g$gIdx at
-      // finalize time. A coarse trunc ANYWHERE else (a filter below the
-      // aggregate, inside an aggregate function, inside another grouping
-      // key) means the finer twin computed something semantically DIFFERENT
-      // at that site, so regrain must bail to a plain miss rather than
-      // silently change answers.
-      var total = 0
-      c.agg.foreach(node => node.expressions.foreach(e => total += matchesIn(e)))
-      def safeInOutput(e: Expression): Int =
-        if (e.semanticEquals(groupKey)) matchesIn(e)
-        else e match {
-          // replay maps a whole AggregateExpression to a finalizer over
-          // stored state — a trunc INSIDE one is never re-truncated
-          case _: AggregateExpression => 0
-          case _ => e.children.map(safeInOutput).sum
+    var safe = matchesIn(groupKey)
+    c.agg.aggregateExpressions.foreach { o =>
+      val core = o match { case Alias(ch, _) => ch; case x => x }
+      safe += safeInOutput(core)
+    }
+    var attrLeak = false
+    groupKey match {
+      case a: Attribute if !(groupExpr eq groupKey) =>
+        // pulled-out grouping attribute (transparent mode): its defining
+        // alias is the one compensated child site; the attribute itself
+        // must not leak into measures or other grouping keys — the finer
+        // twin's DEFINITION changed underneath every such use and replay
+        // does not re-truncate them.
+        safe += matchesIn(groupExpr)
+        var attrTotal = 0
+        c.agg.expressions.foreach(_.foreach {
+          case x: Attribute if x.semanticEquals(a) => attrTotal += 1
+          case _ => ()
+        })
+        def attrIn(e: Expression): Int = {
+          var n = 0
+          e.foreach { case x: Attribute if x.semanticEquals(a) => n += 1; case _ => () }
+          n
         }
-      var safe = matchesIn(groupKey)
-      c.agg.aggregateExpressions.foreach { o =>
-        val core = o match { case Alias(ch, _) => ch; case x => x }
-        safe += safeInOutput(core)
-      }
-      var attrLeak = false
-      groupKey match {
-        case a: Attribute if !(groupExpr eq groupKey) =>
-          // pulled-out grouping attribute (transparent mode): its defining
-          // alias is the one compensated child site; the attribute itself
-          // must not leak into measures or other grouping keys — the finer
-          // twin's DEFINITION changed underneath every such use and replay
-          // does not re-truncate them.
-          safe += matchesIn(groupExpr)
-          var attrTotal = 0
-          c.agg.expressions.foreach(_.foreach {
-            case x: Attribute if x.semanticEquals(a) => attrTotal += 1
-            case _ => ()
-          })
-          def attrIn(e: Expression): Int = {
-            var n = 0
-            e.foreach { case x: Attribute if x.semanticEquals(a) => n += 1; case _ => () }
-            n
+        def attrSafeInOutput(e: Expression): Int =
+          if (e.semanticEquals(groupKey)) attrIn(e)
+          else e match {
+            case _: AggregateExpression => 0
+            case _ => e.children.map(attrSafeInOutput).sum
           }
-          def attrSafeInOutput(e: Expression): Int =
-            if (e.semanticEquals(groupKey)) attrIn(e)
-            else e match {
-              case _: AggregateExpression => 0
-              case _ => e.children.map(attrSafeInOutput).sum
-            }
-          var attrSafe = attrIn(groupKey) // the grouping-list occurrence
-          c.agg.aggregateExpressions.foreach { o =>
-            val core = o match { case Alias(ch, _) => ch; case x => x }
-            attrSafe += attrSafeInOutput(core)
-          }
-          attrLeak = attrTotal != attrSafe
-        case _ => ()
-      }
-      if (total != safe || safe == 0 || attrLeak) {
-        if (total != safe || attrLeak) config.log.info(c.fingerprint,
-          s"regrain bail: grain literal used outside the temporal group key " +
-            s"($total sites, $safe compensated)")
-        return None
-      }
-      val candidates = for {
-        finer <- finerGrains.getOrElse(coarse, Seq.empty)
-        lit <- Seq(finer, finer.toUpperCase(java.util.Locale.ROOT),
-          finer.capitalize).distinct
-      } yield (finer, lit)
-      candidates.view.flatMap { case (finer, litText) =>
-        var changed = false
-        val subAgg = c.agg.transformAllExpressions {
-          case t: TruncTimestamp if isMatch(t) =>
-            changed = true
-            t.copy(format = Literal(litText))
+        var attrSafe = attrIn(groupKey) // the grouping-list occurrence
+        c.agg.aggregateExpressions.foreach { o =>
+          val core = o match { case Alias(ch, _) => ch; case x => x }
+          attrSafe += attrSafeInOutput(core)
         }
-        if (!changed) None
-        else {
-          val fp2 = Fingerprint.of(subAgg) + fpSuffix
-          twinState(fp2)
-            .filter(cs => schemaCompatible(cs.schema, stateSchema))
-            // composes with measure subsumption: the finer twin may exist
-            // only as a measure-superset entry — project its columns
-            // first, then re-truncate like any regrain hit
-            .orElse(supersetMeasureState(c.copy(agg = subAgg), stateSchema))
-            .map { cs =>
-              config.log.info(c.fingerprint,
-                s"regrain hit: replaying $finer-grain state " +
-                  s"${fp2.take(12)} re-truncated to $coarse")
-              val gName = s"_g$gIdx"
-              graft.cache.CachedState(cs.timestampMicros, cs.schema,
-                s => cs.read(s).withColumn(gName,
-                  org.apache.spark.sql.functions.date_trunc(f, col(gName))))
-            }
-        }
-      }.headOption
+        attrLeak = attrTotal != attrSafe
+      case _ => ()
+    }
+    if (total != safe || safe == 0 || attrLeak) {
+      if (total != safe || attrLeak) config.log.info(c.fingerprint,
+        s"regrain bail: grain literal used outside the temporal group key " +
+          s"($total sites, $safe compensated)")
+      return Iterator.empty
+    }
+    val candidates = for {
+      finer <- finerGrains.getOrElse(coarse, Seq.empty)
+      lit <- Seq(finer, finer.toUpperCase(java.util.Locale.ROOT),
+        finer.capitalize).distinct
+    } yield (finer, lit)
+    val gName = s"_g$gIdx"
+    candidates.iterator.flatMap { case (finer, litText) =>
+      var changed = false
+      val subAgg = c.agg.transformAllExpressions {
+        case t: TruncTimestamp if isMatch(t) =>
+          changed = true
+          t.copy(format = Literal(litText))
+      }
+      Option.when(changed) {
+        val fp2 = Fingerprint.of(subAgg) + fpSuffix
+        new Twin(c.copy(agg = subAgg), stateSchema, fp2,
+          s"regrain hit: replaying $finer-grain state " +
+            s"${fp2.take(12)} re-truncated to $coarse",
+          cs => graft.cache.CachedState(cs.timestampMicros, cs.schema,
+            s => cs.read(s).withColumn(gName,
+              org.apache.spark.sql.functions.date_trunc(f, col(gName)))))
+      }
     }
   }
 
@@ -1288,73 +1329,55 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * INSERTION (grouping list + the canonical output position right
     * after the grouping outputs), so unlike grain substitution no other
     * plan site can change meaning: the probe either finds state captured
-    * by exactly that superset query or misses. Only single-dimension
-    * supersets are probed (a two-extra-key drill-down's fingerprint
-    * won't match any one-insertion twin). */
-  private def supersetDimState(c: Cacheable, stateSchema: StructType,
-      depth: Int = 0): Option[graft.cache.CachedState] = {
-    // probe-chain cap: each level appends one declared dim (or strips one
-    // conjunct), so the space is permutations of the declared set —
-    // bounded here so a large declaration can't make a miss expensive
-    if (config.redimDimensionColumns.isEmpty || depth >= 3) return None
-    // canonical groupBy().agg() output shape: grouping outputs first —
-    // the superset twin inserts the dimension right after them
+    * by exactly that superset query or misses. Each twin inserts one
+    * dimension; a deeper drill-down is reached by redim following redim,
+    * each level merging one key away. */
+  private def redimTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
+    if (config.redimDimensionColumns.isEmpty) return Iterator.empty
+    val dims = c.agg.child.output.filter(a =>
+      config.redimDimensionColumns.exists(_.equalsIgnoreCase(a.name)) &&
+        !c.agg.groupingExpressions.exists(_.references.contains(a)))
+    dims.iterator.map(attr =>
+      keyedTwin(c, stateSchema, attr, c.agg.child, Nil)(fp =>
+        s"redim hit: replaying (${attr.name})-keyed superset state $fp " +
+          "merged down"))
+  }
+
+  /** The twin of `c` over `child` with `attr` as one more grouping key,
+    * its output right after the grouping outputs (the canonical
+    * groupBy().agg() shape), shared by redim and refilter. Its state is
+    * this plan's with that key inserted after the group columns; the
+    * adapter keeps the rows whose key is in `slice` (all when empty) and
+    * drops the key, so the merge folds its groups together. */
+  private def keyedTwin(c: Cacheable, stateSchema: StructType,
+      attr: Attribute, child: LogicalPlan,
+      slice: Seq[org.apache.spark.sql.catalyst.expressions.Literal])(
+      hit: String => String): Twin = {
     val prefix = c.agg.aggregateExpressions.takeWhile { o =>
       val core = o match { case Alias(ch, _) => ch; case x => x }
       c.agg.groupingExpressions.exists(_.semanticEquals(core))
     }.length
-    val dims = c.agg.child.output.filter(a =>
-      config.redimDimensionColumns.exists(_.equalsIgnoreCase(a.name)) &&
-        !c.agg.groupingExpressions.exists(_.references.contains(a)))
     val nGroup = c.agg.groupingExpressions.length
     val gExtra = s"_g$nGroup"
-    dims.view.flatMap { attr =>
-      val twin = c.agg.copy(
-        groupingExpressions = c.agg.groupingExpressions :+ attr,
-        aggregateExpressions =
-          (c.agg.aggregateExpressions.take(prefix) :+ attr) ++
-            c.agg.aggregateExpressions.drop(prefix))
-      val fp2 = Fingerprint.of(twin) + fpSuffix
-      // the twin's state = this plan's state with the dim key inserted
-      // right after the existing group columns
-      val twinSchema = StructType(
-        (stateSchema.take(nGroup) :+
-          org.apache.spark.sql.types.StructField(gExtra, attr.dataType)) ++
-          stateSchema.drop(nGroup))
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, twinSchema))
-        // COMPOSED subsumption: no warm drill-down at THIS grain — try
-        // the drill-down's FINER-GRAIN twin (day-only ← warm (hour, dim)
-        // state: regrain re-truncates the bucket, then the dim key
-        // merges away below — each step is the same state re-aggregation
-        // the warm merge performs, so the composition is sound)
-        .orElse(
-          if (config.regrainFromFinerState)
-            finerGrainState(c.copy(agg = twin), twinSchema)
-          else None)
-        // RECURSIVE subsumption: no warm single-dim drill-down — probe
-        // its own superset (two or more extra dims, e.g. hour-only from
-        // warm (hour, service, region)). The recursive result already
-        // merged the deeper keys away, so it reads as the twin's state;
-        // termination: each level grooms one more declared dim and the
-        // candidate list excludes already-grouped ones.
-        .orElse(supersetDimState(c.copy(agg = twin), twinSchema, depth + 1))
-        // and with range subsumption: the drill-down may be warm only
-        // as the UNBOUNDED twin of a time-window slice
-        .orElse(rerangeBucketState(c.copy(agg = twin), twinSchema, depth + 1))
-        // composes with measure subsumption: the drill-down may exist
-        // only as a measure-superset entry — project, then merge the
-        // dim key away below
-        .orElse(supersetMeasureState(c.copy(agg = twin), twinSchema))
-        .map { cs =>
-          config.log.info(c.fingerprint,
-            s"redim hit: replaying (${attr.name})-keyed superset state " +
-              s"${fp2.take(12)} merged down")
-          graft.cache.CachedState(cs.timestampMicros,
-            StructType(cs.schema.filterNot(_.name == gExtra)),
-            s => cs.read(s).drop(gExtra))
-        }
-    }.headOption
+    val twin = c.agg.copy(
+      groupingExpressions = c.agg.groupingExpressions :+ attr,
+      aggregateExpressions = (c.agg.aggregateExpressions.take(prefix) :+ attr) ++
+        c.agg.aggregateExpressions.drop(prefix),
+      child = child)
+    val fp2 = Fingerprint.of(twin) + fpSuffix
+    val twinSchema = StructType(
+      (stateSchema.take(nGroup) :+
+        org.apache.spark.sql.types.StructField(gExtra, attr.dataType)) ++
+        stateSchema.drop(nGroup))
+    new Twin(c.copy(agg = twin), twinSchema, fp2, hit(fp2.take(12)),
+      cs => graft.cache.CachedState(cs.timestampMicros,
+        StructType(cs.schema.filterNot(_.name == gExtra)), { s =>
+          val df = cs.read(s)
+          (if (slice.isEmpty) df
+           else df.filter(slice.map(v => col(gExtra) === Shims.column(v))
+             .reduce(_ || _))).drop(gExtra)
+        }))
   }
 
   /** On an exact-fingerprint miss: a query whose filter carries an
@@ -1374,12 +1397,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * changes which fact rows get NULL-extended, not just which dim rows
     * match), so candidates sourced from a declared-static side are
     * skipped whenever the plan contains an outer join. */
-  private def dimFilterState(c: Cacheable, stateSchema: StructType,
-      depth: Int = 0): Option[graft.cache.CachedState] = {
+  private def refilterTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.{
       EqualNullSafe, EqualTo, In, Literal}
     import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
-    if (config.redimDimensionColumns.isEmpty || depth >= 3) return None
+    if (config.redimDimensionColumns.isEmpty) return Iterator.empty
     val hasOuterJoin = c.agg.child.exists {
       case j: Join => j.joinType match {
         case Inner | Cross | LeftSemi | LeftAnti => false
@@ -1417,101 +1440,15 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       }
       case _ => ()
     }
-    val prefix = c.agg.aggregateExpressions.takeWhile { o =>
-      val core = o match { case Alias(ch, _) => ch; case x => x }
-      c.agg.groupingExpressions.exists(_.semanticEquals(core))
-    }.length
-    val nGroup = c.agg.groupingExpressions.length
-    val gExtra = s"_g$nGroup"
-    cands.view.flatMap { case (cj, attr, vals) =>
-      val twin = c.agg.copy(
-        groupingExpressions = c.agg.groupingExpressions :+ attr,
-        aggregateExpressions =
-          (c.agg.aggregateExpressions.take(prefix) :+ attr) ++
-            c.agg.aggregateExpressions.drop(prefix),
-        child = stripConjunct(c.agg.child, cj))
-      val fp2 = Fingerprint.of(twin) + fpSuffix
-      val twinSchema = StructType(
-        (stateSchema.take(nGroup) :+
-          org.apache.spark.sql.types.StructField(gExtra, attr.dataType)) ++
-          stateSchema.drop(nGroup))
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, twinSchema))
-        // composes with grain subsumption exactly like redim: no warm
-        // drill-down at this grain — try its finer-grain twin
-        .orElse(
-          if (config.regrainFromFinerState)
-            finerGrainState(c.copy(agg = twin), twinSchema)
-          else None)
-        // composes with dimension subsumption (slice answered from a
-        // DEEPER drill-down, e.g. WHERE service='x' GROUP BY hour from
-        // warm (hour, service, region) state) and with itself (a second
-        // sliced dimension strips its conjunct at the next level)
-        .orElse(supersetDimState(c.copy(agg = twin), twinSchema, depth + 1))
-        .orElse(dimFilterState(c.copy(agg = twin), twinSchema, depth + 1))
-        // and with range subsumption: the unfiltered drill-down may be
-        // warm only as the UNBOUNDED twin of a time-window slice
-        .orElse(rerangeBucketState(c.copy(agg = twin), twinSchema, depth + 1))
-        // and with measure subsumption: the unfiltered drill-down may
-        // exist only as a measure-superset entry
-        .orElse(supersetMeasureState(c.copy(agg = twin), twinSchema))
-        .map { cs =>
-          config.log.info(c.fingerprint,
-            s"refilter hit: replaying (${attr.name})-keyed unfiltered state " +
-              s"${fp2.take(12)} sliced to ${vals.length} value(s)")
-          val pred = vals.map(v => col(gExtra) === Shims.column(v))
-            .reduce(_ || _)
-          graft.cache.CachedState(cs.timestampMicros,
-            StructType(cs.schema.filterNot(_.name == gExtra)),
-            s => cs.read(s).filter(pred).drop(gExtra))
-        }
-    }.headOption
+    cands.iterator.map { case (cj, attr, vals) =>
+      keyedTwin(c, stateSchema, attr, stripConjunct(c.agg.child, cj), vals)(
+        fp => s"refilter hit: replaying (${attr.name})-keyed unfiltered " +
+          s"state $fp sliced to ${vals.length} value(s)")
+    }
   }
 
   // ----------------------------------------------- range subsumption
 
-  /** On an exact-fingerprint miss: a query whose filter carries
-    * bucket-ALIGNED range conjuncts on the raw temporal column can be
-    * answered from the warm state of the same plan WITHOUT those
-    * conjuncts, sliced on the temporal bucket key (the "show me June" /
-    * "this week" dashboard slice — one unbounded warm entry serves every
-    * aligned window).
-    *
-    * Soundness: an aligned range is a union of COMPLETE buckets, so for
-    * every retained group the multiset of contributing rows is identical
-    * between "filter the fact rows by the range" and "keep the whole
-    * bucket" — wherever the Filter sits among the accepted shapes
-    * (Filter/Project/Join chains; rows added by stripping carry an
-    * out-of-range or NULL bucket and are sliced away, and no accepted
-    * operator lets an added row affect a retained row). That makes the
-    * slice exact for EVERY measure, including measures over the temporal
-    * column itself — no confinement analysis needed, unlike regrain. At
-    * micros resolution every comparison has an aligned normal form
-    * (`ts > v` ≡ `ts >= v+1µs`, `ts <= v` ≡ `ts < v+1µs`), so BETWEEN
-    * slices too.
-    *
-    * UNALIGNED bounds (config.rangeCompensationScan, default on): a
-    * bound inside a bucket splits the window into complete INTERIOR
-    * buckets — answered from the sliced state as above — plus at most
-    * two partial EDGE SLIVERS, answered by a bounded compensation scan:
-    * the original child filtered to the sliver range (and below the
-    * twin's watermark), partially aggregated, and unioned into the
-    * replayed state. The edge bucket's group key truncates sliver rows
-    * onto itself and the interior slice excludes that bucket, so the
-    * merge re-aggregates the sliver partial with only this run's delta —
-    * exactly the rows the vanilla filter keeps there. At 100 TB the warm
-    * scan is ≤ 2 bucket-widths of fact (parquet min/max row-group
-    * pruning applies — the sliver predicate is a pushed ts range)
-    * instead of the whole window. Fixed-width grains only
-    * (second/minute/hour/day/week; day/week step through trunc itself so
-    * DST-variable widths stay correct); month+ slivers run vanilla.
-    *
-    * Bails: non-date_trunc temporal bucket (window buckets carry their
-    * own alignment), grouping sets (Expand NULLs the bucket slot for
-    * subtotal rows, so a bucket slice would drop subtotals),
-    * non-foldable bounds, conjuncts whose attribute is not the
-    * fact-side temporal attribute, dynamic-bound queries with slivers,
-    * windows inside < 2 complete buckets (no state value — plain miss). */
   /** The temporal group key resolved to `date_trunc(grain, temporalAttr)`
     * when it has exactly that shape — shared by range subsumption and the
     * late re-scan band (both need to evaluate bucket floors). */
@@ -1876,37 +1813,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
 
   private def expandShape(c: Cacheable): Option[ExpandShape] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
-    val ex = c.agg.child match {
-      case e: Expand => e
-      case _ => return None
-    }
-    val groupSlots: Seq[(Int, Int)] =
-      c.agg.groupingExpressions.zipWithIndex.map { case (gr, j) =>
-        gr match {
-          case a: Attribute =>
-            val s0 = ex.output.indexWhere(_.semanticEquals(a))
-            if (s0 < 0) return None
-            (j, s0)
-          case _ => return None
-        }
+    val ExpandSlots(ex, _, gidIdx, gidSlot, keyGroups, defAttr, projAliases) =
+      c.agg.child match {
+        case e: Expand => expandSlots(c, e).getOrElse(return None)
+        case _ => return None
       }
-    val (gidGroups, keyGroups) = groupSlots.partition { case (_, s0) =>
-      ex.projections.forall(_(s0).isInstanceOf[Literal])
-    }
-    val (gidIdx, gidSlot) = gidGroups match {
-      case Seq(one) => one
-      case _ => return None
-    }
-    val defAttr: Map[Int, Attribute] = keyGroups.map { case (j, s0) =>
-      val vals = ex.projections.map(_(s0))
-      val attrs = vals.collect { case a: Attribute => a }.distinct
-      if (attrs.size != 1 || !vals.forall {
-        case _: Attribute => true
-        case l: Literal => l.value == null
-        case _ => false
-      }) return None
-      j -> attrs.head
-    }.toMap
     val liveOf: Seq[Set[Int]] = ex.projections.map(p =>
       keyGroups.collect {
         case (j, s0) if p(s0).isInstanceOf[Attribute] => j }.toSet)
@@ -1915,12 +1826,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     } match {
       case Seq(one) => one
       case _ => return None // no (or duplicate) full-grain set
-    }
-    val projAliases = ex.child match {
-      case Project(list, _) =>
-        list.collect { case al: Alias => al.exprId -> al.child }.toMap
-      case _ => Map.empty[
-        org.apache.spark.sql.catalyst.expressions.ExprId, Expression]
     }
     val (bIdx, trunc) = keyGroups.flatMap { case (j, _) =>
       projAliases.getOrElse(defAttr(j).exprId, defAttr(j)) match {
@@ -1937,6 +1842,60 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val gidLits: Seq[Literal] =
       ex.projections.map(_(gidSlot).asInstanceOf[Literal])
     Some(ExpandShape(ex, gidIdx, gidLits, fullProj, liveOf, bIdx, trunc))
+  }
+
+  /** The slots of an aggregate over Expand, shared by regroup and
+    * [[expandShape]]: each grouping expression's Expand slot, the one
+    * grouping-id slot (a literal in every projection), each key slot's
+    * defining attribute (a null literal in the sets that leave it out)
+    * and the aliases of the Project under Expand. Left = why the plan
+    * does not have that shape. */
+  private final case class ExpandSlots(ex: Expand,
+      groupSlots: Seq[(Int, Int)], gidIdx: Int, gidSlot: Int,
+      keyGroups: Seq[(Int, Int)], defAttr: Map[Int, Attribute],
+      projAliases: Map[org.apache.spark.sql.catalyst.expressions.ExprId,
+        Expression])
+
+  private def expandSlots(c: Cacheable,
+      ex: Expand): Either[String, ExpandSlots] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val groupSlots: Seq[(Int, Int)] =
+      c.agg.groupingExpressions.zipWithIndex.map { case (g, j) =>
+        g match {
+          case a: Attribute =>
+            val s = ex.output.indexWhere(_.semanticEquals(a))
+            if (s < 0) return Left(s"group expression is not an Expand slot: ${g.sql}")
+            (j, s)
+          case _ =>
+            return Left(s"group expression is not an Expand output attribute: ${g.sql}")
+        }
+      }
+    val (gidGroups, keyGroups) = groupSlots.partition { case (_, s) =>
+      ex.projections.forall(_(s).isInstanceOf[Literal])
+    }
+    val (gidIdx, gidSlot) = gidGroups match {
+      case Seq(one) => one
+      case other => return Left(
+        s"expected exactly one grouping-id slot, found ${other.size}")
+    }
+    val defAttr: Map[Int, Attribute] = keyGroups.map { case (j, s) =>
+      val vals = ex.projections.map(_(s))
+      val attrs = vals.collect { case a: Attribute => a }.distinct
+      if (attrs.size != 1 || !vals.forall {
+        case _: Attribute => true
+        case l: Literal => l.value == null
+        case _ => false
+      }) return Left(s"group slot $s is not attr-or-null with one defining attribute")
+      j -> attrs.head
+    }.toMap
+    val projAliases = ex.child match {
+      case Project(list, _) =>
+        list.collect { case al: Alias => al.exprId -> al.child }.toMap
+      case _ => Map.empty[
+        org.apache.spark.sql.catalyst.expressions.ExprId, Expression]
+    }
+    Right(ExpandSlots(ex, groupSlots, gidIdx, gidSlot, keyGroups, defAttr,
+      projAliases))
   }
 
   /** Re-expanded state read shared by the grouping-set band and repair:
@@ -1964,13 +1923,54 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     }.reduce(_ unionByName _)
   }
 
-  private def rerangeBucketState(c: Cacheable, stateSchema: StructType,
-      depth: Int = 0): Option[graft.cache.CachedState] = {
+  /** On an exact-fingerprint miss: a query whose filter carries
+    * bucket-ALIGNED range conjuncts on the raw temporal column can be
+    * answered from the warm state of the same plan WITHOUT those
+    * conjuncts, sliced on the temporal bucket key (the "show me June" /
+    * "this week" dashboard slice — one unbounded warm entry serves every
+    * aligned window).
+    *
+    * Soundness: an aligned range is a union of COMPLETE buckets, so for
+    * every retained group the multiset of contributing rows is identical
+    * between "filter the fact rows by the range" and "keep the whole
+    * bucket" — wherever the Filter sits among the accepted shapes
+    * (Filter/Project/Join chains; rows added by stripping carry an
+    * out-of-range or NULL bucket and are sliced away, and no accepted
+    * operator lets an added row affect a retained row). That makes the
+    * slice exact for EVERY measure, including measures over the temporal
+    * column itself — no confinement analysis needed, unlike regrain. At
+    * micros resolution every comparison has an aligned normal form
+    * (`ts > v` ≡ `ts >= v+1µs`, `ts <= v` ≡ `ts < v+1µs`), so BETWEEN
+    * slices too.
+    *
+    * UNALIGNED bounds: a bound inside a bucket splits the window into
+    * complete INTERIOR buckets — answered from the sliced state as
+    * above — plus at most two partial EDGE SLIVERS, answered by a
+    * bounded compensation scan: the original child filtered to the
+    * sliver range (and below the twin's watermark), partially
+    * aggregated, and unioned into the
+    * replayed state. The edge bucket's group key truncates sliver rows
+    * onto itself and the interior slice excludes that bucket, so the
+    * merge re-aggregates the sliver partial with only this run's delta —
+    * exactly the rows the vanilla filter keeps there. At 100 TB the warm
+    * scan is ≤ 2 bucket-widths of fact (parquet min/max row-group
+    * pruning applies — the sliver predicate is a pushed ts range)
+    * instead of the whole window. Fixed-width grains only
+    * (second/minute/hour/day/week; day/week step through trunc itself so
+    * DST-variable widths stay correct); month+ slivers run vanilla.
+    *
+    * Bails: non-date_trunc temporal bucket (window buckets carry their
+    * own alignment), grouping sets (Expand NULLs the bucket slot for
+    * subtotal rows, so a bucket slice would drop subtotals),
+    * non-foldable bounds, conjuncts whose attribute is not the
+    * fact-side temporal attribute, windows inside < 2 complete buckets
+    * (no state value — plain miss). */
+  private def rerangeTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.{
       GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-    if (!config.rerangeFromUnboundedState || depth >= 3) return None
-    val (gIdx, trunc) = temporalBucketTrunc(c).getOrElse(return None)
-    if (c.agg.child.exists(_.isInstanceOf[Expand])) return None
+    val (gIdx, trunc) = temporalBucketTrunc(c).getOrElse(return Iterator.empty)
+    if (c.agg.child.exists(_.isInstanceOf[Expand])) return Iterator.empty
     val tDt = c.temporalAttr.dataType
     def truncOf(m: Long): Option[Long] =
       Option(trunc.copy(timestamp = Literal(m, tDt)).eval())
@@ -2018,13 +2018,13 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         splitConj(cond).foreach(cj => bound(cj).foreach(b => cands += ((cj, b))))
       case _ => ()
     }
-    if (cands.isEmpty) return None
+    if (cands.isEmpty) return Iterator.empty
     // the conjuncts' intersection as one half-open row window [rowL, rowU)
     val lowers = cands.collect { case (_, Left(l)) => l }
     val uppers = cands.collect { case (_, Right(u)) => u }
     val rowL: Option[Long] = if (lowers.isEmpty) None else Some(lowers.max)
     val rowU: Option[Long] = if (uppers.isEmpty) None else Some(uppers.min)
-    if (rowL.exists(l => rowU.exists(_ <= l))) return None // empty window
+    if (rowL.exists(l => rowU.exists(_ <= l))) return Iterator.empty // empty window
     // fixed-width grains support sliver compensation; the step loop
     // walks through trunc itself so a DST-variable day/week still lands
     // on the true next bucket start
@@ -2051,8 +2051,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val iL: Option[Long] = rowL match {
       case Some(l) if aligned(l) => Some(l)
       case Some(l) =>
-        if (!config.rangeCompensationScan) return None
-        val nb = truncOf(l).flatMap(nextBucketStart).getOrElse(return None)
+        val nb = truncOf(l).flatMap(nextBucketStart).getOrElse(return Iterator.empty)
         sliverRanges += ((l, math.min(nb, rowU.getOrElse(nb))))
         Some(nb)
       case None => None
@@ -2060,15 +2059,14 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val iU: Option[Long] = rowU match {
       case Some(u) if aligned(u) => Some(u)
       case Some(u) =>
-        if (!config.rangeCompensationScan) return None
-        val fb = truncOf(u).getOrElse(return None)
+        val fb = truncOf(u).getOrElse(return Iterator.empty)
         sliverRanges += ((math.max(fb, rowL.getOrElse(fb)), u))
         Some(fb)
       case None => None
     }
     // whole window inside < 2 complete buckets: no state value — plain
     // miss (the cold run stores this query's own state for next time)
-    if (iL.exists(l => iU.exists(_ <= l))) return None
+    if (iL.exists(l => iU.exists(_ <= l))) return Iterator.empty
     // a dynamic bound composes with slivers: state is unbounded on both
     // sides and the frozen bound re-applies over bucket STARTS at answer
     // time — a sliver partial carries the edge bucket's start as its
@@ -2083,25 +2081,13 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val gName = s"_g$gIdx"
     val pred = (iL.map(l => col(gName) >= Shims.column(Literal(l, tDt))).toSeq ++
       iU.map(u => col(gName) < Shims.column(Literal(u, tDt)))).reduce(_ && _)
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, stateSchema))
-      // composes with the rest of the family: the unbounded twin may be
-      // warm only at a finer grain, as a drill-down, behind another
-      // strippable dim conjunct, or as a measure-superset entry
-      .orElse(
-        if (config.regrainFromFinerState)
-          finerGrainState(c.copy(agg = twin), stateSchema)
-        else None)
-      .orElse(supersetDimState(c.copy(agg = twin), stateSchema, depth + 1))
-      .orElse(dimFilterState(c.copy(agg = twin), stateSchema, depth + 1))
-      .orElse(supersetMeasureState(c.copy(agg = twin), stateSchema))
-      .map { cs =>
-        config.log.info(c.fingerprint,
-          s"rerange hit: replaying unbounded state ${fp2.take(12)} sliced " +
-            s"by ${cands.length} bound(s) on $gName" +
-            (if (sliverRanges.isEmpty) ""
-             else s" + compensation scan over ${sliverRanges.length} " +
-               "partial edge bucket(s)"))
+    Iterator.single(new Twin(c.copy(agg = twin), stateSchema, fp2,
+      s"rerange hit: replaying unbounded state ${fp2.take(12)} sliced " +
+        s"by ${cands.length} bound(s) on $gName" +
+        (if (sliverRanges.isEmpty) ""
+         else s" + compensation scan over ${sliverRanges.length} " +
+           "partial edge bucket(s)"),
+      { cs =>
         if (sliverRanges.isEmpty)
           graft.cache.CachedState(cs.timestampMicros, cs.schema,
             s => cs.read(s).filter(pred))
@@ -2154,7 +2140,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
                 .agg(partialCols.head, partialCols.tail: _*))
           })
         }
-      }
+      }))
   }
 
   // ------------------------------------------------- hop subsumption
@@ -2182,37 +2168,29 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * fingerprint-identical to a user-written tumbling query. Anything
     * off-shape (gap windows n=1, duration not a slide multiple, foreign
     * Expand) bails to a plain miss. */
-  private def rehopFromSlideState(c: Cacheable, stateSchema: StructType)
-      : Option[graft.cache.CachedState] = {
+  private def rehopTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Literal}
     import org.apache.spark.sql.types.LongType
-    if (!config.rehopFromTumblingState) return None
     val (cond, ex) = c.agg.child match {
       case Filter(f, e: Expand) => (f, e)
-      case _ => return None
+      case _ => return Iterator.empty
     }
-    def isWindowStruct(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt match {
-        case org.apache.spark.sql.types.StructType(fs) =>
-          fs.length == 2 && fs(0).name == "start" && fs(1).name == "end" &&
-            fs.forall(_.dataType == TimestampType)
-        case _ => false
-      }
     val windowAttr = ex.output.headOption.collect {
       case a: Attribute if isWindowStruct(a.dataType) => a
-    }.getOrElse(return None)
+    }.getOrElse(return Iterator.empty)
     val gIdx = c.agg.groupingExpressions.indexWhere {
       case a: Attribute => a.semanticEquals(windowAttr)
       case _ => false
     }
-    if (gIdx < 0) return None
+    if (gIdx < 0) return Iterator.empty
     val n = ex.projections.length
-    if (n < 2) return None
+    if (n < 2) return Iterator.empty
     // past here the plan IS a sliding-window aggregate — log why a
     // probe declines so off-shape variants are diagnosable
-    def bailHop(msg: String): Option[graft.cache.CachedState] = {
+    def bailHop(msg: String): Iterator[Twin] = {
       config.log.info(c.fingerprint, s"rehop bail: $msg")
-      None
+      Iterator.empty
     }
     // a pure multiple-of-slide sliding window filters only isnotnull(ts);
     // a non-multiple duration adds window-membership conjuncts (each of
@@ -2281,62 +2259,25 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     val twin = c.agg.copy(child = Project(alias +: ex.child.output,
       Filter(IsNotNull(c.temporalAttr), ex.child)))
     val fp2 = Fingerprint.of(twin) + fpSuffix
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, stateSchema))
-      // composes: the tumbling twin may be warm only as a drill-down,
-      // behind a strippable dim conjunct, as a measure-superset entry —
-      // or at a FINER tumbling grain (a 1h/15m hop whose 15m twin is
-      // cold still answers from warm 5m tumbling state, two levels deep)
-      .orElse(supersetDimState(c.copy(agg = twin), stateSchema))
-      .orElse(dimFilterState(c.copy(agg = twin), stateSchema))
-      .orElse(supersetMeasureState(c.copy(agg = twin), stateSchema))
-      .orElse(retumbleFromFinerState(c.copy(agg = twin), stateSchema))
-      .map { cs =>
-        config.log.info(c.fingerprint,
-          s"rehop hit: replaying ${slide}µs tumbling state ${fp2.take(12)} " +
-            s"exploded ×$n into ${duration}µs hop windows")
-        val gName = s"_g$gIdx"
-        graft.cache.CachedState(cs.timestampMicros, cs.schema, { s =>
-          import org.apache.spark.sql.functions.{explode, struct, typedlit, unix_micros}
-          val df = cs.read(s)
-          val startUs = unix_micros(col(s"$gName.start"))
-          df.withColumn("_hop_k", explode(typedlit((0L until n.toLong).toSeq)))
-            .withColumn(gName, struct(
-              timestamp_micros(startUs - col("_hop_k") * lit(slide)).as("start"),
-              timestamp_micros(startUs - col("_hop_k") * lit(slide) + lit(duration))
-                .as("end")))
-            .drop("_hop_k")
-        })
-      }
+    val gName = s"_g$gIdx"
+    Iterator.single(new Twin(c.copy(agg = twin), stateSchema, fp2,
+      s"rehop hit: replaying ${slide}µs tumbling state ${fp2.take(12)} " +
+        s"exploded ×$n into ${duration}µs hop windows",
+      cs => graft.cache.CachedState(cs.timestampMicros, cs.schema, { s =>
+        import org.apache.spark.sql.functions.{explode, struct, typedlit, unix_micros}
+        val df = cs.read(s)
+        val startUs = unix_micros(col(s"$gName.start"))
+        df.withColumn("_hop_k", explode(typedlit((0L until n.toLong).toSeq)))
+          .withColumn(gName, struct(
+            timestamp_micros(startUs - col("_hop_k") * lit(slide)).as("start"),
+            timestamp_micros(startUs - col("_hop_k") * lit(slide) + lit(duration))
+              .as("end")))
+          .drop("_hop_k")
+      })))
   }
 
   // ------------------------------------- tumbling-grain subsumption
 
-  /** On an exact-fingerprint miss: a TUMBLING-window aggregate
-    * (`window(ts, '1 hour')`) can be answered from the warm state of
-    * the same plan tumbling at a FINER duration that divides it
-    * (`window(ts, '15 minutes')`) — the window-bucket analog of
-    * [[finerGrainState]] (which only covers date_trunc grains) and the
-    * converse of [[rehopFromSlideState]]'s tumbling twin. With the
-    * default epoch-aligned start, every fine bucket lies inside exactly
-    * one coarse bucket, so the replay re-buckets each fine state row
-    * (start → start − start mod D, the same arithmetic the analyzer's
-    * own bucketing uses) and the normal merge re-aggregates — exact by
-    * the state-merge contract (the coarse group's row multiset is the
-    * union of its nested fine buckets').
-    *
-    * Detection is pinned to the analyzer's tumbling TimeWindowing
-    * shape: Project(windowStruct alias +: pass-through child output,
-    * Filter(isnotnull(ts), child)), one bucketing Remainder literal D,
-    * and every long literal in the struct ∈ {0, D} — a custom
-    * startTime bails to a plain miss. A fixed ladder of finer
-    * durations dividing D probes coarsest-first (fewest state rows to
-    * merge). Derives the window group index structurally (not from
-    * temporalGroupIdx) so [[rehopFromSlideState]] can compose through
-    * it: a 1h/15m hopping query whose 15m tumbling twin is cold still
-    * answers from warm 5m tumbling state. Gated by the same
-    * regrainFromFinerState flag — it IS temporal grain subsumption,
-    * for window buckets. */
   /** The analyzer's tumbling TimeWindowing plan shape, structurally
     * verified: Project(windowStruct alias +: pass-through child output,
     * Filter(isnotnull(ts), child)), one bucketing Remainder literal D,
@@ -2348,6 +2289,15 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       rest: Seq[NamedExpression], flt: Filter, gIdx: Int, durationUs: Long,
       startUs: Long)
 
+  /** the (start, end) timestamp struct a time window groups by */
+  private def isWindowStruct(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt match {
+      case StructType(fs) =>
+        fs.length == 2 && fs(0).name == "start" && fs(1).name == "end" &&
+          fs.forall(_.dataType == TimestampType)
+      case _ => false
+    }
+
   private def tumblingShape(c: Cacheable): Option[TumblingShape] = {
     import org.apache.spark.sql.catalyst.expressions.{IsNotNull, Literal}
     import org.apache.spark.sql.types.LongType
@@ -2355,13 +2305,6 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       case Project((al: Alias) +: tail, f: Filter) => (al, tail, f)
       case _ => return None
     }
-    def isWindowStruct(dt: org.apache.spark.sql.types.DataType): Boolean =
-      dt match {
-        case org.apache.spark.sql.types.StructType(fs) =>
-          fs.length == 2 && fs(0).name == "start" && fs(1).name == "end" &&
-            fs.forall(_.dataType == TimestampType)
-        case _ => false
-      }
     if (!isWindowStruct(wAlias.dataType)) return None
     val gIdx = c.agg.groupingExpressions.indexWhere {
       case a: Attribute => a.exprId == wAlias.exprId
@@ -2406,50 +2349,62 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     Some(TumblingShape(wAlias, rest, flt, gIdx, d, startUs))
   }
 
-  private def retumbleFromFinerState(c: Cacheable, stateSchema: StructType)
-      : Option[graft.cache.CachedState] = {
+  /** On an exact-fingerprint miss: a TUMBLING-window aggregate
+    * (`window(ts, '1 hour')`) can be answered from the warm state of
+    * the same plan tumbling at a FINER duration that divides it
+    * (`window(ts, '15 minutes')`) — the window-bucket analog of
+    * [[regrainTwins]] (which only covers date_trunc grains) and the
+    * converse of [[rehopTwins]]'s tumbling twin. With the
+    * default epoch-aligned start, every fine bucket lies inside exactly
+    * one coarse bucket, so the replay re-buckets each fine state row
+    * (start → start − start mod D, the same arithmetic the analyzer's
+    * own bucketing uses) and the normal merge re-aggregates — exact by
+    * the state-merge contract (the coarse group's row multiset is the
+    * union of its nested fine buckets').
+    *
+    * Detection is pinned to the analyzer's tumbling TimeWindowing
+    * shape: Project(windowStruct alias +: pass-through child output,
+    * Filter(isnotnull(ts), child)), one bucketing Remainder literal D,
+    * and every long literal in the struct ∈ {0, D} — a custom
+    * startTime bails to a plain miss. A fixed ladder of finer
+    * durations dividing D probes coarsest-first (fewest state rows to
+    * merge). Derives the window group index structurally (not from
+    * temporalGroupIdx) so it can follow rehop: a 1h/15m hopping query
+    * whose 15m tumbling twin is cold still answers from warm 5m
+    * tumbling state. */
+  private def retumbleTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.LongType
-    if (!config.regrainFromFinerState) return None
     val TumblingShape(wAlias, rest, flt, gIdx, d, startUs) =
-      tumblingShape(c).getOrElse(return None)
+      tumblingShape(c).getOrElse(return Iterator.empty)
     // the divisor-ladder nesting argument assumes epoch-aligned windows;
     // a custom anchor (startTime) does not nest against the ladder
-    if (startUs != 0L) return None
+    if (startUs != 0L) return Iterator.empty
     val struct0 = wAlias.child
     val gName = s"_g$gIdx"
     val ladder = Seq(86400L, 43200L, 21600L, 14400L, 10800L, 7200L, 3600L,
       1800L, 1200L, 900L, 600L, 300L, 60L, 1L).map(_ * 1000000L)
-    ladder.filter(f => f < d && d % f == 0).view.flatMap { f =>
+    ladder.filter(f => f < d && d % f == 0).iterator.map { f =>
       val fineStruct = struct0.transform {
         case Literal(v: Long, LongType) if v == d => Literal(f, LongType)
       }
       val twinAlias = Alias(fineStruct, wAlias.name)(exprId = wAlias.exprId)
       val twin = c.agg.copy(child = Project(twinAlias +: rest, flt))
       val fp2 = Fingerprint.of(twin) + fpSuffix
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, stateSchema))
-        // composes: the fine tumbling twin may be warm only as a
-        // drill-down, behind a strippable dim conjunct, or as a
-        // measure-superset entry
-        .orElse(supersetDimState(c.copy(agg = twin), stateSchema))
-        .orElse(dimFilterState(c.copy(agg = twin), stateSchema))
-        .orElse(supersetMeasureState(c.copy(agg = twin), stateSchema))
-        .map { cs =>
-          config.log.info(c.fingerprint,
-            s"retumble hit: replaying ${f}µs tumbling state ${fp2.take(12)} " +
-              s"re-bucketed to ${d}µs windows")
-          graft.cache.CachedState(cs.timestampMicros, cs.schema, { s =>
-            import org.apache.spark.sql.functions.{pmod, struct, unix_micros}
-            val df = cs.read(s)
-            val startUs = unix_micros(col(s"$gName.start"))
-            val cUs = startUs - pmod(startUs, lit(d))
-            df.withColumn(gName, struct(
-              timestamp_micros(cUs).as("start"),
-              timestamp_micros(cUs + lit(d)).as("end")))
-          })
-        }
-    }.headOption
+      new Twin(c.copy(agg = twin), stateSchema, fp2,
+        s"retumble hit: replaying ${f}µs tumbling state ${fp2.take(12)} " +
+          s"re-bucketed to ${d}µs windows",
+        cs => graft.cache.CachedState(cs.timestampMicros, cs.schema, { s =>
+          import org.apache.spark.sql.functions.{pmod, struct, unix_micros}
+          val df = cs.read(s)
+          val startUs = unix_micros(col(s"$gName.start"))
+          val cUs = startUs - pmod(startUs, lit(d))
+          df.withColumn(gName, struct(
+            timestamp_micros(cUs).as("start"),
+            timestamp_micros(cUs + lit(d)).as("end")))
+        }))
+    }
   }
 
   // ------------------------------------- window ↔ date_trunc re-spelling
@@ -2476,15 +2431,12 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * date_trunc query. Composes with grain subsumption: the hour-trunc
     * twin may be warm only at MINUTE grain, and regrain lifts it first
     * (pinned in the spec). Both literal casings probe (the fingerprint
-    * keeps literal case, regrain precedent). Gated by
-    * regrainFromFinerState — it is the same one-temporal-state-serves-
-    * many-spellings family. */
-  private def rewindowFromTruncState(c: Cacheable, stateSchema: StructType)
-      : Option[graft.cache.CachedState] = {
+    * keeps literal case, regrain precedent). */
+  private def rewindowTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, TruncTimestamp}
-    if (!config.regrainFromFinerState) return None
     val TumblingShape(wAlias, _, flt, gIdx, d, startUs) =
-      tumblingShape(c).getOrElse(return None)
+      tumblingShape(c).getOrElse(return Iterator.empty)
     // calendar-grain equivalents. Epoch-anchored (startTime = 0):
     // second/minute/hour/day. WEEK is the shifted-anchor case:
     // date_trunc('week') anchors MONDAY while epoch (1970-01-01) is a
@@ -2498,15 +2450,15 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       case (3600000000L, 0L) => "hour"
       case (86400000000L, 0L) => "day"
       case (604800000000L, 345600000000L) => "week"
-      case _ => return None
+      case _ => return Iterator.empty
     }
     val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
-    if (!Set("UTC", "Etc/UTC", "GMT", "Z", "+00:00").contains(tz)) return None
+    if (!Set("UTC", "Etc/UTC", "GMT", "Z", "+00:00").contains(tz)) return Iterator.empty
     val gName = s"_g$gIdx"
     // the twin's state keys the bucket as a bare timestamp
     val twinSchema = StructType(stateSchema.fields.map(f =>
       if (f.name == gName) f.copy(dataType = TimestampType) else f))
-    Seq(fmt, fmt.toUpperCase).view.flatMap { f =>
+    Seq(fmt, fmt.toUpperCase).iterator.map { f =>
       val trunc = TruncTimestamp(Literal(f), c.temporalAttr, Some(tz))
       def swap(e: Expression): Expression = e.transformUp {
         case a: Attribute if a.exprId == wAlias.exprId => trunc
@@ -2524,28 +2476,17 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       // analyzer's struct is not a recognized bucketing fn); the trunc
       // twin's group AT gIdx is a real date_trunc — set the index so
       // grain subsumption can lift a finer-grain entry for it
-      val cTwin = c.copy(agg = twin, temporalGroupIdx = Some(gIdx))
-      twinState(fp2)
-        .filter(cs => schemaCompatible(cs.schema, twinSchema))
-        // composes: the trunc twin may be warm only at a finer grain,
-        // as a drill-down, behind a dim conjunct, or as a superset panel
-        .orElse(finerGrainState(cTwin, twinSchema))
-        .orElse(supersetDimState(cTwin, twinSchema))
-        .orElse(dimFilterState(cTwin, twinSchema))
-        .orElse(supersetMeasureState(cTwin, twinSchema))
-        .map { cs =>
-          config.log.info(c.fingerprint,
-            s"rewindow hit: replaying date_trunc('$f') state ${fp2.take(12)} " +
-              s"re-keyed to ${d}µs window structs")
-          graft.cache.CachedState(cs.timestampMicros, stateSchema, { s =>
-            import org.apache.spark.sql.functions.{struct, unix_micros}
-            cs.read(s).filter(col(gName).isNotNull)
-              .withColumn(gName, struct(
-                col(gName).as("start"),
-                timestamp_micros(unix_micros(col(gName)) + lit(d)).as("end")))
-          })
-        }
-    }.headOption
+      new Twin(c.copy(agg = twin, temporalGroupIdx = Some(gIdx)), twinSchema,
+        fp2, s"rewindow hit: replaying date_trunc('$f') state " +
+          s"${fp2.take(12)} re-keyed to ${d}µs window structs",
+        cs => graft.cache.CachedState(cs.timestampMicros, stateSchema, { s =>
+          import org.apache.spark.sql.functions.{struct, unix_micros}
+          cs.read(s).filter(col(gName).isNotNull)
+            .withColumn(gName, struct(
+              col(gName).as("start"),
+              timestamp_micros(unix_micros(col(gName)) + lit(d)).as("end")))
+        }))
+    }
   }
 
   // ------------------------------------- grouping-set subsumption
@@ -2570,51 +2511,22 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * and the twin inlines the bucketing Project's aliases so its
     * fingerprint matches a user-written drill-down. Anything off-shape
     * bails to a plain miss. */
-  private def regroupFromDrilldownState(c: Cacheable, stateSchema: StructType)
-      : Option[graft.cache.CachedState] = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    if (!config.regroupFromDrilldownState) return None
-    if (c.dynamicBound.isDefined) return None
+  private def regroupTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
+    if (c.dynamicBound.isDefined) return Iterator.empty
     val ex = c.agg.child match {
       case e: Expand => e
-      case _ => return None
+      case _ => return Iterator.empty
     }
-    def bailRg(msg: String): Option[graft.cache.CachedState] = {
+    def bailRg(msg: String): Iterator[Twin] = {
       config.log.info(c.fingerprint, s"regroup bail: $msg")
-      None
+      Iterator.empty
     }
-    // every grouping expression must be an Expand output slot
-    val groupSlots: Seq[(Int, Int)] =
-      c.agg.groupingExpressions.zipWithIndex.map { case (g, j) =>
-        g match {
-          case a: Attribute =>
-            val s = ex.output.indexWhere(_.semanticEquals(a))
-            if (s < 0) return bailRg(s"group expression is not an Expand slot: ${g.sql}")
-            (j, s)
-          case _ =>
-            return bailRg(s"group expression is not an Expand output attribute: ${g.sql}")
-        }
-      }
-    // the grouping-id slot: a literal in EVERY projection
-    val (gidGroups, keyGroups) = groupSlots.partition { case (_, s) =>
-      ex.projections.forall(_(s).isInstanceOf[Literal])
+    val ExpandSlots(_, groupSlots, gidIdx, gidSlot, keyGroups, defAttr,
+        projAliases) = expandSlots(c, ex) match {
+      case Right(sl) => sl
+      case Left(why) => return bailRg(why)
     }
-    val (gidIdx, gidSlot) = gidGroups match {
-      case Seq(one) => one
-      case other => return bailRg(
-        s"expected exactly one grouping-id slot, found ${other.size}")
-    }
-    // key slots: one defining attribute, nulled in subtotal projections
-    val defAttr: Map[Int, Attribute] = keyGroups.map { case (j, s) =>
-      val vals = ex.projections.map(_(s))
-      val attrs = vals.collect { case a: Attribute => a }.distinct
-      if (attrs.size != 1 || !vals.forall {
-        case _: Attribute => true
-        case l: Literal => l.value == null
-        case _ => false
-      }) return bailRg(s"group slot $s is not attr-or-null with one defining attribute")
-      j -> attrs.head
-    }.toMap
     // measures (and the filter-widened temporal attr) must ride through
     // pass-through slots — an aggregate over a grouping-set slot sees
     // per-set NULLs the drill-down state cannot reproduce
@@ -2623,12 +2535,9 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       return bailRg("a measure references a grouping-set slot")
     // the twin drill-down: the bucketing Project's aliases inlined, so
     // the plan is shaped exactly like a user-written groupBy
-    val (projAliases, twinChild) = ex.child match {
-      case Project(list, ch) =>
-        (list.collect { case al: Alias => al.exprId -> al.child }.toMap, ch)
-      case other =>
-        (Map.empty[org.apache.spark.sql.catalyst.expressions.ExprId, Expression],
-          other)
+    val twinChild = ex.child match {
+      case Project(_, ch) => ch
+      case other => other
     }
     val twinGroups: Seq[Expression] = keyGroups.map { case (j, _) =>
       val a = defAttr(j)
@@ -2653,35 +2562,26 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       keyGroups.zipWithIndex.map { case ((j, _), m) =>
         stateSchema(s"_g$j").copy(name = s"_g$m")
       } ++ stateSchema.fields.filterNot(_.name.startsWith("_g")))
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, twinStateSchema))
-      // composes: the drill-down may be warm only as a deeper drill-down,
-      // behind a strippable dim conjunct, or as a measure-superset entry
-      .orElse(supersetDimState(c.copy(agg = twin), twinStateSchema))
-      .orElse(dimFilterState(c.copy(agg = twin), twinStateSchema))
-      .orElse(supersetMeasureState(c.copy(agg = twin), twinStateSchema))
-      .map { cs =>
-        config.log.info(c.fingerprint,
-          s"regroup hit: replaying drill-down state ${fp2.take(12)} " +
-            s"through ${ex.projections.length} grouping sets")
-        val stateColNames = stateSchema.fields.map(_.name)
-          .filterNot(_.startsWith("_g")).toSeq
-        graft.cache.CachedState(cs.timestampMicros, stateSchema, { s =>
-          val df = cs.read(s)
-          ex.projections.map { p =>
-            val gCols = c.agg.groupingExpressions.indices.map { j =>
-              val cc =
-                if (j == gidIdx) Shims.column(p(gidSlot))
-                else p(groupSlots.find(_._1 == j).get._2) match {
-                  case _: Attribute => col(s"_g${mOf(j)}")
-                  case _ => lit(null).cast(stateSchema(s"_g$j").dataType)
-                }
-              cc.as(s"_g$j")
-            }
-            df.select(gCols ++ stateColNames.map(col): _*)
-          }.reduce(_ unionByName _)
-        })
-      }
+    val stateColNames = stateSchema.fields.map(_.name)
+      .filterNot(_.startsWith("_g")).toSeq
+    Iterator.single(new Twin(c.copy(agg = twin), twinStateSchema, fp2,
+      s"regroup hit: replaying drill-down state ${fp2.take(12)} " +
+        s"through ${ex.projections.length} grouping sets",
+      cs => graft.cache.CachedState(cs.timestampMicros, stateSchema, { s =>
+        val df = cs.read(s)
+        ex.projections.map { p =>
+          val gCols = c.agg.groupingExpressions.indices.map { j =>
+            val cc =
+              if (j == gidIdx) Shims.column(p(gidSlot))
+              else p(groupSlots.find(_._1 == j).get._2) match {
+                case _: Attribute => col(s"_g${mOf(j)}")
+                case _ => lit(null).cast(stateSchema(s"_g$j").dataType)
+              }
+            cc.as(s"_g$j")
+          }
+          df.select(gCols ++ stateColNames.map(col): _*)
+        }.reduce(_ unionByName _)
+      })))
   }
 
   // ------------------------------------- factorized two-fact join
@@ -2690,7 +2590,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * shape the single-state path must reject (appends to either side
     * invalidate a state keyed on the join output). Factorization makes it
     * incremental anyway: push the aggregate to BOTH sides (eager
-    * aggregation, Yan & Larson VLDB'95 — the same commute rejoinFactState
+    * aggregation, Yan & Larson VLDB'95 — the same commute rejoinTwins
     * uses one-sided; as two-sided delta avoidance it is the factorized
     * incremental-view-maintenance idea of DBToaster, Koch et al.):
     *
@@ -3759,7 +3659,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     // result below the twin's watermark; the delta scan runs the narrow
     // chain itself). Recursive to depth 2: a doubly-narrowed slice
     // answers from the doubly-wider view. Same lattice idea as the
-    // aggregate path's dimFilterState, at row grain.
+    // aggregate path's refilterTwins, at row grain.
     val entry0 = rowViewLookup(chain, fp, exactFp = Some(fp))
     // late re-scan band at ROW grain: when the temporal column survives
     // the projection, lower the effective watermark to wm − band, drop
@@ -3938,11 +3838,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * aggregate and the join must be fact-only (they transplant to the
     * twin); the dim side must be declared static — the same staleness
     * contract the direct cached-join path already requires. */
-  private def rejoinFactState(c: Cacheable,
-      stateSchema: StructType): Option[graft.cache.CachedState] = {
+  private def rejoinTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     import org.apache.spark.sql.catalyst.expressions.EqualTo
     import org.apache.spark.sql.catalyst.plans.Inner
-    if (!config.rejoinFromFactState) return None
     // V1 shape: Filter / SubqueryAlias / pass-through-Project chain over
     // exactly one join
     var filters = List.empty[Expression] // outermost-first
@@ -3954,23 +3853,23 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       case jn: Join => Some(jn)
       case _ => None
     }
-    val j = peel(c.agg.child).getOrElse(return None)
-    if (j.joinType != Inner) return None
+    val j = peel(c.agg.child).getOrElse(return Iterator.empty)
+    if (j.joinType != Inner) return Iterator.empty
     val (factSide, dimSide) =
       if (j.left.outputSet.subsetOf(c.staticOuts)) (j.right, j.left)
       else if (j.right.outputSet.subsetOf(c.staticOuts)) (j.left, j.right)
-      else return None
+      else return Iterator.empty
     val (fk, pk) = j.condition match {
       case Some(EqualTo(a: Attribute, b: Attribute)) =>
         if (factSide.outputSet.contains(a) && dimSide.outputSet.contains(b))
           (a, b)
         else if (factSide.outputSet.contains(b) &&
           dimSide.outputSet.contains(a)) (b, a)
-        else return None
-      case _ => return None
+        else return Iterator.empty
+      case _ => return Iterator.empty
     }
     if (!filters.forall(_.references.subsetOf(factSide.outputSet)))
-      return None
+      return Iterator.empty
     // grouping splits cleanly by side; measures (incl. any expression
     // around them in the output) reference only fact columns
     val groups = c.agg.groupingExpressions
@@ -3982,11 +3881,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       case (g, i) if g.references.nonEmpty &&
         g.references.subsetOf(dimSide.outputSet) => i
     }
-    if (factIdx.length + dimIdx.length != groups.length) return None
+    if (factIdx.length + dimIdx.length != groups.length) return Iterator.empty
     val measureOuts = c.agg.aggregateExpressions.filter(
       _.exists(_.isInstanceOf[AggregateExpression]))
     if (!measureOuts.forall(_.references.subsetOf(factSide.outputSet)))
-      return None
+      return Iterator.empty
     // twin: the plain fact query grouped by (fact groups, join key)
     val factGroups = factIdx.map(groups(_))
     val fkPos = factGroups.indexWhere {
@@ -4014,29 +3913,22 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
       twinGroups.zipWithIndex.map { case (g, i) =>
         org.apache.spark.sql.types.StructField(s"_g$i", g.dataType)
       } ++ stateSchema.drop(nGroup))
-    twinState(fp2)
-      .filter(cs => schemaCompatible(cs.schema, twinStateSchema))
-      // composes with measure subsumption: the fact-keyed twin may exist
-      // only as a measure-superset entry
-      .orElse(supersetMeasureState(c.copy(agg = twin), twinStateSchema))
-      .map { cs =>
-        config.log.info(c.fingerprint,
-          s"rejoin hit: replaying (${fk.name})-keyed fact state " +
-            s"${fp2.take(12)} re-joined to the static dimension")
-        val stateCols = stateSchema.drop(nGroup).map(f => col(f.name))
-        graft.cache.CachedState(cs.timestampMicros, stateSchema, { s =>
-          val dimDF = Shims.ofRows(s, dimSide)
-          val groupSel: Seq[Column] = groups.zipWithIndex.map {
-            case (g, i) =>
-              val t = factIdx.indexOf(i)
-              if (t >= 0) col(s"_g$t").as(s"_g$i")
-              else Shims.column(g).as(s"_g$i")
-          }
-          cs.read(s)
-            .join(dimDF, col(s"_g$fkTwinIdx") === Shims.column(pk))
-            .select(groupSel ++ stateCols: _*)
-        })
-      }
+    val stateCols = stateSchema.drop(nGroup).map(f => col(f.name))
+    Iterator.single(new Twin(c.copy(agg = twin), twinStateSchema, fp2,
+      s"rejoin hit: replaying (${fk.name})-keyed fact state " +
+        s"${fp2.take(12)} re-joined to the static dimension",
+      cs => graft.cache.CachedState(cs.timestampMicros, stateSchema, { s =>
+        val dimDF = Shims.ofRows(s, dimSide)
+        val groupSel: Seq[Column] = groups.zipWithIndex.map {
+          case (g, i) =>
+            val t = factIdx.indexOf(i)
+            if (t >= 0) col(s"_g$t").as(s"_g$i")
+            else Shims.column(g).as(s"_g$i")
+        }
+        cs.read(s)
+          .join(dimDF, col(s"_g$fkTwinIdx") === Shims.column(pk))
+          .select(groupSel ++ stateCols: _*)
+      })))
   }
 
   // --------------------------------------------- measure subsumption
@@ -4085,44 +3977,43 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
     * the projected columns are byte-for-byte the state this query would
     * have captured — and the put then stores the projection under THIS
     * fingerprint, so the next run hits directly. */
-  private def supersetMeasureState(c: Cacheable,
-      stateSchema: StructType): Option[graft.cache.CachedState] = {
-    if (!config.remeasureFromSupersetState) return None
+  private def remeasureTwins(c: Cacheable,
+      stateSchema: StructType): Iterator[Twin] = {
     val needed = measureRows(c)
     val nGroup = c.agg.groupingExpressions.length
-    config.cache.entriesForBase(baseFingerprint(c.agg)).view
+    config.cache.entriesForBase(baseFingerprint(c.agg)).iterator
       .filter(_._1 != c.fingerprint)
       .flatMap { case (fp2, stored) =>
         val storedMap = stored.toMap
         val covers = stored.size == storedMap.size && needed.forall {
           case (d, names) => storedMap.get(d).exists(_.length == names.length)
         }
-        if (!covers) None
-        else twinState(fp2).flatMap { cs =>
-          val byName = cs.schema.fields.map(f => f.name -> f).toMap
-          val sel = cs.schema.take(nGroup).map(f => col(f.name)) ++
-            needed.flatMap { case (d, names) =>
-              storedMap(d).zip(names).map { case (from, to) =>
-                col(from).as(to)
-              }
-            }
-          val projSchema = try {
-            Some(StructType(cs.schema.take(nGroup) ++ needed.flatMap {
-              case (d, names) => storedMap(d).zip(names).map {
-                case (from, to) => byName(from).copy(name = to)
-              }
-            }))
-          } catch { case _: NoSuchElementException => None }
-          projSchema.filter(schemaCompatible(_, stateSchema)).map { ps =>
-            config.log.info(c.fingerprint,
-              s"remeasure hit: replaying measure-superset state " +
-                s"${fp2.take(12)} projected to ${needed.length} of " +
-                s"${stored.size} measures")
-            graft.cache.CachedState(cs.timestampMicros, ps,
-              s => cs.read(s).select(sel: _*))
-          }
+        val renames = needed.flatMap { case (d, names) =>
+          storedMap.getOrElse(d, Nil).zip(names)
         }
-      }.headOption
+        // the stored state projected to this query's columns; None when
+        // it lacks one of them
+        def projected(st: StructType): Option[StructType] = {
+          val byName = st.fields.map(f => f.name -> f).toMap
+          val ms = renames.flatMap { case (from, to) =>
+            byName.get(from).map(_.copy(name = to)) }
+          Option.when(ms.length == renames.length)(
+            StructType(st.take(nGroup) ++ ms))
+        }
+        val sel = stateSchema.take(nGroup).map(f => col(f.name)) ++
+          renames.map { case (from, to) => col(from).as(to) }
+        Option.when(covers)(new Twin(c, stateSchema, fp2,
+            s"remeasure hit: replaying measure-superset state " +
+              s"${fp2.take(12)} projected to ${needed.length} of " +
+              s"${stored.size} measures",
+            cs => graft.cache.CachedState(cs.timestampMicros,
+              projected(cs.schema).get, s => cs.read(s).select(sel: _*))) {
+          // the superset's own layout is unknown before its state is read:
+          // fit on the projection this query keeps
+          override def fits(st: StructType): Boolean =
+            projected(st).exists(schemaCompatible(_, stateSchema))
+        })
+      }
   }
 
   private def splitConj(e: Expression): Seq[Expression] = e match {
@@ -4158,10 +4049,13 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig) {
         a.name, a.dataType, a.nullable)))
     def uniqueNames(p: LogicalPlan) =
       p.output.map(_.name.toLowerCase).distinct.size == p.output.size
+    // stripping conjuncts a then b reaches the twin b then a does
+    val memo = scala.collection.mutable.HashMap
+      .empty[String, Option[graft.cache.CachedState]]
     def probeTwin(twin: LogicalPlan, depth: Int)
         : Option[graft.cache.CachedState] = {
       val fp2 = Fingerprint.of(twin) + ":rows" + fpSuffix
-      twinState(fp2)
+      memo.getOrElseUpdate(fp2, twinState(fp2))
         .filter(cs => schemaCompatible(cs.schema, rowSchema(twin)))
         .orElse(rowProbe(twin, depth + 1))
     }

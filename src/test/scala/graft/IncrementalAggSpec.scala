@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -2358,16 +2358,6 @@ class IncrementalAggSpec extends AnyFunSuite {
         .groupBy(date_trunc("hour", col("ts")).as("bucket"))
         .agg(count(lit(1)).as("cnt"))).collect()
     assert(!logC.messages.exists(_.startsWith("remeasure hit")), logC.messages)
-
-    // (d) flag off — probe disabled even though a superset is warm
-    val logD = new RecordingLog
-    QueryCacheSession(spark, QueryCacheConfig(cache,
-        defaultTemporalColumn = "ts", log = logD,
-        remeasureFromSupersetState = false))
-      .run(spark.read.parquet(work).filter(col("value") > 1)
-        .groupBy(date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count(lit(1)).as("cnt"))).collect()
-    assert(!logD.messages.exists(_.startsWith("remeasure hit")), logD.messages)
   }
 
   test("composed subsumption: day-only subset measures from warm hour superset state") {
@@ -2477,10 +2467,9 @@ class IncrementalAggSpec extends AnyFunSuite {
       .groupBy(date_trunc("day", col("ts")).as("day"), col("user_id"))
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
     def cfg(log: RecordingLog = new RecordingLog,
-        nowUs: Option[Long] = None,
-        rejoin: Boolean = true) = QueryCacheConfig(cache,
-      defaultTemporalColumn = "ts", overrideNowMicros = nowUs, log = log,
-      rejoinFromFactState = rejoin).withStaticDimensions("customer")
+        nowUs: Option[Long] = None) = QueryCacheConfig(cache,
+      defaultTemporalColumn = "ts", overrideNowMicros = nowUs, log = log)
+      .withStaticDimensions("customer")
     QueryCacheSession(spark, cfg(nowUs = Some(splitUs)))
       .run(factQ(spark.read.parquet(work))).collect()
     late.write.mode("append").parquet(work)
@@ -2525,15 +2514,6 @@ class IncrementalAggSpec extends AnyFunSuite {
         .groupBy(col("c_mktsegment"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))).collect()
     assert(!logD.messages.exists(_.startsWith("rejoin hit")), logD.messages)
-
-    // (e) flag off
-    val logE = new RecordingLog
-    QueryCacheSession(spark, cfg(logE, rejoin = false))
-      .run(spark.read.parquet(work).filter(col("value") > 1)
-        .join(cust, col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))).collect()
-    assert(!logE.messages.exists(_.startsWith("rejoin hit")), logE.messages)
   }
 
   test("heavy hitters through the cache: bounds hold in the shrinking regime") {
@@ -2723,28 +2703,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(logM.messages.exists(m => m.startsWith("rerange hit") &&
       m.contains("compensation scan over 1 partial edge bucket(s)")),
       logM.messages)
-
-    // compensation off: an unaligned bound bails to a plain miss, still
-    // correct (fresh window so the run above's own stored state can't hit)
-    def winMisaligned2(df: DataFrame) = agg(df.filter(col("value") > 1 &&
-      col("ts") >= "2024-01-09 10:45:00"))
-    val logMOff = new RecordingLog
-    val misOffDF = QueryCacheSession(spark, QueryCacheConfig(cache,
-        defaultTemporalColumn = "ts", log = logMOff,
-        rangeCompensationScan = false))
-      .run(winMisaligned2(spark.read.parquet(work)))
-    assertSameRows(misOffDF, winMisaligned2(eventsFull), tol = 1e-9)
-    assert(!logMOff.messages.exists(_.startsWith("rerange hit")),
-      logMOff.messages)
-
-    // flag off: the same cold window runs as a plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        rerangeFromUnboundedState = false))
-      .run(win(spark.read.parquet(work)))
-    assertSameRows(offDF, win(eventsFull), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("rerange hit")), logOff.messages)
   }
 
   test("rerange composes with refilter: windowed dim slice from warm unbounded drill-down") {
@@ -2779,7 +2737,35 @@ class IncrementalAggSpec extends AnyFunSuite {
     assertSameRows(df, winSlice(eventsFull), tol = 1e-9)
     assert(log.messages.exists(_.startsWith("rerange hit")), log.messages)
     assert(log.messages.exists(_.startsWith("refilter hit")), log.messages)
+    assert(log.messages.exists(_.startsWith("probe path: rerange > refilter")),
+      log.messages)
     assert(log.messages.exists(_.startsWith("cache hit")), log.messages)
+  }
+
+  test("a miss looks each twin up once, however many probe paths reach it") {
+    val (early, _, splitUs) = split()
+    val work = tmpDir("probe-memo")
+    early.write.mode("overwrite").parquet(work)
+    // a windowed dim slice: rerange > refilter and refilter > rerange both
+    // derive the unbounded, unsliced (day, event_type) twin, and the
+    // regrain and remeasure twins after it repeat on both paths
+    def winSlice(df: DataFrame) = df
+      .filter(col("value") > 1 && col("event_type") === "click" &&
+        col("ts") >= "2024-01-08 00:00:00" && col("ts") < "2024-01-15 00:00:00")
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    val cache = new GetCountingCache
+    val log = new RecordingLog
+    val df = QueryCacheSession(spark, QueryCacheConfig(cache,
+        defaultTemporalColumn = "ts", overrideNowMicros = Some(splitUs),
+        log = log).withRedimDimensions("event_type"))
+      .run(winSlice(spark.read.parquet(work)))
+    assertSameRows(df, winSlice(spark.read.parquet(work)), tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("cache miss")), log.messages)
+    val gets = cache.gets
+    assert(gets.size > 10, gets) // the search ran through the lattice
+    val repeated = gets.filter(_._2 > 1)
+    assert(repeated.isEmpty, s"fingerprints looked up more than once: $repeated")
   }
 
   test("rerange compensation: both-ends-unaligned window from warm state + sliver scans") {
@@ -3443,15 +3429,6 @@ class IncrementalAggSpec extends AnyFunSuite {
       .run(roll(spark.read.parquet(work))).collect()
     assert(log5.messages.exists(_.startsWith("cache hit")), log5.messages)
     assert(!log5.messages.exists(_.startsWith("regroup hit")), log5.messages)
-
-    // flag off: cold rollup runs as a plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        regroupFromDrilldownState = false))
-      .run(roll(spark.read.parquet(work)))
-    assertSameRows(offDF, roll(spark.read.parquet(work)), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("regroup hit")), logOff.messages)
   }
 
   test("regroup works through the durable cache across sessions") {
@@ -3558,17 +3535,6 @@ class IncrementalAggSpec extends AnyFunSuite {
         col("sum_value"), col("min_value")), tol = 1e-9)
     assert(!logOdd.messages.exists(_.startsWith("rehop hit")), logOdd.messages)
     assert(logOdd.messages.exists(_.startsWith("rehop bail")), logOdd.messages)
-
-    // flag off: the same cold hopping query runs as a plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        rehopFromTumblingState = false))
-      .run(hop(spark.read.parquet(work)))
-    assertSameRows(offDF.select(col("w.start"), col("cnt"), col("sum_value")),
-      hop(eventsFull).select(col("w.start"), col("cnt"), col("sum_value")),
-      tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("rehop hit")), logOff.messages)
   }
 
   test("retumble: coarse tumbling window answered from warm finer tumbling state") {
@@ -3630,15 +3596,6 @@ class IncrementalAggSpec extends AnyFunSuite {
       .run(q("25 minutes")(spark.read.parquet(work)))
     assertSameRows(flat(oddDF), flat(q("25 minutes")(eventsFull)), tol = 1e-9)
     assert(!logOdd.messages.exists(_.startsWith("retumble hit")), logOdd.messages)
-
-    // flag off (regrainFromFinerState gates both faces): plain miss
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        regrainFromFinerState = false))
-      .run(q("1 hour")(spark.read.parquet(work)))
-    assertSameRows(flat(offDF), flat(q("1 hour")(eventsFull)), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("retumble hit")), logOff.messages)
   }
 
   test("rehop composes with retumble: hopping query served from a 5-minute tumbling state") {
@@ -3703,7 +3660,7 @@ class IncrementalAggSpec extends AnyFunSuite {
 
     // composes with regrain: a DAY window probes while ONLY hour-trunc
     // state exists (before any window spelling is ever cached) — the
-    // day-trunc twin lifts the hour-trunc state through finerGrainState,
+    // day-trunc twin lifts the hour-trunc state through regrain,
     // then rewindow re-keys it to day structs
     val log4 = new RecordingLog
     val dayDF = QueryCacheSession(spark, cfg(log4))
@@ -3772,15 +3729,6 @@ class IncrementalAggSpec extends AnyFunSuite {
       .run(win("7 days")(spark.read.parquet(work)))
     assertSameRows(flat(thuDF), flat(win("7 days")(eventsFull)), tol = 1e-9)
     assert(!logT.messages.exists(_.startsWith("rewindow hit")), logT.messages)
-
-    // flag off: plain miss, still correct
-    val logOff = new RecordingLog
-    val offDF = QueryCacheSession(spark, QueryCacheConfig(
-        new MemoryQueryCache(), defaultTemporalColumn = "ts", log = logOff,
-        regrainFromFinerState = false))
-      .run(win("1 hour")(spark.read.parquet(work)))
-    assertSameRows(flat(offDF), flat(win("1 hour")(eventsFull)), tol = 1e-9)
-    assert(!logOff.messages.exists(_.startsWith("rewindow hit")), logOff.messages)
   }
 
   test("stream-warmed tumbling state serves a cold hopping query across the batch/stream seam") {
@@ -3970,6 +3918,84 @@ class IncrementalAggSpec extends AnyFunSuite {
     assertSameRows(sliceDF, slice2(eventsFull), tol = 1e-9)
     assert(logS.messages.count(_.startsWith("refilter hit")) == 2, logS.messages)
     assert(logS.messages.exists(_.startsWith("cache hit")), logS.messages)
+  }
+
+  test("one depth bound for the whole search: five probe steps serve, six do not") {
+    val (early, late, splitUs) = split()
+    val work = tmpDir("probe-depth")
+    early.write.mode("overwrite").parquet(work)
+    val cache = new MemoryQueryCache()
+    def dims(df: DataFrame) = df
+      .withColumn("seg", (col("user_id") % 3).cast("string"))
+      .withColumn("tier", (col("user_id") % 2).cast("string"))
+    def clicksInWeek(df: DataFrame, and: Seq[Column] = Nil) =
+      df.filter((Seq(col("value") > 1, col("event_type") === "click",
+        col("ts") >= "2024-01-08 00:00:00",
+        col("ts") < "2024-01-15 00:00:00") ++ and).reduce(_ && _))
+    // the only warm state: an unbounded, unsliced hour drill-down
+    def drill(df: DataFrame) = dims(df).filter(col("value") > 1)
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"),
+        col("event_type"), col("seg"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    def cfg(log: RecordingLog = new RecordingLog,
+        nowUs: Option[Long] = None) = QueryCacheConfig(cache,
+      defaultTemporalColumn = "ts", overrideNowMicros = nowUs, log = log)
+      .withRedimDimensions("event_type", "seg", "tier")
+    QueryCacheSession(spark, cfg(nowUs = Some(splitUs)))
+      .run(drill(spark.read.parquet(work))).collect()
+    late.write.mode("append").parquet(work)
+    def dayWindow(ms: Seq[Column])(df: DataFrame) = clicksInWeek(dims(df))
+      .groupBy(window(col("ts"), "1 day").as("w"))
+      .agg(ms.head, ms.tail: _*)
+      .select(col("w.start"), col("w.end"), col("cnt"))
+    val both = Seq(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+
+    // a day-window count of clicks in one week needs six steps from it:
+    // rewindow, refilter, redim, rerange, regrain and remeasure. Past the
+    // bound it is a plain miss with the same answer (the old per-probe
+    // depths, reset after rewindow, served it)
+    val log6 = new RecordingLog
+    val count6 = Seq(count(lit(1)).as("cnt"))
+    val df6 = QueryCacheSession(spark, cfg(log6))
+      .run(dayWindow(count6)(spark.read.parquet(work)))
+    assertSameRows(df6, dayWindow(count6)(eventsFull), tol = 1e-9)
+    assert(!log6.messages.exists(_.startsWith("probe path")), log6.messages)
+    assert(log6.messages.exists(_.startsWith("cache miss")), log6.messages)
+
+    // with the sum as well (no remeasure) it takes five, and is served
+    val log5 = new RecordingLog
+    val df5 = QueryCacheSession(spark, cfg(log5))
+      .run(dayWindow(both)(spark.read.parquet(work)))
+    assertSameRows(df5, dayWindow(both)(eventsFull), tol = 1e-9)
+    assert(log5.messages.contains(
+      "probe path: rewindow > refilter > redim > rerange > regrain"),
+      log5.messages)
+
+    // four dimension/filter/range steps from an hour query, which the old
+    // cap of three such steps cut: rerange, two slices and the extra
+    // `tier` key, served from a (hour, event_type, seg, tier) drill-down
+    def drill3(df: DataFrame) = dims(df).filter(col("value") > 1)
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"),
+        col("event_type"), col("seg"), col("tier"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    val cache4 = new MemoryQueryCache()
+    val work4 = tmpDir("probe-depth4")
+    early.write.mode("overwrite").parquet(work4)
+    def cfg4(log: RecordingLog = new RecordingLog,
+        nowUs: Option[Long] = None) = cfg(log, nowUs).copy(cache = cache4)
+    QueryCacheSession(spark, cfg4(nowUs = Some(splitUs)))
+      .run(drill3(spark.read.parquet(work4))).collect()
+    late.write.mode("append").parquet(work4)
+    def hourSlice(df: DataFrame) =
+      clicksInWeek(dims(df), Seq(col("seg") === "1"))
+        .groupBy(date_trunc("hour", col("ts")).as("bucket"))
+        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
+    val log4 = new RecordingLog
+    val df4 = QueryCacheSession(spark, cfg4(log4))
+      .run(hourSlice(spark.read.parquet(work4)))
+    assertSameRows(df4, hourSlice(eventsFull), tol = 1e-9)
+    assert(log4.messages.contains(
+      "probe path: rerange > refilter > refilter > redim"), log4.messages)
   }
 
   test("refilter isolation: undeclared dim, non-equality predicate, strict crossover") {
@@ -4950,4 +4976,21 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(got.head.getLong(0) == expect.head.getLong(0),
       s"${got.head} vs $expect — band either corrupted state or silently engaged")
   }
+}
+
+/** A MemoryQueryCache behind a cache that counts `get` calls per
+  * fingerprint. */
+final class GetCountingCache extends graft.cache.QueryCache {
+  private val inner = new MemoryQueryCache()
+  private val counts = scala.collection.concurrent.TrieMap.empty[String, Int]
+  def gets: Map[String, Int] = counts.readOnlySnapshot().toMap
+  override def get(fingerprint: String): Option[graft.cache.CachedState] = {
+    counts.updateWith(fingerprint)(n => Some(n.getOrElse(0) + 1))
+    inner.get(fingerprint)
+  }
+  override def put(fingerprint: String, timestampMicros: Long,
+      state: DataFrame): DataFrame = inner.put(fingerprint, timestampMicros, state)
+  override def invalidate(fingerprint: String): Unit = inner.invalidate(fingerprint)
+  override def describe(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    inner.describe(spark)
 }

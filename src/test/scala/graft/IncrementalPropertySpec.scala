@@ -462,4 +462,113 @@ class IncrementalPropertySpec extends AnyFunSuite {
         s"expected ${chunks.length - 1} warm hits, got $hits: ${log.messages}")
     }
   }
+
+  test("subsumption: a warm twin serves each lattice shape along the expected probe path") {
+    // Random (warm source, target) pairs over the lattice the subsumption
+    // search covers: time grain × an extra declared dimension (seg) × a
+    // slice on a declared dimension (event_type) × a measure subset × an
+    // aligned ts range. The target is drawn first; each applicable step
+    // then either holds or is undone in the source, and the search must
+    // serve the target from the source along exactly those steps, in the
+    // order the composition table visits them.
+    val dayUs = 86400L * 1000000L
+    val t0 = 1704067200L * 1000000L // 2024-01-01 00:00 UTC
+    val latSchema = StructType(Seq(
+      StructField("ts", TimestampType),
+      StructField("event_type", StringType),
+      StructField("seg", StringType),
+      StructField("value", LongType)))
+    val measures = Seq(count(lit(1)).as("cnt"), sum("value").as("sv"),
+      min("value").as("mn"), max("value").as("mx"))
+    // `keys`: the dimension keys after the time bucket, in grouping order
+    case class Shape(hourly: Boolean, keys: Seq[String], sliced: Boolean,
+        ranged: Boolean, ms: Seq[Int]) {
+      def df(lo: Long, hi: Long)(t: DataFrame): DataFrame = {
+        val conds = (if (sliced) Seq(col("event_type") === "click") else Nil) ++
+          (if (ranged) Seq(col("ts") >= timestamp_micros(lit(lo)),
+            col("ts") < timestamp_micros(lit(hi))) else Nil)
+        val in = if (conds.isEmpty) t else t.filter(conds.reduce(_ && _))
+        val b = date_trunc(if (hourly) "hour" else "day", col("ts")).as("b")
+        val ag = ms.map(measures)
+        in.groupBy(b +: keys.map(col): _*).agg(ag.head, ag.tail: _*)
+      }
+    }
+    case class Pair(rows: Seq[(Long, String, String, Long)], splitUs: Long,
+        lo: Long, hi: Long, target: Shape, steps: Set[String])
+    val genPair: Gen[Pair] = for {
+      n <- Gen.choose(60, 160)
+      offs <- Gen.listOfN(n, Gen.choose(0L, 6 * 86400L - 1))
+      ets <- Gen.listOfN(n, Gen.oneOf("click", "view", "buy"))
+      segs <- Gen.listOfN(n, Gen.oneOf("a", "b"))
+      vals <- Gen.listOfN(n, Gen.choose(-50L, 50L))
+      splitDay <- Gen.choose(3, 5)
+      loDay <- Gen.choose(0, 4)
+      hiDay <- Gen.choose(loDay + 1, 6)
+      hourly <- Gen.oneOf(true, false)
+      bySeg <- Gen.oneOf(true, false)
+      sliced <- Gen.oneOf(true, false)
+      ranged <- Gen.oneOf(true, false)
+      ms <- Gen.atLeastOne(measures.indices).map(_.toSeq.sorted)
+      undo <- Gen.listOfN(5, Gen.oneOf(true, false))
+    } yield {
+      val applicable = Seq("rerange" -> ranged, "refilter" -> sliced,
+        "redim" -> !bySeg, "regrain" -> !hourly,
+        "remeasure" -> (ms.size < measures.size))
+      Pair(offs.lazyZip(ets).lazyZip(segs).lazyZip(vals).toSeq.map {
+          case (o, e, sg, v) => (t0 + o * 1000000L, e, sg, v) },
+        t0 + splitDay * dayUs, t0 + loDay * dayUs, t0 + hiDay * dayUs,
+        Shape(hourly, if (bySeg) Seq("seg") else Nil, sliced, ranged, ms),
+        applicable.zip(undo).collect { case ((st, true), true) => st }.toSet)
+    }
+    // refilter then redim each append their key, in that order
+    def sourceOf(t: Shape, steps: Set[String]): Shape = t.copy(
+      hourly = t.hourly || steps("regrain"),
+      keys = t.keys ++ Seq("event_type" -> "refilter", "seg" -> "redim")
+        .collect { case (k, st) if steps(st) => k },
+      sliced = t.sliced && !steps("refilter"),
+      ranged = t.ranged && !steps("rerange"),
+      ms = if (steps("remeasure")) measures.indices else t.ms)
+    def latDF(rows: Seq[(Long, String, String, Long)]): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.map { case (t, e, sg, v) =>
+        Row(new java.sql.Timestamp(t / 1000), e, sg, v) }.asJava, latSchema)
+    }
+    def rowsOf(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    val params = Gen.Parameters.default
+    val paths = (1 to 14).map { caseNo =>
+      val p0 = genPair.pureApply(params, Seed(4242L + caseNo))
+      // the first case takes every step: the longest path in the lattice
+      val p = if (caseNo > 1) p0 else p0.copy(
+        target = Shape(hourly = false, keys = Nil, sliced = true,
+          ranged = true, ms = Seq(0)),
+        steps = Set("rerange", "refilter", "redim", "regrain", "remeasure"))
+      val source = sourceOf(p.target, p.steps)
+      val (early, late) = p.rows.partition(_._1 < p.splitUs)
+      val work = tmpDir(s"proplattice$caseNo")
+      latDF(early).write.mode("overwrite").parquet(work)
+      val cache = new MemoryQueryCache()
+      val log = new RecordingLog
+      def cfg(now: Option[Long]) = QueryCacheConfig(cache,
+        defaultTemporalColumn = "ts", overrideNowMicros = now, log = log)
+        .withRedimDimensions("event_type", "seg")
+      QueryCacheSession(spark, cfg(Some(p.splitUs)))
+        .run(source.df(p.lo, p.hi)(spark.read.parquet(work))).collect()
+      latDF(late).write.mode("append").parquet(work)
+      log.clear()
+      val got = rowsOf(QueryCacheSession(spark, cfg(None))
+        .run(p.target.df(p.lo, p.hi)(spark.read.parquet(work))))
+      val want = rowsOf(p.target.df(p.lo, p.hi)(latDF(p.rows)))
+      val ctx = s"case $caseNo target ${p.target} steps ${p.steps}: ${log.messages}"
+      assert(got == want, s"$got vs $want; $ctx")
+      assert(log.messages.exists(_.startsWith("cache hit")), ctx)
+      val expected = Seq("rerange", "refilter", "redim", "regrain", "remeasure")
+        .filter(p.steps)
+      val served = log.messages.filter(_.startsWith("probe path: "))
+      if (expected.isEmpty) assert(served.isEmpty, ctx)
+      else assert(served == Seq(s"probe path: ${expected.mkString(" > ")}"), ctx)
+      expected.length
+    }
+    assert(paths.max == 5 && paths.count(_ > 1) >= 3, paths)
+  }
 }
