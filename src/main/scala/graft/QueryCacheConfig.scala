@@ -120,40 +120,6 @@ import graft.log.{CacheLog, NoOpLog}
   *                              (case-insensitive); empty set = feature
   *                              off. No reference analog (its fingerprint
   *                              is all-or-nothing, src/aggregate.rs:89).
-  * @param factorizedJoinState   TWO-FACT join aggregates: an aggregate
-  *                              over an inner equi-join of two GROWING
-  *                              tables (no declared-static side) is
-  *                              decomposed into two per-side twin
-  *                              aggregates at (join key × side-pure
-  *                              group) grain — each twin is a plain
-  *                              single-table cacheable aggregate the
-  *                              normal machinery maintains incrementally
-  *                              under its own fingerprint and watermark —
-  *                              plus a state-sized combine join that
-  *                              multiplies counts/sums by the other
-  *                              side's multiplicity (eager aggregation
-  *                              applied to BOTH sides, Yan & Larson '95;
-  *                              the factorized-IVM idea of DBToaster).
-  *                              Appends to EITHER table are absorbed by
-  *                              that side's delta scan alone; the fact
-  *                              tables are never rescanned. Supported:
-  *                              inner / left-semi / left-anti and LEFT/
-  *                              RIGHT/FULL OUTER attr=attr equi-joins
-  *                              (the combine join carries the outer
-  *                              type: a state row without a partner
-  *                              survives null-extended, the missing
-  *                              side's count coalesces to multiplicity
-  *                              1, and the NULL state columns reproduce
-  *                              the vanilla null-extension — which
-  *                              requires bare-column grouping/measures
-  *                              and no filters on a null-extendable
-  *                              side), side-pure filters/grouping,
-  *                              side-pure count/sum/min/max/avg and
-  *                              count(DISTINCT col) measures (no
-  *                              cross-side measures) — anything else
-  *                              runs vanilla. ON by default; engages
-  *                              only after the single-state decision
-  *                              bails and never changes answers.
   * @param percentileSketchState ON (default): numeric percentile /
   *                              approx_percentile state past 4096
   *                              distinct values per group compresses
@@ -227,16 +193,8 @@ final case class QueryCacheConfig(
     temporalPartitionColumn: Option[String] = None,
     staticDimensionTables: Set[String] = Set.empty,
     redimDimensionColumns: Set[String] = Set.empty,
-    factorizedJoinState: Boolean = true,
     percentileSketchState: Boolean = true,
     lateRescanBandMicros: Option[Long] = None,
-    /** internal bucketing grain for NO-GROUP-BY aggregates with a dynamic
-      * lower bound (reference README.md:132's own sketch: "rewrite the
-      * aggregation to include a group_by clause, then filter, then
-      * aggregate again") — the bound qualifies buckets by their START at
-      * this grain, the same bucket-granularity semantics the grouped
-      * dynamic-bound path defines. date_trunc grains only. */
-    dynamicBoundInternalGrain: String = "hour",
     /** opt-in TEMPORAL TWIN for grouped aggregates WITHOUT a temporal
       * bucket key (`GROUP BY event_type`): state is kept at
       * (date_trunc(grain, ts) × keys) grain through the normal grouped
@@ -250,13 +208,6 @@ final case class QueryCacheConfig(
       * FILTER clauses fine; DISTINCT and order-statistics fall back to
       * the plain keys-only path). date_trunc grains only. */
     temporalTwinGrain: Option[String] = None,
-    /** cache SIMPLE FILTER QUERIES (no aggregate) as materialized row
-      * state — reference README.md:130's first roadmap item. State = the
-      * query's own output rows at the watermark; a warm run unions the
-      * replayed rows with a pushed `ts >= wm` delta scan. Incremental
-      * materialized view over append-only sources; capacity-guarded like
-      * aggregate state. */
-    filterQueryState: Boolean = true,
     /** warm AGGREGATE commits go through the cache's O(append) chain
       * (putAppend of this run's group-grained delta partials) instead of
       * rewriting the whole merged state — on a durable cache a dashboard
@@ -268,7 +219,7 @@ final case class QueryCacheConfig(
       * chain) and banded runs full-put, which also compacts; the memory
       * cache does not chain (driver-held state, writes are cheap). */
     aggregateStateAppend: Boolean = true,
-    /** admission guard for COLD row-state puts (filterQueryState): the
+    /** admission guard for COLD row-state puts (filter-query row views): the
       * SUM of the chain's leaf relation sizes (source file bytes — an
       * upper bound for the admitted chain shapes, since filters and
       * projections only shrink and the star-join shape is fact-bounded)

@@ -26,7 +26,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final case class CachedState(
     timestampMicros: Long,
     schema: StructType,
-    read: SparkSession => DataFrame)
+    read: SparkSession => DataFrame) {
+  /** this state's rows as `f` reshapes them, under the given watermark
+    * and schema */
+  def mapRows(f: DataFrame => DataFrame, timestampMicros: Long = timestampMicros,
+      schema: StructType = schema): CachedState =
+    CachedState(timestampMicros, schema, s => f(read(s)))
+}
 
 /** Thrown by bounded caches when the state is too large to store; the
   * executor treats it as "don't cache" and falls back to vanilla. */

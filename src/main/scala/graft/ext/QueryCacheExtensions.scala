@@ -83,13 +83,13 @@ final class QueryCacheRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val rewritten = executor match {
-      // aggregates route always; agg-free plans route only when row-state
-      // caching is on (filterQueryRewrite declines everything but a
-      // stable Filter/Project chain over a batch scan — cheap plan-only
-      // probe) and never for streaming plans
+      // aggregates route always; agg-free plans route when they filter
+      // (filterQueryRewrite declines everything but a stable
+      // Filter/Project chain over a batch scan — cheap plan-only probe)
+      // and never for streaming plans
       case Some(exec) if !inRewrite.get() && !looksInternal(plan) &&
           (plan.exists(_.isInstanceOf[Aggregate]) ||
-            (exec.config.filterQueryState && !plan.isStreaming &&
+            (!plan.isStreaming &&
               plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]))) =>
         inRewrite.set(true)
         try {

@@ -81,6 +81,15 @@ class AnalysisSpec extends AnyFunSuite {
     assert(fpFn != fpA)
   }
 
+  test("fingerprint: spellings of one date_trunc grain share a key, grains do not") {
+    def fp(grain: String) = Fingerprint.of(aggPlan(
+      ev.groupBy(date_trunc(grain, col("ts")).as("b")).agg(count(lit(1)).as("c"))))
+    assert(Set("hour", "HOUR", "Hour").map(fp).size == 1)
+    assert(Set("month", "MM", "mon", "MON").map(fp).size == 1)
+    assert(Set("day", "DD", "Day").map(fp).size == 1)
+    assert(Set("hour", "day", "week", "month", "minute").map(fp).size == 5)
+  }
+
   test("fingerprint: distinguishes sources with identical schemas") {
     val a = tmpDir("fp-a"); val b = tmpDir("fp-b")
     ev.limit(10).write.mode("overwrite").parquet(a)

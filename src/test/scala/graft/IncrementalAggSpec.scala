@@ -159,12 +159,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     // round 9: an inner equi-join with no declared-static side is now
     // answered by the FACTORIZED path instead of bailing
     assert(log.messages.exists(_.startsWith("factorized join: answered")), log.messages)
-    // with the flag off, the historical join bail applies
-    val log2 = new RecordingLog
-    val off = QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
-      defaultTemporalColumn = "ts", log = log2, factorizedJoinState = false))
-    assert(off.run(joined).collect().head.getLong(0) == ev.count())
-    assert(log2.messages.exists(_.contains("not cacheable")), log2.messages)
   }
 
   test("exact count distinct caches via set-union state") {
@@ -2768,6 +2762,75 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(repeated.isEmpty, s"fingerprints looked up more than once: $repeated")
   }
 
+  /** Fingerprint.of calls on this thread while `f` runs */
+  private def fingerprintsDuring[A](f: => A): (A, Long) = {
+    val before = graft.analysis.Fingerprint.computedOnThisThread
+    val out = f
+    (out, graft.analysis.Fingerprint.computedOnThisThread - before)
+  }
+
+  test("a probe-search miss fingerprints each plan once per rewrite") {
+    val (early, _, splitUs) = split()
+    val work = tmpDir("fp-count")
+    early.write.mode("overwrite").parquet(work)
+    // the ad-hoc explore shape: two warm panels, two declared dims, and a
+    // day x event_type query whose value filter no state covers
+    val sv = sum(col("value").cast("decimal(14,3)"))
+    def panel(grain: String, key: String)(df: DataFrame) = df
+      .groupBy(date_trunc(grain, col("ts")).as(grain), col(key))
+      .agg(count(lit(1)).as("cnt"), sv.as("sv"), min("value").as("mn"),
+        max("value").as("mx"))
+    def miss(df: DataFrame) = df.filter(col("value") > 40)
+      .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+      .agg(sv.as("sv"), max("value").as("mx"))
+    val cache = new MemoryQueryCache()
+    val log = new RecordingLog
+    val qcs = QueryCacheSession(spark, QueryCacheConfig(cache,
+      defaultTemporalColumn = "ts", overrideNowMicros = Some(splitUs),
+      log = log).withRedimDimensions("event_type", "user_id"))
+    Seq(panel("hour", "event_type") _, panel("day", "user_id") _)
+      .foreach(p => qcs.run(p(spark.read.parquet(work))).collect())
+    val (df, n) = fingerprintsDuring(qcs.run(miss(spark.read.parquet(work))))
+    assertSameRows(df, miss(spark.read.parquet(work)), tol = 1e-9)
+    assert(log.messages.count(_.startsWith("cache miss")) == 3, log.messages)
+    info(s"$n fingerprints for one miss")
+    assert(n <= 50, s"$n fingerprints for one miss")
+  }
+
+  test("a decide bail computes its aggregate's fingerprint once") {
+    val log = new RecordingLog
+    val qcs = QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
+      defaultTemporalColumn = "ts", log = log))
+    val (df, n) = fingerprintsDuring(qcs.run(eventsFull
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(size(collect_list(col("event_type"))).as("nl"))))
+    assert(df.count() > 0)
+    assert(log.messages.exists(_.startsWith("not caching: aggregate not " +
+      "incrementally mergeable")), log.messages)
+    assert(n == 1, s"$n fingerprints for one bail")
+  }
+
+  test("date_trunc grain spellings share state: 'HOUR' state serves 'hour' as a direct hit") {
+    val (early, _, splitUs) = split()
+    val work = tmpDir("grain-spelling")
+    early.write.mode("overwrite").parquet(work)
+    def q(grain: String)(df: DataFrame) = df
+      .groupBy(date_trunc(grain, col("ts")).as("h"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum("value").as("sv"))
+    val cache = new MemoryQueryCache()
+    def run(grain: String, log: RecordingLog) =
+      QueryCacheSession(spark, QueryCacheConfig(cache,
+        defaultTemporalColumn = "ts", overrideNowMicros = Some(splitUs),
+        log = log)).run(q(grain)(spark.read.parquet(work)))
+    run("HOUR", new RecordingLog).collect()
+    val log = new RecordingLog
+    assertSameRows(run("hour", log), q("hour")(spark.read.parquet(work)),
+      tol = 1e-9)
+    assert(log.messages.exists(_.startsWith("cache hit")), log.messages)
+    assert(!log.messages.exists(m => m.startsWith("cache miss") ||
+      m.startsWith("probe path")), log.messages)
+  }
+
   test("rerange compensation: both-ends-unaligned window from warm state + sliver scans") {
     val (early, late, splitUs) = split()
     val work = tmpDir("rerange-comp")
@@ -3319,10 +3382,10 @@ class IncrementalAggSpec extends AnyFunSuite {
     part(early, "click").write.mode("overwrite").parquet(workA)
     part(early, "purchase").write.mode("overwrite").parquet(workB)
 
-    def run(log: RecordingLog, flag: Boolean = true)(
+    def run(log: RecordingLog)(
         q: (DataFrame, DataFrame) => DataFrame): DataFrame =
       QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
-        defaultTemporalColumn = "ts", log = log, factorizedJoinState = flag))
+        defaultTemporalColumn = "ts", log = log))
         .run(q(spark.read.parquet(workA), spark.read.parquet(workB)))
 
     // left outer joins now FACTORIZE (see the dedicated outer test);
@@ -3342,15 +3405,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     assertSameRows(run(logCross)(qCross), vanilla(qCross))
     assert(!logCross.messages.exists(_.startsWith("factorized join: answered")),
       logCross.messages)
-
-    // flag off: the same inner query runs vanilla
-    def qInner(a: DataFrame, b: DataFrame) =
-      a.join(b, a("user_id") === b("user_id"), "inner")
-        .groupBy(date_trunc("hour", a("ts")).as("hour"))
-        .agg(count(lit(1)).as("cnt"))
-    val logOff = new RecordingLog
-    assertSameRows(run(logOff, flag = false)(qInner), vanilla(qInner))
-    assert(!logOff.messages.exists(_.contains("factorized join")), logOff.messages)
   }
 
   test("regroup: rollup/cube/grouping-sets answered from warm drill-down state, zero fact rows scanned") {
