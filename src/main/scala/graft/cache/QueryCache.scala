@@ -85,6 +85,24 @@ trait QueryCache {
         * partition the result, so segmentation never re-reads a row. */
       compactIfDeltaFraction: Option[Double] = None): Option[DataFrame] = None
 
+  /** [[putAppend]] for small AGGREGATE state, merged on the driver: the
+    * delta partials (and the entry's stored state, when the cache does
+    * not hold it already) are collected, `merge` folds them into one row
+    * per group, and the cache commits either the delta as a segment or,
+    * where putAppend would decline, the merged rows as the compacted
+    * state. Returns the merged state as a driver-held frame (it needs no
+    * further merge); None → the caller refreshes through
+    * [[putAppend]]/[[put]]. `merge(merged, partials)` folds partial rows
+    * into merged rows (one per group, passed through where no partial
+    * joins them) and returns None for rows it cannot evaluate. Default:
+    * unsupported. */
+  private[graft] def refreshMerged(fingerprint: String, timestampMicros: Long,
+      delta: DataFrame,
+      merge: (Seq[org.apache.spark.sql.catalyst.InternalRow],
+        Seq[org.apache.spark.sql.catalyst.InternalRow]) =>
+        Option[Array[org.apache.spark.sql.catalyst.InternalRow]],
+      compactIfDeltaFraction: Option[Double]): Option[DataFrame] = None
+
   /** Segment-grain BANDED refresh for row-state chains: a late re-scan
     * band re-reads [floor, now) from the source and must REPLACE the
     * state's rows at/after `floorMicros` — a full put would rewrite the
@@ -362,7 +380,7 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
       16, 0.75f, /*accessOrder=*/ true) {
     override def removeEldestEntry(
         e: java.util.Map.Entry[String, Entry]): Boolean = {
-      val evict = size() > math.max(1, maxEntries)
+      val evict = this.size() > math.max(1, maxEntries)
       if (evict) dropSourcePaths(e.getKey) // index follows the entry out
       evict
     }
@@ -473,6 +491,20 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
   * that passes the bound, or that `spark.driver.maxResultSize` aborts,
   * falls back to the distributed write (see [[writeState]]).
   *
+  * A small AGGREGATE refresh ([[refreshMerged]]) costs one Spark job,
+  * the collect of the delta's partial state: the driver merges it into
+  * the entry's state, commits the delta segment (or the merged rows, as
+  * the compaction) and answers from the merged rows with no job. The
+  * merged rows stay RESIDENT — held by this instance, at most
+  * [[ParquetQueryCache.driverStateMaxBytes]] over all entries, least
+  * recently used dropped first — tagged with the data directories of the
+  * head meta they equal, and `get` serves them as a local relation while
+  * the head names exactly those directories. Any other head (another
+  * writer's commit, even at the same version; a put, a banded refresh, a
+  * tombstone) drops the copy, and so do `invalidate`,
+  * `invalidateForTable` and eviction. Only entries a driver-side refresh
+  * committed are resident: a cold put holds no driver memory.
+  *
   * Global bounds (all OFF by default; the durable counterpart of
   * [[MemoryQueryCache]]'s maxEntries/ttlMs, which previously had no disk
   * analog — distinct fingerprints would accumulate forever): `maxEntries`
@@ -506,6 +538,53 @@ final class ParquetQueryCache(rootDir: String,
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val lastSweepMs = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Resident state: keyHash(fp) → the merged rows a driver-side refresh
+    * ([[refreshMerged]]) committed, tagged with the data directories of
+    * the head meta they equal. Directory names carry a per-writer UUID,
+    * so a tag never matches a head another writer committed, even at the
+    * same version number. Access-ordered; all access synchronized on the
+    * map; the rows held total at most
+    * [[ParquetQueryCache.driverStateMaxBytes]]. */
+  private val resident =
+    new java.util.LinkedHashMap[String, Resident](16, 0.75f, true)
+  private var residentBytes = 0L
+
+  /** the resident rows of `key` when they equal `head`'s data; a copy
+    * of any other head is dropped */
+  private def residentRows(key: String, head: Option[Meta])
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] =
+    resident.synchronized {
+      Option(resident.get(key)) match {
+        case Some(r) if head.exists(h => !h.tombstone &&
+            h.allDataDirs == r.dataDirs) => Some(r.rows)
+        case Some(_) => dropResident(key); None
+        case None => None
+      }
+    }
+
+  private def dropResident(key: String): Unit = resident.synchronized {
+    Option(resident.remove(key)).foreach(r => residentBytes -= r.bytes)
+  }
+
+  /** hold `rows` as `key`'s state under the head naming `dataDirs`,
+    * evicting least recently used copies past the bound (a state larger
+    * than the bound is not held) */
+  private def keepResident(key: String, dataDirs: Seq[String],
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow]): Unit =
+    resident.synchronized {
+      dropResident(key)
+      val bytes = rowBytes(rows)
+      if (bytes <= driverStateMaxBytes) {
+        resident.put(key, Resident(dataDirs, rows, bytes))
+        residentBytes += bytes
+        val lru = resident.entrySet.iterator
+        while (residentBytes > driverStateMaxBytes && lru.hasNext) {
+          val e = lru.next()
+          if (e.getKey != key) { residentBytes -= e.getValue.bytes; lru.remove() }
+        }
+      }
+    }
+
   /** Latest committed meta version in `dir`. Meta files are immutable and
     * versioned (`meta-<v>.json`, appearing atomically via temp+rename), so
     * a reader always sees SOME complete version — there is no
@@ -526,10 +605,15 @@ final class ParquetQueryCache(rootDir: String,
     hashToFp.put(key, fingerprint)
     val dir = new Path(rootDir, key)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestMeta(fs, dir).filterNot(_.tombstone).map { meta =>
+    val head = latestMeta(fs, dir)
+    val held = residentRows(key, head)
+    head.filterNot(_.tombstone).map { meta =>
       val dataPaths = meta.allDataDirs.map(d => new Path(dir, d).toString)
-      CachedState(meta.timestampMicros, meta.schema,
-        s => s.read.schema(meta.schema).parquet(dataPaths: _*))
+      CachedState(meta.timestampMicros, meta.schema, held match {
+        case Some(rows) => s => org.apache.spark.sql.graftshim.Shims
+          .localRows(s, meta.schema, rows.toSeq)
+        case None => s => s.read.schema(meta.schema).parquet(dataPaths: _*)
+      })
     }
   }
 
@@ -579,6 +663,7 @@ final class ParquetQueryCache(rootDir: String,
     val spark = state.sparkSession
     val key = QueryCache.keyHash(fingerprint)
     hashToFp.put(key, fingerprint)
+    dropResident(key)
     val dir = new Path(rootDir, key)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = latestMeta(fs, dir)
@@ -658,7 +743,9 @@ final class ParquetQueryCache(rootDir: String,
     * protocol — a write job, a Hadoop conf per task, `_temporary`
     * renames — buys nothing here: the meta rename is the only commit
     * point. The rows come back in [[Written.local]], so `put` answers
-    * from them instead of re-reading the file. A collect that passes the
+    * from them instead of re-reading the file. A small aggregate refresh
+    * does not come here: [[refreshMerged]] collects, merges and writes
+    * it under the same bound. A collect that passes the
     * bound, or that `spark.driver.maxResultSize` aborts, falls back to
     * the distributed write (never to an uncached run), which runs the
     * state job again: at most one job over a small input is repeated.
@@ -697,19 +784,18 @@ final class ParquetQueryCache(rootDir: String,
       keep: Long => Boolean = _ => true): Written = {
     import org.apache.spark.sql.graftshim.Shims
     val spark = df.sparkSession
-    val confs = Seq(
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
-    driverRows(df) match {
+    driverRows(Seq(df), "state rows passed %d bytes in the collect; " +
+        "writing them distributed",
+        "state collect aborted by spark.driver.maxResultSize; writing it " +
+        "distributed").map(_.head) match {
       case Some(rows) =>
         val kept = keep(rows.length)
-        if (kept) Shims.withIsolatedConf(spark, confs: _*)(s =>
-          Shims.writeParquetFile(s, rows.toSeq, df.schema, path.toString))
+        if (kept) writeRows(spark, rows, df.schema, path)
         Written(rows.length, Some(rows), kept)
       case None =>
         val conf = spark.sparkContext.hadoopConfiguration
         val fs = path.getFileSystem(conf)
-        val n = Shims.withIsolatedConf(spark, confs ++
+        val n = Shims.withIsolatedConf(spark, writeConfs ++
             (if (adaptive) Seq("spark.sql.adaptive.enabled" -> "true")
              else Nil): _*) { s =>
           Shims.writeParquet(
@@ -724,24 +810,36 @@ final class ParquetQueryCache(rootDir: String,
     }
   }
 
-  /** The state of `df` collected to the driver when it is small (see
-    * [[writeState]]); None → distributed write. */
-  private def driverRows(df: DataFrame)
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+  /** `rows` of `schema` written from the driver as one parquet file into
+    * `path` (see [[writeState]]) */
+  private def writeRows(spark: SparkSession,
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow],
+      schema: StructType, path: Path): Unit = {
+    import org.apache.spark.sql.graftshim.Shims
+    Shims.withIsolatedConf(spark, writeConfs: _*)(s =>
+      Shims.writeParquetFile(s, rows.toSeq, schema, path.toString))
+  }
+
+  /** The rows of `dfs` collected to the driver in one job when they are
+    * small together (see [[writeState]]); None → the caller's larger-state
+    * path, with a stderr line saying why: `over` (its `%d` is the bound)
+    * when the collect passed the bound, `aborted` when
+    * `spark.driver.maxResultSize` aborted it. */
+  private def driverRows(dfs: Seq[DataFrame], over: String, aborted: String)
+      : Option[Seq[Array[org.apache.spark.sql.catalyst.InternalRow]]] = {
     import org.apache.spark.sql.graftshim.Shims
     val limit = driverStateMaxBytes
-    if (limit <= 0 || !Shims.scanBytes(df).exists(_ <= limit)) None
+    if (limit <= 0 || !dfs.map(Shims.scanBytes).foldLeft(Option(0L))(
+        (a, b) => for (x <- a; y <- b) yield x + y).exists(_ <= limit)) None
     else try {
-      val rows = Shims.collectWithin(df, limit)
-      if (rows.isEmpty) System.err.println("[query-cache] state rows " +
-        s"passed $limit bytes in the collect; writing them distributed")
+      val rows = Shims.collectWithin(dfs, limit)
+      if (rows.isEmpty) System.err.println("[query-cache] " + over.format(limit))
       rows
     } catch {
       case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
           .takeWhile(_ != null).exists(t =>
             Option(t.getMessage).exists(_.contains("maxResultSize"))) =>
-        System.err.println("[query-cache] state collect aborted by " +
-          s"spark.driver.maxResultSize; writing it distributed: ${e.getMessage}")
+        System.err.println(s"[query-cache] $aborted: ${e.getMessage}")
         None
     }
   }
@@ -762,6 +860,33 @@ final class ParquetQueryCache(rootDir: String,
       }.sum
   } catch { case scala.util.control.NonFatal(_) => -1L }
 
+  /** per-segment row counts of `old`'s chain: memoized values first,
+    * footers once for legacy segments (feeds the fraction rule and the
+    * next meta) */
+  private def chainRowCounts(fs: org.apache.hadoop.fs.FileSystem,
+      conf: org.apache.hadoop.conf.Configuration, dir: Path,
+      old: Meta): Seq[(String, Long)] = {
+    val recordedRows = old.segRows.toMap
+    old.allDataDirs.map(s =>
+      s -> recordedRows.getOrElse(s, footerRows(fs, conf, dir, s)))
+  }
+
+  /** The meta of `old`'s chain plus the segment `dataDir` of `deltaRows`
+    * rows (-1 = unknown). */
+  private def appendMeta(old: Meta, fingerprint: String,
+      timestampMicros: Long, dataDir: String, chainRows: Seq[(String, Long)],
+      deltaRows: Long): Meta =
+    Meta(timestampMicros, dataDir, old.schema, old.sourcePaths,
+      fingerprint, old.baseFp, old.measures,
+      extraDataDirs = old.allDataDirs,
+      // carry the known-max map forward (the new segment stays
+      // "unknown" until a banded refresh resolves it from footers)
+      segMaxTs = old.segMaxTs,
+      // never memoize an unknown (-1) count: it would pin the fraction
+      // rule off for the NEXT append too; left out, footers re-resolve
+      segRows = chainRows.filter(_._2 >= 0) ++
+        (if (deltaRows >= 0) Seq(dataDir -> deltaRows) else Nil))
+
   /** O(append) commit: write ONLY the delta as a new segment and commit
     * a meta whose data is the previous chain plus that segment — readers
     * see the old complete chain or the new one (same temp+rename
@@ -778,34 +903,16 @@ final class ParquetQueryCache(rootDir: String,
     val conf = spark.sparkContext.hadoopConfiguration
     val key = QueryCache.keyHash(fingerprint)
     hashToFp.put(key, fingerprint)
+    dropResident(key)
     val dir = new Path(rootDir, key)
     val fs = dir.getFileSystem(conf)
     val old = latestMeta(fs, dir).filterNot(_.tombstone).getOrElse(return None)
     if (old.allDataDirs.size >= appendChainMax) return None // compact
-    if (old.schema.length != delta.schema.length ||
-        !old.schema.fields.zip(delta.schema.fields).forall {
-          case (a, b) => a.name == b.name && a.dataType == b.dataType
-        }) return None
+    if (!sameColumns(old.schema, delta.schema)) return None
     val version = math.max(timestampMicros, old.version + 1)
     val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
     val dataPath = new Path(dir, dataDir)
-    // per-segment row counts: memoized values first, footers once for
-    // legacy segments (feeds the fraction rule and future appends)
-    lazy val chainRows: Seq[(String, Long)] = {
-      val recordedRows = old.segRows.toMap
-      old.allDataDirs.map(s =>
-        s -> recordedRows.getOrElse(s, footerRows(fs, conf, dir, s)))
-    }
-    // delta-fraction compaction (aggregate chains): a delta this large
-    // re-merges about as cheaply as it chains, and chaining it would
-    // multiply answer-time state reads — decline, the caller's full put
-    // compacts. Unknown counts (-1) disable the rule conservatively.
-    def declineForFraction(deltaRows: Long): Boolean =
-      compactIfDeltaFraction.exists { f =>
-        val oldTotal = chainRows.map(_._2).sum
-        deltaRows > 0 && oldTotal >= 0 && chainRows.forall(_._2 >= 0) &&
-          deltaRows.toDouble >= f * (oldTotal + deltaRows)
-      }
+    lazy val chainRows = chainRowCounts(fs, conf, dir, old)
     // a delta segment is small by construction (one refresh band's
     // aggregate): one file, from the driver or size-coalesced even under
     // AQE-off commit confs. An all-empty delta (a no-op refresh) must
@@ -817,29 +924,100 @@ final class ParquetQueryCache(rootDir: String,
     // watermark intentionally stays put (the next delta scan prunes to
     // the same nothing).
     val written = writeState(delta, dataPath, adaptive = true,
-      keep = n => n != 0L && !declineForFraction(n))
+      keep = n => n != 0L &&
+        !tooLargeToChain(chainRows, n, compactIfDeltaFraction))
     if (!written.kept) return (if (written.rows != 0L) None
       else Some(spark.read.schema(old.schema)
         .parquet(old.allDataDirs.map(d => new Path(dir, d).toString): _*)))
-    val deltaRows = written.rows
     writeMetaAtomic(fs, dir,
-      Meta(timestampMicros, dataDir, old.schema, old.sourcePaths,
-        fingerprint, old.baseFp, old.measures,
-        extraDataDirs = old.allDataDirs,
-        // carry the known-max map forward (the new segment stays
-        // "unknown" until a banded refresh resolves it from footers)
-        segMaxTs = old.segMaxTs,
-        // never memoize an unknown (-1) count: it would pin the fraction
-        // rule off for the NEXT append too; left out, footers re-resolve
-        segRows = chainRows.filter(_._2 >= 0) ++
-          (if (deltaRows >= 0) Seq(dataDir -> deltaRows) else Nil)),
-      version)
+      appendMeta(old, fingerprint, timestampMicros, dataDir, chainRows,
+        written.rows), version)
     try cleanup(fs, dir) catch { case _: Exception => () }
-    // one scan of the whole chain, the new segment included, on both
-    // write paths: the old chain must be read anyway, and a union with
-    // the segment's rows answered slower than the single scan
+    // one scan of the whole chain, the new segment included: this is the
+    // path of state too large to merge on the driver (see refreshMerged),
+    // where the old chain must be read anyway
     Some(spark.read.schema(old.schema).parquet(
       (dataDir +: old.allDataDirs).map(d => new Path(dir, d).toString): _*))
+  }
+
+  /** [[putAppend]] with the merge on the driver — see the trait doc. The
+    * refresh runs ONE Spark job: the collect of the delta partials, with
+    * the stored chain's rows in the same job unless the entry is resident
+    * (this process's last driver-side refresh of it committed the head
+    * that is still current). Together they must fit
+    * [[ParquetQueryCache.driverStateMaxBytes]], as [[writeState]]'s
+    * collect must; a larger state, a leaf of unknown size (a shared
+    * delta) or a foreign schema returns None before any job, and a
+    * collect that passes the bound returns None after it. The driver
+    * merges state ∪ delta, commits the delta as one segment — or, where
+    * [[putAppend]] declines (`appendChainMax` segments or the delta
+    * fraction), the merged rows as the compacted state — and keeps the
+    * merged rows resident under the head it committed. An empty delta
+    * commits nothing. */
+  override private[graft] def refreshMerged(fingerprint: String,
+      timestampMicros: Long, delta: DataFrame,
+      merge: (Seq[org.apache.spark.sql.catalyst.InternalRow],
+        Seq[org.apache.spark.sql.catalyst.InternalRow]) =>
+        Option[Array[org.apache.spark.sql.catalyst.InternalRow]],
+      compactIfDeltaFraction: Option[Double]): Option[DataFrame] = {
+    import graft.util.Timing.phase
+    if (driverStateMaxBytes <= 0) return None
+    val spark = delta.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = QueryCache.keyHash(fingerprint)
+    hashToFp.put(key, fingerprint)
+    val dir = new Path(rootDir, key)
+    val fs = dir.getFileSystem(conf)
+    val head = latestMeta(fs, dir)
+    val held = residentRows(key, head)
+    val old = head.filterNot(_.tombstone).getOrElse(return None)
+    if (!sameColumns(old.schema, delta.schema)) return None
+    val chain = if (held.isDefined) Nil else Seq(spark.read.schema(old.schema)
+      .parquet(old.allDataDirs.map(d => new Path(dir, d).toString): _*))
+    val collected = phase("refresh.collect")(driverRows(delta +: chain,
+      "refresh rows passed %d bytes in the collect; refreshing through " +
+        "the chain",
+      "refresh collect aborted by spark.driver.maxResultSize; refreshing " +
+        "through the chain")).getOrElse(return None)
+    val deltaRows = collected.head
+    def answer(dataDirs: Seq[String],
+        rows: Array[org.apache.spark.sql.catalyst.InternalRow]) = {
+      keepResident(key, dataDirs, rows)
+      Some(org.apache.spark.sql.graftshim.Shims.localRows(spark,
+        old.schema, rows.toSeq))
+    }
+    // the held state is merged already: only the groups the delta
+    // touches fold again
+    val (folded, partials) = held match {
+      case Some(rows) => (rows.toSeq, deltaRows.toSeq)
+      case None => (Nil, (collected(1) ++ deltaRows).toSeq)
+    }
+    val merged = phase("refresh.merge")(merge(folded, partials))
+      .getOrElse(return None)
+    // an empty delta commits nothing (putAppend's rule)
+    if (deltaRows.isEmpty) return answer(old.allDataDirs, merged)
+    val chainRows = chainRowCounts(fs, conf, dir, old)
+    val compact = old.allDataDirs.size >= appendChainMax ||
+      tooLargeToChain(chainRows, deltaRows.length, compactIfDeltaFraction)
+    val version = math.max(timestampMicros, old.version + 1)
+    val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
+    val meta =
+      if (!compact) appendMeta(old, fingerprint, timestampMicros, dataDir,
+        chainRows, deltaRows.length)
+      else {
+        // the compacted state, as put would commit it
+        val (baseFp, measures) = recordedMeasures(fingerprint)
+          .getOrElse((old.baseFp, old.measures))
+        Meta(timestampMicros, dataDir, old.schema, old.sourcePaths,
+          fingerprint, baseFp, measures,
+          segRows = Seq(dataDir -> merged.length.toLong))
+      }
+    phase("refresh.write")(writeRows(spark, if (compact) merged else deltaRows,
+      old.schema, new Path(dir, dataDir)))
+    writeMetaAtomic(fs, dir, meta, version)
+    try cleanup(fs, dir) catch { case _: Exception => () }
+    if (compact) try globalSweep(fs) catch { case _: Exception => () }
+    answer(meta.allDataDirs, merged)
   }
 
   /** Segment-grain banded refresh — see the trait doc. Keep test: a
@@ -857,6 +1035,7 @@ final class ParquetQueryCache(rootDir: String,
     val spark = bandDelta.sparkSession
     val key = QueryCache.keyHash(fingerprint)
     hashToFp.put(key, fingerprint)
+    dropResident(key)
     val dir = new Path(rootDir, key)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = dir.getFileSystem(conf)
@@ -878,10 +1057,7 @@ final class ParquetQueryCache(rootDir: String,
     if (!tType.contains(org.apache.spark.sql.types.TimestampType)) return None
     // the band head must chain onto the stored schema exactly (same
     // check putAppend applies) — a drifted schema full-puts instead
-    if (old.schema.length != bandDelta.schema.length ||
-        !old.schema.fields.zip(bandDelta.schema.fields).forall {
-          case (a, b) => a.name == b.name && a.dataType == b.dataType
-        }) return None
+    if (!sameColumns(old.schema, bandDelta.schema)) return None
     // max(temporalCol) of one segment from its parquet footers: one
     // driver-side footer read per file, no Spark job. None = unknown.
     def footerMax(seg: String): Option[Long] = try {
@@ -1162,6 +1338,7 @@ final class ParquetQueryCache(rootDir: String,
 
   private def tombstone(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Unit = {
+    dropResident(dir.getName)
     if (!fs.exists(dir)) return
     val head = latestMeta(fs, dir)
     if (head.forall(_.tombstone)) return // nothing live to invalidate
@@ -1313,6 +1490,45 @@ object ParquetQueryCache {
     * lost every pair from 6 MB on (at 48 MB it took 3.6x as long). Tests
     * set it to 0 to take the distributed write. */
   @volatile private[graft] var driverStateMaxBytes: Long = 4L << 20
+
+  /** the conf overrides of every state write (see `writeState`) */
+  private val writeConfs = Seq(
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
+
+  /** One entry's resident state: its merged rows, the head data dirs
+    * they equal, and their bytes as a collect counts them. */
+  private final case class Resident(dataDirs: Seq[String],
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow], bytes: Long)
+
+  /** bytes of `rows` as `Shims.collectWithin` counts them */
+  private def rowBytes(
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow]): Long =
+    rows.iterator.map {
+      case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+        u.getSizeInBytes + 4L
+      case _ => Long.MaxValue / 2 // unknown size: never held
+    }.sum
+
+  /** same column names and types, in order: a segment chains onto the
+    * stored state only then */
+  private def sameColumns(a: StructType, b: StructType): Boolean =
+    a.length == b.length && a.fields.zip(b.fields).forall {
+      case (x, y) => x.name == y.name && x.dataType == y.dataType
+    }
+
+  /** The delta-fraction rule of aggregate chains: a delta of at least
+    * `fraction` of the resulting chain's rows re-merges about as cheaply
+    * as it chains, and chaining it would multiply answer-time state
+    * reads, so the chain compacts instead. Unknown counts (-1) disable
+    * the rule conservatively. */
+  private def tooLargeToChain(chainRows: Seq[(String, Long)],
+      deltaRows: Long, fraction: Option[Double]): Boolean =
+    fraction.exists { f =>
+      val oldTotal = chainRows.map(_._2).sum
+      deltaRows > 0 && oldTotal >= 0 && chainRows.forall(_._2 >= 0) &&
+        deltaRows.toDouble >= f * (oldTotal + deltaRows)
+    }
 
   /** One state segment's write: its row count (-1 = unknown), the rows in
     * hand when the driver wrote them, and whether the segment was kept

@@ -41,7 +41,10 @@ import IncrementalAggExecutor._
   * collected rows both within `ParquetQueryCache.driverStateMaxBytes`)
   * by collecting it to the driver and writing one file from there, and
   * larger state by a distributed write (the reference always coalesces
-  * to 1 partition, src/aggregate.rs:392 — its state is equally tiny).
+  * to 1 partition, src/aggregate.rs:392 — its state is equally tiny). A
+  * small warm refresh of a durable entry is merged on the driver, with
+  * Spark's own aggregation operator over the collected rows, and answered
+  * from the merged rows: one Spark job (`ParquetQueryCache.refreshMerged`).
   *
   * A query that fails any decision branch runs vanilla, with the reason
   * logged (reference decision points, src/aggregate.rs:97-203).
@@ -636,13 +639,26 @@ object IncrementalAggExecutor {
     * a schema costs one analysis, not a cold run). */
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private[exec] def memoGet(fp: String, compute: => StructType): StructType = {
-    val hit = schemaMemo.get(fp)
+  private[exec] def memoGet(fp: String, compute: => StructType): StructType =
+    memo(schemaMemo, fp, compute)
+
+  /** a fingerprint's driver-side state merge (see [[StateCommit]]),
+    * shared and bounded like its state schema: it is a function of the
+    * plan and that schema */
+  private val mergeMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, Either[String, Shims.DriverAggregate]]()
+  private[exec] def driverMergeMemo(fp: String,
+      compute: => Either[String, Shims.DriverAggregate])
+      : Either[String, Shims.DriverAggregate] = memo(mergeMemo, fp, compute)
+
+  private def memo[V](m: java.util.concurrent.ConcurrentHashMap[String, V],
+      fp: String, compute: => V): V = {
+    val hit = m.get(fp)
     if (hit != null) hit
     else {
-      if (schemaMemo.size > 4096) schemaMemo.clear()
+      if (m.size > 4096) m.clear()
       val v = compute
-      schemaMemo.put(fp, v)
+      m.put(fp, v)
       v
     }
   }

@@ -1,6 +1,7 @@
 package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
@@ -48,9 +49,29 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     val stateSchema = phase("stateSchema")(IncrementalAggExecutor.memoGet(
       c.fingerprint, partialState(childDF0.limit(0)).schema))
     lazy val mergeCols = stateSpecs.map(s => Decompose.mergeColumn(s, stateSchema))
+    lazy val stateKeys = groupCols.indices.map(j => col(s"_g$j"))
     def mergeState(st: DataFrame): DataFrame =
-      st.groupBy(groupCols.indices.map(j => col(s"_g$j")): _*)
-        .agg(mergeCols.head, mergeCols.tail: _*)
+      st.groupBy(stateKeys: _*).agg(mergeCols.head, mergeCols.tail: _*)
+    // the same merge evaluated on the driver over rows in hand, for a
+    // cache that merges a small refresh there (refreshMerged); a merge it
+    // cannot evaluate leaves the refresh on the chain, the reason logged
+    def driverMerge: Option[
+        (Seq[InternalRow], Seq[InternalRow]) => Option[Array[InternalRow]]] =
+      IncrementalAggExecutor.driverMergeMemo(c.fingerprint,
+        Shims.driverAggregate(spark, stateSchema, stateKeys, mergeCols)
+          .filterOrElse(m => schemaCompatible(m.schema, stateSchema),
+            "its rows do not match the state schema")) match {
+        case Left(why) =>
+          config.log.info(c.fingerprint, s"driver merge unavailable: $why")
+          None
+        case Right(m) => Some((merged, rows) =>
+          try Some(m(merged, rows.iterator)) catch {
+            case scala.util.control.NonFatal(e) =>
+              config.log.warn(c.fingerprint, s"driver merge failed " +
+                s"($e); refreshing through the chain")
+              None
+          })
+      }
 
     val direct = config.cache.get(c.fingerprint) match {
       case Some(cs) if !schemaCompatible(cs.schema, stateSchema) =>
@@ -344,17 +365,21 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
           } else cs.read(spark).unionByName(partialState(newDataR))
         // the chained segment is GROUP-GRAINED partial state (one row per
         // group present in the append), never per-row units — a unit
-        // segment would persist the raw append. `merged` stays lazy and
-        // never executes when the chain commit SUCCEEDS, so the common
-        // chained run scans the delta exactly once. A FRACTION-DECLINED
-        // commit (a ≥25%-of-chain delta) pays the delta twice — once for
-        // the discarded segment write, once inside the full put — an
+        // segment would persist the raw append. `merged` stays lazy: a
+        // small refresh merges on the driver (refreshMerged: one job that
+        // collects the delta partials, then the compaction too is written
+        // from the merged rows in hand), and a chain commit that SUCCEEDS
+        // never runs it, so those refreshes scan the delta exactly once.
+        // On the larger-state path a FRACTION-DECLINED commit (a
+        // ≥25%-of-chain delta) pays the delta twice — once for the
+        // discarded segment write, once inside the full put — an
         // accepted amortized cost: it happens at most once per
         // compaction cycle, on runs whose full state merge dominates the
         // extra delta scan anyway. A banded run's delta partials are
         // offered too, but ONLY when the floor cuts on a bucket column
         // (bandRefreshKey) — they then go through refreshBand, never
-        // putAppend (appending a re-read band would duplicate it).
+        // putAppend or refreshMerged (appending a re-read band would
+        // duplicate it).
         (() => mergeState(state),
           if (!config.aggregateStateAppend) None
           else if (bandActive && bandRefreshKey.isEmpty) None
@@ -458,8 +483,12 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     // chains, and chaining it would multiply answer-time state reads.
     val (stored0, chained) = commit(spark, c.fingerprint, now, c.child,
       pendingRep, repairActive, bandRefreshKey, deltaPartials, merged(),
-      stateConfs, compactIfDeltaFraction = Some(0.25))
-    // a chain is multi-row-per-group partial state: one merge at answer time
+      stateConfs, compactIfDeltaFraction = Some(0.25),
+      // only an entry stored under this fingerprint can be refreshed in
+      // place: a probe-served run builds no merge
+      if (direct.isDefined) driverMerge else None)
+    // a chain is multi-row-per-group partial state: one merge at answer
+    // time (a driver-merged refresh and a put return merged state)
     val stored = if (chained) mergeState(stored0) else stored0
 
     // answer-time dynamic bound: temporal col -> its bucket column, now()
@@ -495,8 +524,11 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     * run stores `full` (old chain segments would resurrect what the
     * repair dropped); else a `delta` refreshes the chain at segment grain
     * when a `band` floor cuts on a state key (segments wholly below it
-    * kept: a banded refresh writes O(band + append), not O(state)) or is
-    * appended as one segment; a declined or absent delta stores `full`.
+    * kept: a banded refresh writes O(band + append), not O(state)), is
+    * merged on the driver with the stored state when `merge` evaluates
+    * the state's merge there and the cache takes it (one job; the
+    * returned frame is the merged state), or is appended as one segment;
+    * a declined or absent delta stores `full`.
     * Writes run on a clone of the session carrying `confs` (never mutate
     * the user's session: a save/restore races concurrent queries). Then
     * the consumed repairs are cleared (token-scoped, so one declared
@@ -504,18 +536,28 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     * consumes), the entry is indexed by its sources' tables (the
     * invalidateForTable remedy for declared-static dims that did change)
     * and the replay strategy is registered. Returns the stored frame and
-    * whether it is a chain replay. */
+    * whether it is a chain replay (several partial rows per group). */
   private[exec] def commit(spark: SparkSession, fp: String, now: Long,
       sources: LogicalPlan, consumed: Seq[graft.cache.RepairRange],
       repaired: Boolean, band: Option[(String, Long)],
       delta: => Option[DataFrame], full: => DataFrame,
       confs: Seq[(String, String)] = Nil,
-      compactIfDeltaFraction: Option[Double] = None): (DataFrame, Boolean) = {
+      compactIfDeltaFraction: Option[Double] = None,
+      merge: => Option[(Seq[InternalRow], Seq[InternalRow]) =>
+        Option[Array[InternalRow]]] = None)
+      : (DataFrame, Boolean) = {
     def rebound(s: SparkSession, df: => DataFrame) = phase("put.rebind") {
       val d = df
       if (s eq spark) d else Shims.ofRows(s, Shims.queryExecution(d).analyzed)
     }
-    val chained = if (repaired) None else delta.flatMap { d =>
+    lazy val deltaDF = delta
+    val refreshed = if (repaired || band.isDefined) None
+      else deltaDF.flatMap(d => merge.flatMap(m =>
+        phase("cache.refreshMerged")(Shims.withIsolatedConf(spark, confs: _*)(
+          s => config.cache.refreshMerged(fp, now, rebound(s, d), m,
+            compactIfDeltaFraction)))))
+    val chained = if (repaired || refreshed.isDefined) None
+    else deltaDF.flatMap { d =>
       phase("cache.putAppend")(Shims.withIsolatedConf(spark, confs: _*) { s =>
         val segment = rebound(s, d)
         band match {
@@ -526,7 +568,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
         }
       })
     }
-    val stored = chained.getOrElse(phase("cache.put")(
+    val stored = refreshed.orElse(chained).getOrElse(phase("cache.put")(
       Shims.withIsolatedConf(spark, confs: _*) { s =>
         val state = rebound(s, full)
         phase("put.store")(config.cache.put(fp, now, state))

@@ -336,8 +336,9 @@ private[exec] trait Subsumption { this: IncrementalAggExecutor =>
     c.agg.child.foreach {
       case Filter(cond, _) => splitConj(cond).foreach { cj =>
         (cj match {
-          case EqualTo(a, v) => asDim(a).flatMap(d => lits(Seq(v)).map((d, _)))
-          case EqualTo(v, a) => asDim(a).flatMap(d => lits(Seq(v)).map((d, _)))
+          // either side may hold the attribute ('click' = event_type)
+          case EqualTo(l, r) => asDim(l).map((_, r)).orElse(asDim(r).map((_, l)))
+            .flatMap { case (d, v) => lits(Seq(v)).map((d, _)) }
           case EqualNullSafe(a, v: Literal) if v.value != null =>
             asDim(a).map((_, Seq(v)))
           case EqualNullSafe(v: Literal, a) if v.value != null =>

@@ -217,22 +217,29 @@ object Shims {
     bytes(queryExecution(df).executedPlan)
   }
 
-  /** Run `df` as ONE job in one SQL execution, the way `Dataset.collect`
-    * runs it, and return its internal rows — or None once they pass
-    * `maxBytes` (each `UnsafeRow`'s bytes plus 4 for its length). The
-    * bound is kept where the rows
-    * are made: a task stops copying its partition past it and returns
-    * nothing, and the driver drops what it holds as soon as the sum
-    * passes it, so the driver never holds more than about twice
-    * `maxBytes`, whatever `spark.driver.maxResultSize` says. */
-  def collectWithin(df: DataFrame, maxBytes: Long)
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+  /** Run `dfs` as ONE job in one SQL execution (the first frame's), the
+    * way `Dataset.collect` runs one frame, and return each frame's
+    * internal rows — or None once they pass `maxBytes` together (each
+    * `UnsafeRow`'s bytes plus 4 for its length). The job runs over the
+    * frames' partitions side by side, each frame under its own physical
+    * plan, so a frame generates the same code whether it is collected
+    * alone or with others. The bound is kept where the rows are made: a
+    * task stops copying its partition past it and returns nothing, and
+    * the driver drops what it holds as soon as the sum passes it, so the
+    * driver never holds more than about twice `maxBytes`, whatever
+    * `spark.driver.maxResultSize` says. */
+  def collectWithin(dfs: Seq[DataFrame], maxBytes: Long)
+      : Option[Seq[Array[org.apache.spark.sql.catalyst.InternalRow]]] = {
     import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-    val qe = queryExecution(df)
-    val numFields = qe.executedPlan.output.length
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+    val qes = dfs.map(queryExecution)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qes.head,
         Some("collect")) {
-      val rows = qe.executedPlan.execute()
+      val rdds = qes.map(_.executedPlan.execute())
+      // partition i of the job belongs to frame `owner(i)`
+      val owner = rdds.zipWithIndex.flatMap { case (r, f) =>
+        Seq.fill(r.getNumPartitions)(f) }
+      val numFields = qes.map(_.executedPlan.output.length)
+      val rows = new org.apache.spark.rdd.UnionRDD(rdds.head.sparkContext, rdds)
       val parts = new Array[(Int, Array[Byte])](rows.getNumPartitions)
       var held = 0L
       var over = false
@@ -262,18 +269,138 @@ object Shims {
             parts.indices.foreach(parts(_) = null)
         })
       if (over) None
-      else Some(parts.flatMap { case (n, b) =>
-        val in = new java.io.DataInputStream(
-          new java.io.ByteArrayInputStream(b))
-        Array.fill[org.apache.spark.sql.catalyst.InternalRow](n) {
-          val row = new Array[Byte](in.readInt())
-          in.readFully(row)
-          val u = new UnsafeRow(numFields)
-          u.pointTo(row, row.length)
-          u
+      else Some(qes.indices.map { f =>
+        parts.indices.filter(owner(_) == f).toArray.flatMap { i =>
+          val (n, b) = parts(i)
+          val in = new java.io.DataInputStream(
+            new java.io.ByteArrayInputStream(b))
+          Array.fill[org.apache.spark.sql.catalyst.InternalRow](n) {
+            val row = new Array[Byte](in.readInt())
+            in.readFully(row)
+            val u = new UnsafeRow(numFields(f))
+            u.pointTo(row, row.length)
+            u
+          }
         }
       })
     }
+  }
+
+  /** A grouped aggregate evaluated on the driver over rows in hand:
+    * `rows` of `input`'s columns grouped by `grouping`, each group folded
+    * by Catalyst's own aggregation operator (`SortBasedAggregationIterator`,
+    * what Spark runs for every aggregate function, typed imperative ones
+    * included). Built once from the optimized plan of the aggregate, the
+    * way Spark's planner extracts it (`PhysicalAggregation`), with group
+    * keys normalized the way the planner normalizes them
+    * (`NormalizeFloatingNumbers`: -0.0 and 0.0 are one key, and so is
+    * every NaN). Equal keys are brought together by their binary form,
+    * which is how a hash aggregate compares them. */
+  final class DriverAggregate private[graftshim] (
+      input: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      grouping: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
+      aggregates: Seq[org.apache.spark.sql.catalyst.expressions.aggregate
+        .AggregateExpression],
+      results: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]) {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{MutableProjection,
+      UnsafeProjection, UnsafeRow}
+
+    /** the rows' schema: the aggregate's output */
+    val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .fromAttributes(results.map(_.toAttribute))
+
+    /** one output row per group of `folded` ∪ `rows`, copied out of the
+      * operator. `folded` are rows this aggregate output before, at most
+      * one per group, for an aggregate whose output has its input's
+      * columns and returns such a row unchanged when it is a group's only
+      * row (a merge of partial state): a group no row of `rows` joins is
+      * passed through without folding it again. */
+    def apply(folded: Seq[InternalRow],
+        rows: Iterator[InternalRow]): Array[InternalRow] = {
+      val key = UnsafeProjection.create(grouping, input)
+      // in the order they came: rows keep their order on disk
+      val passed = new java.util.LinkedHashMap[UnsafeRow, InternalRow]()
+      folded.foreach(r => passed.put(key(r).copy(), r))
+      val groups = new java.util.LinkedHashMap[UnsafeRow,
+        scala.collection.mutable.ArrayBuffer[InternalRow]]()
+      rows.foreach { r =>
+        val k = key(r)
+        val g = groups.get(k)
+        if (g != null) g += r
+        else {
+          val kept = k.copy()
+          groups.put(kept, Option(passed.remove(kept)).fold(
+            scala.collection.mutable.ArrayBuffer(r))(
+            scala.collection.mutable.ArrayBuffer(_, r)))
+        }
+      }
+      import scala.jdk.CollectionConverters._
+      val it = new org.apache.spark.sql.execution.aggregate
+        .SortBasedAggregationIterator(0, grouping, input,
+          groups.values.iterator.asScala.flatMap(_.iterator), aggregates,
+          aggregates.map(_.resultAttribute), 0, results,
+          (es, as) => MutableProjection.create(es, as),
+          new org.apache.spark.sql.execution.metric.SQLMetric("sum", 0L))
+      val out = passed.values.asScala.toArray
+      if (groups.isEmpty && out.isEmpty && grouping.isEmpty)
+        Array(it.outputForEmptyGroupingKeyWithoutInput().copy())
+      else out ++ it.map(_.copy(): InternalRow)
+    }
+  }
+
+  /** `input`-shaped rows grouped by `grouping` and aggregated by `aggs`,
+    * evaluated on the driver ([[DriverAggregate]]); Left(reason) for an
+    * aggregate it does not evaluate: a DISTINCT or FILTER aggregate, a
+    * non-deterministic expression, a group key whose equal values differ
+    * in their binary form, a session window key, or a plan the optimizer
+    * reshaped. */
+  def driverAggregate(spark: SparkSession,
+      input: org.apache.spark.sql.types.StructType, grouping: Seq[Column],
+      aggs: Seq[Column]): Either[String, DriverAggregate] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+    // two all-null rows: an empty or one-row input would let the optimizer
+    // fold the aggregate away
+    val rel = LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
+        input.asNullable),
+      Seq.fill(2)(InternalRow.fromSeq(Seq.fill(input.length)(null))))
+    val plan = try queryExecution(ofRows(spark, rel)
+        .groupBy(grouping: _*).agg(aggs.head, aggs.tail: _*)).optimizedPlan
+      catch { case scala.util.control.NonFatal(e) => return Left(e.toString) }
+    val (keys, aggregates, results) = plan match {
+      case a: Aggregate if a.child.isInstanceOf[LocalRelation] &&
+          a.child.output == rel.output =>
+        org.apache.spark.sql.catalyst.planning.PhysicalAggregation.unapply(a)
+          .map(p => (p._1, p._2, p._3))
+          .getOrElse(return Left("not a physical aggregation"))
+      case other => return Left(s"the optimizer reshaped the aggregate: " +
+        other.getClass.getSimpleName)
+    }
+    if (aggregates.exists(a => a.isDistinct || a.filter.isDefined))
+      return Left("a DISTINCT or FILTER aggregate")
+    if (!(keys ++ aggregates ++ results).forall(_.deterministic))
+      return Left("a non-deterministic expression")
+    if (!keys.forall(k => org.apache.spark.sql.catalyst.util.UnsafeRowUtils
+        .isBinaryStable(k.dataType)))
+      return Left("a group key whose equal values differ in bytes")
+    // the planner merges overlapping sessions (MergingSessionsExec), not
+    // equal keys
+    if (keys.exists(_.metadata.contains(
+        org.apache.spark.sql.catalyst.expressions.SessionWindow.marker)))
+      return Left("a session window key")
+    // the planner's normalization (SparkStrategies.Aggregation)
+    val normalized = keys.map { k =>
+      org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+        .normalize(k) match {
+        case n: NamedExpression => n
+        case e => Alias(e, k.name)(exprId = k.exprId)
+      }
+    }
+    Right(new DriverAggregate(rel.output, normalized, aggregates, results))
   }
 
   /** Write internal rows of `schema` as ONE parquet file into the new
@@ -309,13 +436,14 @@ object Shims {
 
   /** `rows` (internal rows of `schema`) as a DataFrame over a
     * `LocalRelation`: answered on the driver wherever the plan above it
-    * folds onto it. */
+    * folds onto it. Its columns are nullable, as a parquet read of the
+    * same rows would make them. */
   def localRows(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
     ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
-      rows))
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
+        schema.asNullable), rows))
 
   /** Catalyst's own predicate-pushdown rule, applied to a subtree — used
     * to push a filter that was hoisted below a custom marker node down

@@ -663,4 +663,221 @@ class CacheSpec extends AnyFunSuite {
     assert(writer.get("fpSrc").isEmpty, "writer still sees the dropped entry")
     assert(other.invalidateForTable("events") == 0)
   }
+
+  // ------------------------------------------- resident state (driver merge)
+
+  /** A day-by-entity aggregate over a table that grows a day at a time,
+    * refreshed through ParquetQueryCache instances rooted on a counting
+    * file system: every answer is compared with vanilla, and a refresh
+    * reports how many cache state files its tasks opened. */
+  private final class Rig(tag: String) {
+    val DayUs = 86400L * 1000000L
+    val StartUs = 1704067200L * 1000000L // 2024-01-01T00:00:00Z
+    val RowsPerDay = 500L
+    val table = tmpDir(s"rig-$tag-table")
+    val dir = tmpDir(s"rig-$tag-cache")
+    val root = s"${OpenCountingFs.Scheme}://$dir"
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${OpenCountingFs.Scheme}.impl", classOf[OpenCountingFs].getName)
+    /** is a small refresh merged on the driver (the default bound)? */
+    val driverMerges: Boolean = ParquetQueryCache.driverStateMaxBytes > 0
+
+    /** `days` days of rows from day `from`; `bump` shifts every value */
+    def slice(from: Int, days: Int, bump: Int = 0) = {
+      val lo = from * RowsPerDay
+      spark.range(lo, lo + days * RowsPerDay).select(
+        col("id").as("event_id"),
+        timestamp_micros(lit(StartUs) + col("id") * (DayUs / RowsPerDay))
+          .as("ts"),
+        (pmod(col("id") * 7919L, lit(10000L)) / 100.0 + bump).as("value"))
+    }
+    def query(t: org.apache.spark.sql.DataFrame) =
+      t.groupBy(date_trunc("day", col("ts")).as("day"),
+          expr("event_id DIV 64").as("ent"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("value").cast("decimal(14,3)")).as("sv"))
+    /** the cold table: days [0, days) */
+    def create(days: Int): Unit =
+      slice(0, days).write.mode("overwrite").parquet(table)
+    def append(day: Int): Unit =
+      slice(day, 1).write.mode("append").parquet(table)
+    /** rewrite the table's history: days [0, days), values bumped on the
+      * days in [lo, hi) */
+    def rewrite(days: Int, lo: Int, hi: Int): Unit = {
+      val tmp = tmpDir(s"rig-$tag-rewrite")
+      slice(0, days).withColumn("value", when(
+        col("ts") >= timestamp_micros(lit(StartUs + lo * DayUs)) &&
+          col("ts") < timestamp_micros(lit(StartUs + hi * DayUs)),
+        col("value") + 1).otherwise(col("value")))
+        .write.mode("overwrite").parquet(tmp)
+      spark.read.parquet(tmp).write.mode("overwrite").parquet(table)
+    }
+    def cache(maxEntries: Int = 0, ttlMs: Long = 0L) =
+      new ParquetQueryCache(root, maxEntries = maxEntries, ttlMs = ttlMs,
+        sweepIntervalMs = 0L)
+    /** refresh through `c` at the start of day `day`, checked against
+      * vanilla; returns the cache state files its tasks opened */
+    def refresh(c: ParquetQueryCache, day: Int, bandUs: Option[Long] = None,
+        q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+          query): Long = {
+      OpenCountingFs.reset()
+      val df = q(spark.read.parquet(table))
+      val got = QueryCacheSession(spark, QueryCacheConfig(c,
+        defaultTemporalColumn = "ts", lateRescanBandMicros = bandUs,
+        overrideNowMicros = Some(StartUs + day * DayUs)))
+        .run(df).collect().map(_.toString).sorted.toSeq
+      val opens = OpenCountingFs.taskOpens.get
+      assert(got == df.collect().map(_.toString).sorted.toSeq,
+        s"refresh at day $day differs from vanilla")
+      opens
+    }
+    /** the fingerprint of the one entry under the root */
+    def fingerprint(c: ParquetQueryCache): String =
+      c.describe(spark).collect().head.getAs[String]("fingerprint")
+    /** prime with `c` at day 10, then two refreshes: `c` ends resident
+      * (on the driver path, the second refresh opens no state file) */
+    def warm(c: ParquetQueryCache): Unit = {
+      create(10)
+      refresh(c, 10)
+      append(10)
+      refresh(c, 11)
+      append(11)
+      val opens = refresh(c, 12)
+      if (driverMerges) assert(opens == 0, "a resident refresh read state")
+    }
+  }
+
+  pqTest("resident state: a head another instance committed is read, " +
+      "never the stale copy") {
+    val rig = new Rig("other")
+    val a = rig.cache()
+    rig.warm(a)
+    rig.append(12)
+    rig.refresh(rig.cache(), 13) // another instance commits a new head
+    // `a` still holds the state it committed at day 12; the head is the
+    // other instance's, so `a` reads it
+    assert(rig.refresh(a, 13) > 0)
+    rig.append(13)
+    rig.refresh(a, 14)
+  }
+
+  pqTest("resident state: two writers racing to one version number") {
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).forEach { p =>
+        val t = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t)
+        else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
+      }
+    val rig = new Rig("race")
+    val a = rig.cache()
+    rig.warm(a)
+    // writer B starts from the same head: a copy of the root
+    val bDir = tmpDir("rig-race-b")
+    copyTree(Paths.get(rig.dir), Paths.get(bDir))
+    val b = new ParquetQueryCache(s"${OpenCountingFs.Scheme}://$bDir")
+    rig.append(12)
+    rig.refresh(a, 13) // A commits meta-<day 13>
+    // late rows of day 12 arrive between A's scan and B's
+    rig.slice(12, 1).withColumn("event_id", col("event_id") + 1000000L)
+      .write.mode("append").parquet(rig.table)
+    rig.refresh(b, 13) // B commits meta-<day 13> too, with more rows
+    // B's rename wins: its meta and data directory replace A's head
+    val key = new java.io.File(bDir).listFiles().filter(_.isDirectory).head
+      .getName
+    val (src, dst) = (Paths.get(bDir, key), Paths.get(rig.dir, key))
+    val version = (rig.StartUs + 13 * rig.DayUs).toString
+    Files.list(src).forEach { p =>
+      val n = p.getFileName.toString
+      if (n.startsWith(s"data-$version-") || n == s"meta-$version.json")
+        copyTree(p, dst.resolve(n))
+    }
+    // same version, another writer's directories: A must read them
+    assert(rig.refresh(a, 13) > 0)
+    rig.append(13)
+    rig.refresh(a, 14)
+  }
+
+  pqTest("resident state: invalidate and invalidateForTable drop it") {
+    val rig = new Rig("inval")
+    val a = rig.cache()
+    rig.warm(a)
+    // history rewritten, then declared: a stale copy would differ
+    rig.rewrite(12, 3, 4)
+    val fp = rig.fingerprint(a)
+    a.invalidate(fp)
+    assert(a.get(fp).isEmpty)
+    rig.refresh(a, 12) // cold again
+    rig.append(12)
+    rig.refresh(a, 13)
+    rig.append(13)
+    rig.refresh(a, 14) // resident again on the driver path
+    rig.rewrite(14, 5, 6)
+    assert(rig.cache().invalidateForTable(rig.table) == 1) // another instance
+    rig.refresh(a, 14)
+    rig.rewrite(14, 6, 7)
+    assert(a.invalidateForTable(rig.table) == 1)
+    rig.refresh(a, 14)
+  }
+
+  pqTest("resident state: a repair range commits past it") {
+    val rig = new Rig("repair")
+    val a = rig.cache()
+    rig.warm(a)
+    rig.rewrite(12, 4, 5)
+    assert(a.repairRange(rig.table, rig.StartUs + 4 * rig.DayUs,
+      rig.StartUs + 5 * rig.DayUs) == 1)
+    rig.refresh(a, 12) // repairs from the held state, commits a full put
+    rig.append(12)
+    // the put's head is not the held copy's: this refresh reads it
+    assert(rig.refresh(a, 13) > 0)
+    rig.append(13)
+    val opens = rig.refresh(a, 14)
+    if (rig.driverMerges) assert(opens == 0, "not resident after the repair")
+  }
+
+  pqTest("resident state: a late-band refresh commits past it") {
+    val rig = new Rig("band")
+    val a = rig.cache()
+    rig.warm(a)
+    // late rows of day 11, under the day-12 watermark: only a band
+    // refresh re-reads them
+    rig.slice(11, 1).withColumn("event_id", col("event_id") + 1000000L)
+      .write.mode("append").parquet(rig.table)
+    rig.refresh(a, 12, bandUs = Some(2 * rig.DayUs))
+    rig.append(12)
+    // refreshBand committed the head: the copy from day 12 is stale
+    assert(rig.refresh(a, 13) > 0)
+    rig.append(13)
+    rig.refresh(a, 14)
+  }
+
+  pqTest("resident state: TTL and maxEntries eviction drop it") {
+    def other(t: org.apache.spark.sql.DataFrame) =
+      t.groupBy(date_trunc("day", col("ts")).as("day"))
+        .agg(max(col("value")).as("mx"))
+    for (evict <- Seq("ttl", "maxEntries")) {
+      val rig = new Rig(s"evict-$evict")
+      val a = if (evict == "ttl") rig.cache(ttlMs = 2000L)
+        else rig.cache(maxEntries = 1)
+      rig.warm(a)
+      if (evict == "ttl") Thread.sleep(2100)
+      rig.refresh(a, 12, q = other) // its put sweeps the first entry out
+      rig.rewrite(12, 2, 3) // a stale copy would differ now
+      rig.refresh(a, 12)
+    }
+  }
+
+  pqTest("resident state: a new instance reads the files once, then holds " +
+      "the state again") {
+    val rig = new Rig("restart")
+    rig.warm(rig.cache())
+    val c = rig.cache() // a restarted process
+    rig.append(12)
+    assert(rig.refresh(c, 13) > 0)
+    rig.append(13)
+    val opens = rig.refresh(c, 14)
+    if (rig.driverMerges) assert(opens == 0, "not resident after one refresh")
+    else assert(opens > 0)
+  }
 }

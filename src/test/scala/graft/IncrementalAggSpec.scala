@@ -2616,6 +2616,33 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(!log3.messages.exists(_.startsWith("refilter hit")), log3.messages)
   }
 
+  test("refilter: a literal-first slice ('click' = event_type) is served " +
+      "from the warm drill-down state") {
+    val (early, late, splitUs) = split()
+    val work = tmpDir("refilter-litfirst")
+    early.write.mode("overwrite").parquet(work)
+    val cache = new MemoryQueryCache()
+    def cfg(log: RecordingLog = new RecordingLog,
+        nowUs: Option[Long] = None) = QueryCacheConfig(cache,
+      defaultTemporalColumn = "ts", overrideNowMicros = nowUs, log = log)
+      .withRedimDimensions("event_type")
+    def drill(df: DataFrame) = df
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), max("value").as("max_value"))
+    def slice(df: DataFrame) = df.filter(lit("click") === col("event_type"))
+      .groupBy(date_trunc("hour", col("ts")).as("bucket"))
+      .agg(count(lit(1)).as("cnt"), max("value").as("max_value"))
+    QueryCacheSession(spark, cfg(nowUs = Some(splitUs)))
+      .run(drill(spark.read.parquet(work))).collect()
+    late.write.mode("append").parquet(work)
+    QueryCacheSession(spark, cfg()).run(drill(spark.read.parquet(work))).collect()
+    val log = new RecordingLog
+    val got = QueryCacheSession(spark, cfg(log))
+      .run(slice(spark.read.parquet(work)))
+    assertSameRows(got, slice(eventsFull), tol = 0.0)
+    assert(log.messages.exists(_.startsWith("refilter hit")), log.messages)
+  }
+
   test("rerange: aligned window slice answered from warm unbounded state, zero fact rows scanned") {
     val (early, late, splitUs) = split()
     val work = tmpDir("rerange-spec")

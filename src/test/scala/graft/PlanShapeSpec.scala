@@ -74,6 +74,17 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("parent bucket filter pushes through the chained replay's merge to the chain scan") {
+    // a chain is replayed through a merge on the larger-state path only: a
+    // small refresh merges on the driver (next test)
+    withDriverStateMaxBytes(Some(0L))(chainedReplay(driverMerged = false))
+  }
+
+  test("a small refresh answers the parent bucket filter over the rows it " +
+      "merged, reading no chain") {
+    chainedReplay(driverMerged = true)
+  }
+
+  private def chainedReplay(driverMerged: Boolean): Unit = {
     val ev = Tables.events(spark, sf0001)
     val t1 = ev.selectExpr(
       "CAST(percentile_approx(unix_micros(ts), 0.9) AS LONG)")
@@ -102,11 +113,24 @@ class PlanShapeSpec extends AnyFunSuite {
     val warm = QueryCacheSession(spark, cfg(None))
       .run(q(spark.read.parquet(work)))
     val plan = planOf(warm)
-    // the warm commit chained (durable putAppend) — the answer reads the
-    // CACHE chain, and the parent bound is pushed into that scan
-    assert(plan.contains(new java.io.File(cacheDir).getName), plan)
-    assert(plan.contains("PushedFilters") &&
-      plan.contains("GreaterThanOrEqual(_g0"), plan)
+    if (driverMerged) {
+      // the answer filters the merged rows in hand
+      assert(!plan.contains(new java.io.File(cacheDir).getName), plan)
+      assert(plan.contains("LocalTableScan") && plan.contains("Filter"), plan)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1).toSeq
+      val (got, want) = (rows(warm), rows(q(spark.read.parquet(work))))
+      assert(got.map(r => (r._1, r._2)) == want.map(r => (r._1, r._2)))
+      assert(got.zip(want).forall { case (a, b) =>
+        math.abs(a._3 - b._3) <= 1e-9 * math.max(1.0, math.abs(b._3)) })
+    } else {
+      // the warm commit chained (durable putAppend) — the answer reads the
+      // CACHE chain, and the parent bound is pushed into that scan
+      assert(plan.contains(new java.io.File(cacheDir).getName), plan)
+      assert(plan.contains("PushedFilters") &&
+        plan.contains("GreaterThanOrEqual(_g0"), plan)
+    }
   }
 
   test("cache replay is visible in EXPLAIN with hit status and row metric") {

@@ -92,30 +92,32 @@ class WarmRefreshSpec extends AnyFunSuite {
       }
     }
     /** one refresh (its plans recorded when `watch`), checked against
-      * vanilla; returns the jobs its answer launched */
-    def refresh(nowUs: Long, watch: Boolean = false): Int = {
+      * vanilla; returns the jobs the whole refresh launched and those its
+      * answer launched */
+    def refresh(nowUs: Long, watch: Boolean = false): (Int, Int) = {
       val q = query(spark.read.parquet(table))
       if (watch) spark.sparkContext.addSparkListener(listener)
-      val (got, answerJobs) = try {
+      val ((got, answerJobs), jobs) = try countJobs {
         val answer = QueryCacheSession(spark, QueryCacheConfig(cache,
           defaultTemporalColumn = "ts", overrideNowMicros = Some(nowUs))).run(q)
         countJobs(sorted(answer))
       } finally spark.sparkContext.removeSparkListener(listener)
       assert(got == sorted(q))
-      answerJobs
+      (jobs, answerJobs)
     }
     refresh(StartUs + 10 * DayUs) // cold priming
     val runs = (0 until 6).map { k =>
       slice(10 + k, 1).write.mode("append").parquet(table)
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       OpenCountingFs.reset()
-      val answerJobs = refresh(StartUs + (11 + k) * DayUs, watch = k == 4)
+      val (jobs, answerJobs) =
+        refresh(StartUs + (11 + k) * DayUs, watch = k == 4)
       // every refresh, the first warm one too: the chain's row counts
       // come from the writes, so no footer is opened on the driver
       assert(OpenCountingFs.driverOpens.get == 0,
         s"refresh $k re-read ${OpenCountingFs.driverOpens.get} footers")
-      assert(OpenCountingFs.taskOpens.get > 0) // the refresh read state
-      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, answerJobs)
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+        answerJobs, jobs, OpenCountingFs.taskOpens.get)
     }
     val compiles = runs.map(_._1)
     // the first append and the first compaction compile their plans once
@@ -131,25 +133,33 @@ class WarmRefreshSpec extends AnyFunSuite {
     assert(plan.split("\n").exists(
       _.matches("PushedFilters: \\[.*GreaterThanOrEqual\\(ts,.*")), plan)
     val answerJobs = runs.map(_._2)
-    // appends answer over the chain's files
-    assert(Seq(0, 1, 3, 4).forall(answerJobs(_) > 0), answerJobs)
+    val jobs = runs.map(_._3)
+    val stateOpens = runs.map(_._4)
     val writes = plans.asScala.exists(_.contains("InsertIntoHadoopFsRelationCommand"))
     val segments = new java.io.File(cacheDir).listFiles()
       .filter(_.isDirectory).flatMap(_.listFiles())
       .filter(d => d.isDirectory && d.getName.startsWith("data-"))
     if (fromDriver) {
       // a small refresh commits from the driver: no file-write command,
-      // one parquet file per segment, and a compaction answers from the
-      // rows it stored without a Spark job
+      // one parquet file per segment
       assert(!writes, s"a small warm refresh planned a file write: $plans")
       assert(segments.nonEmpty && segments.forall(
         _.listFiles().count(_.getName.endsWith(".parquet")) == 1),
         segments.map(d => d.getName -> d.list().toSeq).toSeq)
-      assert(answerJobs(2) == 0 && answerJobs(5) == 0,
-        s"compaction answers launched jobs: $answerJobs")
+      // and merges on the driver: every answer, append or compaction,
+      // comes from the merged rows without a Spark job; the first refresh
+      // reads the stored state in its one collect, and every later one
+      // holds it, so its one job is the delta's and it opens no cache file
+      assert(answerJobs.forall(_ == 0), s"answers launched jobs: $answerJobs")
+      assert(stateOpens(0) > 0, stateOpens)
+      assert(jobs.tail.forall(_ == 1), s"jobs per refresh: $jobs")
+      assert(stateOpens.tail.forall(_ == 0),
+        s"cache files opened per refresh: $stateOpens")
     } else {
       assert(writes, s"no distributed segment write planned: $plans")
-      assert(answerJobs(2) > 0 && answerJobs(5) > 0, answerJobs)
+      // appends answer over the chain's files, and so do compactions
+      assert(answerJobs.forall(_ > 0), answerJobs)
+      assert(stateOpens.forall(_ > 0), stateOpens) // every refresh read state
     }
   }
 
