@@ -5,8 +5,10 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Cache SPI (reference: src/cache.rs:10-56).
@@ -26,12 +28,39 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final case class CachedState(
     timestampMicros: Long,
     schema: StructType,
-    read: SparkSession => DataFrame) {
+    read: SparkSession => DataFrame,
+    /** the committed head this state was read from: a chain commit
+      * extends exactly that head. None where the cache keeps no heads. */
+    head: Option[HeadToken] = None) {
   /** this state's rows as `f` reshapes them, under the given watermark
-    * and schema */
+    * and schema (read from the same head) */
   def mapRows(f: DataFrame => DataFrame, timestampMicros: Long = timestampMicros,
       schema: StructType = schema): CachedState =
-    CachedState(timestampMicros, schema, s => f(read(s)))
+    CachedState(timestampMicros, schema, s => f(read(s)), head)
+}
+
+/** Which committed head of an entry a state was read from: the entry's
+  * key and the head meta's data directories. Directory names carry a
+  * per-writer UUID, so no other commit names the same list, even at the
+  * same version. Opaque outside the cache that issued it. */
+final case class HeadToken(key: String, dataDirs: Seq[String])
+
+/** How an append commit merges its base state and a delta into
+  * answer-ready state. `frame` merges a chain's scan (several partial
+  * rows per group) into one row per group; identity for row views.
+  * `fold`, where the merge runs on the driver, folds partial rows into
+  * merged rows in hand: `fold(merged, partials)` passes a merged row no
+  * partial joins through unchanged and returns None for rows it cannot
+  * evaluate. It is evaluated only when a commit gets that far. */
+final class StateMerge(val frame: DataFrame => DataFrame,
+    driverFold: => Option[(Seq[InternalRow], Seq[InternalRow]) =>
+      Option[Array[InternalRow]]] = None) {
+  lazy val fold = driverFold
+}
+
+object StateMerge {
+  /** row state: a chain's segments partition the result */
+  val identity = new StateMerge(df => df)
 }
 
 /** Thrown by bounded caches when the state is too large to store; the
@@ -62,61 +91,47 @@ trait QueryCache {
     * CachedAggregateExec does at src/aggregate.rs:680-688). */
   def put(fingerprint: String, timestampMicros: Long, state: DataFrame): DataFrame
 
-  /** APPEND `delta` to an existing entry instead of rewriting it — the
-    * O(append) path for chained entries. ROW-state entries (materialized
-    * filter queries) append their delta rows: the warm merge is a pure
-    * union and rewriting a large view per run is O(result). AGGREGATE
-    * entries append this run's group-grained delta PARTIALS: every
-    * consumer of aggregate state merges (state ∪ delta) before use, and
+  /** APPEND `delta` to the head `base` was read from instead of
+    * rewriting the entry — the O(append) path for chained entries.
+    * ROW-state entries (materialized filter queries) append their delta
+    * rows: the warm merge is a pure union and rewriting a large view per
+    * run is O(result). AGGREGATE entries append this run's group-grained
+    * delta PARTIALS, and `merge` folds the chain into answer-ready state;
     * the whitelisted merges are associative over partials, so a chain of
-    * partial segments replays identically to the merged state — the
-    * caller supplies `compactIfDeltaFraction` so a delta that repeats
-    * most of the groups compacts instead of multiplying answer-time
-    * reads. Returns the new full replay when the cache supports appends
-    * AND an appendable head exists; None → the caller falls back to a
-    * full put (which compacts). Default: unsupported. */
+    * partial segments replays identically to the merged state.
+    *
+    * A chain commit extends exactly the head its run read: the delta was
+    * scanned from that head's watermark and double-counts on any other.
+    * Returns the answer-ready state when the cache supports appends AND
+    * `base`'s head is still the entry's head; None → the caller's full
+    * put of base ∪ delta (self-consistent whatever the head, and it
+    * compacts). Default: unsupported. */
   def putAppend(fingerprint: String, timestampMicros: Long,
-      delta: DataFrame,
+      base: CachedState, delta: DataFrame,
       /** decline (→ caller's full put compacts) when the delta holds at
         * least this fraction of the resulting chain's rows — for
         * AGGREGATE state chains, where every segment repeats its groups
         * and a large delta would multiply answer-time state reads for no
         * write saving. Row-grain views pass None: their segments
         * partition the result, so segmentation never re-reads a row. */
-      compactIfDeltaFraction: Option[Double] = None): Option[DataFrame] = None
+      compactIfDeltaFraction: Option[Double] = None,
+      merge: StateMerge = StateMerge.identity): Option[DataFrame] = None
 
-  /** [[putAppend]] for small AGGREGATE state, merged on the driver: the
-    * delta partials (and the entry's stored state, when the cache does
-    * not hold it already) are collected, `merge` folds them into one row
-    * per group, and the cache commits either the delta as a segment or,
-    * where putAppend would decline, the merged rows as the compacted
-    * state. Returns the merged state as a driver-held frame (it needs no
-    * further merge); None → the caller refreshes through
-    * [[putAppend]]/[[put]]. `merge(merged, partials)` folds partial rows
-    * into merged rows (one per group, passed through where no partial
-    * joins them) and returns None for rows it cannot evaluate. Default:
-    * unsupported. */
-  private[graft] def refreshMerged(fingerprint: String, timestampMicros: Long,
-      delta: DataFrame,
-      merge: (Seq[org.apache.spark.sql.catalyst.InternalRow],
-        Seq[org.apache.spark.sql.catalyst.InternalRow]) =>
-        Option[Array[org.apache.spark.sql.catalyst.InternalRow]],
-      compactIfDeltaFraction: Option[Double]): Option[DataFrame] = None
-
-  /** Segment-grain BANDED refresh for row-state chains: a late re-scan
-    * band re-reads [floor, now) from the source and must REPLACE the
-    * state's rows at/after `floorMicros` — a full put would rewrite the
-    * whole view, O(result) per warm run. A chain-aware cache instead
-    * keeps every segment wholly below the floor verbatim, re-filters
-    * only the STRADDLING segments to `temporalCol < floor OR IS NULL`,
-    * unions them with `bandDelta` (the caller's source re-scan from the
-    * floor) into ONE new segment, and commits atomically — O(band +
-    * recent appends) written bytes, not O(view). Returns the new full
-    * replay; None → the caller falls back to a full put (which also
+  /** Segment-grain BANDED refresh for state chains: a late re-scan band
+    * re-reads [floor, now) from the source and must REPLACE the state's
+    * rows at/after `floorMicros` — a full put would rewrite the whole
+    * state, O(result) per warm run. A chain-aware cache instead keeps
+    * every segment wholly below the floor verbatim, re-filters only the
+    * STRADDLING segments to `temporalCol < floor OR IS NULL`, commits
+    * them with `bandDelta` (the caller's source re-scan from the floor)
+    * atomically — O(band + recent appends) written bytes, not O(state).
+    * Same head rule as [[putAppend]]. Returns the new chain through
+    * `merge`; None → the caller falls back to a full put (which also
     * compacts). Default: unsupported. */
   private[graft] def refreshBand(fingerprint: String, timestampMicros: Long,
-      temporalCol: String, floorMicros: Long,
-      bandDelta: DataFrame): Option[DataFrame] = None
+      base: CachedState, temporalCol: String, floorMicros: Long,
+      bandDelta: DataFrame,
+      merge: DataFrame => DataFrame = identity): Option[DataFrame] = None
 
   def invalidate(fingerprint: String): Unit
 
@@ -478,7 +493,9 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
   *   <root>/<fp-hash>/meta-<v>.json      {timestampMicros, dataDirs, schema, …}
   *
   * The meta file is committed via write-temp + atomic rename, so readers
-  * either see the previous complete version or the new one. Large state
+  * either see the previous complete version or the new one. Every commit
+  * (put, append, banded refresh, tombstone) advances the head through one
+  * step, `Next`. Large state
   * never passes through the driver: at 100 TB / millions of groups the
   * put is a parallel parquet write and the warm read is a parallel
   * parquet scan that unions straight into the partial-merge aggregation.
@@ -491,29 +508,36 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
   * that passes the bound, or that `spark.driver.maxResultSize` aborts,
   * falls back to the distributed write (see [[writeState]]).
   *
-  * A small AGGREGATE refresh ([[refreshMerged]]) costs one Spark job,
-  * the collect of the delta's partial state: the driver merges it into
-  * the entry's state, commits the delta segment (or the merged rows, as
-  * the compaction) and answers from the merged rows with no job. The
-  * merged rows stay RESIDENT — held by this instance, at most
+  * A chain commit ([[putAppend]], [[refreshBand]]) extends exactly the
+  * head its run read. `get` stamps the state it returns with the head's
+  * token, its data-dir list, and a chain commit goes ahead only while
+  * the head names exactly that list. Over any other head — another
+  * writer's commit, even at the same version; a put; a tombstone — it
+  * commits nothing, and the caller's full put stores base ∪ delta, which
+  * is self-consistent whatever the head.
+  *
+  * A small AGGREGATE append costs one Spark job, the collect of the
+  * delta's partial state: the driver merges it into the entry's state,
+  * commits the delta segment (or the merged rows, as the compaction) and
+  * answers from the merged rows with no job. The merged rows stay
+  * RESIDENT — held by this instance, at most
   * [[ParquetQueryCache.driverStateMaxBytes]] over all entries, least
-  * recently used dropped first — tagged with the data directories of the
-  * head meta they equal, and `get` serves them as a local relation while
-  * the head names exactly those directories. Any other head (another
-  * writer's commit, even at the same version; a put, a banded refresh, a
-  * tombstone) drops the copy, and so do `invalidate`,
-  * `invalidateForTable` and eviction. Only entries a driver-side refresh
-  * committed are resident: a cold put holds no driver memory.
+  * recently used dropped first — tagged with the token of the head they
+  * equal, and `get` serves them as a local relation while that is the
+  * head. It is the head rule's comparison: any other head drops the
+  * copy, and so do `invalidate`, `invalidateForTable` and eviction. Only
+  * entries a driver-side append committed are resident: a cold put holds
+  * no driver memory.
   *
   * Global bounds (all OFF by default; the durable counterpart of
   * [[MemoryQueryCache]]'s maxEntries/ttlMs, which previously had no disk
   * analog — distinct fingerprints would accumulate forever): `maxEntries`
   * caps live fingerprints, `maxBytes` caps total on-disk state,
   * `ttlMs` expires entries not written for that long. A sweep piggybacks
-  * on put at most once per `sweepIntervalMs` and EVICTS by committing
-  * tombstone heads — reader-safe like invalidation: files age out through
-  * the grace window, never yanked mid-scan. An evicted query just runs
-  * cold on its next appearance and re-caches.
+  * on full-state commits at most once per `sweepIntervalMs` and EVICTS by
+  * committing tombstone heads — reader-safe like invalidation: files age
+  * out through the grace window, never yanked mid-scan. An evicted query
+  * just runs cold on its next appearance and re-caches.
   */
 final class ParquetQueryCache(rootDir: String,
     keepVersions: Int = 2,
@@ -538,25 +562,21 @@ final class ParquetQueryCache(rootDir: String,
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val lastSweepMs = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Resident state: keyHash(fp) → the merged rows a driver-side refresh
-    * ([[refreshMerged]]) committed, tagged with the data directories of
-    * the head meta they equal. Directory names carry a per-writer UUID,
-    * so a tag never matches a head another writer committed, even at the
-    * same version number. Access-ordered; all access synchronized on the
-    * map; the rows held total at most
-    * [[ParquetQueryCache.driverStateMaxBytes]]. */
+  /** Resident state: keyHash(fp) → the merged rows a driver-side append
+    * committed, tagged with the token of the head they equal.
+    * Access-ordered; all access synchronized on the map; the rows held
+    * total at most [[ParquetQueryCache.driverStateMaxBytes]]. */
   private val resident =
     new java.util.LinkedHashMap[String, Resident](16, 0.75f, true)
   private var residentBytes = 0L
 
-  /** the resident rows of `key` when they equal `head`'s data; a copy
-    * of any other head is dropped */
-  private def residentRows(key: String, head: Option[Meta])
-      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] =
+  /** the resident rows of `key` when they are `head`'s state; a copy of
+    * any other head is dropped */
+  private def residentRows(key: String, head: Option[HeadToken])
+      : Option[Array[InternalRow]] =
     resident.synchronized {
       Option(resident.get(key)) match {
-        case Some(r) if head.exists(h => !h.tombstone &&
-            h.allDataDirs == r.dataDirs) => Some(r.rows)
+        case Some(r) if head.contains(r.head) => Some(r.rows)
         case Some(_) => dropResident(key); None
         case None => None
       }
@@ -566,21 +586,22 @@ final class ParquetQueryCache(rootDir: String,
     Option(resident.remove(key)).foreach(r => residentBytes -= r.bytes)
   }
 
-  /** hold `rows` as `key`'s state under the head naming `dataDirs`,
-    * evicting least recently used copies past the bound (a state larger
-    * than the bound is not held) */
-  private def keepResident(key: String, dataDirs: Seq[String],
-      rows: Array[org.apache.spark.sql.catalyst.InternalRow]): Unit =
+  /** hold `rows` as the state of `head`, evicting least recently used
+    * copies past the bound (a state larger than the bound is not held) */
+  private def keepResident(head: HeadToken, rows: Array[InternalRow]): Unit =
     resident.synchronized {
-      dropResident(key)
+      dropResident(head.key)
       val bytes = rowBytes(rows)
       if (bytes <= driverStateMaxBytes) {
-        resident.put(key, Resident(dataDirs, rows, bytes))
+        resident.put(head.key, Resident(head, rows, bytes))
         residentBytes += bytes
         val lru = resident.entrySet.iterator
         while (residentBytes > driverStateMaxBytes && lru.hasNext) {
           val e = lru.next()
-          if (e.getKey != key) { residentBytes -= e.getValue.bytes; lru.remove() }
+          if (e.getKey != head.key) {
+            residentBytes -= e.getValue.bytes
+            lru.remove()
+          }
         }
       }
     }
@@ -589,8 +610,7 @@ final class ParquetQueryCache(rootDir: String,
     * versioned (`meta-<v>.json`, appearing atomically via temp+rename), so
     * a reader always sees SOME complete version — there is no
     * delete-then-replace window. */
-  private def latestMeta(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Option[Meta] = {
+  private def latestMeta(fs: FileSystem, dir: Path): Option[Meta] = {
     if (!fs.exists(dir)) return None
     val versions = fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("meta-") && n.endsWith(".json"))
@@ -599,21 +619,71 @@ final class ParquetQueryCache(rootDir: String,
     else Some(readMeta(fs, new Path(dir, s"meta-${versions.max}.json")))
   }
 
-  override def get(fingerprint: String): Option[CachedState] = {
-    val spark = SparkSession.active
+  /** `fingerprint`'s entry: its key, directory and file system */
+  private def entry(fingerprint: String,
+      spark: SparkSession): (String, Path, FileSystem) = {
     val key = QueryCache.keyHash(fingerprint)
     hashToFp.put(key, fingerprint)
     val dir = new Path(rootDir, key)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val head = latestMeta(fs, dir)
-    val held = residentRows(key, head)
-    head.filterNot(_.tombstone).map { meta =>
-      val dataPaths = meta.allDataDirs.map(d => new Path(dir, d).toString)
+    (key, dir, dir.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  }
+
+  override def get(fingerprint: String): Option[CachedState] = {
+    val (key, dir, fs) = entry(fingerprint, SparkSession.active)
+    val head = latestMeta(fs, dir).filterNot(_.tombstone)
+    val token = head.map(_.token(key))
+    val held = residentRows(key, token)
+    head.map { meta =>
       CachedState(meta.timestampMicros, meta.schema, held match {
-        case Some(rows) => s => org.apache.spark.sql.graftshim.Shims
-          .localRows(s, meta.schema, rows.toSeq)
-        case None => s => s.read.schema(meta.schema).parquet(dataPaths: _*)
-      })
+        case Some(rows) => s => Shims.localRows(s, meta.schema, rows.toSeq)
+        case None => s => scan(s, dir, meta.schema, meta.allDataDirs)
+      }, token)
+    }
+  }
+
+  /** The head check of every chain commit: the entry's head when it is
+    * still the head `base` was read from, else None, with a line when
+    * another commit moved it since. A base read from another entry (a
+    * probe-served one) never matches either. */
+  private def baseHead(fs: FileSystem, dir: Path,
+      base: CachedState): Option[Meta] = {
+    val head = latestMeta(fs, dir).filterNot(_.tombstone)
+      .filter(h => base.head.contains(h.token(dir.getName)))
+    if (head.isEmpty && base.head.exists(_.key == dir.getName))
+      System.err.println("[query-cache] the entry's head moved since this " +
+        "run read it; committing the full state instead of a chain segment")
+    head
+  }
+
+  /** The one step that advances an entry's head past `head`, at a version
+    * of at least `atLeast` (a commit's watermark, a tombstone's wall
+    * clock). [[dataDir]] names the new data directories, UUID-suffixed:
+    * two commits that computed the same version never share a directory
+    * (one meta rename wins; the loser's directory becomes an orphan that
+    * cleanup collects). [[commit]] renames the meta into place, drops the
+    * resident copy of the old head, cleans up, and after a full state
+    * runs the global sweep. */
+  private final class Next(fs: FileSystem, dir: Path, head: Option[Meta],
+      atLeast: Long) {
+    val version: Long =
+      math.max(atLeast, head.map(_.version + 1).getOrElse(0L))
+
+    def dataDir(tag: String = ""): String =
+      s"data-$version-$tag${java.util.UUID.randomUUID.toString.take(8)}"
+
+    def commit(meta: Meta): Meta = {
+      writeMetaAtomic(fs, dir, meta, version)
+      dropResident(dir.getName)
+      // DEFERRED cleanup: a reader that resolved the previous meta — or a
+      // long warm scan still streaming an older data-<v> — must not get
+      // FileNotFound mid-read. Superseded versions stay on disk until
+      // they are ≥ keepVersions behind the head AND older than graceMs;
+      // only then are their meta + data (and any orphaned data dirs)
+      // deleted.
+      try cleanup(fs, dir) catch { case _: Exception => () }
+      if (meta.extraDataDirs.isEmpty && !meta.tombstone)
+        try globalSweep(fs) catch { case _: Exception => () }
+      meta
     }
   }
 
@@ -661,21 +731,12 @@ final class ParquetQueryCache(rootDir: String,
   override def put(fingerprint: String, timestampMicros: Long,
       state: DataFrame): DataFrame = {
     val spark = state.sparkSession
-    val key = QueryCache.keyHash(fingerprint)
-    hashToFp.put(key, fingerprint)
-    dropResident(key)
-    val dir = new Path(rootDir, key)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = latestMeta(fs, dir)
-    val version = math.max(timestampMicros, old.map(_.version + 1).getOrElse(0L))
-    // unique per-writer suffix: two concurrent puts that compute the same
-    // version can never collide on a data directory (one meta rename wins;
-    // the loser's directory becomes an orphan collected by cleanup below)
-    val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
-    val dataPath = new Path(dir, dataDir)
+    val (_, dir, fs) = entry(fingerprint, spark)
+    val next = new Next(fs, dir, latestMeta(fs, dir), timestampMicros)
+    val dataDir = next.dataDir()
     // driver or distributed write, timestamp type, file sizing: see
     // writeState
-    val written = writeState(state, dataPath)
+    val written = writeState(state, new Path(dir, dataDir))
     // source tables persisted in the meta: invalidateForTable then works
     // from ANY process, not just the writer's (the state plan reads the
     // source table on both cold and warm runs; the cache's own replay
@@ -694,8 +755,7 @@ final class ParquetQueryCache(rootDir: String,
         } catch { case _: Exception => p }
         pp == rootStr || pp.startsWith(rootStr + "/")
       }
-      org.apache.spark.sql.graftshim.Shims.sourcePaths(
-        org.apache.spark.sql.graftshim.Shims.queryExecution(state).analyzed)
+      Shims.sourcePaths(Shims.queryExecution(state).analyzed)
         .filterNot(p => rootStr.nonEmpty && underRoot(p)).distinct
     } catch { case scala.util.control.NonFatal(_) => Seq.empty[String] }
     // measure-index rows recorded by the executor just before this put:
@@ -703,27 +763,15 @@ final class ParquetQueryCache(rootDir: String,
     // are keyed by its hash) so measure subsumption works cross-process
     val (baseFp, measures) = recordedMeasures(fingerprint)
       .getOrElse(("", Seq.empty))
-    writeMetaAtomic(fs, dir,
-      Meta(timestampMicros, dataDir, state.schema, srcPaths,
-        fingerprint, baseFp, measures,
-        // the full state's row count, so the first putAppend after this
-        // put (a compaction, on an append chain) reads no footer of it
-        segRows =
-          if (written.rows >= 0) Seq(dataDir -> written.rows) else Nil),
-      version)
-    // DEFERRED cleanup: a reader that resolved the previous meta — or a
-    // long warm scan still streaming an older data-<v> — must not get
-    // FileNotFound mid-read. Superseded versions stay on disk until they
-    // are ≥ keepVersions behind the head AND older than graceMs; only
-    // then are their meta + data (and any orphaned data dirs) deleted.
-    try cleanup(fs, dir) catch { case _: Exception => () }
-    try globalSweep(fs) catch { case _: Exception => () }
+    next.commit(Meta(timestampMicros, dataDir, state.schema, srcPaths,
+      fingerprint, baseFp, measures,
+      // the full state's row count, so the first putAppend after this
+      // put (a compaction, on an append chain) reads no footer of it
+      segRows = if (written.rows >= 0) Seq(dataDir -> written.rows) else Nil))
     // rows written from the driver answer as a LocalRelation: the
     // finalize projection folds onto it and the answer runs no job
-    written.local.fold(spark.read.schema(state.schema)
-      .parquet(dataPath.toString))(rows =>
-      org.apache.spark.sql.graftshim.Shims.localRows(spark, state.schema,
-        rows.toSeq))
+    written.local.fold(scan(spark, dir, state.schema, Seq(dataDir)))(rows =>
+      Shims.localRows(spark, state.schema, rows.toSeq))
   }
 
   /** Write one state segment to `path`, deciding by size.
@@ -743,9 +791,9 @@ final class ParquetQueryCache(rootDir: String,
     * protocol — a write job, a Hadoop conf per task, `_temporary`
     * renames — buys nothing here: the meta rename is the only commit
     * point. The rows come back in [[Written.local]], so `put` answers
-    * from them instead of re-reading the file. A small aggregate refresh
-    * does not come here: [[refreshMerged]] collects, merges and writes
-    * it under the same bound. A collect that passes the
+    * from them instead of re-reading the file. A small aggregate append
+    * does not come here: [[putAppend]] collects, merges and writes it
+    * under the same bound. A collect that passes the
     * bound, or that `spark.driver.maxResultSize` aborts, falls back to
     * the distributed write (never to an uncached run), which runs the
     * state job again: at most one job over a small input is repeated.
@@ -782,7 +830,6 @@ final class ParquetQueryCache(rootDir: String,
     * ad-hoc commits slower). */
   private def writeState(df: DataFrame, path: Path, adaptive: Boolean = false,
       keep: Long => Boolean = _ => true): Written = {
-    import org.apache.spark.sql.graftshim.Shims
     val spark = df.sparkSession
     driverRows(Seq(df), "state rows passed %d bytes in the collect; " +
         "writing them distributed",
@@ -813,9 +860,8 @@ final class ParquetQueryCache(rootDir: String,
   /** `rows` of `schema` written from the driver as one parquet file into
     * `path` (see [[writeState]]) */
   private def writeRows(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.catalyst.InternalRow],
+      rows: Array[InternalRow],
       schema: StructType, path: Path): Unit = {
-    import org.apache.spark.sql.graftshim.Shims
     Shims.withIsolatedConf(spark, writeConfs: _*)(s =>
       Shims.writeParquetFile(s, rows.toSeq, schema, path.toString))
   }
@@ -826,8 +872,7 @@ final class ParquetQueryCache(rootDir: String,
     * when the collect passed the bound, `aborted` when
     * `spark.driver.maxResultSize` aborted it. */
   private def driverRows(dfs: Seq[DataFrame], over: String, aborted: String)
-      : Option[Seq[Array[org.apache.spark.sql.catalyst.InternalRow]]] = {
-    import org.apache.spark.sql.graftshim.Shims
+      : Option[Seq[Array[InternalRow]]] = {
     val limit = driverStateMaxBytes
     if (limit <= 0 || !dfs.map(Shims.scanBytes).foldLeft(Option(0L))(
         (a, b) => for (x <- a; y <- b) yield x + y).exists(_ <= limit)) None
@@ -847,7 +892,7 @@ final class ParquetQueryCache(rootDir: String,
   /** footer-derived row count of one segment (driver-side, no Spark
     * job); -1 = unknown. Only for segments whose meta carries no count
     * (written before counts were recorded). */
-  private def footerRows(fs: org.apache.hadoop.fs.FileSystem,
+  private def footerRows(fs: FileSystem,
       conf: org.apache.hadoop.conf.Configuration, dir: Path,
       seg: String): Long = try {
     fs.listStatus(new Path(dir, seg))
@@ -863,7 +908,7 @@ final class ParquetQueryCache(rootDir: String,
   /** per-segment row counts of `old`'s chain: memoized values first,
     * footers once for legacy segments (feeds the fraction rule and the
     * next meta) */
-  private def chainRowCounts(fs: org.apache.hadoop.fs.FileSystem,
+  private def chainRowCounts(fs: FileSystem,
       conf: org.apache.hadoop.conf.Configuration, dir: Path,
       old: Meta): Seq[(String, Long)] = {
     val recordedRows = old.segRows.toMap
@@ -887,137 +932,97 @@ final class ParquetQueryCache(rootDir: String,
       segRows = chainRows.filter(_._2 >= 0) ++
         (if (deltaRows >= 0) Seq(dataDir -> deltaRows) else Nil))
 
-  /** O(append) commit: write ONLY the delta as a new segment and commit
-    * a meta whose data is the previous chain plus that segment — readers
-    * see the old complete chain or the new one (same temp+rename
-    * atomicity as put). At `appendChainMax` segments, or when the delta
-    * trips `compactIfDeltaFraction`, the method declines and the
-    * caller's full put compacts the chain. Concurrent appends race like
-    * concurrent puts: one meta rename wins, the loser's segment becomes
-    * an unreferenced orphan reaped by cleanup, and the loser's returned
-    * replay is still self-consistent for its own run's watermark. */
-  override def putAppend(fingerprint: String, timestampMicros: Long,
-      delta: DataFrame,
-      compactIfDeltaFraction: Option[Double] = None): Option[DataFrame] = {
-    val spark = delta.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val key = QueryCache.keyHash(fingerprint)
-    hashToFp.put(key, fingerprint)
-    dropResident(key)
-    val dir = new Path(rootDir, key)
-    val fs = dir.getFileSystem(conf)
-    val old = latestMeta(fs, dir).filterNot(_.tombstone).getOrElse(return None)
-    if (old.allDataDirs.size >= appendChainMax) return None // compact
-    if (!sameColumns(old.schema, delta.schema)) return None
-    val version = math.max(timestampMicros, old.version + 1)
-    val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
-    val dataPath = new Path(dir, dataDir)
-    lazy val chainRows = chainRowCounts(fs, conf, dir, old)
-    // a delta segment is small by construction (one refresh band's
-    // aggregate): one file, from the driver or size-coalesced even under
-    // AQE-off commit confs. An all-empty delta (a no-op refresh) must
-    // not grow the chain — an empty segment per refresh would force a
-    // full-view compaction every appendChainMax refreshes of an
-    // UNCHANGED view. The delta's row count decides both that and the
-    // fraction rule before anything is kept (on the driver path, before
-    // anything is written); an empty delta commits no meta and the
-    // watermark intentionally stays put (the next delta scan prunes to
-    // the same nothing).
-    val written = writeState(delta, dataPath, adaptive = true,
-      keep = n => n != 0L &&
-        !tooLargeToChain(chainRows, n, compactIfDeltaFraction))
-    if (!written.kept) return (if (written.rows != 0L) None
-      else Some(spark.read.schema(old.schema)
-        .parquet(old.allDataDirs.map(d => new Path(dir, d).toString): _*)))
-    writeMetaAtomic(fs, dir,
-      appendMeta(old, fingerprint, timestampMicros, dataDir, chainRows,
-        written.rows), version)
-    try cleanup(fs, dir) catch { case _: Exception => () }
-    // one scan of the whole chain, the new segment included: this is the
-    // path of state too large to merge on the driver (see refreshMerged),
-    // where the old chain must be read anyway
-    Some(spark.read.schema(old.schema).parquet(
-      (dataDir +: old.allDataDirs).map(d => new Path(dir, d).toString): _*))
-  }
-
-  /** [[putAppend]] with the merge on the driver — see the trait doc. The
-    * refresh runs ONE Spark job: the collect of the delta partials, with
-    * the stored chain's rows in the same job unless the entry is resident
-    * (this process's last driver-side refresh of it committed the head
-    * that is still current). Together they must fit
+  /** [[QueryCache.putAppend]]. After the head check, SMALL aggregate
+    * state merges on the driver and LARGER state appends the delta
+    * alone; either way an all-empty delta (a no-op refresh) commits
+    * nothing and the watermark stays put (the next delta scan prunes to
+    * the same nothing): an empty segment per refresh would force a full
+    * compaction every `appendChainMax` refreshes of an UNCHANGED entry.
+    *
+    * Small: where `merge.fold` exists, the delta partials are collected
+    * in one job, with the head's chain in the same job unless this
+    * instance holds it resident. Together they must fit
     * [[ParquetQueryCache.driverStateMaxBytes]], as [[writeState]]'s
-    * collect must; a larger state, a leaf of unknown size (a shared
-    * delta) or a foreign schema returns None before any job, and a
-    * collect that passes the bound returns None after it. The driver
-    * merges state ∪ delta, commits the delta as one segment — or, where
-    * [[putAppend]] declines (`appendChainMax` segments or the delta
-    * fraction), the merged rows as the compacted state — and keeps the
-    * merged rows resident under the head it committed. An empty delta
-    * commits nothing. */
-  override private[graft] def refreshMerged(fingerprint: String,
-      timestampMicros: Long, delta: DataFrame,
-      merge: (Seq[org.apache.spark.sql.catalyst.InternalRow],
-        Seq[org.apache.spark.sql.catalyst.InternalRow]) =>
-        Option[Array[org.apache.spark.sql.catalyst.InternalRow]],
-      compactIfDeltaFraction: Option[Double]): Option[DataFrame] = {
+    * collect must: a larger state or a leaf of unknown size (a shared
+    * delta) skips the collect, and a collect that passes the bound ends
+    * it. The driver folds state ∪ delta, writes the delta as one segment
+    * — or, at `appendChainMax` segments or under the delta fraction, the
+    * merged rows as the compacted state — keeps the merged rows resident
+    * under the head it committed, and answers from them with no job.
+    *
+    * Larger, or a fold that fails: the delta is written as one segment
+    * and the answer merges one scan of the whole chain. At
+    * `appendChainMax` segments, or when the delta trips
+    * `compactIfDeltaFraction`, the method declines and the caller's full
+    * put compacts the chain. */
+  override def putAppend(fingerprint: String, timestampMicros: Long,
+      base: CachedState, delta: DataFrame,
+      compactIfDeltaFraction: Option[Double],
+      merge: StateMerge): Option[DataFrame] = {
     import graft.util.Timing.phase
-    if (driverStateMaxBytes <= 0) return None
     val spark = delta.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val key = QueryCache.keyHash(fingerprint)
-    hashToFp.put(key, fingerprint)
-    val dir = new Path(rootDir, key)
-    val fs = dir.getFileSystem(conf)
-    val head = latestMeta(fs, dir)
-    val held = residentRows(key, head)
-    val old = head.filterNot(_.tombstone).getOrElse(return None)
+    val (key, dir, fs) = entry(fingerprint, spark)
+    val old = baseHead(fs, dir, base).getOrElse(return None)
     if (!sameColumns(old.schema, delta.schema)) return None
-    val chain = if (held.isDefined) Nil else Seq(spark.read.schema(old.schema)
-      .parquet(old.allDataDirs.map(d => new Path(dir, d).toString): _*))
-    val collected = phase("refresh.collect")(driverRows(delta +: chain,
-      "refresh rows passed %d bytes in the collect; refreshing through " +
-        "the chain",
-      "refresh collect aborted by spark.driver.maxResultSize; refreshing " +
-        "through the chain")).getOrElse(return None)
-    val deltaRows = collected.head
-    def answer(dataDirs: Seq[String],
-        rows: Array[org.apache.spark.sql.catalyst.InternalRow]) = {
-      keepResident(key, dataDirs, rows)
-      Some(org.apache.spark.sql.graftshim.Shims.localRows(spark,
-        old.schema, rows.toSeq))
-    }
-    // the held state is merged already: only the groups the delta
-    // touches fold again
-    val (folded, partials) = held match {
-      case Some(rows) => (rows.toSeq, deltaRows.toSeq)
-      case None => (Nil, (collected(1) ++ deltaRows).toSeq)
-    }
-    val merged = phase("refresh.merge")(merge(folded, partials))
-      .getOrElse(return None)
-    // an empty delta commits nothing (putAppend's rule)
-    if (deltaRows.isEmpty) return answer(old.allDataDirs, merged)
-    val chainRows = chainRowCounts(fs, conf, dir, old)
-    val compact = old.allDataDirs.size >= appendChainMax ||
-      tooLargeToChain(chainRows, deltaRows.length, compactIfDeltaFraction)
-    val version = math.max(timestampMicros, old.version + 1)
-    val dataDir = s"data-$version-${java.util.UUID.randomUUID.toString.take(8)}"
-    val meta =
-      if (!compact) appendMeta(old, fingerprint, timestampMicros, dataDir,
-        chainRows, deltaRows.length)
-      else {
-        // the compacted state, as put would commit it
-        val (baseFp, measures) = recordedMeasures(fingerprint)
-          .getOrElse((old.baseFp, old.measures))
-        Meta(timestampMicros, dataDir, old.schema, old.sourcePaths,
-          fingerprint, baseFp, measures,
-          segRows = Seq(dataDir -> merged.length.toLong))
+    lazy val chainRows = chainRowCounts(fs, conf, dir, old)
+    val next = new Next(fs, dir, Some(old), timestampMicros)
+    val dataDir = next.dataDir()
+    def appended(deltaRows: Long) = appendMeta(old, fingerprint,
+      timestampMicros, dataDir, chainRows, deltaRows)
+    val held = residentRows(key, base.head)
+    // (delta rows, merged rows) when the merge ran on the driver
+    val folded = merge.fold.flatMap { fold =>
+      val chain = if (held.isDefined) Nil
+        else Seq(scan(spark, dir, old.schema, old.allDataDirs))
+      phase("refresh.collect")(driverRows(delta +: chain,
+        "refresh rows passed %d bytes in the collect; refreshing through " +
+          "the chain",
+        "refresh collect aborted by spark.driver.maxResultSize; refreshing " +
+          "through the chain")).flatMap { collected =>
+        // the held state is merged already: only the groups the delta
+        // touches fold again
+        val (state, partials) = held match {
+          case Some(rows) => (rows.toSeq, collected.head.toSeq)
+          case None => (Nil, (collected(1) ++ collected.head).toSeq)
+        }
+        phase("refresh.merge")(fold(state, partials)).map((collected.head, _))
       }
-    phase("refresh.write")(writeRows(spark, if (compact) merged else deltaRows,
-      old.schema, new Path(dir, dataDir)))
-    writeMetaAtomic(fs, dir, meta, version)
-    try cleanup(fs, dir) catch { case _: Exception => () }
-    if (compact) try globalSweep(fs) catch { case _: Exception => () }
-    answer(meta.allDataDirs, merged)
+    }
+    folded match {
+      case Some((deltaRows, merged)) =>
+        val head = if (deltaRows.isEmpty) old else {
+          val compact = old.allDataDirs.size >= appendChainMax ||
+            tooLargeToChain(chainRows, deltaRows.length, compactIfDeltaFraction)
+          phase("refresh.write")(writeRows(spark, if (compact) merged
+            else deltaRows, old.schema, new Path(dir, dataDir)))
+          next.commit(if (!compact) appended(deltaRows.length) else {
+            // the compacted state, as put would commit it
+            val (baseFp, measures) = recordedMeasures(fingerprint)
+              .getOrElse((old.baseFp, old.measures))
+            Meta(timestampMicros, dataDir, old.schema, old.sourcePaths,
+              fingerprint, baseFp, measures,
+              segRows = Seq(dataDir -> merged.length.toLong))
+          })
+        }
+        keepResident(head.token(key), merged)
+        Some(Shims.localRows(spark, old.schema, merged.toSeq))
+      case None =>
+        if (old.allDataDirs.size >= appendChainMax) return None // compact
+        // a delta segment is small by construction (one refresh band's
+        // aggregate): one file, from the driver or size-coalesced even
+        // under AQE-off commit confs. Its row count decides emptiness and
+        // the fraction rule before anything is kept (on the driver path,
+        // before anything is written).
+        val written = writeState(delta, new Path(dir, dataDir), adaptive = true,
+          keep = n => n != 0L &&
+            !tooLargeToChain(chainRows, n, compactIfDeltaFraction))
+        val head =
+          if (written.kept) next.commit(appended(written.rows))
+          else if (written.rows == 0L) old
+          else return None
+        Some(merge.frame(scan(spark, dir, old.schema, head.allDataDirs)))
+    }
   }
 
   /** Segment-grain banded refresh — see the trait doc. Keep test: a
@@ -1029,17 +1034,14 @@ final class ParquetQueryCache(rootDir: String,
     * exist — INT96 has none); a segment with missing/foreign stats is
     * "unknown" and gets rewritten, never kept wrongly. */
   override private[graft] def refreshBand(fingerprint: String,
-      timestampMicros: Long, temporalCol: String, floorMicros: Long,
-      bandDelta: DataFrame): Option[DataFrame] = {
+      timestampMicros: Long, base: CachedState, temporalCol: String,
+      floorMicros: Long, bandDelta: DataFrame,
+      merge: DataFrame => DataFrame): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
     val spark = bandDelta.sparkSession
-    val key = QueryCache.keyHash(fingerprint)
-    hashToFp.put(key, fingerprint)
-    dropResident(key)
-    val dir = new Path(rootDir, key)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(conf)
-    val old = latestMeta(fs, dir).filterNot(_.tombstone).getOrElse(return None)
+    val (_, dir, fs) = entry(fingerprint, spark)
+    val old = baseHead(fs, dir, base).getOrElse(return None)
     // temporalCol may be a one-level struct path ("_g0.start" — tumbling
     // window bucket keys): resolve through the struct for the type check;
     // footer stats and the column filter below address the nested column
@@ -1107,24 +1109,21 @@ final class ParquetQueryCache(rootDir: String,
     // run: the settle part is the watermark's advance since the last
     // refresh, the band part is the declared tolerance.
     if (keep.size + 2 >= appendChainMax) return None // full put compacts
-    val version = math.max(timestampMicros, old.version + 1)
+    val next = new Next(fs, dir, Some(old), timestampMicros)
     val floorCol = graft.plans.RunBound.timestamp(floorMicros)
     // settled/band segments are state-sized, not input-sized; each
     // segment's row count is learned from its write
     val writtenRows = scala.collection.mutable.Map.empty[String, Long]
     def writeSeg(df: DataFrame, tag: String,
         keep: Long => Boolean): Option[String] = {
-      val name =
-        s"data-$version-$tag${java.util.UUID.randomUUID.toString.take(8)}"
+      val name = next.dataDir(tag)
       val w = writeState(df, new Path(dir, name), keep = keep)
       writtenRows(name) = w.rows
       Some(name).filter(_ => w.kept)
     }
     // straddlers that held only band rows settle nothing
     val settledDir: Option[String] = if (straddle.isEmpty) None else
-      writeSeg(
-        spark.read.schema(old.schema)
-          .parquet(straddle.map(x => new Path(dir, x).toString): _*)
+      writeSeg(scan(spark, dir, old.schema, straddle)
           .filter(col(temporalCol) < floorCol || col(temporalCol).isNull),
         "s", _ != 0L)
     // no-op refresh: nothing straddles AND the band re-scan found nothing
@@ -1132,10 +1131,7 @@ final class ParquetQueryCache(rootDir: String,
     // chain toward a pointless compaction (same hazard putAppend guards
     // against)
     val bandDir = writeSeg(bandDelta, "b", n => n != 0L || straddle.nonEmpty)
-      .getOrElse {
-        val paths = old.allDataDirs.map(d => new Path(dir, d).toString)
-        return Some(spark.read.schema(old.schema).parquet(paths: _*))
-      }
+      .getOrElse(return Some(merge(scan(spark, dir, old.schema, old.allDataDirs))))
     // memoize every max this refresh learned (kept + settled segments'
     // values are final — segments are immutable) plus the band's own
     val tail = settledDir.toSeq ++ keep
@@ -1146,14 +1142,10 @@ final class ParquetQueryCache(rootDir: String,
     val segRowCounts = (tail :+ bandDir).map(s =>
       s -> recordedRows.getOrElse(s, footerRows(fs, conf, dir, s)))
       .filter(_._2 >= 0)
-    writeMetaAtomic(fs, dir,
-      Meta(timestampMicros, bandDir, old.schema, old.sourcePaths,
-        fingerprint, old.baseFp, old.measures,
-        extraDataDirs = tail, segMaxTs = segMax,
-        segRows = segRowCounts), version)
-    try cleanup(fs, dir) catch { case _: Exception => () }
-    val paths = (bandDir +: tail).map(d => new Path(dir, d).toString)
-    Some(spark.read.schema(old.schema).parquet(paths: _*))
+    val meta = next.commit(Meta(timestampMicros, bandDir, old.schema,
+      old.sourcePaths, fingerprint, old.baseFp, old.measures,
+      extraDataDirs = tail, segMaxTs = segMax, segRows = segRowCounts))
+    Some(merge(scan(spark, dir, old.schema, meta.allDataDirs)))
   }
 
   /** Global bounds sweep (the durable counterpart of MemoryQueryCache's
@@ -1165,7 +1157,7 @@ final class ParquetQueryCache(rootDir: String,
     * scan. Piggybacked on put, at most once per `sweepIntervalMs` per
     * process (one head-meta read per entry per sweep — bounded by the
     * interval, not by put volume). All three bounds default OFF. */
-  private def globalSweep(fs: org.apache.hadoop.fs.FileSystem): Unit = {
+  private def globalSweep(fs: FileSystem): Unit = {
     if (maxEntries <= 0 && maxBytes <= 0L && ttlMs <= 0L) return
     val now = System.currentTimeMillis()
     val last = lastSweepMs.get
@@ -1244,7 +1236,7 @@ final class ParquetQueryCache(rootDir: String,
   }
 
   /** delete superseded/orphaned versions past the retention window */
-  private def cleanup(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Unit = {
+  private def cleanup(fs: FileSystem, dir: Path): Unit = {
     val entries = fs.listStatus(dir)
     val now = System.currentTimeMillis()
     // every deletion below needs an entry older than graceMs (metas, data
@@ -1336,17 +1328,13 @@ final class ParquetQueryCache(rootDir: String,
     stats.recordInvalidation()
   }
 
-  private def tombstone(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Unit = {
-    dropResident(dir.getName)
-    if (!fs.exists(dir)) return
-    val head = latestMeta(fs, dir)
-    if (head.forall(_.tombstone)) return // nothing live to invalidate
-    val version = math.max(System.currentTimeMillis() * 1000L,
-      head.map(_.version + 1).getOrElse(0L))
-    writeMetaAtomic(fs, dir,
-      Meta(head.map(_.timestampMicros).getOrElse(0L), s"data-$version-tomb",
-        head.map(_.schema).getOrElse(new StructType()), Seq.empty), version)
+  private def tombstone(fs: FileSystem, dir: Path): Unit = {
+    // nothing live to invalidate: no head, or a tombstone already
+    val head = latestMeta(fs, dir).filterNot(_.tombstone).getOrElse(return)
+    val next = new Next(fs, dir, Some(head),
+      System.currentTimeMillis() * 1000L)
+    next.commit(Meta(head.timestampMicros, next.dataDir() + "-tomb",
+      head.schema, Seq.empty))
     // a dead entry has nothing left to repair — drop pending sidecars so
     // they don't linger in the dir (a fresh put over the tombstone would
     // otherwise see stale ranges and pay a pointless bounded re-scan)
@@ -1356,7 +1344,6 @@ final class ParquetQueryCache(rootDir: String,
       .foreach(p => try { fs.delete(p, false); () }
         catch { case _: Exception => () })
     catch { case _: Exception => () }
-    try cleanup(fs, dir) catch { case _: Exception => () }
   }
 
   /** In addition to the in-process index, scan every entry's latest meta
@@ -1401,11 +1388,9 @@ final class ParquetQueryCache(rootDir: String,
         case Some(m) if !m.tombstone &&
             m.sourcePaths.exists(p => QueryCache.pathMatches(table, p)) =>
           val token = java.util.UUID.randomUUID.toString.take(12)
-          val body = s"""{"loMicros":$loMicros,"hiMicros":$hiMicros}"""
           val tmp = new Path(d.getPath, s".repair-$token.json.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(body.getBytes(StandardCharsets.UTF_8))
-          finally out.close()
+          writeJson(fs, tmp, Json.createObjectNode()
+            .put("loMicros", loMicros).put("hiMicros", hiMicros))
           if (fs.rename(tmp, new Path(d.getPath, s"repair-$token.json")))
             n += 1
         case _ => ()
@@ -1427,22 +1412,9 @@ final class ParquetQueryCache(rootDir: String,
         .map { p =>
           val token = p.getName.stripPrefix("repair-").stripSuffix(".json")
           try {
-            val in = fs.open(p)
-            val txt = try {
-              // read to EOF — a remote stream may legally return fewer
-              // bytes per read() than the file holds
-              val out = new java.io.ByteArrayOutputStream()
-              val buf = new Array[Byte](4096)
-              var n = in.read(buf)
-              while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              new String(out.toByteArray, StandardCharsets.UTF_8)
-            } finally in.close()
-            def num(k: String): Option[Long] = {
-              val i = txt.indexOf("\"" + k + "\":")
-              if (i < 0) None
-              else txt.substring(i + k.length + 3)
-                .takeWhile(c => c.isDigit || c == '-').toLongOption
-            }
+            val o = readJson(fs, p)
+            def num(k: String): Option[Long] =
+              Option(o.get(k)).filter(_.isIntegralNumber).map(_.asLong)
             (for (lo <- num("loMicros"); hi <- num("hiMicros"))
               yield RepairRange(lo, hi, token))
               // a sidecar that EXISTS but doesn't parse is a declared
@@ -1498,12 +1470,18 @@ object ParquetQueryCache {
 
   /** One entry's resident state: its merged rows, the head data dirs
     * they equal, and their bytes as a collect counts them. */
-  private final case class Resident(dataDirs: Seq[String],
-      rows: Array[org.apache.spark.sql.catalyst.InternalRow], bytes: Long)
+  private final case class Resident(head: HeadToken,
+      rows: Array[InternalRow], bytes: Long)
+
+  /** one scan of the segments `dataDirs` of the entry in `dir` */
+  private def scan(spark: SparkSession, dir: Path, schema: StructType,
+      dataDirs: Seq[String]): DataFrame =
+    spark.read.schema(schema)
+      .parquet(dataDirs.map(d => new Path(dir, d).toString): _*)
 
   /** bytes of `rows` as `Shims.collectWithin` counts them */
   private def rowBytes(
-      rows: Array[org.apache.spark.sql.catalyst.InternalRow]): Long =
+      rows: Array[InternalRow]): Long =
     rows.iterator.map {
       case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
         u.getSizeInBytes + 4L
@@ -1534,7 +1512,7 @@ object ParquetQueryCache {
     * hand when the driver wrote them, and whether the segment was kept
     * (a refused segment leaves no files). */
   private final case class Written(rows: Long,
-      local: Option[Array[org.apache.spark.sql.catalyst.InternalRow]],
+      local: Option[Array[InternalRow]],
       kept: Boolean)
 
   final case class Meta(timestampMicros: Long, dataDir: String,
@@ -1569,97 +1547,88 @@ object ParquetQueryCache {
       * that never existed — get() misses, data dirs below it age out
       * through the normal grace-window cleanup */
     def tombstone: Boolean = dataDir.endsWith("-tomb")
+
+    /** the token of this head of the entry `key` */
+    def token(key: String): HeadToken = HeadToken(key, allDataDirs)
   }
 
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem, p: Path): Meta = {
+  /** The one JSON codec of metas and repair sidecars. Reading allows raw
+    * control characters: metas written before it escaped only quotes,
+    * backslashes and newlines. */
+  private val Json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature
+      .ALLOW_UNESCAPED_CONTROL_CHARS)
+    .build()
+
+  private def readJson(fs: FileSystem,
+      p: Path): com.fasterxml.jackson.databind.JsonNode = {
     val in = fs.open(p)
-    val bytes = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-    val s = new String(bytes, StandardCharsets.UTF_8)
-    // minimal parser for our own flat json
-    def fieldOpt(name: String): Option[String] = {
-      val i = s.indexOf("\"" + name + "\":")
-      if (i < 0) return None
-      val rest = s.substring(i + name.length + 3).trim
-      Some(if (rest.startsWith("\"")) {
-        // string value: schema json is itself escaped
-        val sb = new StringBuilder
-        var j = 1
-        var done = false
-        while (!done) {
-          rest.charAt(j) match {
-            case '\\' =>
-              val e = rest.charAt(j + 1)
-              sb.append(if (e == 'n') '\n' else e) // invert esc's \n
-              j += 2
-            case '"' => done = true
-            case c => sb.append(c); j += 1
-          }
-        }
-        sb.toString
-      } else rest.takeWhile(c => c.isDigit || c == '-'))
-    }
-    def field(name: String): String = {
-      val v = fieldOpt(name)
+    try Json.readTree(in) finally in.close()
+  }
+
+  private def writeJson(fs: FileSystem, p: Path,
+      node: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
+    val out = fs.create(p, true)
+    try out.write(Json.writeValueAsBytes(node)) finally out.close()
+  }
+
+  private[graft] def readMeta(fs: FileSystem, p: Path): Meta = {
+    val o = readJson(fs, p)
+    def field(name: String): Option[String] =
+      Option(o.get(name)).map(_.asText)
+    def required(name: String): String = {
+      val v = field(name)
       require(v.isDefined, s"missing $name in meta.json")
       v.get
     }
-    Meta(field("timestampMicros").toLong, field("dataDir"),
-      DataType.fromJson(field("schema")).asInstanceOf[StructType],
-      // newline-joined; absent in metas written before r6 (treated as
-      // "unknown sources" — invalidateForTable skips those entries)
-      fieldOpt("sourcePaths").map(_.split('\n').toSeq.filter(_.nonEmpty))
-        .getOrElse(Seq.empty),
-      fieldOpt("fingerprint").getOrElse(""),
-      fieldOpt("baseFp").getOrElse(""),
-      // one line per measure: `descriptor|col1,col2`; absent in metas
-      // written before r9 (entry simply never matches a measure probe)
-      fieldOpt("measures").map(_.split('\n').toSeq.filter(_.nonEmpty).map {
-        line =>
-          val i = line.indexOf('|')
-          (line.substring(0, i),
-            line.substring(i + 1).split(',').toSeq.filter(_.nonEmpty))
-      }).getOrElse(Seq.empty),
-      // append-chain tail; absent in metas written before r12
-      fieldOpt("extraDataDirs").map(_.split('\n').toSeq.filter(_.nonEmpty))
-        .getOrElse(Seq.empty),
-      // one line per known segment max: `dataDir|maxTsMicros`; absent in
-      // metas written before r13 (banded refresh falls back to footers)
-      fieldOpt("segMaxTs").map(_.split('\n').toSeq.filter(_.nonEmpty).map {
-        line =>
-          val i = line.lastIndexOf('|')
-          (line.substring(0, i), line.substring(i + 1).toLong)
-      }).getOrElse(Seq.empty),
+    // lists are newline-joined strings, absent in metas written before
+    // the field existed
+    def lines(name: String): Seq[String] =
+      field(name).toSeq.flatMap(_.split('\n')).filter(_.nonEmpty)
+    // a `dataDir|n` line
+    def counted(line: String): (String, Long) = {
+      val i = line.lastIndexOf('|')
+      (line.substring(0, i), line.substring(i + 1).toLong)
+    }
+    Meta(required("timestampMicros").toLong, required("dataDir"),
+      DataType.fromJson(required("schema")).asInstanceOf[StructType],
+      // absent before r6 (treated as "unknown sources" —
+      // invalidateForTable skips those entries)
+      lines("sourcePaths"),
+      field("fingerprint").getOrElse(""),
+      field("baseFp").getOrElse(""),
+      // one line per measure: `descriptor|col1,col2`; absent before r9
+      // (entry simply never matches a measure probe)
+      lines("measures").map { line =>
+        val i = line.indexOf('|')
+        (line.substring(0, i),
+          line.substring(i + 1).split(',').toSeq.filter(_.nonEmpty))
+      },
+      // append-chain tail; absent before r12
+      lines("extraDataDirs"),
+      // one line per known segment max: `dataDir|maxTsMicros`; absent
+      // before r13 (banded refresh falls back to footers)
+      lines("segMaxTs").map(counted),
       // one line per segment row count: `dataDir|rows`; absent pre-r13
-      fieldOpt("segRows").map(_.split('\n').toSeq.filter(_.nonEmpty).map {
-        line =>
-          val i = line.lastIndexOf('|')
-          (line.substring(0, i), line.substring(i + 1).toLong)
-      }).getOrElse(Seq.empty))
+      lines("segRows").map(counted))
   }
 
-  private def writeMetaAtomic(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+  private[graft] def writeMetaAtomic(fs: FileSystem, dir: Path,
       meta: Meta, version: Long): Unit = {
-    def esc(x: String): String =
-      x.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c => c.toString
-      }
-    val measureBlob = meta.measures
-      .map { case (d, cols) => s"$d|${cols.mkString(",")}" }.mkString("\n")
-    val segMaxBlob = meta.segMaxTs
-      .map { case (d, mx) => s"$d|$mx" }.mkString("\n")
-    val segRowsBlob = meta.segRows
-      .map { case (d, r) => s"$d|$r" }.mkString("\n")
-    val json =
-      s"""{"timestampMicros":${meta.timestampMicros},"dataDir":"${esc(meta.dataDir)}","schema":"${esc(meta.schema.json)}","sourcePaths":"${esc(meta.sourcePaths.mkString("\n"))}","fingerprint":"${esc(meta.fingerprint)}","baseFp":"${esc(meta.baseFp)}","measures":"${esc(measureBlob)}","extraDataDirs":"${esc(meta.extraDataDirs.mkString("\n"))}","segMaxTs":"${esc(segMaxBlob)}","segRows":"${esc(segRowsBlob)}"}"""
+    def joined(pairs: Seq[(String, Any)]): String =
+      pairs.map { case (d, v) => s"$d|$v" }.mkString("\n")
+    val node = Json.createObjectNode()
+      .put("timestampMicros", meta.timestampMicros)
+      .put("dataDir", meta.dataDir)
+      .put("schema", meta.schema.json)
+      .put("sourcePaths", meta.sourcePaths.mkString("\n"))
+      .put("fingerprint", meta.fingerprint)
+      .put("baseFp", meta.baseFp)
+      .put("measures", joined(meta.measures.map { case (d, cols) =>
+        (d, cols.mkString(",")) }))
+      .put("extraDataDirs", meta.extraDataDirs.mkString("\n"))
+      .put("segMaxTs", joined(meta.segMaxTs))
+      .put("segRows", joined(meta.segRows))
     // per-writer temp name: two concurrent puts that computed the SAME
     // version (both read the same head) must not share a temp path — a
     // shared `.meta-<v>.json.tmp` lets one writer's rename steal the
@@ -1668,8 +1637,7 @@ object ParquetQueryCache {
     // the same committed name and either complete meta winning is correct.
     val tmp = new Path(dir,
       s".meta-$version-${java.util.UUID.randomUUID.toString.take(8)}.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeJson(fs, tmp, node)
     val target = new Path(dir, s"meta-$version.json")
     // NO delete-before-rename: a target can only pre-exist when a
     // concurrent put computed the same version (sequential puts always

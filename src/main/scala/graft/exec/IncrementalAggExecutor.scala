@@ -44,7 +44,7 @@ import IncrementalAggExecutor._
   * to 1 partition, src/aggregate.rs:392 — its state is equally tiny). A
   * small warm refresh of a durable entry is merged on the driver, with
   * Spark's own aggregation operator over the collected rows, and answered
-  * from the merged rows: one Spark job (`ParquetQueryCache.refreshMerged`).
+  * from the merged rows: one Spark job (`ParquetQueryCache.putAppend`).
   *
   * A query that fails any decision branch runs vanilla, with the reason
   * logged (reference decision points, src/aggregate.rs:97-203).

@@ -224,7 +224,7 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
     // per run would be O(result)); otherwise a full put of the union.
     // The append path's returned replay reads parquet, so the answer
     // never rescans the source beyond the one delta write.
-    val (stored, _) = entryR match {
+    val stored = entryR match {
       case Some(cs) =>
         config.log.info(fp, s"cache hit (rows): replaying materialized " +
           s"rows, delta scan from ${cs.timestampMicros}")
@@ -250,13 +250,14 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
         // straddling tail + the band re-read commit as one new segment —
         // O(append + band) written bytes per warm run, not O(view). The
         // full-put fallback covers caches without chains (memory) and
-        // the compaction case. putAppend itself detects an all-empty
-        // delta from the written segment's parquet footers and skips the
-        // meta commit (a no-op refresh must not grow the chain toward a
-        // pointless full-view compaction). A repaired run (mid-chain
+        // the compaction case, and so does a head another commit moved
+        // since this run read it. putAppend itself skips the meta commit
+        // of an all-empty delta (a no-op refresh must not grow the chain
+        // toward a pointless full-view compaction). A repaired run (mid-chain
         // segments still hold the stale rows) compacts with a full put.
-        commit(spark, fp, now, chain, pendingRep, repairRanges.nonEmpty,
-          bandKey, Some(delta), cs.read(spark).unionByName(delta))
+        commit(spark, fp, now, chain, pendingRep,
+          Some(cs).filter(_ => repairRanges.isEmpty), bandKey, Some(delta),
+          cs.read(spark).unionByName(delta))
       case None =>
         // COLD-PUT ADMISSION GUARD: a broad filter over a large table
         // would materialize a result-sized copy on first touch — the
@@ -285,8 +286,8 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
         }
         config.log.info(fp,
           "cache miss (rows): materializing filter-query rows")
-        commit(spark, fp, now, chain, pendingRep, repaired = false, None,
-          None, Shims.ofRows(spark, boundedAtLeaf(None)))
+        commit(spark, fp, now, chain, pendingRep, None, None, None,
+          Shims.ofRows(spark, boundedAtLeaf(None)))
     }
     Some(splice(analyzed, chain, stored, replayMarker(fp, entryR)))
   }

@@ -53,8 +53,8 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     def mergeState(st: DataFrame): DataFrame =
       st.groupBy(stateKeys: _*).agg(mergeCols.head, mergeCols.tail: _*)
     // the same merge evaluated on the driver over rows in hand, for a
-    // cache that merges a small refresh there (refreshMerged); a merge it
-    // cannot evaluate leaves the refresh on the chain, the reason logged
+    // cache that merges a small append there; a merge it cannot evaluate
+    // leaves the append on the chain, the reason logged
     def driverMerge: Option[
         (Seq[InternalRow], Seq[InternalRow]) => Option[Array[InternalRow]]] =
       IncrementalAggExecutor.driverMergeMemo(c.fingerprint,
@@ -366,20 +366,19 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
         // the chained segment is GROUP-GRAINED partial state (one row per
         // group present in the append), never per-row units — a unit
         // segment would persist the raw append. `merged` stays lazy: a
-        // small refresh merges on the driver (refreshMerged: one job that
-        // collects the delta partials, then the compaction too is written
-        // from the merged rows in hand), and a chain commit that SUCCEEDS
-        // never runs it, so those refreshes scan the delta exactly once.
-        // On the larger-state path a FRACTION-DECLINED commit (a
-        // ≥25%-of-chain delta) pays the delta twice — once for the
-        // discarded segment write, once inside the full put — an
-        // accepted amortized cost: it happens at most once per
-        // compaction cycle, on runs whose full state merge dominates the
-        // extra delta scan anyway. A banded run's delta partials are
-        // offered too, but ONLY when the floor cuts on a bucket column
-        // (bandRefreshKey) — they then go through refreshBand, never
-        // putAppend or refreshMerged (appending a re-read band would
-        // duplicate it).
+        // small append merges on the driver (one job that collects the
+        // delta partials, then the compaction too is written from the
+        // merged rows in hand), and a chain commit that SUCCEEDS never
+        // runs it, so those refreshes scan the delta exactly once. On the
+        // larger-state path a FRACTION-DECLINED commit (a ≥25%-of-chain
+        // delta) pays the delta twice — once for the discarded segment
+        // write, once inside the full put — an accepted amortized cost:
+        // it happens at most once per compaction cycle, on runs whose
+        // full state merge dominates the extra delta scan anyway. A
+        // banded run's delta partials are offered too, but ONLY when the
+        // floor cuts on a bucket column (bandRefreshKey) — they then go
+        // through refreshBand, never putAppend (appending a re-read band
+        // would duplicate it).
         (() => mergeState(state),
           if (!config.aggregateStateAppend) None
           else if (bandActive && bandRefreshKey.isEmpty) None
@@ -473,23 +472,19 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     }
     // WARM commits try the O(append) CHAIN first: a putAppend-capable
     // cache writes only this run's group-grained delta partials as a new
-    // segment (the full merged state is never read OR written), and the
-    // answer below merges the replayed chain — the same merge the hit
-    // path runs, so chained and merged entries are interchangeable (no
-    // fingerprint split; flipping aggregateStateAppend against a live
-    // cache is safe). The cache declines (→ full put, which compacts)
-    // when the chain is at its cap or the delta is a large fraction of
-    // the chain — a 10%-of-table append re-merges about as cheaply as it
-    // chains, and chaining it would multiply answer-time state reads.
-    val (stored0, chained) = commit(spark, c.fingerprint, now, c.child,
-      pendingRep, repairActive, bandRefreshKey, deltaPartials, merged(),
-      stateConfs, compactIfDeltaFraction = Some(0.25),
-      // only an entry stored under this fingerprint can be refreshed in
-      // place: a probe-served run builds no merge
-      if (direct.isDefined) driverMerge else None)
-    // a chain is multi-row-per-group partial state: one merge at answer
-    // time (a driver-merged refresh and a put return merged state)
-    val stored = if (chained) mergeState(stored0) else stored0
+    // segment onto the head this run read (the full merged state is
+    // never read OR written) and answers with the chain merged — the
+    // same merge the hit path runs, so chained and merged entries are
+    // interchangeable (no fingerprint split; flipping
+    // aggregateStateAppend against a live cache is safe). The cache
+    // declines (→ full put, which compacts) when the head moved, the
+    // chain is at its cap or the delta is a large fraction of the chain —
+    // a 10%-of-table append re-merges about as cheaply as it chains, and
+    // chaining it would multiply answer-time state reads.
+    val stored = commit(spark, c.fingerprint, now, c.child, pendingRep,
+      afterRepair.filterNot(_ => repairActive), bandRefreshKey,
+      deltaPartials, merged(), stateConfs, compactIfDeltaFraction = Some(0.25),
+      new graft.cache.StateMerge(mergeState, driverMerge))
 
     // answer-time dynamic bound: temporal col -> its bucket column, now()
     // leaves -> this run's frozen timestamp (Catalyst's ComputeCurrentTime
@@ -520,55 +515,48 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
       replayMarker(c.fingerprint, afterRepair))((_, i) => finalizers(i))
   }
 
-  /** The one commit step of every rewrite that stores state. A repaired
-    * run stores `full` (old chain segments would resurrect what the
-    * repair dropped); else a `delta` refreshes the chain at segment grain
-    * when a `band` floor cuts on a state key (segments wholly below it
-    * kept: a banded refresh writes O(band + append), not O(state)), is
-    * merged on the driver with the stored state when `merge` evaluates
-    * the state's merge there and the cache takes it (one job; the
-    * returned frame is the merged state), or is appended as one segment;
-    * a declined or absent delta stores `full`.
-    * Writes run on a clone of the session carrying `confs` (never mutate
-    * the user's session: a save/restore races concurrent queries). Then
-    * the consumed repairs are cleared (token-scoped, so one declared
-    * during this run survives; after the put, so a capacity abort never
-    * consumes), the entry is indexed by its sources' tables (the
-    * invalidateForTable remedy for declared-static dims that did change)
-    * and the replay strategy is registered. Returns the stored frame and
-    * whether it is a chain replay (several partial rows per group). */
+  /** The one commit step of every rewrite that stores state. A `delta`
+    * extends the head its run read, `base` (None: a cold run, or a
+    * repaired one, whose old chain segments would resurrect what the
+    * repair dropped): at segment grain when a `band` floor cuts on a
+    * state key (segments wholly below it kept: a banded refresh writes
+    * O(band + append), not O(state)), else as one appended segment,
+    * merged on the driver where `merge` can. A declined or absent delta
+    * stores `full`. Writes run on a clone of the session carrying
+    * `confs` (never mutate the user's session: a save/restore races
+    * concurrent queries). Then the consumed repairs are cleared
+    * (token-scoped, so one declared during this run survives; after the
+    * put, so a capacity abort never consumes), the entry is indexed by
+    * its sources' tables (the invalidateForTable remedy for
+    * declared-static dims that did change) and the replay strategy is
+    * registered. Returns the stored state, answer-ready. */
   private[exec] def commit(spark: SparkSession, fp: String, now: Long,
       sources: LogicalPlan, consumed: Seq[graft.cache.RepairRange],
-      repaired: Boolean, band: Option[(String, Long)],
+      base: Option[graft.cache.CachedState], band: Option[(String, Long)],
       delta: => Option[DataFrame], full: => DataFrame,
       confs: Seq[(String, String)] = Nil,
       compactIfDeltaFraction: Option[Double] = None,
-      merge: => Option[(Seq[InternalRow], Seq[InternalRow]) =>
-        Option[Array[InternalRow]]] = None)
-      : (DataFrame, Boolean) = {
+      merge: graft.cache.StateMerge = graft.cache.StateMerge.identity)
+      : DataFrame = {
     def rebound(s: SparkSession, df: => DataFrame) = phase("put.rebind") {
       val d = df
       if (s eq spark) d else Shims.ofRows(s, Shims.queryExecution(d).analyzed)
     }
-    lazy val deltaDF = delta
-    val refreshed = if (repaired || band.isDefined) None
-      else deltaDF.flatMap(d => merge.flatMap(m =>
-        phase("cache.refreshMerged")(Shims.withIsolatedConf(spark, confs: _*)(
-          s => config.cache.refreshMerged(fp, now, rebound(s, d), m,
-            compactIfDeltaFraction)))))
-    val chained = if (repaired || refreshed.isDefined) None
-    else deltaDF.flatMap { d =>
-      phase("cache.putAppend")(Shims.withIsolatedConf(spark, confs: _*) { s =>
-        val segment = rebound(s, d)
-        band match {
-          case Some((key, floor)) =>
-            config.cache.refreshBand(fp, now, key, floor, segment)
-          case None => config.cache.putAppend(fp, now, segment,
-            compactIfDeltaFraction)
-        }
-      })
-    }
-    val stored = refreshed.orElse(chained).getOrElse(phase("cache.put")(
+    val chained = for {
+      b <- base
+      d <- delta
+      stored <- phase("cache.putAppend")(
+        Shims.withIsolatedConf(spark, confs: _*) { s =>
+          val segment = rebound(s, d)
+          band match {
+            case Some((key, floor)) => config.cache.refreshBand(fp, now, b,
+              key, floor, segment, merge.frame)
+            case None => config.cache.putAppend(fp, now, b, segment,
+              compactIfDeltaFraction, merge)
+          }
+        })
+    } yield stored
+    val stored = chained.getOrElse(phase("cache.put")(
       Shims.withIsolatedConf(spark, confs: _*) { s =>
         val state = rebound(s, full)
         phase("put.store")(config.cache.put(fp, now, state))
@@ -576,7 +564,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     if (consumed.nonEmpty) config.cache.clearRepairs(fp, consumed.map(_.token))
     config.cache.recordSourcePaths(fp, Shims.sourcePaths(sources))
     graft.plans.CacheReplayStrategy.register(spark)
-    (stored, chained.isDefined)
+    stored
   }
 
   /** The one answer splice of the aggregate rewrites: `agg`'s output

@@ -37,9 +37,6 @@ object Decompose {
   case object MHllUnion extends MergeOp
   /** set union: array_distinct(flatten(collect_list(state))) */
   case object MSetUnion extends MergeOp
-  /** boolean conjunction/disjunction (every/any) */
-  case object MBoolAnd extends MergeOp
-  case object MBoolOr extends MergeOp
   /** bitwise folds — associative+commutative, and each source row enters
     * exactly one partial, so xor-of-partials is the xor-of-rows */
   case object MBitAnd extends MergeOp
@@ -233,17 +230,11 @@ object Decompose {
             StateSpec(cn, count(child), MSum,
               unit = Some(when(child.isNotNull, lit(1L)).otherwise(lit(0L))))),
           (col(sn) / col(cn)).cast(agg.dataType)))
-      // boolean/bitwise folds: the aggregate IS its own mergeable state
+      // bitwise folds: the aggregate IS its own mergeable state
       // (self-decomposing — merge op == the aggregate), nulls ignored by
-      // both partial and merge so an all-null group stays NULL
-      case b: BoolAnd =>
-        val n = s"_s${i}_band"
-        Some(Decomposed(Seq(StateSpec(n, asCol, MBoolAnd,
-          unit = Some(fc(Shims.column(b.child))))), col(n)))
-      case b: BoolOr =>
-        val n = s"_s${i}_bor"
-        Some(Decomposed(Seq(StateSpec(n, asCol, MBoolOr,
-          unit = Some(fc(Shims.column(b.child))))), col(n)))
+      // both partial and merge so an all-null group stays NULL. The
+      // boolean folds (bool_and/every, bool_or/some/any) reach the match
+      // as the min/max `normalize` unwraps them to.
       case b: BitAndAgg =>
         val n = s"_s${i}_bitand"
         Some(Decomposed(Seq(StateSpec(n, asCol, MBitAnd,
@@ -817,8 +808,6 @@ object Decompose {
       case MMax => max(col(spec.name))
       case MHllUnion => hll_union_agg(col(spec.name))
       case MSetUnion => array_distinct(flatten(collect_list(col(spec.name))))
-      case MBoolAnd => bool_and(col(spec.name))
-      case MBoolOr => bool_or(col(spec.name))
       case MBitAnd => bit_and(col(spec.name))
       case MBitOr => bit_or(col(spec.name))
       case MBitXor => bit_xor(col(spec.name))

@@ -63,20 +63,26 @@ class CacheSpec extends AnyFunSuite {
       1 + json.split("\"extraDataDirs\":\"").last.takeWhile(_ != '"')
         .split("\\\\n").count(_.nonEmpty)
     }
+    def base() = c.get("fp").get
     // memory caches don't support appends — the default declines
-    assert(new MemoryQueryCache().putAppend("x", 1L, rows(0 until 1)).isEmpty)
-    // vacant entry: putAppend declines (nothing to chain onto)
-    assert(c.putAppend("fp", 1L, rows(0 until 3)).isEmpty)
+    val mem = new MemoryQueryCache()
+    mem.put("x", 0L, rows(0 until 1))
+    assert(mem.putAppend("x", 1L, mem.get("x").get, rows(1 until 2)).isEmpty)
+    // vacant entry: putAppend declines (nothing to chain onto), whatever
+    // the base — here one read from another cache's entry
+    val other = new ParquetQueryCache(tmpDir("pq-append-other"))
+    other.put("fp", 1L, rows(0 until 3))
+    assert(c.putAppend("fp", 1L, other.get("fp").get, rows(0 until 3)).isEmpty)
     c.put("fp", 1L, rows(0 until 3))
     assert(segs() == 1)
-    val r2 = c.putAppend("fp", 2L, rows(3 until 5))
+    val r2 = c.putAppend("fp", 2L, base(), rows(3 until 5))
     assert(r2.isDefined && r2.get.count() == 5)
     assert(segs() == 2)
-    val r3 = c.putAppend("fp", 3L, rows(5 until 6))
+    val r3 = c.putAppend("fp", 3L, base(), rows(5 until 6))
     assert(r3.isDefined && r3.get.count() == 6)
     assert(segs() == 3)
     // chain at the cap: decline; the caller full-puts (compaction)
-    assert(c.putAppend("fp", 4L, rows(6 until 7)).isEmpty)
+    assert(c.putAppend("fp", 4L, base(), rows(6 until 7)).isEmpty)
     c.put("fp", 4L, rows(0 until 7))
     assert(segs() == 1)
     // replay through get() unions the whole chain at every step
@@ -87,18 +93,87 @@ class CacheSpec extends AnyFunSuite {
     // an EMPTY delta neither commits a meta nor grows the chain — the
     // returned replay is the unchanged old chain (no-op refresh contract)
     val segsBefore = segs()
-    val rEmpty = c.putAppend("fp", 5L, rows(0 until 0))
+    val rEmpty = c.putAppend("fp", 5L, base(), rows(0 until 0))
     assert(rEmpty.isDefined && rEmpty.get.count() == 7)
     assert(segs() == segsBefore)
     assert(c.get("fp").get.timestampMicros == 4L,
       "an empty append advanced the watermark")
     // schema drift declines (caller's full put re-materializes)
-    assert(c.putAppend("fp", 5L,
+    assert(c.putAppend("fp", 5L, base(),
       Seq((1, 2)).toDF("a", "b")).isEmpty)
+    // a base whose head another commit replaced since commits nothing:
+    // no segment, no meta
+    val stale = base()
+    assert(c.putAppend("fp", 5L, base(), rows(7 until 8)).isDefined)
+    val entry = new java.io.File(dir, graft.cache.QueryCache.keyHash("fp"))
+    val files = entry.list().toSet
+    assert(c.putAppend("fp", 6L, stale, rows(8 until 9)).isEmpty)
+    assert(entry.list().toSet == files)
+    assert(c.get("fp").get.timestampMicros == 5L)
     // a fresh reader (new cache handle) sees the chained entry intact
     val c2 = new ParquetQueryCache(dir)
     val again = c2.get("fp").get
-    assert(again.read(spark).count() == 7)
+    assert(again.read(spark).count() == 8)
+  }
+
+  /** the meta text written before the JSON codec, which escaped only
+    * quotes, backslashes and newlines */
+  private def legacyEsc(x: String): String = x.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case c => c.toString
+  }
+  private def legacyMetaJson(m: ParquetQueryCache.Meta): String = {
+    val measureBlob = m.measures
+      .map { case (d, cols) => s"$d|${cols.mkString(",")}" }.mkString("\n")
+    val segMaxBlob = m.segMaxTs.map { case (d, mx) => s"$d|$mx" }.mkString("\n")
+    val segRowsBlob = m.segRows.map { case (d, r) => s"$d|$r" }.mkString("\n")
+    s"""{"timestampMicros":${m.timestampMicros},"dataDir":"${legacyEsc(m.dataDir)}","schema":"${legacyEsc(m.schema.json)}","sourcePaths":"${legacyEsc(m.sourcePaths.mkString("\n"))}","fingerprint":"${legacyEsc(m.fingerprint)}","baseFp":"${legacyEsc(m.baseFp)}","measures":"${legacyEsc(measureBlob)}","extraDataDirs":"${legacyEsc(m.extraDataDirs.mkString("\n"))}","segMaxTs":"${legacyEsc(segMaxBlob)}","segRows":"${legacyEsc(segRowsBlob)}"}"""
+  }
+
+  test("ParquetQueryCache metas: legacy text and a pre-r6 meta parse to " +
+      "the same Meta; a repair sidecar that does not parse is all history") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types._
+    import ParquetQueryCache.{Meta, readMeta, writeMetaAtomic}
+    val root = tmpDir("meta-codec")
+    val dir = new Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
+    def parse(text: String): Meta = {
+      val p = new Path(dir, "meta-1.json")
+      java.nio.file.Files.write(java.nio.file.Paths.get(root, "meta-1.json"),
+        text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      readMeta(fs, p)
+    }
+    val schema = StructType(Seq(StructField("_g0", TimestampType),
+      StructField("we\"ird\\ name", LongType)))
+    val full = Meta(1700000000000000L, "data-1700000000000002-ab12cd34",
+      schema, Seq("file:/t/events", "file:/t/dim"),
+      "fp \t\"quoted\" \\ x\r", "base",
+      Seq(("sum(v)", Seq("_s0", "_s1")), ("count(1)", Seq("_s2"))),
+      extraDataDirs = Seq("data-5-x", "data-3-y"),
+      segMaxTs = Seq("data-5-x" -> 5L, "data-3-y" -> -3L),
+      segRows = Seq("data-1700000000000002-ab12cd34" -> 2L, "data-5-x" -> 3L))
+    // the legacy writer left tabs and carriage returns raw
+    assert(legacyMetaJson(full).contains('\t'))
+    assert(parse(legacyMetaJson(full)) == full)
+    assert(parse(s"""{"timestampMicros":5,"dataDir":"data-5","schema":"${
+      legacyEsc(schema.json)}"}""") == Meta(5L, "data-5", schema))
+    // the codec's own text round-trips
+    writeMetaAtomic(fs, dir, full, 7L)
+    assert(readMeta(fs, new Path(dir, "meta-7.json")) == full)
+
+    val cacheRoot = tmpDir("meta-codec-cache")
+    val c = new ParquetQueryCache(cacheRoot)
+    c.put("fp", 1L, stateDF) // reads the events table
+    assert(c.repairRange("events", 10L, 20L) == 1)
+    java.nio.file.Files.write(java.nio.file.Paths.get(cacheRoot,
+      graft.cache.QueryCache.keyHash("fp"), "repair-bad.json"),
+      "{\"loMicros\":".getBytes)
+    assert(c.pendingRepairs("fp").map(r => (r.loMicros, r.hiMicros)).toSet ==
+      Set((10L, 20L), (Long.MinValue / 2, Long.MaxValue / 2)))
   }
 
   test("MemoryQueryCache capacity guard") {
@@ -183,13 +258,14 @@ class CacheSpec extends AnyFunSuite {
     OpenCountingFs.reset()
     c.put("fp", 1L, rows(0 until 3))
     (2 to 4).foreach(v => assert(c.putAppend("fp", v.toLong,
-      rows(v * 10 until v * 10 + 2)).isDefined))
+      c.get("fp").get, rows(v * 10 until v * 10 + 2)).isDefined))
     c.put("fp", 5L, rows(0 until 9))
     c.put("fp", 6L, rows(0 until 9))
-    // each commit after the first reads the head meta it builds on, once;
-    // inside the grace window cleanup reads none
-    assert(OpenCountingFs.metaOpens.get == 5,
-      s"${OpenCountingFs.metaOpens.get} meta reads for 6 commits")
+    // each commit after the first reads the head meta it builds on, once,
+    // and each append's base came from one get; inside the grace window
+    // cleanup reads none
+    assert(OpenCountingFs.metaOpens.get == 5 + 3,
+      s"${OpenCountingFs.metaOpens.get} meta reads for 6 commits and 3 gets")
     assert(c.get("fp").get.read(spark).count() == 9)
   }
 
@@ -537,11 +613,14 @@ class CacheSpec extends AnyFunSuite {
     // no-ops and the CHAIN path never engages. This variant grows the
     // table in phases with a barrier between phases (within a phase the
     // data is static, so the invariant stays exact): two runners race
-    // their putAppend chain commits against each other — one meta rename
-    // wins, the loser's segment orphans, and either complete chain holds
-    // the full content (both deltas cover [wm, now)) — while an
-    // invalidator tombstones the entry mid-run in one phase. Every
-    // answer must equal the phase's vanilla.
+    // their chain commits against each other — each extends only the
+    // head it read, so a runner whose head the other replaced first
+    // commits its full state instead (two runners that read the same
+    // head and commit the same version: one meta rename wins, the loser's
+    // segment orphans, and either chain holds the full content, both
+    // deltas covering [wm, now) of that head) — while an invalidator
+    // tombstones the entry mid-run in one phase. Every answer must equal
+    // the phase's vanilla.
     val dir = tmpDir("pqchainstress")
     val work = tmpDir("pqchainstress-tbl")
     val ev = Tables.events(spark, sf0001)
@@ -719,12 +798,12 @@ class CacheSpec extends AnyFunSuite {
       * vanilla; returns the cache state files its tasks opened */
     def refresh(c: ParquetQueryCache, day: Int, bandUs: Option[Long] = None,
         q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          query): Long = {
+          query, log: graft.log.CacheLog = graft.log.NoOpLog): Long = {
       OpenCountingFs.reset()
       val df = q(spark.read.parquet(table))
       val got = QueryCacheSession(spark, QueryCacheConfig(c,
         defaultTemporalColumn = "ts", lateRescanBandMicros = bandUs,
-        overrideNowMicros = Some(StartUs + day * DayUs)))
+        overrideNowMicros = Some(StartUs + day * DayUs), log = log))
         .run(df).collect().map(_.toString).sorted.toSeq
       val opens = OpenCountingFs.taskOpens.get
       assert(got == df.collect().map(_.toString).sorted.toSeq,
@@ -879,5 +958,60 @@ class CacheSpec extends AnyFunSuite {
     val opens = rig.refresh(c, 14)
     if (rig.driverMerges) assert(opens == 0, "not resident after one refresh")
     else assert(opens > 0)
+  }
+
+  // ------------------------------------------------ head rule (two writers)
+
+  /** A log that, at its first "cache hit" line, runs `race` on another
+    * thread and waits for it: the run logging it has read its base state
+    * and committed nothing yet. (On the same thread the race would share
+    * the executor's per-thread rewrite scope.) */
+  private final class RaceAtHit(race: => Unit) extends graft.log.CacheLog {
+    private val fired = new java.util.concurrent.atomic.AtomicBoolean
+    @volatile private var failure: Option[Throwable] = None
+    override def log(level: graft.log.LogLevel, fingerprint: String,
+        msg: String): Unit =
+      if (msg.startsWith("cache hit") && fired.compareAndSet(false, true)) {
+        val t = new Thread(() =>
+          try race catch { case e: Throwable => failure = Some(e) })
+        t.start()
+        t.join()
+      }
+    /** the race ran, and passed */
+    def check(): Unit = {
+      assert(fired.get, "no cache hit: the race never ran")
+      failure.foreach(throw _)
+    }
+  }
+
+  /** Writer A reads the day-11 head for its day-12 refresh; writer B, a
+    * second instance on the same root, commits its own day-12 refresh
+    * first. A's delta was scanned from the head it read: appended onto
+    * B's head it would count day 11 twice, in A's answer and durably in
+    * every answer after. Every answer is checked against vanilla. */
+  private def staleHead(rig: Rig,
+      q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Unit = {
+    val a = rig.cache()
+    rig.create(10)
+    rig.refresh(a, 10, q = q)
+    rig.append(10)
+    rig.refresh(a, 11, q = q)
+    rig.append(11)
+    val race = new RaceAtHit(rig.refresh(rig.cache(), 12, q = q))
+    rig.refresh(a, 12, q = q, log = race)
+    race.check()
+    rig.append(12)
+    rig.refresh(a, 13, q = q)
+    rig.refresh(rig.cache(), 13, q = q)
+  }
+
+  pqTest("a chain commit extends only the head its run read: aggregates") {
+    val rig = new Rig("stale-agg")
+    staleHead(rig, rig.query)
+  }
+
+  pqTest("a chain commit extends only the head its run read: row views") {
+    staleHead(new Rig("stale-rows"), _.filter(col("value") >= 50))
   }
 }

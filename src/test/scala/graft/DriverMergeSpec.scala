@@ -63,10 +63,10 @@ class DriverMergeSpec extends AnyFunSuite {
     seed <- Gen.choose(0L, Long.MaxValue)
   } yield Case(rows, nearMax, seed)
 
-  /** one aggregate per merge op (and per state type of the sum), but
-    * the boolean folds (see [[specs]]) */
+  /** one aggregate per merge op (and per state type of the sum) */
   private def measures: Seq[Column] = Seq(
     sum("l"), sum("d"), sum("dec"), min("d"), max("s"),
+    bool_and(col("b")), bool_or(col("b")),
     approx_count_distinct("i"), countDistinct("i"),
     bit_and(col("i")), bit_or(col("i")), bit_xor(col("l")),
     expr("mode(s)"), expr("percentile(d, 0.5)"),
@@ -80,11 +80,7 @@ class DriverMergeSpec extends AnyFunSuite {
       .collectFirst { case a: Aggregate => a }.get
     agg.aggregateExpressions.flatMap(_.collect {
       case ae: AggregateExpression => ae }).zipWithIndex
-      .flatMap { case (ae, i) => Decompose.decompose(i, ae).get.state } ++
-      // the analyzer rewrites bool_and/bool_or to min/max before the
-      // decomposition sees them: their merge ops by hand
-      Seq(StateSpec("_band", bool_and(col("b")), MBoolAnd),
-        StateSpec("_bor", bool_or(col("b")), MBoolOr))
+      .flatMap { case (ae, i) => Decompose.decompose(i, ae).get.state }
   }
 
   private val keys = Seq(col("_g0"), col("_g1"))
@@ -158,8 +154,8 @@ class DriverMergeSpec extends AnyFunSuite {
     }
     info(s"$overflows of 14 cases overflowed a decimal sum both ways")
     assert(covered == Set("MSum", "MMin", "MMax", "MHllUnion", "MSetUnion",
-      "MBoolAnd", "MBoolOr", "MBitAnd", "MBitOr", "MBitXor", "MValueCounts",
-      "MValueSketch", "MTopK", "MHeavyHitters"), covered)
+      "MBitAnd", "MBitOr", "MBitXor", "MValueCounts", "MValueSketch", "MTopK",
+      "MHeavyHitters"), covered)
   }
 
   test("the driver merge refuses what it does not evaluate") {
@@ -191,12 +187,22 @@ class DriverMergeSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tmpDir("refused-merge")
     val cache = new ParquetQueryCache(dir)
-    cache.put("fp", 1L, Seq((1L, 2L)).toDF("_g0", "_s0"))
-    val heads = new java.io.File(dir).listFiles().head.list().toSet
-    assert(cache.refreshMerged("fp", 2L, Seq((1L, 3L)).toDF("_g0", "_s0"),
-      (_, _) => None, None).isEmpty)
-    assert(new java.io.File(dir).listFiles().head.list().toSet == heads)
-    assert(cache.get("fp").get.timestampMicros == 1L)
+    cache.put("fp", 1L, Seq((1L, 2L), (2L, 7L)).toDF("_g0", "_s0"))
+    // a fold that refuses: the answer is the chain's scan merged by
+    // Spark, over the delta appended as a segment
+    val merge = new graft.cache.StateMerge(
+      _.groupBy("_g0").agg(sum("_s0").as("_s0")), Some((_, _) => None))
+    val got = cache.putAppend("fp", 2L, cache.get("fp").get,
+      Seq((1L, 3L)).toDF("_g0", "_s0"), None, merge)
+    assert(got.get.as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 5L), (2L, 7L)))
+    // nothing of the fold's was committed or kept: the head is the chain
+    // with the delta segment, read from its files
+    val head = cache.get("fp").get
+    assert(head.timestampMicros == 2L && head.head.get.dataDirs.size == 2)
+    assert(Shims.queryExecution(head.read(spark)).analyzed.collectFirst {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
+    }.isEmpty, "the refused fold's rows were kept")
 
     // end to end: a collated group key refuses, the log says so, and the
     // refresh answers through the chain like vanilla
