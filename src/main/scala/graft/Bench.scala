@@ -580,18 +580,6 @@ object Bench {
         if (t.taskMetrics != null)
           recordsRead.add(t.taskMetrics.inputMetrics.recordsRead)
     })
-    if (graft.util.Timing.enabled) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, j.time)
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          // start event may be dropped by the async listener bus — a null
-          // would unbox to 0 and print epoch millis as the duration
-          Option(starts.remove(j.jobId)).foreach(t0 =>
-            System.err.println(s"[qc-timing] job ${j.jobId}: ${j.time - t0} ms"))
-      })
-    }
 
     // hygiene: one untimed warmup JITs the scan/shuffle/agg paths before
     // anything is measured, and any cache entries a query leaks are

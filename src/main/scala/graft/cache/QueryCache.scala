@@ -11,6 +11,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.log.CacheEvent
+import graft.log.CacheEvent.{Commit, Decision, Outcome}
+
 /** Cache SPI (reference: src/cache.rs:10-56).
   *
   * A cache entry stores the **merged partial-aggregate state** for one
@@ -311,20 +314,26 @@ trait QueryCache {
     }
 }
 
-/** Monotone counters for one cache handle: `hits`/`misses` count decided
-  * cacheable runs (a hit replays stored state, a miss captures it),
-  * `bails` counts queries the decision procedure declined (ran vanilla —
-  * see the "not incrementally mergeable"-style log lines for WHY),
-  * `invalidations` counts dropped entries. */
+/** Monotone counters for one cache handle: `hits`/`misses`/`bails`
+  * count the outcomes of top-level rewrites, one [[CacheEvent.Decision]]
+  * each (a hit replays stored state, a miss captures it, a bail ran
+  * vanilla — the decision log says WHY); `invalidations` counts dropped
+  * entries. */
 final class CacheStats {
   private val h = new java.util.concurrent.atomic.AtomicLong
   private val m = new java.util.concurrent.atomic.AtomicLong
   private val b = new java.util.concurrent.atomic.AtomicLong
   private val inv = new java.util.concurrent.atomic.AtomicLong
   private val ev = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def recordHit(): Unit = { h.incrementAndGet(); () }
-  private[graft] def recordMiss(): Unit = { m.incrementAndGet(); () }
-  private[graft] def recordBail(): Unit = { b.incrementAndGet(); () }
+  private[graft] def record(e: CacheEvent): Unit = e match {
+    case d: Decision => d.outcome match {
+      case Outcome.Hit => h.incrementAndGet()
+      case Outcome.Miss => m.incrementAndGet()
+      case Outcome.Bail => b.incrementAndGet()
+      case Outcome.Fallback => ()
+    }
+    case _ => ()
+  }
   private[graft] def recordInvalidation(): Unit = { inv.incrementAndGet(); () }
   private[graft] def recordEviction(): Unit = { ev.incrementAndGet(); () }
   def hits: Long = h.get
@@ -436,9 +445,7 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
     // the byte-level guard against a runaway group-by cardinality is
     // Spark's own spark.driver.maxResultSize (default 1g) — keep it set
     // on sessions that cache; its abort also falls back to vanilla.
-    graft.util.Timing.phase("put.planPhysical")(
-      org.apache.spark.sql.graftshim.Shims.queryExecution(state).executedPlan)
-    val rows = graft.util.Timing.phase("put.collect")(state.collect())
+    val rows = CacheEvent.phase(fingerprint, "put.collect")(state.collect())
     if (rows.length > maxStateRows)
       throw new CacheCapacityExceeded(
         s"state exceeds maxStateRows=$maxStateRows")
@@ -459,6 +466,7 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
       entries.put(fingerprint,
         Entry(timestampMicros, state.schema, rows, System.currentTimeMillis()))
     }
+    CacheEvent.report(Commit(fingerprint, "put", "driver"))
     state.sparkSession.createDataFrame(rows.toSeq.asJava, state.schema)
   }
 
@@ -641,17 +649,18 @@ final class ParquetQueryCache(rootDir: String,
     }
   }
 
-  /** The head check of every chain commit: the entry's head when it is
-    * still the head `base` was read from, else None, with a line when
-    * another commit moved it since. A base read from another entry (a
-    * probe-served one) never matches either. */
-  private def baseHead(fs: FileSystem, dir: Path,
-      base: CachedState): Option[Meta] = {
+  /** The head check of every chain commit of `kind`: the entry's head
+    * when it is still the head `base` was read from, else None, with a
+    * declined Commit when another commit moved it since. A base read from
+    * another entry (a probe-served one) never matches either. */
+  private def baseHead(fs: FileSystem, dir: Path, fingerprint: String,
+      kind: String, base: CachedState): Option[Meta] = {
     val head = latestMeta(fs, dir).filterNot(_.tombstone)
       .filter(h => base.head.contains(h.token(dir.getName)))
     if (head.isEmpty && base.head.exists(_.key == dir.getName))
-      System.err.println("[query-cache] the entry's head moved since this " +
-        "run read it; committing the full state instead of a chain segment")
+      CacheEvent.report(Commit(fingerprint, kind, "-", Some("head-moved"),
+        "the entry's head moved since this run read it; committing the " +
+          "full state instead of a chain segment"))
     head
   }
 
@@ -736,7 +745,7 @@ final class ParquetQueryCache(rootDir: String,
     val dataDir = next.dataDir()
     // driver or distributed write, timestamp type, file sizing: see
     // writeState
-    val written = writeState(state, new Path(dir, dataDir))
+    val written = writeState(fingerprint, "put", state, new Path(dir, dataDir))
     // source tables persisted in the meta: invalidateForTable then works
     // from ANY process, not just the writer's (the state plan reads the
     // source table on both cold and warm runs; the cache's own replay
@@ -828,16 +837,17 @@ final class ParquetQueryCache(rootDir: String,
     * whatever the caller's confs: append segments take it. Full puts
     * keep the caller's choice (forcing AQE there made probe-served
     * ad-hoc commits slower). */
-  private def writeState(df: DataFrame, path: Path, adaptive: Boolean = false,
+  private def writeState(fingerprint: String, kind: String, df: DataFrame,
+      path: Path, adaptive: Boolean = false,
       keep: Long => Boolean = _ => true): Written = {
     val spark = df.sparkSession
-    driverRows(Seq(df), "state rows passed %d bytes in the collect; " +
-        "writing them distributed",
+    driverRows(fingerprint, kind, Seq(df),
+        "state rows passed %d bytes in the collect; writing them distributed",
         "state collect aborted by spark.driver.maxResultSize; writing it " +
         "distributed").map(_.head) match {
       case Some(rows) =>
         val kept = keep(rows.length)
-        if (kept) writeRows(spark, rows, df.schema, path)
+        if (kept) writeRows(fingerprint, kind, spark, rows, df.schema, path)
         Written(rows.length, Some(rows), kept)
       case None =>
         val conf = spark.sparkContext.hadoopConfiguration
@@ -852,39 +862,43 @@ final class ParquetQueryCache(rootDir: String,
           case _ => footerRows(fs, conf, path.getParent, path.getName)
         }
         val kept = keep(n)
-        if (!kept) try fs.delete(path, true) catch { case _: Exception => () }
+        if (kept) CacheEvent.report(Commit(fingerprint, kind, "distributed"))
+        else try fs.delete(path, true) catch { case _: Exception => () }
         Written(n, None, kept)
     }
   }
 
   /** `rows` of `schema` written from the driver as one parquet file into
-    * `path` (see [[writeState]]) */
-  private def writeRows(spark: SparkSession,
-      rows: Array[InternalRow],
-      schema: StructType, path: Path): Unit = {
+    * `path` (see [[writeState]]), reported as a driver Commit */
+  private def writeRows(fingerprint: String, kind: String, spark: SparkSession,
+      rows: Array[InternalRow], schema: StructType, path: Path): Unit = {
     Shims.withIsolatedConf(spark, writeConfs: _*)(s =>
       Shims.writeParquetFile(s, rows.toSeq, schema, path.toString))
+    CacheEvent.report(Commit(fingerprint, kind, "driver"))
   }
 
   /** The rows of `dfs` collected to the driver in one job when they are
     * small together (see [[writeState]]); None → the caller's larger-state
-    * path, with a stderr line saying why: `over` (its `%d` is the bound)
-    * when the collect passed the bound, `aborted` when
+    * path, with a declined driver Commit saying why: `over` (its `%d` is
+    * the bound) when the collect passed the bound, `aborted` when
     * `spark.driver.maxResultSize` aborted it. */
-  private def driverRows(dfs: Seq[DataFrame], over: String, aborted: String)
+  private def driverRows(fingerprint: String, kind: String,
+      dfs: Seq[DataFrame], over: String, aborted: String)
       : Option[Seq[Array[InternalRow]]] = {
+    def decline(code: String, why: String) = CacheEvent.report(
+      Commit(fingerprint, kind, "driver", Some(code), why))
     val limit = driverStateMaxBytes
     if (limit <= 0 || !dfs.map(Shims.scanBytes).foldLeft(Option(0L))(
         (a, b) => for (x <- a; y <- b) yield x + y).exists(_ <= limit)) None
     else try {
       val rows = Shims.collectWithin(dfs, limit)
-      if (rows.isEmpty) System.err.println("[query-cache] " + over.format(limit))
+      if (rows.isEmpty) decline("collect-over-bound", over.format(limit))
       rows
     } catch {
       case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
           .takeWhile(_ != null).exists(t =>
             Option(t.getMessage).exists(_.contains("maxResultSize"))) =>
-        System.err.println(s"[query-cache] $aborted: ${e.getMessage}")
+        decline("collect-aborted", s"$aborted: ${e.getMessage}")
         None
     }
   }
@@ -959,11 +973,12 @@ final class ParquetQueryCache(rootDir: String,
       base: CachedState, delta: DataFrame,
       compactIfDeltaFraction: Option[Double],
       merge: StateMerge): Option[DataFrame] = {
-    import graft.util.Timing.phase
+    def phase[A](name: String)(f: => A): A = CacheEvent.phase(fingerprint, name)(f)
     val spark = delta.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val (key, dir, fs) = entry(fingerprint, spark)
-    val old = baseHead(fs, dir, base).getOrElse(return None)
+    val old = baseHead(fs, dir, fingerprint, "append", base)
+      .getOrElse(return None)
     if (!sameColumns(old.schema, delta.schema)) return None
     lazy val chainRows = chainRowCounts(fs, conf, dir, old)
     val next = new Next(fs, dir, Some(old), timestampMicros)
@@ -975,7 +990,7 @@ final class ParquetQueryCache(rootDir: String,
     val folded = merge.fold.flatMap { fold =>
       val chain = if (held.isDefined) Nil
         else Seq(scan(spark, dir, old.schema, old.allDataDirs))
-      phase("refresh.collect")(driverRows(delta +: chain,
+      phase("refresh.collect")(driverRows(fingerprint, "append", delta +: chain,
         "refresh rows passed %d bytes in the collect; refreshing through " +
           "the chain",
         "refresh collect aborted by spark.driver.maxResultSize; refreshing " +
@@ -994,8 +1009,9 @@ final class ParquetQueryCache(rootDir: String,
         val head = if (deltaRows.isEmpty) old else {
           val compact = old.allDataDirs.size >= appendChainMax ||
             tooLargeToChain(chainRows, deltaRows.length, compactIfDeltaFraction)
-          phase("refresh.write")(writeRows(spark, if (compact) merged
-            else deltaRows, old.schema, new Path(dir, dataDir)))
+          phase("refresh.write")(writeRows(fingerprint, "append", spark,
+            if (compact) merged else deltaRows, old.schema,
+            new Path(dir, dataDir)))
           next.commit(if (!compact) appended(deltaRows.length) else {
             // the compacted state, as put would commit it
             val (baseFp, measures) = recordedMeasures(fingerprint)
@@ -1014,7 +1030,8 @@ final class ParquetQueryCache(rootDir: String,
         // under AQE-off commit confs. Its row count decides emptiness and
         // the fraction rule before anything is kept (on the driver path,
         // before anything is written).
-        val written = writeState(delta, new Path(dir, dataDir), adaptive = true,
+        val written = writeState(fingerprint, "append", delta,
+          new Path(dir, dataDir), adaptive = true,
           keep = n => n != 0L &&
             !tooLargeToChain(chainRows, n, compactIfDeltaFraction))
         val head =
@@ -1041,7 +1058,8 @@ final class ParquetQueryCache(rootDir: String,
     val spark = bandDelta.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val (_, dir, fs) = entry(fingerprint, spark)
-    val old = baseHead(fs, dir, base).getOrElse(return None)
+    val old = baseHead(fs, dir, fingerprint, "band", base)
+      .getOrElse(return None)
     // temporalCol may be a one-level struct path ("_g0.start" — tumbling
     // window bucket keys): resolve through the struct for the type check;
     // footer stats and the column filter below address the nested column
@@ -1117,7 +1135,7 @@ final class ParquetQueryCache(rootDir: String,
     def writeSeg(df: DataFrame, tag: String,
         keep: Long => Boolean): Option[String] = {
       val name = next.dataDir(tag)
-      val w = writeState(df, new Path(dir, name), keep = keep)
+      val w = writeState(fingerprint, "band", df, new Path(dir, name), keep = keep)
       writtenRows(name) = w.rows
       Some(name).filter(_ => w.kept)
     }

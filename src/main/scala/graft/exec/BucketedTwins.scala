@@ -61,7 +61,7 @@ private[exec] trait BucketedTwins { this: IncrementalAggExecutor =>
        else Some(NoGroupGrain)).getOrElse(return None)
     val fp = fingerprint(agg) + fpSuffix
     def bail(msg: String): Option[LogicalPlan] = {
-      config.log.info(fp, s"no-group dynamic bound bail: $msg")
+      info(fp, s"no-group dynamic bound bail: $msg")
       None
     }
     if (!agg.expressions.forall(_.deterministic) || hasSubquery(agg.expressions))
@@ -142,7 +142,7 @@ private[exec] trait BucketedTwins { this: IncrementalAggExecutor =>
     val out = spliceAnswer(analyzed, agg, aggExprs, resultDF, j => s"_k$j") {
       (ae, i) => Cast(UnresolvedAttribute(Seq(s"_r$i")), ae.dataType)
     }
-    config.log.info(fingerprint(agg) + fpSuffix, answered)
+    info(fingerprint(agg) + fpSuffix, answered)
     Some(out)
   }
 
@@ -215,7 +215,7 @@ private[exec] trait BucketedTwins { this: IncrementalAggExecutor =>
     if (c.agg.child.exists(_.isInstanceOf[Expand])) return None
     val fp = c.fingerprint
     def bail(msg: String): Option[LogicalPlan] = {
-      config.log.info(fp, s"temporal twin bail (plain keys-only state): $msg")
+      info(fp, s"temporal twin bail (plain keys-only state): $msg")
       None
     }
     // build the twin from the ORIGINAL (widened) chain: a dynamic bound

@@ -74,7 +74,7 @@ private[exec] trait FactorizedJoin { this: IncrementalAggExecutor =>
     val agg = aggs.head
     val fp = fingerprint(agg) + fpSuffix
     def bail(msg: String): Option[LogicalPlan] = {
-      config.log.info(fp, s"factorized join bail: $msg")
+      info(fp, s"factorized join bail: $msg")
       None
     }
 
@@ -176,7 +176,7 @@ private[exec] trait FactorizedJoin { this: IncrementalAggExecutor =>
         case other => other
       }
       if (eff != j.joinType)
-        config.log.info(fp, s"factorized join: ${j.joinType.sql} demoted " +
+        info(fp, s"factorized join: ${j.joinType.sql} demoted " +
           s"to ${eff.sql} (null-rejecting filter on the null-extended side)")
       eff
     }
@@ -531,7 +531,7 @@ private[exec] trait FactorizedJoin { this: IncrementalAggExecutor =>
     }
     twins.foreach { case (name, p) =>
       decide(p) match {
-        case Left((_, reason)) if !factorizableShape(p) =>
+        case Left((_, _, reason)) if !factorizableShape(p) =>
           return bail(s"$name twin not cacheable: $reason")
         case _ => ()
       }
@@ -558,7 +558,7 @@ private[exec] trait FactorizedJoin { this: IncrementalAggExecutor =>
       jx => if (groupSide(jx)) s"_ga$jx" else s"_gb$jx") { (ae, i) =>
       Cast(UnresolvedAttribute(Seq(s"_r$i")), ae.dataType)
     }
-    config.log.info(fp, "factorized join: answered from two per-side twin " +
+    info(fp, "factorized join: answered from two per-side twin " +
       "states combined at join-key grain")
     Some(answered)
   }

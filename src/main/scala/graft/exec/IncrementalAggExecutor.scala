@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampType
 import graft.QueryCacheConfig
 import graft.analysis.{Fingerprint, Stability, TemporalGroupBy}
 import graft.cache.CacheCapacityExceeded
+import graft.log.{CacheEvent, LogLevel}
+import graft.log.CacheEvent.{Decision, Outcome}
 import graft.rewrite.Decompose
 import graft.rewrite.Decompose.Decomposed
 
@@ -75,19 +77,36 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
     (if (config.strictUpperBound) ":s1" else "") +
       (if (config.percentileSketchState) "" else ":px0")
 
-  /** dev-only phase timing (SPARK_GRAFT_TIMING=1): attributes warm-path
-    * wall-clock to decide/schema/put/splice without a profiler attached */
-  private[exec] def phase[A](tag: String)(f: => A): A = graft.util.Timing.phase(tag)(f)
+  /** Every event of a rewrite goes here: the decisions to `cache.stats`,
+    * everything to the config's log and to the listener bus. */
+  private[graft] def publish(spark: SparkSession, e: CacheEvent): Unit = {
+    config.cache.stats.record(e)
+    config.log.event(e)
+    Shims.postEvent(spark, e)
+  }
+
+  private[exec] def info(fp: String, msg: String): Unit =
+    CacheEvent.report(CacheEvent.Note(LogLevel.Info, fp, msg))
+  private[exec] def warn(fp: String, msg: String): Unit =
+    CacheEvent.report(CacheEvent.Note(LogLevel.Warn, fp, msg))
+  private[exec] def phase[A](fp: String, tag: String)(f: => A): A =
+    CacheEvent.phase(fp, tag)(f)
 
   /** Memos for one top-level [[rewritePlan]], nested twin rewrites
     * included: each plan is fingerprinted, and each aggregate's measure
-    * index rows derived, once however many paths reach it. */
+    * index rows derived, once however many paths reach it. `served`
+    * gathers the states that answered, for the one Decision. */
   private final class RewriteScope {
     val fingerprints = mutable.HashMap.empty[LogicalPlan, String]
     val measures =
       mutable.HashMap.empty[Aggregate, (String, Seq[(String, Seq[String])])]
+    val served = ArrayBuffer.empty[Served]
   }
   private val scope = new ThreadLocal[RewriteScope]
+
+  /** records a state that answered part of the running rewrite */
+  private[exec] def served(s: Served): Unit =
+    Option(scope.get).foreach(_.served += s)
 
   /** [[Fingerprint.of]], memoized per rewrite (without the capture-mode
     * suffix, which callers append). */
@@ -114,36 +133,52 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
 
   /** Plan-level entry (shared by the facade and the transparent optimizer
     * rule): Some(replacement plan) when the query was cache-rewritten,
-    * None to run vanilla. */
+    * None to run vanilla. A top-level call reports exactly one
+    * [[CacheEvent.Decision]], and tags its Spark jobs as the `exec`
+    * layer's. */
   def rewritePlan(spark: SparkSession, analyzed: LogicalPlan): Option[LogicalPlan] =
-    if (scope.get != null) rewriteScoped(spark, analyzed)
-    else {
+    if (scope.get != null) rewriteScoped(spark, analyzed)._1
+    else CacheEvent.reporting(publish(spark, _)) {
       scope.set(new RewriteScope)
-      try rewriteScoped(spark, analyzed) finally scope.remove()
+      try CacheEvent.inLayer(spark.sparkContext, "exec") {
+        val (answer, decision) = rewriteScoped(spark, analyzed)
+        CacheEvent.report(decision)
+        answer
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          CacheEvent.report(Decision("-", Outcome.Fallback, "error",
+            detail = String.valueOf(e.getMessage)))
+          throw e
+      } finally scope.remove()
     }
 
   private def rewriteScoped(spark: SparkSession,
-      analyzed: LogicalPlan): Option[LogicalPlan] = {
-    val (fp, declined, rewrites) = phase("decide")(decide(analyzed)) match {
-      case Left((fp, reason)) => (fp, Some(reason), Seq(
+      analyzed: LogicalPlan): (Option[LogicalPlan], Decision) = {
+    val t0 = System.nanoTime()
+    val decided = decide(analyzed)
+    CacheEvent.report(CacheEvent.Phase(decided.fold(_._1, _.fingerprint),
+      "decide", (System.nanoTime() - t0) / 1e6))
+    val (fp, declined, rewrites) = decided match {
+      case Left((fp, code, reason)) => (fp, Some((code, reason)), Seq(
         // two-fact join aggregates: after the single-state decision bails,
         // try the factorized decomposition (two per-side twin states plus
         // a state-sized combine — see factorizedJoinRewrite)
         Rewrite("factorized join rewrite failed",
-          () => phase("factorized")(factorizedJoinRewrite(spark, analyzed))),
+          () => phase(fp, "factorized")(factorizedJoinRewrite(spark, analyzed)),
+          factorized = true),
         // no-GROUP-BY aggregate under a dynamic lower bound (reference
         // README.md:132 TODO): bucket internally, bound over bucket
         // starts, re-aggregate — see dynNoGroupRewrite
         Rewrite("no-group dynamic bound rewrite failed", () =>
           if (!config.dynamicBoundBucketGranularity) None
-          else phase("dyn-nogroup")(dynNoGroupRewrite(spark, analyzed))),
+          else phase(fp, "dyn-nogroup")(dynNoGroupRewrite(spark, analyzed))),
         // simple filter queries (reference README.md:130 TODO): cache
         // the row result itself as an incremental materialized view
         Rewrite("filter-query rewrite failed",
-          () => phase("filter-rows")(filterQueryRewrite(spark, analyzed)),
+          () => phase(fp, "filter-rows")(filterQueryRewrite(spark, analyzed)),
           tooLarge = Some("row state too large"))))
       case Right(c) =>
-        config.log.info(c.fingerprint,
+        info(c.fingerprint,
           s"query valid for caching, temporal column ${c.temporalAttr.name}")
         // opt-in temporal twin: grouped queries WITHOUT a temporal bucket
         // key route through a (grain-bucket × keys) twin so bucket-grain
@@ -154,27 +189,44 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
         // error to the caller).
         (c.fingerprint, None, Seq(Rewrite("cache rewrite failed", () =>
           (if (config.temporalTwinGrain.isEmpty) None
-           else phase("bucket-twin")(bucketTwinRewrite(spark, analyzed, c)))
+           else phase(c.fingerprint, "bucket-twin")(
+             bucketTwinRewrite(spark, analyzed, c)))
             .orElse(Some(execute(spark, analyzed, c))),
           tooLarge = Some("state too large"))))
     }
     // the first rewrite that answers wins; one that throws logs why and
     // the next is tried
+    val states = scope.get.served
+    var failed: Option[Decision] = None
     val answered = rewrites.iterator.flatMap { r =>
-      try r.run()
+      val mark = states.size
+      try r.run().map((_, r, states.drop(mark).toSeq))
       catch {
         case scala.util.control.NonFatal(e) =>
-          val what = e match {
-            case _: CacheCapacityExceeded => r.tooLarge.getOrElse(r.failed)
-            case _ => r.failed
+          val (what, code) = e match {
+            case _: CacheCapacityExceeded if r.tooLarge.isDefined =>
+              (r.tooLarge.get, "too-large")
+            case _ => (r.failed, "error")
           }
-          config.log.warn(fp, s"$what, running uncached: ${e.getMessage}")
+          warn(fp, s"$what, running uncached: ${e.getMessage}")
+          failed = Some(Decision(fp, Outcome.Fallback, code,
+            detail = String.valueOf(e.getMessage)))
           None
       }
     }.nextOption()
     if (answered.isEmpty)
-      declined.foreach(reason => config.log.info(fp, s"not caching: $reason"))
-    answered
+      declined.foreach(reason => info(fp, s"not caching: ${reason._2}"))
+    (answered.map(_._1), (answered, declined) match {
+      // a hit when every state that answered hit
+      case (Some((_, r, by)), _) =>
+        val last = by.lastOption.getOrElse(Served(hit = false, "cold"))
+        Decision(fp, if (by.forall(_.hit)) Outcome.Hit else Outcome.Miss,
+          if (r.factorized) "factorized" else last.reason, last.path)
+      case (None, Some((code, reason))) =>
+        Decision(fp, Outcome.Bail, code, detail = reason)
+      case (None, None) => failed.getOrElse(
+        Decision(fp, Outcome.Fallback, "error"))
+    })
   }
 
   /** a declared-static side: every leaf is a LocalRelation (immutable,
@@ -211,10 +263,14 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
 
   // ---------------------------------------------------------------- decide
 
-  private[exec] def decide(analyzed: LogicalPlan): Either[(String, String), Cacheable] = {
+  /** The aggregate `analyzed` caches, or (fingerprint, Decision reason
+    * code, message) of why it does not. */
+  private[exec] def decide(
+      analyzed: LogicalPlan): Either[(String, String, String), Cacheable] = {
     val aggs = analyzed.collect { case a: Aggregate => a }
-    if (aggs.isEmpty) return Left(("-", "no aggregate in plan"))
-    if (aggs.size > 1) return Left(("-", "nested aggregates not supported"))
+    if (aggs.isEmpty) return Left(("-", "no-aggregate", "no aggregate in plan"))
+    if (aggs.size > 1)
+      return Left(("-", "nested-aggregates", "nested aggregates not supported"))
     val agg = aggs.head
     // the capture mode is part of the state's identity: strict-mode state
     // covers [-inf, capture_now) while default-mode state covers every row
@@ -225,10 +281,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
     // loses static rows >= wm) — so a flipped flag must be a cache MISS,
     // not a hit with the wrong band.
     val fp = fingerprint(agg) + fpSuffix
-    def bail(msg: String) = {
-      config.cache.stats.recordBail()
-      Left((fp, msg))
-    }
+    def bail(code: String, msg: String) = Left((fp, code, msg))
 
     // subqueries anywhere in the cached subtree's expressions make the
     // entry unsound: a PlanExpression's deterministic flag ignores the
@@ -237,7 +290,7 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
     // the aggregate are spliced back on top and re-run, so subqueries
     // there remain fine)
     if (hasSubquery(agg.aggregateExpressions) || hasSubquery(agg.groupingExpressions))
-      return bail("subquery inside aggregate — not cacheable")
+      return bail("subquery", "subquery inside aggregate — not cacheable")
 
     // temporal group-bys: at most one (reference src/aggregate.rs:97-104).
     // Optimizer-stage plans hide the bucket behind a pulled-out
@@ -246,9 +299,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       TemporalGroupBy.resolveThroughChild(_, agg.child))
     val temporalGroups = TemporalGroupBy.findAll(effectiveGroupExprs, config)
     if (temporalGroups.size > 1)
-      return bail(s"multiple temporal group-bys: ${temporalGroups.map(_.name).mkString(", ")}")
+      return bail("temporal-groups", "multiple temporal group-bys: " +
+        temporalGroups.map(_.name).mkString(", "))
     if (!agg.groupingExpressions.forall(_.deterministic))
-      return bail("non-deterministic group expression")
+      return bail("nondeterministic", "non-deterministic group expression")
 
     val needles: Set[String] = temporalGroups.headOption
       .map(a => Set(a.name.toLowerCase))
@@ -262,7 +316,8 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
     // reject joins outright — appending fact rows says nothing about
     // dimension-side changes (the reference wraps joins blindly,
     // src/aggregate.rs:130-135).
-    var shapeErr: Option[String] = None
+    var shapeErr: Option[(String, String)] = None
+    def shape(code: String, msg: String): Unit = shapeErr = Some((code, msg))
     var dynamicBound: Option[Expression] = None
     var staticOutputs = AttributeSet.empty
     val staticUnionBranches = ArrayBuffer.empty[LogicalPlan]
@@ -270,25 +325,25 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       case Filter(cond, child) =>
         Stability.find(cond, needles) match {
           case Stability.Abandon =>
-            shapeErr = Some(s"filter expression is not stable: ${cond.sql}")
+            shape("unstable-filter", s"filter expression is not stable: ${cond.sql}")
           case Stability.Found(b) =>
             if (config.dynamicBoundBucketGranularity && temporalGroups.nonEmpty &&
                 dynamicBound.isEmpty)
               { dynamicBound = Some(b); walk(child) }
             else if (config.dynamicBoundBucketGranularity && temporalGroups.isEmpty)
-              shapeErr = Some("dynamic lower bound requires a temporal group-by bucket")
+              shape("dynamic-bound", "dynamic lower bound requires a temporal group-by bucket")
             else
-              shapeErr = Some(s"dynamic lower bound not yet supported: ${b.sql}" +
+              shape("dynamic-bound", s"dynamic lower bound not yet supported: ${b.sql}" +
                 " (enable dynamicBoundBucketGranularity)")
           case Stability.FoundNow =>
-            shapeErr = Some(s"now() inside filter not yet supported: ${cond.sql}")
+            shape("now-filter", s"now() inside filter not yet supported: ${cond.sql}")
           case Stability.Stable => walk(child)
         }
       case Project(exprs, child) =>
         if (!exprs.forall(_.deterministic))
-          shapeErr = Some("non-deterministic projection under aggregate")
+          shape("nondeterministic", "non-deterministic projection under aggregate")
         else if (hasSubquery(exprs))
-          shapeErr = Some("subquery in projection under aggregate — not cacheable")
+          shape("subquery", "subquery in projection under aggregate — not cacheable")
         else walk(child)
       case SubqueryAlias(_, child) => walk(child)
       case v: View => walk(v.child)
@@ -300,21 +355,21 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       // like any other group.
       case e: Expand =>
         if (!e.projections.forall(_.forall(_.deterministic)))
-          shapeErr = Some("non-deterministic expand projection")
+          shape("nondeterministic", "non-deterministic expand projection")
         else walk(e.child)
       case j: Join =>
         if (config.staticDimensionTables.isEmpty)
-          shapeErr = Some("join under aggregate — not cacheable (declare " +
+          shape("join", "join under aggregate — not cacheable (declare " +
             "staticDimensionTables to cache aggregates over static-dimension joins)")
         else if (!j.condition.forall(_.deterministic) || hasSubquery(j.condition.toSeq))
-          shapeErr = Some("non-deterministic or subquery join condition — not cacheable")
+          shape("join", "non-deterministic or subquery join condition — not cacheable")
         // Catalyst marks now()/current_date deterministic (frozen per
         // query) but per RUN they vary: a now()-dependent join condition
         // would make cached state run-time-dependent while fingerprinting
         // identically — the same hazard Stability.FoundNow bails on for
         // filters
         else if (j.condition.exists(graft.analysis.NowBounds.containsNow))
-          shapeErr = Some("now() inside join condition — not cacheable")
+          shape("join", "now() inside join condition — not cacheable")
         else {
           val leftStatic = isStaticSide(j.left)
           val rightStatic = isStaticSide(j.right)
@@ -337,17 +392,17 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
             walk(fact)
           }
           if (leftStatic && rightStatic)
-            shapeErr = Some("every join side is a declared-static table — " +
+            shape("join", "every join side is a declared-static table — " +
               "nothing to watermark (cache is for append-mostly fact inputs)")
           else if (!leftStatic && !rightStatic)
-            shapeErr = Some("join side reads tables not declared static — not cacheable")
+            shape("join", "join side reads tables not declared static — not cacheable")
           else (j.joinType, leftStatic) match {
             case (Inner, true) => accept(j.left, j.right)
             case (Inner, false) => accept(j.right, j.left)
             case (LeftOuter | LeftSemi | LeftAnti, false) => accept(j.right, j.left)
             case (RightOuter, true) => accept(j.left, j.right)
             case (jt, _) =>
-              shapeErr = Some(s"${jt.sql} join with the static table on the " +
+              shape("join", s"${jt.sql} join with the static table on the " +
                 "outer side not supported — inner only there (an appended fact " +
                 "row could retract a previously emitted null-extended dim row)")
           }
@@ -366,17 +421,17 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       //    would be double-counted.
       case u: Union =>
         if (config.staticDimensionTables.isEmpty)
-          shapeErr = Some("union under aggregate — not cacheable (declare " +
+          shape("union", "union under aggregate — not cacheable (declare " +
             "staticDimensionTables to cache aggregates over static-branch unions)")
         else if (u.byName)
-          shapeErr = Some("by-name union not resolved positionally — not cacheable")
+          shape("union", "by-name union not resolved positionally — not cacheable")
         else {
           val (staticCh, factCh) = u.children.partition(isStaticSide)
           if (factCh.isEmpty)
-            shapeErr = Some("every union branch is a declared-static table — " +
+            shape("union", "every union branch is a declared-static table — " +
               "nothing to watermark (cache is for append-mostly fact inputs)")
           else if (factCh.size > 1)
-            shapeErr = Some("more than one union branch reads non-declared-static " +
+            shape("union", "more than one union branch reads non-declared-static " +
               "tables — the watermark can only bound a single appending input")
           else {
             // NOTE: union outputs are NOT added to staticOutputs — a
@@ -390,10 +445,10 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
         }
       case leaf if Shims.isScanLeaf(leaf) => ()
       case other =>
-        shapeErr = Some(s"input ${other.nodeName} beyond scan/filter/project — not cacheable")
+        shape("input-shape", s"input ${other.nodeName} beyond scan/filter/project — not cacheable")
     }
     walk(agg.child)
-    shapeErr.foreach(e => return bail(e))
+    shapeErr.foreach { case (code, e) => return bail(code, e) }
 
     // temporal column: the group-by one, else the configured default in
     // the aggregate input — re-exposed through pruned projections when
@@ -415,15 +470,17 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
     } match {
       case Some(a) => a
       case None =>
-        return bail(s"temporal column ${config.defaultTemporalColumn} not found in input")
+        return bail("temporal-column",
+          s"temporal column ${config.defaultTemporalColumn} not found in input")
     }
     if (temporalAttr.dataType != TimestampType)
-      return bail(s"temporal column ${temporalAttr.name} is ${temporalAttr.dataType.simpleString}, not timestamp")
+      return bail("temporal-column", s"temporal column ${temporalAttr.name} " +
+        s"is ${temporalAttr.dataType.simpleString}, not timestamp")
     // static-join mode: the watermark must bound the FACT side — a
     // temporal column sourced from a declared-static dimension would
     // filter the unchanged dim instead of the appended rows
     if (staticOutputs.contains(temporalAttr))
-      return bail(s"temporal column ${temporalAttr.name} comes from a " +
+      return bail("temporal-column", s"temporal column ${temporalAttr.name} comes from a " +
         "declared-static dimension side — the watermark must bound the fact side")
     // a group-by bucket's underlying column can be pruned from the
     // aggregate input (it only feeds the pulled-out bucket projection) —
@@ -432,7 +489,8 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       widen(child, temporalAttr) match {
         case Some(w) => child = w
         case None =>
-          return bail(s"temporal column ${temporalAttr.name} not exposable through input chain")
+          return bail("temporal-column", s"temporal column " +
+            s"${temporalAttr.name} not exposable through input chain")
       }
 
     // grouping sets: the watermark filter sits ABOVE Expand, so the
@@ -448,7 +506,8 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       }
     }
     if (temporalNulledByExpand)
-      return bail(s"temporal column ${temporalAttr.name} is a grouping-set slot (nulled per set) — not cacheable")
+      return bail("temporal-column", s"temporal column ${temporalAttr.name} " +
+        "is a grouping-set slot (nulled per set) — not cacheable")
 
     // aggregate whitelist (SURVEY §7.1A; the reference instead inherits
     // DataFusion's generic partial state, README.md:34)
@@ -458,11 +517,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
       Decompose.decompose(i, ae, config.percentileSketchState) match {
         case Some(d) => decomps += d
         case None =>
-          return bail(s"aggregate not incrementally mergeable: ${ae.sql}")
+          return bail("not-mergeable", s"aggregate not incrementally mergeable: ${ae.sql}")
       }
     }
     if (!agg.aggregateExpressions.forall(_.deterministic))
-      return bail("non-deterministic output expression")
+      return bail("nondeterministic", "non-deterministic output expression")
 
     val temporalGroupIdx = temporalGroups.headOption.map { a =>
       effectiveGroupExprs.indexWhere(_.references.toSeq == Seq(a))
@@ -512,6 +571,11 @@ final class IncrementalAggExecutor(val config: QueryCacheConfig)
 }
 
 object IncrementalAggExecutor {
+  /** A state that answered (part of) a rewrite: a hit or a miss, its
+    * Decision reason and probe path. */
+  private[exec] final case class Served(hit: Boolean, reason: String,
+      path: Seq[String] = Nil)
+
   /** Everything decided statically before touching the cache.
     * `dynamicBound` is a `ts >(=) f(now())` predicate to strip from the
     * scan and re-apply at bucket granularity over the merged state. */
@@ -537,7 +601,7 @@ object IncrementalAggExecutor {
   /** One way to answer a plan, with the words its failure logs: `failed`,
     * or `tooLarge` when the cache refused the state as too large. */
   private final case class Rewrite(failed: String, run: () => Option[LogicalPlan],
-      tooLarge: Option[String] = None)
+      tooLarge: Option[String] = None, factorized: Boolean = false)
 
   /** (twin measure columns, re-aggregation over them) for a measure that
     * re-aggregates exactly from its per-bucket finalizes — shared by the

@@ -157,7 +157,8 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
     // chain itself). Recursive to depth 2: a doubly-narrowed slice
     // answers from the doubly-wider view. Same lattice idea as the
     // aggregate path's refilterTwins, at row grain.
-    val entry0 = rowViewLookup(chain, fp, exactFp = Some(fp))
+    val looked = rowViewLookup(chain, fp, exactFp = Some(fp))
+    val entry0 = looked.map(_._1)
     // late re-scan band at ROW grain: when the temporal column survives
     // the projection, lower the effective watermark to wm − band, drop
     // state rows at/after it and let the delta re-read them — no bucket
@@ -170,7 +171,7 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
         chain.output.find(_.semanticEquals(tAttr)) match {
           case Some(outT) =>
             val floor = cs.timestampMicros - band
-            config.log.info(fp, s"late re-scan band (rows): effective " +
+            info(fp, s"late re-scan band (rows): effective " +
               s"watermark ${cs.timestampMicros} -> $floor")
             (Some(cs.mapRows(_.filter(col(outT.name) <
               Shims.column(org.apache.spark.sql.catalyst.expressions
@@ -178,7 +179,7 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
               timestampMicros = floor)),
               Some((outT.name, floor)))
           case None =>
-            config.log.warn(fp, "lateRescanBand declared but the row " +
+            warn(fp, "lateRescanBand declared but the row " +
               "state's projection pruned the temporal column — band " +
               "skipped, normal watermark used")
             (entry0, None)
@@ -206,14 +207,14 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
           if (ranges.isEmpty) entry // all at/after the (banded) watermark
           else chain.output.find(_.semanticEquals(tAttr)) match {
             case Some(outT) =>
-              config.log.info(fp, s"repairing ${ranges.size} declared " +
+              info(fp, s"repairing ${ranges.size} declared " +
                 "rewrite range(s) at row grain: " +
                 ranges.map(r => s"[${r._1}, ${r._2})").mkString(", "))
               repairRanges = ranges
               Some(cs.mapRows(_.filter(outsideRanges(col(outT.name), ranges,
                 tDt))))
             case None =>
-              config.log.warn(fp, "repair ranges pending but the row " +
+              warn(fp, "repair ranges pending but the row " +
                 "state's projection pruned the temporal column — " +
                 "rebuilding the view from scratch")
               None
@@ -226,7 +227,8 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
     // never rescans the source beyond the one delta write.
     val stored = entryR match {
       case Some(cs) =>
-        config.log.info(fp, s"cache hit (rows): replaying materialized " +
+        served(Served(hit = true, "rows", looked.fold(Seq.empty[String])(_._2)))
+        info(fp, s"cache hit (rows): replaying materialized " +
           s"rows, delta scan from ${cs.timestampMicros}")
         val delta0 = Shims.ofRows(spark,
           boundedAtLeaf(Some(cs.timestampMicros), repairRanges))
@@ -239,7 +241,7 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
               if repairRanges.isEmpty && SharedDelta.cycleActive =>
             SharedDelta.substituteAtLeaf(spark, delta0, lrel, tAttr,
               cs.timestampMicros, config.temporalPartitionColumn,
-              config.log, fp)
+              fp)
           case _ => delta0
         }
         // a banded hit REPLACES the band's rows, so the stored chain
@@ -279,13 +281,13 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
             .sum
           catch { case _: Exception => BigInt(0) }
         if (estBytes > config.maxRowStateBytes) {
-          config.log.warn(fp, s"row-state admission declined: source " +
+          warn(fp, s"row-state admission declined: source " +
             s"$estBytes bytes > maxRowStateBytes=${config.maxRowStateBytes}" +
             " — running vanilla (narrow the filter or raise the budget)")
           return None
         }
-        config.log.info(fp,
-          "cache miss (rows): materializing filter-query rows")
+        served(Served(hit = false, "rows"))
+        info(fp, "cache miss (rows): materializing filter-query rows")
         commit(spark, fp, now, chain, pendingRep, None, None, None,
           Shims.ofRows(spark, boundedAtLeaf(None)))
     }
@@ -312,9 +314,11 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
     * the unfiltered full-width view. Shared by the filter-query rewrite
     * (its delta scan runs the narrow chain itself) and the MV→aggregate
     * cold start (a cold aggregate over a narrower chain skips the history
-    * scan through the wider warm view re-shaped). */
+    * scan through the wider warm view re-shaped). Returns the state and
+    * the probe steps that reached it. */
   private[exec] def rowViewLookup(chain: LogicalPlan, logFp: String,
-      exactFp: Option[String] = None): Option[graft.cache.CachedState] = {
+      exactFp: Option[String] = None)
+      : Option[(graft.cache.CachedState, List[String])] = {
     def rowSchema(p: LogicalPlan) = StructType(p.output.map(
       a => org.apache.spark.sql.types.StructField(
         a.name, a.dataType, a.nullable)))
@@ -323,14 +327,15 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
     // stripping conjuncts a then b reaches the twin b then a does
     val memo = scala.collection.mutable.HashMap
       .empty[String, Option[graft.cache.CachedState]]
-    def probeTwin(twin: LogicalPlan, depth: Int)
-        : Option[graft.cache.CachedState] = {
+    type Found = Option[(graft.cache.CachedState, List[String])]
+    def probeTwin(twin: LogicalPlan, depth: Int): Found = {
       val fp2 = fingerprint(twin) + ":rows" + fpSuffix
       memo.getOrElseUpdate(fp2, twinState(fp2))
         .filter(cs => schemaCompatible(cs.schema, rowSchema(twin)))
+        .map((_, List.empty[String]))
         .orElse(rowProbe(twin, depth + 1))
     }
-    def rowProbe(p: LogicalPlan, depth: Int): Option[graft.cache.CachedState] = {
+    def rowProbe(p: LogicalPlan, depth: Int): Found = {
       if (depth > 2 || !uniqueNames(p)) return None
       val conjs = ArrayBuffer.empty[Expression]
       p.foreach {
@@ -341,19 +346,20 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
         .to(LazyList)
         .flatMap { cj =>
           val twin = stripConjunct(p, cj)
-          probeTwin(twin, depth).map { cs =>
-            config.log.info(logFp, s"refilter (rows) hit: replaying " +
+          probeTwin(twin, depth).map { case (cs, path) =>
+            info(logFp, s"refilter (rows) hit: replaying " +
               s"wider twin re-filtered by ${cj.sql}")
-            cs.mapRows(_.filter(Shims.column(byName(cj))))
+            (cs.mapRows(_.filter(Shims.column(byName(cj)))), "refilter" :: path)
           }
         }.headOption
       refilter.orElse(p match {
         case Project(es, rest) if uniqueNames(rest) =>
-          probeTwin(rest, depth).map { cs =>
-            config.log.info(logFp, "reproject (rows) hit: replaying the " +
+          probeTwin(rest, depth).map { case (cs, path) =>
+            info(logFp, "reproject (rows) hit: replaying the " +
               "full-width twin re-projected to the slice")
             val cols = es.map(ne => Shims.column(byName(unalias(ne))).as(ne.name))
-            cs.mapRows(_.select(cols: _*), schema = rowSchema(p))
+            (cs.mapRows(_.select(cols: _*), schema = rowSchema(p)),
+              "reproject" :: path)
           }
         case _ => None
       })
@@ -370,10 +376,11 @@ private[exec] trait RowViews { this: IncrementalAggExecutor =>
      else twinState(chainFp))
       .filter { cs =>
         val compat = schemaCompatible(cs.schema, rowSchema(chain))
-        if (!compat) config.log.warn(logFp,
+        if (!compat) warn(logFp,
           "cached row-state schema mismatch — treating as miss")
         compat
       }
+      .map((_, List.empty[String]))
       .orElse(rowProbe(chain, 1))
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.to_date
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.storage.StorageLevel
 
-import graft.log.CacheLog
+import graft.log.{CacheEvent, LogLevel}
 
 /** Shared append-delta scan for dashboard-style refresh batches.
   *
@@ -59,6 +59,9 @@ import graft.log.CacheLog
   * volume, which the S1 contract already treats as exceptional.
   */
 object SharedDelta {
+
+  private def info(fp: String, msg: String): Unit =
+    CacheEvent.report(CacheEvent.Note(LogLevel.Info, fp, msg))
 
   private final case class Entry(wmMicros: Long, df: DataFrame)
 
@@ -130,11 +133,10 @@ object SharedDelta {
   private def keyOf(lr: LogicalRelation, tsName: String): String =
     Shims.sourcePaths(lr).sorted.mkString(";") + "#" + tsName
 
-  /** FILE bytes the append scan would list — directory-pruned by the
-    * declared partition column when present (pc >= date(wm), the same
-    * derived conjunct the registered scan carries), else the whole
-    * table (an overestimate that errs toward sharing, preserving the
-    * old behavior for unpartitioned layouts). Driver-side listing from
+  /** FILE bytes the append scan would list, which size its splits —
+    * directory-pruned by the declared partition column when present
+    * (pc >= date(wm), the same derived conjunct the registered scan
+    * carries), else the whole table. Driver-side listing from
     * the relation's (cached) FileIndex, no Spark job. -1 = unknown. */
   private def prunedAppendBytes(lr: LogicalRelation, wmMicros: Long,
       pcAttr: Option[Attribute]): Long =
@@ -161,15 +163,14 @@ object SharedDelta {
     * band/repair re-reads (they need rows below the watermark). */
   def substituteAppendScan(spark: SparkSession, deltaDF: DataFrame,
       temporalAttr: Attribute, wmMicros: Long,
-      temporalPartitionColumn: Option[String],
-      log: CacheLog, fingerprint: String,
+      temporalPartitionColumn: Option[String], fingerprint: String,
       rootNeeded: Option[Seq[Attribute]] = None): DataFrame = {
     if (active.get() == null) return deltaDF
     val plan = Shims.queryExecution(deltaDF).analyzed
     val traced = trace(plan, temporalAttr).getOrElse(return deltaDF)
     val (lr, leafTs) = traced
     substituteAtLeaf(spark, deltaDF, lr, leafTs, wmMicros,
-      temporalPartitionColumn, log, fingerprint, rootNeeded)
+      temporalPartitionColumn, fingerprint, rootNeeded)
   }
 
   /** Leaf-level core of the substitution: the caller already knows the
@@ -178,8 +179,7 @@ object SharedDelta {
     * [[substituteAppendScan]]. */
   def substituteAtLeaf(spark: SparkSession, deltaDF: DataFrame,
       lr: LogicalRelation, leafTs: Attribute, wmMicros: Long,
-      temporalPartitionColumn: Option[String],
-      log: CacheLog, fingerprint: String,
+      temporalPartitionColumn: Option[String], fingerprint: String,
       rootNeeded: Option[Seq[Attribute]] = None): DataFrame = {
     val cycle = active.get()
     if (cycle == null) return deltaDF
@@ -209,49 +209,29 @@ object SharedDelta {
       lr.output.filter(a => refSet.contains(a) || a.exprId == leafTs.exprId ||
         pcAttr.exists(_.exprId == a.exprId))
     }
-    if (sys.env.contains("SPARK_GRAFT_SHARED_DEBUG"))
-      System.err.println(s"[shdebug] fp=$fingerprint lr.output=${lr.output} " +
-        s"needed=$needed rootNeeded=${rootNeeded.map(_.toList)}")
     val entry = cycle.entries.get(key) match {
       case Some(e) if e.wmMicros <= wmMicros => e
       case Some(_) =>
         // a lagging view (smaller watermark than the registered scan):
         // its delta is NOT a subset of the shared one — scan directly
-        log.info(fingerprint, "shared delta: entry watermark above this " +
+        info(fingerprint, "shared delta: entry watermark above this " +
           "run's — bypassing shared scan")
         return deltaDF
       case None =>
-        // BREAK-EVEN GATE (r13 verdict: sharing was a net loss at bench
-        // scale — the registration paid a keyless repartition, i.e. a
-        // local sort + full shuffle of the delta, plus the columnar cache
-        // encode, while each SAVED private scan of a small append costs
-        // milliseconds). Two changes, measured with SharedProfile:
-        //  1. an ops-tunable floor (SPARK_GRAFT_SHARED_MIN_BYTES, file
-        //     bytes of the directory-pruned append, driver-side listing,
-        //     no job): appends below it keep private scans — per-view
-        //     fixed costs dominate there and registration can only lose.
-        //     Default 0 (always share): withCycle is an explicit opt-in
-        //     whose engagement declared queries assert, so the DEFAULT
-        //     must not silently bypass them on small fixtures.
-        //  2. the parallelism floor no longer shuffles: the delta is
-        //     planned under an ISOLATED-conf session whose
-        //     maxPartitionBytes targets ~defaultParallelism splits, so
-        //     the cache builds parallel straight from the scan (zero
-        //     exchanges — also retires the r13-ADVICE toRdd-under-AQE
-        //     side-effect concern), and it is materialized HERE, once
-        //     per cycle, instead of riding the first consumer.
-        // At 100 TB both gates are no-ops: a real append is far above
-        // the threshold and already plans more splits than parallelism.
+        // PARALLELISM FLOOR without a shuffle (r13 verdict: sharing was
+        // a net loss at bench scale — the registration paid a keyless
+        // repartition, i.e. a local sort + full shuffle of the delta,
+        // plus the columnar cache encode, while each SAVED private scan
+        // of a small append costs milliseconds): the delta is planned
+        // under an ISOLATED-conf session whose maxPartitionBytes targets
+        // ~defaultParallelism splits of the directory-pruned append, so
+        // the cache builds parallel straight from the scan (zero
+        // exchanges — also retires the r13-ADVICE toRdd-under-AQE
+        // side-effect concern), and it is materialized HERE, once per
+        // cycle, instead of riding the first consumer. At 100 TB this is
+        // a no-op: a real append already plans more splits than
+        // parallelism.
         val deltaBytes = prunedAppendBytes(lr, wmMicros, pcAttr)
-        val minShare = sys.env.get("SPARK_GRAFT_SHARED_MIN_BYTES")
-          .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .getOrElse(0L)
-        if (deltaBytes >= 0 && deltaBytes < minShare) {
-          log.info(fingerprint, s"shared delta: append ($deltaBytes " +
-            s"file bytes) below share threshold ($minShare) — keeping " +
-            "private scans")
-          return deltaDF
-        }
         val raw = Shims.ofRows(spark, lr)
         val wm = graft.plans.RunBound.timestamp(wmMicros)
         val bound = Shims.column(leafTs) >= wm
@@ -295,12 +275,12 @@ object SharedDelta {
             catch { case _: Exception => () }
             if (winner.wmMicros <= wmMicros) winner
             else {
-              log.info(fingerprint, "shared delta: entry watermark above " +
+              info(fingerprint, "shared delta: entry watermark above " +
                 "this run's — bypassing shared scan")
               return deltaDF
             }
           case None =>
-            log.info(fingerprint,
+            info(fingerprint,
               s"shared delta: registered scan for $key at wm=$wmMicros " +
                 s"(${needed.size} columns)")
             e
@@ -323,7 +303,7 @@ object SharedDelta {
     }
     mapped match {
       case None =>
-        log.info(fingerprint, "shared delta: registered scan lacks a " +
+        info(fingerprint, "shared delta: registered scan lacks a " +
           "needed column — bypassing shared scan")
         deltaDF
       case Some(aliases) =>
@@ -338,11 +318,11 @@ object SharedDelta {
             Project(aliases, dplan)
         }
         if (replaced == 0) {
-          log.info(fingerprint, "shared delta: fact leaf not found in " +
+          info(fingerprint, "shared delta: fact leaf not found in " +
             "the delta plan — bypassing shared scan")
           deltaDF
         } else {
-          log.info(fingerprint,
+          info(fingerprint,
             s"shared delta scan: append read served from the cycle's " +
               s"persisted delta (wm=${entry.wmMicros})")
           Shims.ofRows(spark, spliced)

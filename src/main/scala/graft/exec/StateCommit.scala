@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.StructType
 
+import graft.log.CacheEvent
 import graft.plans.RunBound
 import graft.rewrite.Decompose
 
@@ -46,7 +47,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     // analysis-only: the state schema this plan produces (validates cached
     // state; mirrors CachedAggregateExec taking the partial plan's schema,
     // src/aggregate.rs:616-623)
-    val stateSchema = phase("stateSchema")(IncrementalAggExecutor.memoGet(
+    val stateSchema = phase(c.fingerprint, "stateSchema")(IncrementalAggExecutor.memoGet(
       c.fingerprint, partialState(childDF0.limit(0)).schema))
     lazy val mergeCols = stateSpecs.map(s => Decompose.mergeColumn(s, stateSchema))
     lazy val stateKeys = groupCols.indices.map(j => col(s"_g$j"))
@@ -62,12 +63,12 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
           .filterOrElse(m => schemaCompatible(m.schema, stateSchema),
             "its rows do not match the state schema")) match {
         case Left(why) =>
-          config.log.info(c.fingerprint, s"driver merge unavailable: $why")
+          info(c.fingerprint, s"driver merge unavailable: $why")
           None
         case Right(m) => Some((merged, rows) =>
           try Some(m(merged, rows.iterator)) catch {
             case scala.util.control.NonFatal(e) =>
-              config.log.warn(c.fingerprint, s"driver merge failed " +
+              warn(c.fingerprint, s"driver merge failed " +
                 s"($e); refreshing through the chain")
               None
           })
@@ -75,7 +76,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
 
     val direct = config.cache.get(c.fingerprint) match {
       case Some(cs) if !schemaCompatible(cs.schema, stateSchema) =>
-        config.log.warn(c.fingerprint,
+        warn(c.fingerprint,
           "cached state schema mismatch — treating as miss")
         None
       case other => other
@@ -83,7 +84,9 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     // SUBSUMPTION: on an exact-fingerprint miss, a warm twin's state
     // adapted to this query (see subsume); the put then stores it under
     // THIS fingerprint, so the next run hits directly
-    val entry = direct.orElse(subsume(c, stateSchema))
+    val probed = if (direct.isDefined) None else subsume(c, stateSchema)
+    val entry = direct.orElse(probed.map(_._1))
+    val probePath = probed.fold(Seq.empty[String])(_._2)
 
     // ---- late re-scan band (closes S1's late-data miss within a declared
     // tolerance; see QueryCacheConfig.lateRescanBandMicros): lower the
@@ -143,12 +146,12 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
           }
         bandedOpt match {
           case Some(cs2) =>
-            config.log.info(c.fingerprint,
+            info(c.fingerprint,
               s"late re-scan band: effective watermark ${cs.timestampMicros} " +
                 s"-> ${cs2.timestampMicros} (band state dropped and re-scanned)")
             Some(cs2)
           case None =>
-            config.log.warn(c.fingerprint,
+            warn(c.fingerprint,
               "lateRescanBand declared but the query shape supports no " +
                 "band floor (needs a date_trunc/tumbling bucket, a " +
                 "session window, or grouping sets containing the full " +
@@ -195,7 +198,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
           else repairSpans(c, ranges, effWm) match {
             case Some((keyPath, spans0)) =>
               val spans = IncrementalAggExecutor.mergeRanges(spans0)
-              config.log.info(c.fingerprint, s"repairing ${spans.size} " +
+              info(c.fingerprint, s"repairing ${spans.size} " +
                 s"declared rewrite range(s) at bucket grain: dropping " +
                 s"state buckets + re-scanning " +
                 spans.map(s => s"[${s._1}, ${s._2})").mkString(", "))
@@ -204,7 +207,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
                 c.temporalAttr.dataType))))
             case None => expandRepair(c, cs, ranges, effWm) match {
               case Some((spans, st)) =>
-                config.log.info(c.fingerprint, s"repairing ${spans.size} " +
+                info(c.fingerprint, s"repairing ${spans.size} " +
                   s"declared rewrite range(s) through the grouping-set " +
                   s"full grain: dropping its covering buckets, " +
                   s"re-expanding kept state, re-scanning " +
@@ -214,7 +217,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
               case None => sessionGroupIdx(c.agg).flatMap(
                   sessionRepair(spark, c, cs, ranges, effWm, _)) match {
                 case Some((windows, st)) =>
-                  config.log.info(c.fingerprint,
+                  info(c.fingerprint,
                     s"repairing ${windows.size} declared rewrite " +
                       s"range(s) at session grain: dropping state " +
                       s"sessions inside cut window(s) " +
@@ -223,7 +226,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
                   repairScanRanges = windows
                   Some(st)
                 case None =>
-                  config.log.warn(c.fingerprint, "repair ranges pending " +
+                  warn(c.fingerprint, "repair ranges pending " +
                     "but the query shape has no droppable bucket key " +
                     "(needs a date_trunc or tumbling-window group, " +
                     "grouping sets with a full grain, or a static-gap " +
@@ -246,8 +249,9 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     // chain segments would resurrect them.
     val (merged, deltaPartials) = afterRepair match {
       case Some(cs) =>
-        config.cache.stats.recordHit()
-        config.log.info(c.fingerprint, s"cache hit, watermark=${cs.timestampMicros}")
+        served(Served(hit = true, if (direct.isDefined) "direct" else "probe",
+          probePath))
+        info(c.fingerprint, s"cache hit, watermark=${cs.timestampMicros}")
         // static union branches were captured IN FULL by the cold state
         // when no strict upper bound trimmed them — replace them with
         // empty relations in the delta scan (same output attributes, so
@@ -278,7 +282,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
           if (!SharedDelta.cycleActive || repairActive) deltaDF
           else SharedDelta.substituteAppendScan(spark, deltaDF,
             c.temporalAttr, cs.timestampMicros,
-            config.temporalPartitionColumn, config.log, c.fingerprint,
+            config.temporalPartitionColumn, c.fingerprint,
             // the consumed root columns: only what the grouping and
             // state expressions read (the analyzed child outputs the
             // full leaf width — registering at that width would read
@@ -384,8 +388,8 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
           else if (bandActive && bandRefreshKey.isEmpty) None
           else Some(partialState(newData)))
       case None =>
-        config.cache.stats.recordMiss()
-        config.log.info(c.fingerprint, "cache miss")
+        served(Served(hit = false, "cold"))
+        info(c.fingerprint, "cache miss")
         // MV → AGGREGATE subsumption: a COLD aggregate whose input chain
         // was materialized as a row view (the filter-query cache) builds
         // its first state from (view replay ∪ the view's own delta)
@@ -407,12 +411,12 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
             // conjunct absent from the warm view still cold-starts from
             // the wider view re-filtered — row-grain identity holds for
             // the re-filtered replay exactly as for the exact view
-            rowViewLookup(c.child, c.fingerprint).filter { rcs =>
+            rowViewLookup(c.child, c.fingerprint).map(_._1).filter { rcs =>
               rcs.schema.length == c.child.output.length &&
                 rcs.schema.fields.zip(c.child.output).forall { case (f, a) =>
                   f.name == a.name && f.dataType == a.dataType }
             }.map { rcs =>
-              config.log.info(c.fingerprint, "cold state from materialized " +
+              info(c.fingerprint, "cold state from materialized " +
                 s"row view (view wm=${rcs.timestampMicros}) — history " +
                 "scan skipped")
               val readPlan = Shims.queryExecution(rcs.read(spark)).analyzed
@@ -466,7 +470,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     // measure-index row recorded BEFORE the put so a durable cache can
     // persist it in the same meta commit (ParquetQueryCache reads the
     // recorded row inside put)
-    phase("put.recordMeasures") {
+    phase(c.fingerprint, "put.recordMeasures") {
       val (base, rows) = measureRows(c)
       config.cache.recordMeasures(c.fingerprint, base, rows)
     }
@@ -538,28 +542,29 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
       compactIfDeltaFraction: Option[Double] = None,
       merge: graft.cache.StateMerge = graft.cache.StateMerge.identity)
       : DataFrame = {
-    def rebound(s: SparkSession, df: => DataFrame) = phase("put.rebind") {
+    def inCache[A](f: => A): A = CacheEvent.inLayer(spark.sparkContext, "cache")(f)
+    def rebound(s: SparkSession, df: => DataFrame) = phase(fp, "put.rebind") {
       val d = df
       if (s eq spark) d else Shims.ofRows(s, Shims.queryExecution(d).analyzed)
     }
     val chained = for {
       b <- base
       d <- delta
-      stored <- phase("cache.putAppend")(
+      stored <- phase(fp, "cache.putAppend")(
         Shims.withIsolatedConf(spark, confs: _*) { s =>
           val segment = rebound(s, d)
           band match {
-            case Some((key, floor)) => config.cache.refreshBand(fp, now, b,
-              key, floor, segment, merge.frame)
-            case None => config.cache.putAppend(fp, now, b, segment,
-              compactIfDeltaFraction, merge)
+            case Some((key, floor)) => inCache(config.cache.refreshBand(fp,
+              now, b, key, floor, segment, merge.frame))
+            case None => inCache(config.cache.putAppend(fp, now, b, segment,
+              compactIfDeltaFraction, merge))
           }
         })
     } yield stored
-    val stored = chained.getOrElse(phase("cache.put")(
+    val stored = chained.getOrElse(phase(fp, "cache.put")(
       Shims.withIsolatedConf(spark, confs: _*) { s =>
         val state = rebound(s, full)
-        phase("put.store")(config.cache.put(fp, now, state))
+        phase(fp, "put.store")(inCache(config.cache.put(fp, now, state)))
       }))
     if (consumed.nonEmpty) config.cache.clearRepairs(fp, consumed.map(_.token))
     config.cache.recordSourcePaths(fp, Shims.sourcePaths(sources))
@@ -595,7 +600,7 @@ private[exec] trait StateCommit { this: IncrementalAggExecutor =>
     * exprIds so parents (HAVING/ORDER BY/projections) resolve unchanged */
   private[exec] def splice(analyzed: LogicalPlan, target: LogicalPlan,
       answer: DataFrame, wrap: LogicalPlan => LogicalPlan): LogicalPlan = {
-    val answerPlan = phase("splice-analyze")(Shims.queryExecution(answer).analyzed)
+    val answerPlan = Shims.queryExecution(answer).analyzed
     val replacement = wrap(Project(
       answerPlan.output.zip(target.output).map { case (na, oo) =>
         Alias(na, oo.name)(exprId = oo.exprId)

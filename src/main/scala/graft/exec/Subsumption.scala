@@ -80,8 +80,8 @@ private[exec] trait Subsumption { this: IncrementalAggExecutor =>
     * with pending repair ranges counts as absent ([[twinState]]); the
     * memo looks each twin fingerprint up once per query, however many
     * paths reach it. */
-  private[exec] def subsume(c0: Cacheable,
-      stateSchema: StructType): Option[graft.cache.CachedState] = {
+  private[exec] def subsume(c0: Cacheable, stateSchema: StructType)
+      : Option[(graft.cache.CachedState, List[String])] = {
     val memo = scala.collection.mutable.HashMap
       .empty[String, Option[graft.cache.CachedState]]
     def search(c: Cacheable, schema: StructType, row: String, depth: Int)
@@ -93,14 +93,14 @@ private[exec] trait Subsumption { this: IncrementalAggExecutor =>
             .filter(cs => t.fits(cs.schema)).map((_, List.empty[String]))
             .orElse(search(t.c, t.schema, p.name, depth + 1))
             .map { case (cs, path) =>
-              config.log.info(c0.fingerprint, t.hit)
+              info(c0.fingerprint, t.hit)
               (t.adapt(cs), p.name :: path)
             }
         }
       }.nextOption()
     search(c0, stateSchema, "top", 1).map { case (cs, path) =>
-      config.log.info(c0.fingerprint, s"probe path: ${path.mkString(" > ")}")
-      cs
+      info(c0.fingerprint, s"probe path: ${path.mkString(" > ")}")
+      (cs, path)
     }
   }
 
@@ -207,7 +207,7 @@ private[exec] trait Subsumption { this: IncrementalAggExecutor =>
       case _ => false
     }
     if (total != safe || safe == 0 || attrLeak) {
-      if (total != safe || attrLeak) config.log.info(c.fingerprint,
+      if (total != safe || attrLeak) info(c.fingerprint,
         s"regrain bail: grain literal used outside the temporal group key " +
           s"($total sites, $safe compensated)")
       return Iterator.empty
@@ -613,7 +613,7 @@ private[exec] trait Subsumption { this: IncrementalAggExecutor =>
     // past here the plan IS a sliding-window aggregate — log why a
     // probe declines so off-shape variants are diagnosable
     def bailHop(msg: String): Iterator[Twin] = {
-      config.log.info(c.fingerprint, s"rehop bail: $msg")
+      info(c.fingerprint, s"rehop bail: $msg")
       Iterator.empty
     }
     // a pure multiple-of-slide sliding window filters only isnotnull(ts);
@@ -848,7 +848,7 @@ private[exec] trait Subsumption { this: IncrementalAggExecutor =>
       case _ => return Iterator.empty
     }
     def bailRg(msg: String): Iterator[Twin] = {
-      config.log.info(c.fingerprint, s"regroup bail: $msg")
+      info(c.fingerprint, s"regroup bail: $msg")
       Iterator.empty
     }
     val slots = expandSlots(c, ex) match {

@@ -96,8 +96,9 @@ final class QueryCacheRule(spark: SparkSession) extends Rule[LogicalPlan] {
           exec.rewritePlan(spark, plan).getOrElse(plan)
         } catch {
           case e: Exception =>
-            exec.config.log.warn("-",
-              s"transparent rewrite failed, running vanilla: ${e.getMessage}")
+            exec.publish(spark, graft.log.CacheEvent.Note(
+              graft.log.LogLevel.Warn, "-",
+              s"transparent rewrite failed, running vanilla: ${e.getMessage}"))
             plan
         } finally inRewrite.set(false)
       case _ => plan

@@ -15,10 +15,10 @@ object LogLevel {
 
 trait CacheLog {
   def log(level: LogLevel, fingerprint: String, msg: String): Unit
-  final def info(fingerprint: String, msg: String): Unit =
-    log(LogLevel.Info, fingerprint, msg)
-  final def warn(fingerprint: String, msg: String): Unit =
-    log(LogLevel.Warn, fingerprint, msg)
+  /** Every [[CacheEvent]] the cache layer reports; by default its line,
+    * if it has one, goes to `log`. */
+  def event(e: CacheEvent): Unit =
+    e.line.foreach { case (level, msg) => log(level, e.fingerprint, msg) }
 }
 
 /** reference: src/log.rs:40-48 (LogNoOp) */
@@ -45,13 +45,19 @@ final class StderrLog extends CacheLog {
 }
 
 /** Captures decisions for assertions in tests (reference history() hook,
-  * src/log.rs:33-38). */
+  * src/log.rs:33-38): the lines, and the events they came from. */
 final class RecordingLog extends CacheLog {
   final case class Entry(level: LogLevel, fingerprint: String, msg: String)
   private val buf = ArrayBuffer.empty[Entry]
+  private val evs = ArrayBuffer.empty[CacheEvent]
   override def log(level: LogLevel, fingerprint: String, msg: String): Unit =
     synchronized { buf += Entry(level, fingerprint, msg) }
+  override def event(e: CacheEvent): Unit =
+    synchronized { evs += e; super.event(e) }
   def history: Seq[Entry] = synchronized(buf.toSeq)
   def messages: Seq[String] = history.map(_.msg)
-  def clear(): Unit = synchronized(buf.clear())
+  def events: Seq[CacheEvent] = synchronized(evs.toSeq)
+  def decisions: Seq[CacheEvent.Decision] =
+    events.collect { case d: CacheEvent.Decision => d }
+  def clear(): Unit = synchronized { buf.clear(); evs.clear() }
 }

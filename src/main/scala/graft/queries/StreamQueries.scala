@@ -40,30 +40,24 @@ object StreamQueries {
     * stream-stream join keeps 4 stores per partition, so a 32-partition
     * session pays 128 commits per batch to process a few-MB fixture —
     * measured 194 s of summed commit time per batch vs 1.7 s at 4
-    * partitions on identical data (r13 StreamProfile). Sizing:
+    * partitions on identical data (r13). Sizing:
     * ceil(bytes / 32 MB), clamped to [2, session shuffle partitions] —
     * a 100 TB source hits the session cap (the configured production
     * parallelism, unchanged), a dev fixture gets 2. The state-store
     * count is pinned into the checkpoint at first run, exactly like a
-    * production job sizes it per expected state volume.
-    * `SPARK_GRAFT_STREAM_SHUF` overrides for ops/experiments. */
+    * production job sizes it per expected state volume. */
   private def adaptivePartitions(spark: SparkSession, sfDir: String,
-      tables: String*): Int =
-    // validated override (r13 ADVICE): a malformed or non-positive value
-    // is ignored rather than thrown mid-scenario
-    sys.env.get("SPARK_GRAFT_STREAM_SHUF")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
-      .getOrElse {
-      val bytes = tables.map { t =>
-        try {
-          val p = new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .getContentSummary(p).getLength
-        } catch { case scala.util.control.NonFatal(_) => 0L }
-      }.sum
-      val cap = spark.sessionState.conf.numShufflePartitions
-      math.max(2L, math.min(cap.toLong, bytes / (32L << 20) + 1)).toInt
-    }
+      tables: String*): Int = {
+    val bytes = tables.map { t =>
+      try {
+        val p = new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getContentSummary(p).getLength
+      } catch { case scala.util.control.NonFatal(_) => 0L }
+    }.sum
+    val cap = spark.sessionState.conf.numShufflePartitions
+    math.max(2L, math.min(cap.toLong, bytes / (32L << 20) + 1)).toInt
+  }
 
   /** Isolated child session for a streaming scenario (own SQLConf,
     * shared context — the caller's session is never mutated) with

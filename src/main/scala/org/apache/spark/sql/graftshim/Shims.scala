@@ -452,6 +452,15 @@ object Shims {
   def pushDownPredicates(plan: LogicalPlan): LogicalPlan =
     org.apache.spark.sql.catalyst.optimizer.PushDownPredicates(plan)
 
+  /** `e` on the SparkContext's listener bus, where a `SparkListener`
+    * receives it as a [[CacheEventPosted]] in `onOtherEvent` */
+  def postEvent(spark: SparkSession, e: graft.log.CacheEvent): Unit =
+    spark.sparkContext.listenerBus.post(CacheEventPosted(e))
+
+  /** blocks until every event posted so far reached the listeners */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Is this plan node a scan leaf the cache rewrite may sit on top of?
     * (file relation, v2 relation, or in-memory rows for tests) */
   def isScanLeaf(p: LogicalPlan): Boolean = p match {
@@ -460,4 +469,10 @@ object Shims {
     case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
     case _ => false
   }
+}
+
+/** A cache event on the listener bus; never written to the event log. */
+final case class CacheEventPosted(event: graft.log.CacheEvent)
+    extends org.apache.spark.scheduler.SparkListenerEvent {
+  override protected[spark] def logEvent: Boolean = false
 }

@@ -969,6 +969,12 @@ class CacheSpec extends AnyFunSuite {
   private final class RaceAtHit(race: => Unit) extends graft.log.CacheLog {
     private val fired = new java.util.concurrent.atomic.AtomicBoolean
     @volatile private var failure: Option[Throwable] = None
+    private val events =
+      new java.util.concurrent.ConcurrentLinkedQueue[graft.log.CacheEvent]
+    override def event(e: graft.log.CacheEvent): Unit = {
+      events.add(e)
+      super.event(e)
+    }
     override def log(level: graft.log.LogLevel, fingerprint: String,
         msg: String): Unit =
       if (msg.startsWith("cache hit") && fired.compareAndSet(false, true)) {
@@ -977,10 +983,19 @@ class CacheSpec extends AnyFunSuite {
         t.start()
         t.join()
       }
-    /** the race ran, and passed */
+    /** the race ran, and passed; the raced run was a hit whose chain
+      * commit was declined because the head moved */
     def check(): Unit = {
+      import graft.log.CacheEvent.{Commit, Decision, Outcome}
       assert(fired.get, "no cache hit: the race never ran")
       failure.foreach(throw _)
+      val evs = events.toArray(Array.empty[graft.log.CacheEvent]).toSeq
+      assert(evs.collect { case d: Decision => d.outcome } == Seq(Outcome.Hit),
+        evs)
+      assert(evs.exists {
+        case c: Commit => c.declined.contains("head-moved")
+        case _ => false
+      }, evs)
     }
   }
 

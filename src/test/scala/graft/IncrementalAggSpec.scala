@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cache.MemoryQueryCache
 import graft.log.RecordingLog
+import graft.log.CacheEvent.Outcome
 import graft.sources.Tables
 
 /** Differential correctness of the incremental aggregation cache:
@@ -226,16 +227,21 @@ class IncrementalAggSpec extends AnyFunSuite {
     val work = tmpDir("stats_cnt")
     early.write.mode("overwrite").parquet(work)
     val cache = new MemoryQueryCache()
+    val log = new RecordingLog
     def q(df: DataFrame) = df.groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("cnt"))
     val cold = QueryCacheSession(spark, QueryCacheConfig(cache,
-      defaultTemporalColumn = "ts", overrideNowMicros = Some(splitUs)))
+      defaultTemporalColumn = "ts", overrideNowMicros = Some(splitUs), log = log))
     cold.run(q(spark.read.parquet(work))).collect()
+    assert(log.decisions.map(d => (d.outcome, d.reason)) ==
+      Seq((Outcome.Miss, "cold")), log.decisions)
     assert(cache.stats.misses == 1 && cache.stats.hits == 0, cache.stats.toString)
     late.write.mode("append").parquet(work)
     val warm = QueryCacheSession(spark, QueryCacheConfig(cache,
-      defaultTemporalColumn = "ts"))
+      defaultTemporalColumn = "ts", log = log))
     warm.run(q(spark.read.parquet(work))).collect()
+    assert(log.decisions.map(d => (d.outcome, d.reason)) ==
+      Seq((Outcome.Miss, "cold"), (Outcome.Hit, "direct")), log.decisions)
     assert(cache.stats.misses == 1 && cache.stats.hits == 1, cache.stats.toString)
     assert(cache.stats.invalidations == 0)
     cache.invalidateForTable(work)
@@ -504,7 +510,8 @@ class IncrementalAggSpec extends AnyFunSuite {
                 (SELECT max(value) FROM ev_sub2) AS mx
          FROM ev_sub2""")
     qcs.run(df).collect()
-    assert(log.messages.exists(_.contains("subquery")), log.messages)
+    assert(log.decisions.map(d => (d.outcome, d.reason)) ==
+      Seq((Outcome.Bail, "subquery")), log.decisions)
   }
 
   test("bail: non-mergeable aggregates run vanilla (reverse pct, collect_list)") {
@@ -518,15 +525,17 @@ class IncrementalAggSpec extends AnyFunSuite {
     qcs.run(eventsFull.agg(
       expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY value DESC)").as("p")))
       .collect()
-    assert(log.messages.exists(_.contains("not incrementally mergeable")), log.messages)
-    // programmatic counters mirror the log (EXPLAIN-parity counters)
+    assert(log.decisions.map(d => (d.outcome, d.reason)) ==
+      Seq((Outcome.Bail, "not-mergeable")), log.decisions)
+    // programmatic counters count the decisions (EXPLAIN-parity counters)
     assert(cache.stats.bails == 1 && cache.stats.hits == 0 &&
       cache.stats.misses == 0, cache.stats.toString)
     val log2 = new RecordingLog
     val qcs2 = QueryCacheSession(spark, QueryCacheConfig(new MemoryQueryCache(),
       defaultTemporalColumn = "ts", log = log2))
     qcs2.run(eventsFull.agg(collect_list(col("value")).as("vs"))).collect()
-    assert(log2.messages.exists(_.contains("not incrementally mergeable")), log2.messages)
+    assert(log2.decisions.map(d => (d.outcome, d.reason)) ==
+      Seq((Outcome.Bail, "not-mergeable")), log2.decisions)
   }
 
   test("bail: non-deterministic filter") {

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-tree hygiene: no control bytes hiding in .scala files.
+/** Source-tree hygiene: no control bytes hiding in .scala files, and
+  * the cache layer reporting through one channel.
   *
   * A raw NUL (or other C0 control byte) inside a source file makes git
   * treat the file as BINARY — diffs collapse to "Bin X -> Y bytes" and the
@@ -39,5 +40,20 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "control bytes found (these make git diff the file as binary):\n" +
         offenders.take(20).mkString("\n"))
+  }
+
+  test("the cache layer neither prints nor reads the environment") {
+    // it reports through graft.log.CacheEvent only, and is configured
+    // through QueryCacheConfig only
+    val dirs = Seq("exec", "cache", "plans", "ext", "rewrite", "analysis")
+      .map(d => Paths.get(s"src/main/scala/graft/$d"))
+    assert(dirs.forall(Files.isDirectory(_)), "expected to run from the repo root")
+    val banned = """System\.(err|out)|Console\.(err|out)|\bprintln\(|sys\.env|System\.getenv""".r
+    val offenders = for {
+      p <- dirs.flatMap(sourceFiles)
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if banned.findFirstIn(line).isDefined
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
