@@ -13,6 +13,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.log.CacheEvent
 import graft.log.CacheEvent.{Commit, Decision, Outcome}
+import graft.util.VersionedDir
 
 /** Cache SPI (reference: src/cache.rs:10-56).
   *
@@ -500,10 +501,12 @@ final class MemoryQueryCache(maxStateRows: Long = 4000000L,
   *   <root>/<fp-hash>/data-<v>-<uuid>/   parquet state segment
   *   <root>/<fp-hash>/meta-<v>.json      {timestampMicros, dataDirs, schema, …}
   *
-  * The meta file is committed via write-temp + atomic rename, so readers
-  * either see the previous complete version or the new one. Every commit
-  * (put, append, banded refresh, tombstone) advances the head through one
-  * step, `Next`. Large state
+  * Each entry directory is a [[graft.util.VersionedDir]]: the meta file
+  * is committed via write-temp + atomic rename, so readers either see the
+  * previous complete version or the new one, and superseded versions age
+  * out through its deferred cleanup. Every commit (put, append, banded
+  * refresh, tombstone) advances the head through one step, `Next`. Large
+  * state
   * never passes through the driver: at 100 TB / millions of groups the
   * put is a parallel parquet write and the warm read is a parallel
   * parquet scan that unions straight into the partial-merge aggregation.
@@ -614,18 +617,15 @@ final class ParquetQueryCache(rootDir: String,
       }
     }
 
-  /** Latest committed meta version in `dir`. Meta files are immutable and
-    * versioned (`meta-<v>.json`, appearing atomically via temp+rename), so
-    * a reader always sees SOME complete version — there is no
-    * delete-then-replace window. */
-  private def latestMeta(fs: FileSystem, dir: Path): Option[Meta] = {
-    if (!fs.exists(dir)) return None
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("meta-") && n.endsWith(".json"))
-      .flatMap(n => n.stripPrefix("meta-").stripSuffix(".json").toLongOption)
-    if (versions.isEmpty) None
-    else Some(readMeta(fs, new Path(dir, s"meta-${versions.max}.json")))
-  }
+  /** the entry in `dir` as a [[VersionedDir]] under this cache's
+    * retention rule */
+  private def versioned(fs: FileSystem, dir: Path): VersionedDir =
+    new VersionedDir(fs, dir, p => readMeta(fs, p).allDataDirs,
+      keepVersions, graceMs, abandonedMs)
+
+  /** the entry's newest committed meta (see [[VersionedDir.latest]]) */
+  private def latestMeta(fs: FileSystem, dir: Path): Option[Meta] =
+    versioned(fs, dir).latest.map(readMeta(fs, _))
 
   /** `fingerprint`'s entry: its key, directory and file system */
   private def entry(fingerprint: String,
@@ -666,30 +666,23 @@ final class ParquetQueryCache(rootDir: String,
 
   /** The one step that advances an entry's head past `head`, at a version
     * of at least `atLeast` (a commit's watermark, a tombstone's wall
-    * clock). [[dataDir]] names the new data directories, UUID-suffixed:
-    * two commits that computed the same version never share a directory
-    * (one meta rename wins; the loser's directory becomes an orphan that
-    * cleanup collects). [[commit]] renames the meta into place, drops the
-    * resident copy of the old head, cleans up, and after a full state
-    * runs the global sweep. */
+    * clock): [[VersionedDir.next]] over the entry's directory. [[commit]]
+    * writes the meta, cleans up (deferred: a reader that resolved the
+    * previous meta must not get FileNotFound mid-read), drops the
+    * resident copy of the old head, and after a full state runs the
+    * global sweep. */
   private final class Next(fs: FileSystem, dir: Path, head: Option[Meta],
       atLeast: Long) {
-    val version: Long =
-      math.max(atLeast, head.map(_.version + 1).getOrElse(0L))
+    private val step = versioned(fs, dir).next(head.map(_.version), atLeast)
+    val version: Long = step.version
 
-    def dataDir(tag: String = ""): String =
-      s"data-$version-$tag${java.util.UUID.randomUUID.toString.take(8)}"
+    def dataDir(tag: String = ""): String = step.dataDir(tag)
+
+    def tombstone: String = step.tombstone
 
     def commit(meta: Meta): Meta = {
-      writeMetaAtomic(fs, dir, meta, version)
+      step.commit(metaBytes(meta))
       dropResident(dir.getName)
-      // DEFERRED cleanup: a reader that resolved the previous meta — or a
-      // long warm scan still streaming an older data-<v> — must not get
-      // FileNotFound mid-read. Superseded versions stay on disk until
-      // they are ≥ keepVersions behind the head AND older than graceMs;
-      // only then are their meta + data (and any orphaned data dirs)
-      // deleted.
-      try cleanup(fs, dir) catch { case _: Exception => () }
       if (meta.extraDataDirs.isEmpty && !meta.tombstone)
         try globalSweep(fs) catch { case _: Exception => () }
       meta
@@ -1253,80 +1246,6 @@ final class ParquetQueryCache(rootDir: String,
     describeRows(spark, rows)
   }
 
-  /** delete superseded/orphaned versions past the retention window */
-  private def cleanup(fs: FileSystem, dir: Path): Unit = {
-    val entries = fs.listStatus(dir)
-    val now = System.currentTimeMillis()
-    // every deletion below needs an entry older than graceMs (metas, data
-    // dirs) or abandonedMs (temp files): with none that old — a dashboard
-    // refreshing every few seconds inside the grace window — stop here,
-    // before reading any meta
-    if (entries.forall(e =>
-        now - e.getModificationTime <= math.min(graceMs, abandonedMs))) return
-    val metas = entries
-      .filter(e => e.getPath.getName.startsWith("meta-") &&
-        e.getPath.getName.endsWith(".json"))
-      .flatMap(e => e.getPath.getName.stripPrefix("meta-")
-        .stripSuffix(".json").toLongOption.map(v => (v, e)))
-      .sortBy(-_._1)
-    // ONE read per meta file (on an object store each read is a remote
-    // GET; the orphan pass below reuses this map instead of re-reading).
-    // A meta references its WHOLE data-dir set: append-chain metas (row
-    // state) share segments with their ancestors, so liveness must be
-    // judged per DIR across all kept metas, never per meta.
-    val metaDataDirs: Map[Long, Seq[String]] = metas.flatMap { case (v, e) =>
-      try Some(v -> readMeta(fs, e.getPath).allDataDirs)
-      catch { case _: Exception => None }
-    }.toMap
-    // under a tombstone head the entry is dead: no reader will resolve
-    // an older version on purpose, so only the tombstone itself is kept
-    // and everything below it ages out after the grace window
-    val headIsTomb = metas.headOption
-      .flatMap(m => metaDataDirs.get(m._1)).exists(_.exists(_.endsWith("-tomb")))
-    val keepN = if (headIsTomb) 1 else math.max(1, keepVersions)
-    val keptMetas = metas.take(keepN)
-    val liveDataDirs: Set[String] =
-      keptMetas.flatMap(m => metaDataDirs.getOrElse(m._1, Nil)).toSet
-    val referencedDirs: Set[String] = metaDataDirs.values.flatten.toSet
-    val cutoff = now - graceMs
-    metas.drop(keepN).foreach { case (v, e) =>
-      if (e.getModificationTime < cutoff) {
-        try {
-          metaDataDirs.getOrElse(v, Nil).filterNot(liveDataDirs.contains)
-            .foreach(d => fs.delete(new Path(dir, d), true))
-          fs.delete(e.getPath, false)
-        } catch { case _: Exception => () }
-      }
-    }
-    // Orphaned data dirs: not referenced by ANY meta and past the grace
-    // period. A writer's meta lands only AFTER its parquet write, so an
-    // unreferenced dir may be an IN-FLIGHT write, not garbage — only
-    // reap it once its write visibly completed (_SUCCESS present: a
-    // loser of a concurrent same-version race) or after `abandonedMs`
-    // (crashed writer).
-    entries.filter(e => e.isDirectory && e.getPath.getName.startsWith("data-"))
-      .foreach { e =>
-        val name = e.getPath.getName
-        val age = now - e.getModificationTime
-        lazy val completed =
-          try fs.exists(new Path(e.getPath, "_SUCCESS"))
-          catch { case _: Exception => false }
-        if (!referencedDirs.contains(name) && age > graceMs &&
-            (completed || age > abandonedMs))
-          try fs.delete(e.getPath, true) catch { case _: Exception => () }
-      }
-    // temp metas / repair sidecars (per-writer unique names) left by
-    // crashed writers
-    entries.filter(e => !e.isDirectory &&
-        (e.getPath.getName.startsWith(".meta-") ||
-          e.getPath.getName.startsWith(".repair-"))
-        && e.getPath.getName.endsWith(".tmp"))
-      .foreach { e =>
-        if (now - e.getModificationTime > abandonedMs)
-          try fs.delete(e.getPath, false) catch { case _: Exception => () }
-      }
-  }
-
   /** Invalidation is DEFERRED like superseded puts: a TOMBSTONE meta is
     * committed as the new head (get then misses), and the entry's data
     * dirs live on until the normal grace-window cleanup reaps them — an
@@ -1351,8 +1270,8 @@ final class ParquetQueryCache(rootDir: String,
     val head = latestMeta(fs, dir).filterNot(_.tombstone).getOrElse(return)
     val next = new Next(fs, dir, Some(head),
       System.currentTimeMillis() * 1000L)
-    next.commit(Meta(head.timestampMicros, next.dataDir() + "-tomb",
-      head.schema, Seq.empty))
+    next.commit(Meta(head.timestampMicros, next.tombstone, head.schema,
+      Seq.empty))
     // a dead entry has nothing left to repair — drop pending sidecars so
     // they don't linger in the dir (a fresh put over the tombstone would
     // otherwise see stale ranges and pay a pointless bounded re-scan)
@@ -1406,11 +1325,10 @@ final class ParquetQueryCache(rootDir: String,
         case Some(m) if !m.tombstone &&
             m.sourcePaths.exists(p => QueryCache.pathMatches(table, p)) =>
           val token = java.util.UUID.randomUUID.toString.take(12)
-          val tmp = new Path(d.getPath, s".repair-$token.json.tmp")
-          writeJson(fs, tmp, Json.createObjectNode()
-            .put("loMicros", loMicros).put("hiMicros", hiMicros))
-          if (fs.rename(tmp, new Path(d.getPath, s"repair-$token.json")))
-            n += 1
+          versioned(fs, d.getPath).write(s"repair-$token.json",
+            Json.writeValueAsBytes(Json.createObjectNode()
+              .put("loMicros", loMicros).put("hiMicros", hiMicros)))
+          n += 1
         case _ => ()
       } catch { case _: Exception => () }
     }
@@ -1584,12 +1502,6 @@ object ParquetQueryCache {
     try Json.readTree(in) finally in.close()
   }
 
-  private def writeJson(fs: FileSystem, p: Path,
-      node: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
-    val out = fs.create(p, true)
-    try out.write(Json.writeValueAsBytes(node)) finally out.close()
-  }
-
   private[graft] def readMeta(fs: FileSystem, p: Path): Meta = {
     val o = readJson(fs, p)
     def field(name: String): Option[String] =
@@ -1631,11 +1543,10 @@ object ParquetQueryCache {
       lines("segRows").map(counted))
   }
 
-  private[graft] def writeMetaAtomic(fs: FileSystem, dir: Path,
-      meta: Meta, version: Long): Unit = {
+  private def metaBytes(meta: Meta): Array[Byte] = {
     def joined(pairs: Seq[(String, Any)]): String =
       pairs.map { case (d, v) => s"$d|$v" }.mkString("\n")
-    val node = Json.createObjectNode()
+    Json.writeValueAsBytes(Json.createObjectNode()
       .put("timestampMicros", meta.timestampMicros)
       .put("dataDir", meta.dataDir)
       .put("schema", meta.schema.json)
@@ -1646,27 +1557,13 @@ object ParquetQueryCache {
         (d, cols.mkString(",")) }))
       .put("extraDataDirs", meta.extraDataDirs.mkString("\n"))
       .put("segMaxTs", joined(meta.segMaxTs))
-      .put("segRows", joined(meta.segRows))
-    // per-writer temp name: two concurrent puts that computed the SAME
-    // version (both read the same head) must not share a temp path — a
-    // shared `.meta-<v>.json.tmp` lets one writer's rename steal the
-    // other's in-flight file (observed as a chmod-on-missing-file failure
-    // in the CacheSpec race test). With unique temps, both renames target
-    // the same committed name and either complete meta winning is correct.
-    val tmp = new Path(dir,
-      s".meta-$version-${java.util.UUID.randomUUID.toString.take(8)}.json.tmp")
-    writeJson(fs, tmp, node)
-    val target = new Path(dir, s"meta-$version.json")
-    // NO delete-before-rename: a target can only pre-exist when a
-    // concurrent put computed the same version (sequential puts always
-    // bump past the head), and deleting it first opens a window where a
-    // reader of that version finds NO meta. POSIX rename atomically
-    // replaces (readers see old-complete or new-complete); an FS that
-    // refuses to clobber fails the rename — the other writer's meta is
-    // complete and equally valid, accept it and drop our temp.
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      require(fs.exists(target), s"atomic meta commit failed for $dir")
-    }
+      .put("segRows", joined(meta.segRows)))
   }
+
+  /** write `meta` as the entry's version `version` (see
+    * [[VersionedDir.write]]) */
+  private[graft] def writeMetaAtomic(fs: FileSystem, dir: Path,
+      meta: Meta, version: Long): Unit =
+    new VersionedDir(fs, dir, _ => Nil).write(s"meta-$version.json",
+      metaBytes(meta))
 }

@@ -86,7 +86,11 @@ object IVF {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     /** best-effort durable write: temp file + rename; failures are
-      * swallowed (the durable layer can only ever save work, not gate it) */
+      * swallowed (the durable layer can only ever save work, not gate it).
+      * The one rename outside [[graft.util.VersionedDir]] in this layer:
+      * the files are a model cache keyed by content, so a crash between
+      * the delete and the rename loses a file, which costs a re-fit and
+      * never a wrong answer — no version to commit, nothing to recover. */
     private def writeDurable(spark: SparkSession, key: String)(
         write: java.io.DataOutputStream => Unit): Unit =
       durableDir.foreach { d =>

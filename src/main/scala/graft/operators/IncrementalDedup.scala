@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.functions.seeded_hash64
+import graft.util.VersionedDir
 
 /** Append-only corpus deduplication via a durable fingerprint INDEX —
   * the 100 TB shape. A training corpus is written once and then only
@@ -28,13 +30,40 @@ import graft.functions.functions.seeded_hash64
   * promoted to a bucketed table so even its own keys stop being
   * exchanged (see [[dedupAppend]]).
   *
+  * Durable layout (every index of this module): each PART of an index
+  * is a [[graft.util.VersionedDir]] `<indexDir>/<part>/`, whose head
+  * names one data dir holding the part's table(s) as subdirs:
+  *
+  * {{{
+  *   keys/      data-<v>-<uuid>/keys/     exact-dedup keys (_h1, _h2, id)
+  *   gone/      data-<v>-<uuid>/gone/     exact-dedup tombstones (_h1, _h2)
+  *   readded/   data-<v>-<uuid>/readded/  re-admission ledger (_h1, _h2, _id)
+  *   grams/     data-<v>-<uuid>/grams/    span window hashes (h)
+  *   bands/     data-<v>-<uuid>/bands/    near-dup LSH bands
+  *   sigs/      data-<v>-<uuid>/sigs/     near-dup shingle sets
+  *   gone_ids/  data-<v>-<uuid>/gone_ids/ near-dup / embed id tombstones
+  *   ivf/       data-<v>-<uuid>/{model,radii,vecs}/  the IVF triple
+  *   clusters/  data-<v>-<uuid>/{labels,remaps}/     cluster state
+  * }}}
+  *
+  * Appends add files to the head's tables (under the writer lease).
+  * Every REWRITE — compaction, bucketed promotion, the IVF refresh, the
+  * labels fold, a snapshot write — writes a complete new data dir and
+  * commits it with one meta rename; a dropped snapshot commits a
+  * tombstone head. Readers resolve each part's head once, read only its
+  * data dir and never write, so a crash at any step leaves the previous
+  * version or the new one; superseded dirs age out through the deferred
+  * cleanup. A part's bucketing rides in its meta: a bucketed catalog
+  * table is (re-)registered over exactly the committed dir, by any
+  * session that reads it.
+  *
   * Single-writer contract (like the shard writers in
   * [[graft.sources.Layouts]]): parquet append is not transactional, so
   * concurrent `dedupAppend` calls against one index dir race — serialize
-  * batches per index. Crash between the returned result's
-  * materialization and a re-run re-appends the same keys; duplicate
-  * index rows are harmless for correctness (anti join) and can be
-  * compacted away with `Dedup.exact` semantics on (h1, h2).
+  * batches per index (the writer lease enforces it). Crash between the
+  * returned result's materialization and a re-run re-appends the same
+  * keys; duplicate index rows are harmless for correctness (anti join)
+  * and can be compacted away with `Dedup.exact` semantics on (h1, h2).
   */
 object IncrementalDedup {
 
@@ -56,20 +85,18 @@ object IncrementalDedup {
   /** Initialize the index from an existing corpus (one full exact-dedup
     * pass — the LAST full scan the corpus ever needs). Returns the
     * corpus rows that survive (the canonical min-id keeper per content).
-    * The index dir is DEDICATED to this index (the overwrite claims it
-    * whole). */
+    * A re-init commits a fresh key table over whatever the index held. */
   def indexInit(docs: DataFrame, indexDir: String,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     graft.util.WriterLease.withLease(spark, indexDir, "indexInit") {
-      spark.sql(s"DROP TABLE IF EXISTS ${indexTableName(indexDir, "keys")}")
-      dropGone(spark, indexDir) // a re-init claims the tombstones too
-      dropSnap(spark, readdedDir(indexDir))
+      dropSnap(spark, indexDir, "gone") // a re-init claims the tombstones too
+      dropSnap(spark, indexDir, "readded")
       val w = winners(docs, idCol, textCol)
       // size-coalesced (SizedWrites): the winners groupBy fans the write
       // into one near-empty file per shuffle partition otherwise
-      graft.util.SizedWrites.sizeCoalesced(w)
-        .write.mode("overwrite").parquet(indexDir)
+      rewrite(spark, part(spark, indexDir, "keys"), "keys",
+        graft.util.SizedWrites.sizeCoalesced(w), Nil, 0)
       docs.join(w.select(col(idCol)), Seq(idCol), "left_semi")
     }
   }
@@ -92,21 +119,14 @@ object IncrementalDedup {
       indexBuckets: Int = 32,
       bucketReadThresholdBytes: Long = 256L << 20): DataFrame =
       graft.util.WriterLease.withLease(spark, indexDir, "dedupAppend") {
-    val table = indexTableName(indexDir, "keys")
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val keyCols = Seq("_h1", "_h2")
-    val bucketed = spark.catalog.tableExists(table) ||
-      (indexBytes(fs, indexDir) >= bucketReadThresholdBytes && {
-        promoteToBucketed(spark, fs, indexDir, table, keyCols, indexBuckets)
-        true
-      })
+    val keys = promoted(spark, part(spark, indexDir, "keys"), "keys",
+      Seq("_h1", "_h2"), indexBuckets, bucketReadThresholdBytes)
     val w = winners(batch, idCol, textCol)
     // size-coalesced BEFORE the checkpoint: the checkpoint pins the
     // physical layout, so the downstream index append writes one file
     // per ~advisory-size instead of one per shuffle partition
     val novel = graft.util.SizedWrites.sizeCoalesced(
-      keysNovel(spark, indexDir, w, bucketed)).localCheckpoint()
+      keysNovel(spark, indexDir, w)).localCheckpoint()
     // a re-added gone content is novel again — clear its tombstone so a
     // THIRD send dedups against this new copy. The cleared keys' NEW
     // keepers are recorded in the re-admission ledger FIRST (so a
@@ -125,15 +145,13 @@ object IncrementalDedup {
         val ra = readdedKeys(spark, indexDir).fold(cleared)(r =>
           r.join(cleared.select(col("_h1"), col("_h2")),
             Seq("_h1", "_h2"), "left_anti").unionByName(cleared))
-        writeSnap(spark, readdedDir(indexDir), ra,
-          Seq("_h1", "_h2", "_id"))
-        writeGone(spark, indexDir,
+        writeSnap(spark, indexDir, "readded", ra, Seq("_h1", "_h2", "_id"))
+        writeSnap(spark, indexDir, "gone",
           g.join(cleared.select(col("_h1"), col("_h2")),
-            Seq("_h1", "_h2"), "left_anti"))
+            Seq("_h1", "_h2"), "left_anti"), Seq("_h1", "_h2"))
       }
     }
-    if (bucketed) appendBucketed(spark, novel, indexDir, table, keyCols, indexBuckets)
-    else novel.write.mode("append").parquet(indexDir)
+    appendPart(spark, keys, "keys", novel)
     batch.join(novel.select(col(idCol)), Seq(idCol), "left_semi")
   }
 
@@ -142,9 +160,9 @@ object IncrementalDedup {
     * join keys — so only the batch's winners shuffle (plan-pinned in
     * IncrementalNearDedupSpec). */
   private[graft] def keysNovel(spark: SparkSession, indexDir: String,
-      w: DataFrame, bucketed: Boolean): DataFrame = {
-    val idx = (if (bucketed) spark.table(indexTableName(indexDir, "keys"))
-      else spark.read.parquet(indexDir)).select(col("_h1"), col("_h2"))
+      w: DataFrame): DataFrame = {
+    val idx = readPart(spark, part(spark, indexDir, "keys"), "keys")
+      .select(col("_h1"), col("_h2"))
     // tombstoned contents ([[dedupRemove]]) are not in the corpus anymore
     // — subtract them so a re-send is novel again. Broadcast by
     // construction (gone is bounded by outstanding removals), so the
@@ -159,8 +177,8 @@ object IncrementalDedup {
     * (crash-replay duplicate rows and [[dedupRemove]] tombstones both
     * excluded). */
   def indexSize(spark: SparkSession, indexDir: String): Long = {
-    val keys = spark.read.parquet(indexDir).select(col("_h1"), col("_h2"))
-      .distinct()
+    val keys = spark.read.parquet(part(spark, indexDir, "keys").path("keys"))
+      .select(col("_h1"), col("_h2")).distinct()
     goneKeys(spark, indexDir)
       .fold(keys)(g => keys.join(broadcast(g), Seq("_h1", "_h2"), "left_anti"))
       .count()
@@ -168,85 +186,47 @@ object IncrementalDedup {
 
   // ------------------------------------------------ content REMOVAL
 
-  /** tombstone snapshot for the exact-key index — a SIBLING dir (a subdir
-    * would pollute the flat parquet read of `indexDir` itself), holding
-    * versioned full snapshots `v-<n>-<uuid>`: the latest _SUCCESS-complete
-    * version wins, so every rewrite is atomic to readers and a crashed
-    * write is invisible. Bounded by OUTSTANDING removals (re-adds clear
-    * their rows; compaction resets it), so it stays broadcast-sized. */
-  private def goneDir(indexDir: String): String =
-    indexDir.stripSuffix("/") + "_gone"
-
   private val goneSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("_h1",
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("_h2",
       org.apache.spark.sql.types.LongType)))
 
-  // generic versioned-snapshot machinery, shared by every index type's
-  // tombstones: full snapshots `v-<n>-<uuid>`, the latest
-  // _SUCCESS-complete version wins (atomic to readers, crashed writes
-  // invisible), one predecessor kept for lease-free readers mid-scan
-  private def latestSnapVersion(fs: org.apache.hadoop.fs.FileSystem,
-      snapDir: String): Option[Path] = {
-    val dir = new Path(snapDir)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-      .filter(p => p.getName.startsWith("v-") &&
-        fs.exists(new Path(p, "_SUCCESS")))
-      .sortBy(p => p.getName.stripPrefix("v-").takeWhile(_.isDigit)
-        .foldLeft(0L)((a, c) => a * 10 + (c - '0')))
-      .lastOption
+  // snapshots: small tables rewritten whole, one version per write; a
+  // dropped snapshot is a tombstone head. `gone` holds the exact-key
+  // tombstones, bounded by OUTSTANDING removals (re-adds clear their
+  // rows; compaction resets it), so it stays broadcast-sized.
+
+  private def readSnap(spark: SparkSession, indexDir: String, name: String,
+      schema: StructType): Option[DataFrame] = {
+    val p = part(spark, indexDir, name)
+    p.head.map(_ => spark.read.schema(schema).parquet(p.path(name)))
   }
 
-  private def readSnap(spark: SparkSession, snapDir: String,
-      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
-    val fs = new Path(snapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestSnapVersion(fs, snapDir).map(p =>
-      spark.read.schema(schema).parquet(p.toString))
-  }
-
-  private def writeSnap(spark: SparkSession, snapDir: String,
-      df: DataFrame, cols: Seq[String]): Unit = {
-    val fs = new Path(snapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(snapDir)
-    val next = (if (!fs.exists(dir)) 0L
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith("v-"))
-        .map(_.stripPrefix("v-").takeWhile(_.isDigit)
-          .foldLeft(0L)((a, c) => a * 10 + (c - '0')))
-        .foldLeft(0L)(math.max)) + 1L
-    val vName = f"v-$next%012d-${java.util.UUID.randomUUID.toString.take(8)}"
+  private def writeSnap(spark: SparkSession, indexDir: String, name: String,
+      df: DataFrame, cols: Seq[String]): Unit =
     // size-coalesced: a snapshot is tombstone-sized, not corpus-sized —
     // without it the distinct's shuffle fans it into per-partition files
-    graft.util.SizedWrites.sizeCoalesced(
-        df.select(cols.map(col): _*).distinct())
-      .write.parquet(new Path(dir, vName).toString)
-    // superseded versions: keep the immediate predecessor, reap older
-    val complete = fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-      .filter(p => p.getName.startsWith("v-") &&
-        fs.exists(new Path(p, "_SUCCESS")))
-      .sortBy(_.getName)
-    complete.dropRight(2).foreach(p =>
-      try { fs.delete(p, true); () } catch { case _: Exception => () })
-  }
+    rewrite(spark, part(spark, indexDir, name), name,
+      graft.util.SizedWrites.sizeCoalesced(
+        df.select(cols.map(col): _*).distinct()), Nil, 0)
 
-  private def dropSnap(spark: SparkSession, snapDir: String): Unit = {
-    val fs = new Path(snapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(snapDir)
-    if (fs.exists(p)) { fs.delete(p, true); () }
+  private def dropSnap(spark: SparkSession, indexDir: String,
+      name: String): Unit = {
+    val p = part(spark, indexDir, name)
+    if (p.head.isDefined) {
+      val next = p.next()
+      p.vd.commit(next, Seq(next.tombstone))
+    }
   }
 
   /** the tombstoned keys, None when no snapshot exists (the common,
     * zero-overhead case: [[keysNovel]] skips the subtraction entirely) */
   private def goneKeys(spark: SparkSession,
       indexDir: String): Option[DataFrame] =
-    readSnap(spark, goneDir(indexDir), goneSchema)
+    readSnap(spark, indexDir, "gone", goneSchema)
 
-  /** RE-ADMISSION keeper ledger `<indexDir>_readded` (_h1, _h2, _id):
+  /** RE-ADMISSION keeper ledger `readded` (_h1, _h2, _id):
     * when a batch re-adds a previously-removed content, the cleared
     * key's NEW keeper is recorded here. [[dedupRemove]] then only
     * accepts the recorded keeper for such keys — the STALE pre-removal
@@ -256,9 +236,6 @@ object IncrementalDedup {
     * content and re-admitting its next copy as a duplicate. Bounded by
     * re-admissions since the last compaction, which drops the stale
     * rows physically and clears the ledger. */
-  private def readdedDir(indexDir: String): String =
-    indexDir.stripSuffix("/") + "_readded"
-
   private val readdedSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("_h1",
       org.apache.spark.sql.types.LongType),
@@ -269,21 +246,9 @@ object IncrementalDedup {
 
   private def readdedKeys(spark: SparkSession,
       indexDir: String): Option[DataFrame] =
-    readSnap(spark, readdedDir(indexDir), readdedSchema)
-
-  private def writeGone(spark: SparkSession, indexDir: String,
-      df: DataFrame): Unit =
-    writeSnap(spark, goneDir(indexDir), df, Seq("_h1", "_h2"))
-
-  private def dropGone(spark: SparkSession, indexDir: String): Unit =
-    dropSnap(spark, goneDir(indexDir))
+    readSnap(spark, indexDir, "readded", readdedSchema)
 
   // ---- id-grain tombstones (near-dup / embed indexes, which key by id)
-
-  /** id tombstones live INSIDE the index dir (these layouts keep their
-    * tables in subdirs, so nothing flat-reads the root) */
-  private def goneIdsDir(indexDir: String): String =
-    s"${indexDir.stripSuffix("/")}/gone_ids"
 
   private val goneIdsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("id",
@@ -291,7 +256,7 @@ object IncrementalDedup {
 
   private def goneIds(spark: SparkSession,
       indexDir: String): Option[DataFrame] =
-    readSnap(spark, goneIdsDir(indexDir), goneIdsSchema)
+    readSnap(spark, indexDir, "gone_ids", goneIdsSchema)
 
   /** REMOVE contents from the index — the mutation face of
     * [[dedupAppend]] (editorial takedown / erasure: a content removed
@@ -312,9 +277,7 @@ object IncrementalDedup {
   def dedupRemove(spark: SparkSession, indexDir: String, removed: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): Long =
       graft.util.WriterLease.withLease(spark, indexDir, "dedupRemove") {
-    val table = indexTableName(indexDir, "keys")
-    val idx = if (spark.catalog.tableExists(table)) spark.table(table)
-      else spark.read.parquet(indexDir)
+    val idx = readPart(spark, part(spark, indexDir, "keys"), "keys")
     val gone0 = goneKeys(spark, indexDir)
     val ra0 = readdedKeys(spark, indexDir)
     val keyed = removed.select(
@@ -342,8 +305,8 @@ object IncrementalDedup {
       matched.join(g, Seq("_h1", "_h2"), "left_anti")).localCheckpoint()
     val n = fresh.count()
     if (n == 0L) return 0L
-    writeGone(spark, indexDir,
-      gone0.fold(fresh)(g => g.unionByName(fresh)))
+    writeSnap(spark, indexDir, "gone",
+      gone0.fold(fresh)(g => g.unionByName(fresh)), Seq("_h1", "_h2"))
     // a removed re-added key leaves the ledger (it is dead again; a
     // future re-admission re-records) — best-effort after the gone
     // commit, self-healing if skipped by a crash
@@ -351,8 +314,7 @@ object IncrementalDedup {
       val rest = r.join(fresh, Seq("_h1", "_h2"), "left_anti")
         .localCheckpoint()
       if (rest.count() < r.count())
-        writeSnap(spark, readdedDir(indexDir), rest,
-          Seq("_h1", "_h2", "_id"))
+        writeSnap(spark, indexDir, "readded", rest, Seq("_h1", "_h2", "_id"))
     }
     n
   }
@@ -400,8 +362,8 @@ object IncrementalDedup {
     * stages are pure fixed overhead (the same size-gated strategy
     * choice [[Dedup.clusters]] makes; both paths provably drop the
     * same ids). (Catalog table names are content-derived from the
-    * index path; a fresh session re-registers them over the existing
-    * files.)
+    * index path; any session re-registers them over the committed
+    * dirs.)
     *
     * Documents too short to shingle are always kept and never indexed.
     * Per-batch cost: the batch's own LSH pass plus equi-joins against
@@ -414,20 +376,11 @@ object IncrementalDedup {
       indexBuckets: Int = 32,
       bucketReadThresholdBytes: Long = 256L << 20): DataFrame =
       graft.util.WriterLease.withLease(spark, indexDir, "nearDedupAppend") {
-    val bandsDir = s"$indexDir/bands"
-    val sigsDir = s"$indexDir/sigs"
-    val bandsTable = indexTableName(indexDir, "bands")
-    val sigsTable = indexTableName(indexDir, "sigs")
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bands0 = part(spark, indexDir, "bands")
+    val sigs0 = part(spark, indexDir, "sigs")
     // an index exists only once it holds FILES: an all-short first batch
     // appends nothing (below), leaving at most an empty dir
-    val haveIndex = fs.exists(new Path(bandsDir)) &&
-      indexBytes(fs, bandsDir) > 0
-    if (!haveIndex) { // fresh index: drop any stale catalog metadata
-      spark.sql(s"DROP TABLE IF EXISTS $bandsTable")
-      spark.sql(s"DROP TABLE IF EXISTS $sigsTable")
-    }
+    val haveIndex = bands0.bytes("bands") > 0 && sigs0.head.isDefined
 
     // tombstoned ids ([[nearDedupRemove]]): their index rows stop
     // suppressing (subtracted broadcast-side below), and batch rows
@@ -455,38 +408,34 @@ object IncrementalDedup {
     // each batch runs ONE unioned candidate set + ONE verify pipeline
     // (fewest stages; at toy sizes every extra join/DDL is pure fixed
     // overhead). The batch that finds the index past
-    // `bucketReadThresholdBytes` PROMOTES it once (compactIndex-style
-    // rewrite into the bucketed catalog tables); from then on candidate
+    // `bucketReadThresholdBytes` PROMOTES it once (a rewrite into the
+    // bucketed layout, committed per part); from then on candidate
     // and verify joins read the index pre-partitioned on their keys and
     // only the batch side shuffles — the shape that survives a 100×
     // corpus (plan-pinned in IncrementalNearDedupSpec). Mode is carried
-    // by the catalog: table registered ⇒ bucketed.
-    val bucketedMode = haveIndex && {
-      if (spark.catalog.tableExists(bandsTable)) true
-      else if (indexBytes(fs, bandsDir) + indexBytes(fs, sigsDir) >=
-          bucketReadThresholdBytes) {
-        promoteToBucketed(spark, fs, bandsDir, bandsTable,
-          Seq("band_idx", "band_hash"), indexBuckets)
-        promoteToBucketed(spark, fs, sigsDir, sigsTable,
-          Seq("id"), indexBuckets)
-        true
-      } else false
-    }
+    // by the parts' heads: a part promoted before a crash stays so, and
+    // the next batch promotes the other.
+    val bucketedMode = haveIndex && (bands0.bucketed || sigs0.bucketed ||
+      bands0.bytes("bands") + sigs0.bytes("sigs") >= bucketReadThresholdBytes)
+    val bandsP = if (bucketedMode) promoted(spark, bands0, "bands",
+      Seq("band_idx", "band_hash"), indexBuckets, 0L) else bands0
+    val sigsP = if (bucketedMode)
+      promoted(spark, sigs0, "sigs", Seq("id"), indexBuckets, 0L) else sigs0
 
     val dropped = if (!haveIndex) {
       Dedup.verifyJaccardPairs(candWithin, shHashed, threshold)
         .select(col("id_b").as("id")).distinct()
     } else if (!bucketedMode) {
-      val idxBands = gone.fold(spark.read.parquet(bandsDir))(g =>
-        spark.read.parquet(bandsDir)
-          .join(broadcast(g), Seq("id"), "left_anti"))
+      val idxBands0 = readPart(spark, bandsP, "bands")
+      val idxBands = gone.fold(idxBands0)(g =>
+        idxBands0.join(broadcast(g), Seq("id"), "left_anti"))
       val candCross = idxBands.as("x").join(bnd.as("y"),
           col("x.band_idx") === col("y.band_idx") &&
             col("x.band_hash") === col("y.band_hash"))
         .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
         .distinct()
       val shAll = shHashed.unionByName(
-        requireHashedSigs(spark.read.parquet(sigsDir), sigsDir))
+        requireHashedSigs(readPart(spark, sigsP, "sigs"), sigsP.path("sigs")))
       Dedup.verifyJaccardPairs(candWithin.unionByName(candCross), shAll,
           threshold)
         .select(col("id_b").as("id")).distinct()
@@ -495,7 +444,7 @@ object IncrementalDedup {
           threshold)
         .select(col("id_b").as("id"))
       val droppedCross = crossDropped(spark, indexDir, bnd, shHashed,
-        threshold, indexBuckets, gone)
+        threshold, gone)
       droppedWithin.unionByName(droppedCross).distinct()
     }
 
@@ -507,56 +456,10 @@ object IncrementalDedup {
     // schema from — skip it (sh is checkpointed, so the emptiness probe
     // reads block metadata, not the pipeline)
     if (!shHashed.isEmpty) {
-      if (bucketedMode) {
-        appendBucketed(spark, bnd, bandsDir, bandsTable,
-          Seq("band_idx", "band_hash"), indexBuckets)
-        appendBucketed(spark, shHashed, sigsDir, sigsTable, Seq("id"),
-          indexBuckets)
-      } else {
-        bnd.write.mode("append").parquet(bandsDir)
-        shHashed.write.mode("append").parquet(sigsDir)
-      }
+      appendPart(spark, bandsP, "bands", bnd)
+      appendPart(spark, sigsP, "sigs", shHashed)
     }
     kept
-  }
-
-  /** One-time layout promotion at the size threshold: rewrite a plain
-    * index dir into its bucketed catalog table. Crash-safe, unlike every
-    * other index mutation which is append-only: the bucketed copy is
-    * written to a DURABLE sibling dir while the plain files are still in
-    * place (no executor-storage checkpoint holds the only copy), and the
-    * plain dir is deleted only after the copy is fully on disk — the
-    * non-atomic window shrinks to two filesystem metadata ops, with the
-    * complete copy durable throughout. Single-writer contract as every
-    * other index mutation. */
-  private def promoteToBucketed(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, table: String,
-      bucketCols: Seq[String], buckets: Int): Unit = {
-    val tmp = new Path(dir + ".promote")
-    val dst = new Path(dir)
-    val tmpTable = table + "_tmp"
-    fs.delete(tmp, true) // leftovers of an interrupted earlier attempt
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    // bucketed write to the sibling path, reading the live plain files
-    spark.read.parquet(dir)
-      .repartition(buckets, bucketCols.map(col): _*)
-      .write.mode("overwrite").format("parquet").option("path", tmp.toString)
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(tmpTable)
-    val ddl = spark.table(tmpTable).schema.toDDL
-    spark.sql(s"DROP TABLE $tmpTable") // external: the files stay put
-    // swap: bucket ids live in the FILE NAMES (BucketingUtils), so the
-    // renamed files reinterpret identically under the table registered
-    // over the final location
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"promotion rename $tmp -> $dst failed")
-    val cols = bucketCols.mkString(", ")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-      s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS " +
-      s"LOCATION '$dir'")
   }
 
   /** total bytes of the parquet files under an index dir */
@@ -606,19 +509,15 @@ object IncrementalDedup {
     * IncrementalNearDedupSpec). */
   private[graft] def crossDropped(spark: SparkSession, indexDir: String,
       bnd: DataFrame, shHashed: DataFrame, threshold: Double,
-      indexBuckets: Int,
       gone: Option[DataFrame] = None): DataFrame = {
-    val idxBands0 = bucketedIndexTable(spark, s"$indexDir/bands",
-      indexTableName(indexDir, "bands"), Seq("band_idx", "band_hash"),
-      indexBuckets)
+    val idxBands0 = readPart(spark, part(spark, indexDir, "bands"), "bands")
     // tombstoned ids subtract via a broadcast anti-join: the bucketed
     // band scan stays exchange-free
     val idxBands = gone.fold(idxBands0)(g =>
       idxBands0.join(broadcast(g), Seq("id"), "left_anti"))
-    val idxSigs = requireHashedSigs(
-      bucketedIndexTable(spark, s"$indexDir/sigs",
-        indexTableName(indexDir, "sigs"), Seq("id"), indexBuckets),
-      s"$indexDir/sigs")
+    val sigs = part(spark, indexDir, "sigs")
+    val idxSigs = requireHashedSigs(readPart(spark, sigs, "sigs"),
+      sigs.path("sigs"))
     val candCross = idxBands.as("x").join(bnd.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
           col("x.band_hash") === col("y.band_hash"))
@@ -648,14 +547,9 @@ object IncrementalDedup {
   def nearDedupRemove(spark: SparkSession, indexDir: String, ids: DataFrame,
       idCol: String = "doc_id"): Long =
       graft.util.WriterLease.withLease(spark, indexDir, "nearDedupRemove") {
-    val sigsDir = s"$indexDir/sigs"
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(sigsDir)) || indexBytes(fs, sigsDir) == 0L)
-      return 0L
-    val sigsTable = indexTableName(indexDir, "sigs")
-    val idx = if (spark.catalog.tableExists(sigsTable)) spark.table(sigsTable)
-      else spark.read.parquet(sigsDir)
+    val sigs = part(spark, indexDir, "sigs")
+    if (sigs.bytes("sigs") == 0L) return 0L
+    val idx = readPart(spark, sigs, "sigs")
     val gone0 = goneIds(spark, indexDir)
     val tgt = ids.select(col(idCol).cast("long").as("id")).distinct()
       .join(idx.select(col("id")), Seq("id"), "left_semi")
@@ -663,7 +557,7 @@ object IncrementalDedup {
       tgt.join(g, Seq("id"), "left_anti")).localCheckpoint()
     val n = fresh.count()
     if (n == 0L) return 0L
-    writeSnap(spark, goneIdsDir(indexDir),
+    writeSnap(spark, indexDir, "gone_ids",
       gone0.fold(fresh)(g => g.unionByName(fresh)), Seq("id"))
     n
   }
@@ -681,14 +575,9 @@ object IncrementalDedup {
   def embedDedupRemove(spark: SparkSession, indexDir: String, ids: DataFrame,
       idCol: String = "vec_id"): Long =
       graft.util.WriterLease.withLease(spark, indexDir, "embedDedupRemove") {
-    val vecsDir = s"$indexDir/vecs"
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(vecsDir)) || indexBytes(fs, vecsDir) == 0L)
-      return 0L
-    val vecsTable = indexTableName(indexDir, "vecs")
-    val idx = if (spark.catalog.tableExists(vecsTable)) spark.table(vecsTable)
-      else spark.read.parquet(vecsDir)
+    val ivf = part(spark, indexDir, "ivf")
+    if (ivf.bytes("vecs") == 0L) return 0L
+    val idx = readPart(spark, ivf, "vecs")
     val gone0 = goneIds(spark, indexDir)
     val tgt = ids.select(col(idCol).cast("long").as("id")).distinct()
       .join(idx.select(col("id")), Seq("id"), "left_semi")
@@ -696,7 +585,7 @@ object IncrementalDedup {
       tgt.join(g, Seq("id"), "left_anti")).localCheckpoint()
     val n = fresh.count()
     if (n == 0L) return 0L
-    writeSnap(spark, goneIdsDir(indexDir),
+    writeSnap(spark, indexDir, "gone_ids",
       gone0.fold(fresh)(g => g.unionByName(fresh)), Seq("id"))
     n
   }
@@ -729,24 +618,159 @@ object IncrementalDedup {
     s"graft_ndidx_${part}_$h"
   }
 
-  /** Read an index table bucketed; (re)register the external table over
-    * the existing files when this session's catalog doesn't know it yet
-    * (schema rediscovered from the parquet footers — same DDL, same
-    * buckets, so the files are reinterpreted identically). */
-  private def bucketedIndexTable(spark: SparkSession, dir: String,
-      table: String, bucketCols: Seq[String], buckets: Int): DataFrame = {
-    if (!spark.catalog.tableExists(table)) {
-      val ddl = spark.read.parquet(dir).schema.toDDL
-      val cols = bucketCols.mkString(", ")
-      spark.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-        s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS " +
-        s"LOCATION '$dir'")
+  // ------------------------------------------------ durable index PARTS
+
+  /** One part of an index (see the layout in the object doc) with its
+    * head resolved once: `raw` is the newest version, `head` the live one
+    * (None when the part was never committed or its head is a
+    * tombstone). */
+  private final case class Part(indexDir: String, vd: VersionedDir,
+      raw: Option[VersionedDir.Head]) {
+    val head: Option[VersionedDir.Head] = raw.filterNot(_.tombstone)
+    def bucketed: Boolean = head.exists(_.bucketBy.nonEmpty)
+
+    /** the catalog name of the bucketed table `table` */
+    def catalogName(table: String): String = indexTableName(indexDir, table)
+
+    /** the head's data dir */
+    def dir: String = head match {
+      case Some(h) => vd.path(h.dataDirs.head)
+      case None => throw new IllegalStateException(
+        s"no committed version at ${vd.dir}")
     }
-    spark.table(table)
+
+    /** the head's table `table` */
+    def path(table: String): String = s"$dir/$table"
+
+    /** bytes of the head's table `table`, 0 when there is none */
+    def bytes(table: String): Long =
+      if (head.isEmpty) 0L else indexBytes(vd.fs, path(table))
+
+    def next(): vd.Next = vd.next(raw.map(_.version))
+
+    /** the part after committing `h` */
+    def committed(h: VersionedDir.Head): Part = Part(indexDir, vd, Some(h))
   }
 
-  /** Append one batch's rows to a bucketed index table (creates the
-    * table on first append). The pre-write repartition uses the SAME
+  private def part(spark: SparkSession, indexDir: String, name: String): Part = {
+    val vd = VersionedDir(new Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(indexDir, name))
+    Part(indexDir, vd, vd.head)
+  }
+
+  /** The head's table `table` of part `p`: through its catalog table
+    * when the head is bucketed — registered over exactly the committed
+    * dir, so a table another session (or a crash) left over an older
+    * version is replaced — else as plain parquet. */
+  private def readPart(spark: SparkSession, p: Part, table: String): DataFrame =
+    p.head match {
+      case Some(h) if h.bucketBy.nonEmpty =>
+        val path = p.path(table)
+        val name = p.catalogName(table)
+        registerBucketed(spark, name, path, h,
+          spark.read.parquet(path).schema)
+        spark.table(name)
+      case _ => spark.read.parquet(p.path(table))
+    }
+
+  /** (Re-)register the external bucketed table `name` over `path` unless
+    * it already points there (data dirs are UUID-named, so the dir name
+    * identifies the version). Spark's bucketing contract puts the bucket
+    * spec in the catalog, not the files; the head carries it. */
+  private def registerBucketed(spark: SparkSession, name: String, path: String,
+      h: VersionedDir.Head, schema: => StructType): Unit = {
+    val at = try Some(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(name)).location.getPath)
+      catch { case _: org.apache.spark.sql.catalyst.analysis
+        .NoSuchTableException => None }
+    val rel = new Path(path).toUri.getPath.stripSuffix("/")
+    if (!at.exists(_.stripSuffix("/").endsWith(rel))) {
+      val cols = h.bucketBy.mkString(", ")
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"CREATE TABLE $name (${schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO ${h.buckets} BUCKETS " +
+        s"LOCATION '$path'")
+    }
+  }
+
+  /** Write `df` as the table at `path` — bucketed on `bucketBy` into
+    * `buckets` buckets when nonEmpty (bucketed writes need a catalog
+    * table: a transient one, dropped after; the files stay) — and return
+    * the schema a catalog table over it has. The repartition on the
+    * bucket keys makes each task write exactly one bucket's file. */
+  private def writeTable(spark: SparkSession, df: DataFrame, path: String,
+      name: String, bucketBy: Seq[String], buckets: Int): StructType = {
+    if (bucketBy.isEmpty) df.write.parquet(path)
+    else {
+      val tmp = name + "_tmp"
+      spark.sql(s"DROP TABLE IF EXISTS $tmp")
+      df.repartition(buckets, bucketBy.map(col): _*)
+        .write.format("parquet").option("path", path)
+        .bucketBy(buckets, bucketBy.head, bucketBy.tail: _*)
+        .sortBy(bucketBy.head, bucketBy.tail: _*)
+        .saveAsTable(tmp)
+      spark.sql(s"DROP TABLE $tmp")
+    }
+    StructType(df.schema.map(_.copy(nullable = true)))
+  }
+
+  /** Commit a COMPLETE new version of part `p`: `write` fills the new
+    * data dir (given its path; it returns the schema of the table
+    * `table`), one meta rename commits it with the bucketing, and a
+    * bucketed `table` is registered over it. */
+  private def commitVersion(spark: SparkSession, p: Part, table: String,
+      bucketBy: Seq[String], buckets: Int)(
+      write: String => StructType): Part = {
+    val next = p.next()
+    val dataDir = next.dataDir()
+    val schema = write(p.vd.path(dataDir))
+    val q = p.committed(p.vd.commit(next, Seq(dataDir), bucketBy, buckets))
+    if (bucketBy.nonEmpty)
+      registerBucketed(spark, p.catalogName(table), q.path(table), q.head.get,
+        schema)
+    q
+  }
+
+  /** Rewrite part `p` as a new version whose table `table` is `df`
+    * (bucketed per `bucketBy`/`buckets`), carrying the head's other
+    * tables `carry` over by file copy. */
+  private def rewrite(spark: SparkSession, p: Part, table: String,
+      df: DataFrame, bucketBy: Seq[String], buckets: Int,
+      carry: Seq[String] = Nil): Part =
+    commitVersion(spark, p, table, bucketBy, buckets) { dir =>
+      carry.foreach(t => FileUtil.copy(p.vd.fs, new Path(p.path(t)),
+        p.vd.fs, new Path(dir, t), false,
+        spark.sparkContext.hadoopConfiguration))
+      writeTable(spark, df, s"$dir/$table", p.catalogName(table), bucketBy,
+        buckets)
+    }
+
+  /** One-time layout promotion at the size gate: `p` with its table
+    * `table` rewritten BUCKETED when it is still plain and holds at least
+    * `threshold` bytes (the other tables carried over), else `p`. */
+  private def promoted(spark: SparkSession, p: Part, table: String,
+      bucketBy: Seq[String], buckets: Int, threshold: Long,
+      carry: Seq[String] = Nil): Part =
+    if (p.head.isEmpty || p.bucketed || p.bytes(table) < threshold) p
+    else rewrite(spark, p, table, readPart(spark, p, table), bucketBy,
+      buckets, carry)
+
+  /** Append `df` to the head's table `table` (bucketed through the
+    * catalog table when the head is); a part with no version yet commits
+    * its first one with `df` as the table. */
+  private def appendPart(spark: SparkSession, p: Part, table: String,
+      df: DataFrame): Unit = p.head match {
+    case Some(h) if h.bucketBy.nonEmpty =>
+      readPart(spark, p, table) // (re-)registers the table over the head
+      appendBucketed(spark, df, p.path(table), p.catalogName(table),
+        h.bucketBy, h.buckets)
+    case Some(_) => df.write.mode("append").parquet(p.path(table))
+    case None => rewrite(spark, p, table, df, Nil, 0)
+  }
+
+  /** Append one batch's rows to a bucketed index table. The pre-write
+    * repartition uses the SAME
     * hash keys and partition count as the bucket spec, so each task
     * holds exactly one bucket's rows and writes exactly one file —
     * without it, bucketed writes emit one file per (task × bucket
@@ -785,10 +809,16 @@ object IncrementalDedup {
     *     is lossless under any fixed centroid set, so model quality
     *     only affects pruning efficiency, never recall;
     *   - `radii/`: per-cell max member-to-centroid angle over every
-    *     vector ever seen — radii only GROW (max-merge per batch), so
-    *     the triangle-inequality bound stays valid as cells accumulate
+    *     vector ever seen — radii only GROW, so each batch APPENDS its
+    *     merged map and a read takes the max per cell; the
+    *     triangle-inequality bound stays valid as cells accumulate
     *     members beyond the fit sample;
     *   - `vecs/`: (id, e, cell) for every vector ever seen.
+    *
+    * The three are ONE version of the `ivf` part: the first batch
+    * commits them together, later batches append to the head's radii
+    * and vecs, and every rewrite (promotion, compaction, the model
+    * refresh) commits a new complete triple.
     *
     * A batch assigns against the frozen centroids, prunes cell pairs
     * with the UPDATED radii, verifies exact cosine inside the cell-pair
@@ -811,18 +841,8 @@ object IncrementalDedup {
       bucketReadThresholdBytes: Long = 256L << 20): DataFrame =
       graft.util.WriterLease.withLease(spark, indexDir, "embedDedupAppend") {
     import graft.functions.functions.cosine_similarity
-    val vecsDir = s"$indexDir/vecs"
-    val modelDir = s"$indexDir/model"
-    val radiiDir = s"$indexDir/radii"
-    val vecsTable = indexTableName(indexDir, "vecs")
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a compaction-time model refresh interrupted mid-commit must finish
-    // before this batch reads the (model, radii, vecs) triple
-    recoverIvfRefresh(spark, fs, indexDir)
-    val haveIndex = fs.exists(new Path(modelDir)) &&
-      indexBytes(fs, vecsDir) > 0
-    if (!haveIndex) spark.sql(s"DROP TABLE IF EXISTS $vecsTable")
+    val ivf0 = part(spark, indexDir, "ivf")
+    val haveIndex = ivf0.bytes("vecs") > 0
 
     // tombstoned ids ([[embedDedupRemove]]): index rows stop suppressing,
     // batch rows carrying a tombstoned id are already-seen (dropped,
@@ -832,12 +852,8 @@ object IncrementalDedup {
       broadcast(g.withColumnRenamed("id", idCol)), Seq(idCol), "left_anti"))
 
     val model =
-      if (haveIndex) loadCentroids(spark, modelDir)
-      else {
-        val m = IVF.fit(batchLive, cells, sampleN, iters, seed, idCol, embCol)
-        saveCentroids(spark, modelDir, m)
-        m
-      }
+      if (haveIndex) loadCentroids(spark, ivf0.path("model"))
+      else IVF.fit(batchLive, cells, sampleN, iters, seed, idCol, embCol)
     val k = model.centroids.length
 
     // lazy: the batchRadii collect right below is the materializing
@@ -858,7 +874,7 @@ object IncrementalDedup {
       .collect().map(r => r.getInt(0) -> math.acos(clamp(r.getDouble(1))))
       .toMap
     val storedRadii: Map[Int, Double] =
-      if (haveIndex) loadRadii(spark, radiiDir) else Map.empty
+      if (haveIndex) loadRadii(spark, ivf0.path("radii")) else Map.empty
     val radii = (batchRadii.keySet ++ storedRadii.keySet).map(c =>
       c -> math.max(batchRadii.getOrElse(c, 0.0),
         storedRadii.getOrElse(c, 0.0))).toMap
@@ -886,14 +902,11 @@ object IncrementalDedup {
       col("cell").as("ca"))
     val droppedWithin = embedDroppedVs(xWithin, yb, cellPairs,
       ordered = true, threshold)
+    val ivf = if (!haveIndex) ivf0 else promoted(spark, ivf0, "vecs",
+      Seq("cell"), indexBuckets, bucketReadThresholdBytes,
+      carry = Seq("model", "radii"))
     val dropped = (if (haveIndex) {
-      val hist =
-        if (spark.catalog.tableExists(vecsTable)) spark.table(vecsTable)
-        else if (indexBytes(fs, vecsDir) >= bucketReadThresholdBytes) {
-          promoteToBucketed(spark, fs, vecsDir, vecsTable, Seq("cell"),
-            indexBuckets)
-          spark.table(vecsTable)
-        } else spark.read.parquet(vecsDir)
+      val hist = readPart(spark, ivf, "vecs")
       val histLive = gone.fold(hist)(g =>
         hist.join(broadcast(g), Seq("id"), "left_anti"))
       val xCross = histLive.select(col("id").as("id_a"), col("e").as("e_a"),
@@ -906,15 +919,18 @@ object IncrementalDedup {
         dropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
       .localCheckpoint() // decided BEFORE the index grows below
     if (!placeable.isEmpty) {
-      // radii BEFORE vectors: a crash in between leaves radii covering
-      // vectors not yet indexed — conservatively large, still lossless.
-      // The reverse order could leave indexed vectors OUTSIDE the stored
-      // radii, silently losing recall on every later batch.
-      saveRadii(spark, radiiDir, radii)
-      if (spark.catalog.tableExists(vecsTable))
-        appendBucketed(spark, placeable, vecsDir, vecsTable, Seq("cell"),
-          indexBuckets)
-      else placeable.write.mode("append").parquet(vecsDir)
+      if (haveIndex) {
+        // radii BEFORE vectors: a crash in between leaves radii covering
+        // vectors not yet indexed — conservatively large, still lossless.
+        // The reverse order could leave indexed vectors OUTSIDE the
+        // stored radii, silently losing recall on every later batch.
+        saveRadii(spark, ivf.path("radii"), radii, "append")
+        appendPart(spark, ivf, "vecs", placeable)
+      } else commitVersion(spark, ivf, "vecs", Nil, 0) { dir =>
+        saveCentroids(spark, s"$dir/model", model)
+        saveRadii(spark, s"$dir/radii", radii)
+        writeTable(spark, placeable, s"$dir/vecs", "", Nil, 0)
+      }
     }
     kept
   }
@@ -945,8 +961,7 @@ object IncrementalDedup {
     import spark.implicits._
     model.centroids.zipWithIndex.flatMap { case (c, i) =>
       c.zipWithIndex.map { case (v, p) => (i, p, v) }
-    }.toSeq.toDF("cell", "pos", "v").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
+    }.toSeq.toDF("cell", "pos", "v").coalesce(1).write.parquet(dir)
   }
 
   private def loadCentroids(spark: SparkSession, dir: String): IVF.Model = {
@@ -959,17 +974,20 @@ object IncrementalDedup {
     IVF.Model(cents)
   }
 
-  /** radii are k tiny driver-held rows: rewritten whole per batch */
+  /** radii are k tiny driver-held rows: one file per write (`mode`
+    * append adds a batch's merged map to the head's) */
   private def saveRadii(spark: SparkSession, dir: String,
-      radii: Map[Int, Double]): Unit = {
+      radii: Map[Int, Double], mode: String = "errorifexists"): Unit = {
     import spark.implicits._
     radii.toSeq.toDF("cell", "radius").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
+      .write.mode(mode).parquet(dir)
   }
 
+  /** the max radius per cell over every file written */
   private def loadRadii(spark: SparkSession, dir: String): Map[Int, Double] =
     spark.read.parquet(dir).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      .map(r => r.getInt(0) -> r.getDouble(1))
+      .groupMapReduce(_._1)(_._2)(math.max)
 
   // -------------------------------------------- incremental span dedup
 
@@ -1002,21 +1020,13 @@ object IncrementalDedup {
       indexBuckets: Int = 32,
       bucketReadThresholdBytes: Long = 256L << 20): DataFrame =
       graft.util.WriterLease.withLease(spark, indexDir, "spanDedupAppend") {
-    val gramsDir = s"$indexDir/grams"
-    val table = indexTableName(indexDir, "grams")
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val haveIndex = fs.exists(new Path(gramsDir)) &&
-      indexBytes(fs, gramsDir) > 0
-    if (!haveIndex) spark.sql(s"DROP TABLE IF EXISTS $table")
+    val grams0 = part(spark, indexDir, "grams")
+    val haveIndex = grams0.bytes("grams") > 0
     // size gate as dedupAppend: plain while small, promoted once into a
     // table BUCKETED on `h` — both the duplicated-hash semi join and the
     // novel-hash anti join then read the index co-located on their key
-    val bucketed = haveIndex && (spark.catalog.tableExists(table) ||
-      (indexBytes(fs, gramsDir) >= bucketReadThresholdBytes && {
-        promoteToBucketed(spark, fs, gramsDir, table, Seq("h"), indexBuckets)
-        true
-      }))
+    val grams = if (!haveIndex) grams0 else promoted(spark, grams0, "grams",
+      Seq("h"), indexBuckets, bucketReadThresholdBytes)
     // lazy: the eager `spans` checkpoint below is the single
     // materializing job for the whole per-batch tree (g is shared by the
     // duplicated-span join and, via distinctH, both index lookups — the
@@ -1038,8 +1048,7 @@ object IncrementalDedup {
     // from a crash re-run remain harmless — lookups are left_semi — and
     // compactIndex cleans them)
     val (dupH, novelH) = if (haveIndex) {
-      val (dupSemi, novelAnti) =
-        spanIndexLookups(spark, indexDir, distinctH, bucketed)
+      val (dupSemi, novelAnti) = spanIndexLookups(spark, indexDir, distinctH)
       (within.unionByName(dupSemi).distinct(),
         // lazy: consumed exactly once, by the index append's own write
         // job — whose scan of grams/ is planned (file list snapshotted)
@@ -1051,9 +1060,7 @@ object IncrementalDedup {
     val spans = Dedup.mergeSpanIslands(
         g.join(dupH, Seq("h"), "left_semi"), gram)
       .localCheckpoint() // decided BEFORE the index grows below
-    if (bucketed) appendBucketed(spark, novelH, gramsDir, table, Seq("h"),
-      indexBuckets)
-    else novelH.write.mode("append").parquet(gramsDir)
+    appendPart(spark, grams, "grams", novelH)
     spans
   }
 
@@ -1062,33 +1069,12 @@ object IncrementalDedup {
     * index scan arrives pre-partitioned on `h`, so only the batch's
     * distinct hashes shuffle (plan-pinned in IncrementalNearDedupSpec). */
   private[graft] def spanIndexLookups(spark: SparkSession, indexDir: String,
-      distinctH: DataFrame, bucketed: Boolean): (DataFrame, DataFrame) = {
-    val idx = if (bucketed) spark.table(indexTableName(indexDir, "grams"))
-      else spark.read.parquet(s"$indexDir/grams")
+      distinctH: DataFrame): (DataFrame, DataFrame) = {
+    val idx = readPart(spark, part(spark, indexDir, "grams"), "grams")
     (distinctH.join(idx, Seq("h"), "left_semi"),
       distinctH.join(idx, Seq("h"), "left_anti"))
   }
 
-  // --------------------------------------------------- index compaction
-
-  /** Rewrite every table of a dedup index to one row per DISTINCT entry —
-    * crash-rerun hygiene: an append that ran after its batch's result
-    * was materialized but crashed before completion can leave duplicate
-    * index rows on a re-run. Duplicates never change dedup decisions
-    * (every lookup is a semi/anti join), but they grow the index and its
-    * per-batch scan forever; one compaction pass reclaims them, like
-    * [[graft.sources.Layouts.compact]] does for corpora.
-    *
-    * Handles every index layout this module writes: the flat exact-dedup
-    * key table at `indexDir` itself, a `grams/` span index, and the
-    * bucketed `bands/`/`sigs/` near-dup tables (compacted THROUGH their
-    * catalog tables so the rewrite preserves the bucketed layout). The
-    * distinct result is materialized before the overwrite (an overwrite
-    * cannot read the files it replaces). Runs under the same
-    * single-writer contract as the appends — don't compact an index a
-    * concurrent batch is appending to.
-    *
-    * @return per compacted table: path -> (rowsBefore, rowsAfter) */
   // --------------------------------------------- incremental CLUSTERING
 
   /** Append-only near-duplicate CLUSTER maintenance — incremental
@@ -1116,7 +1102,8 @@ object IncrementalDedup {
     * number of merges ever), the pair set CONTRACTS to root space, and
     * [[Dedup.clusters]] runs on the contracted graph (old roots + new
     * ids — |batch pairs| edges). New ids append to `labels/`; moved
-    * roots append to `remaps/`. [[resolvedClusters]] equals the one-shot
+    * roots append to `remaps/` (both tables of the `clusters` part; the
+    * first batch commits its first version). [[resolvedClusters]] equals the one-shot
     * [[Dedup.clusters]] over the cumulative pair set EXACTLY (components
     * are order-free and min labels compose: the min of a merged
     * component is the min over its constituent roots) — pinned in
@@ -1133,11 +1120,23 @@ object IncrementalDedup {
   def clusterAppend(spark: SparkSession, indexDir: String, pairs: DataFrame,
       maxDriverEdges: Long = 1L << 18): Unit =
       graft.util.WriterLease.withLease(spark, indexDir, "clusterAppend") {
-    val labelsDir = s"$indexDir/labels"
-    val remapsDir = s"$indexDir/remaps"
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverCompactLeftover(fs, labelsDir)
+    val cl = part(spark, indexDir, "clusters")
+    val fs = cl.vd.fs
+    // no version yet: the batch fills a new data dir, committed after
+    val first = if (cl.head.isDefined) None
+      else { val next = cl.next(); Some((next, next.dataDir())) }
+    val dir = first.fold(cl.dir)(f => cl.vd.path(f._2))
+    clusterAppendTo(spark, fs, s"$dir/labels", s"$dir/remaps", pairs,
+      maxDriverEdges)
+    first.foreach { case (next, d) =>
+      if (fs.exists(new Path(dir))) cl.vd.commit(next, Seq(d))
+    }
+  }
+
+  /** [[clusterAppend]]'s body over the tables `labelsDir`/`remapsDir` */
+  private def clusterAppendTo(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, labelsDir: String,
+      remapsDir: String, pairs: DataFrame, maxDriverEdges: Long): Unit = {
     // Size-gated DRIVER fast path (optimization guide §1/§5 — the same
     // strategy choice Dedup.clusters makes): when the batch's pair set
     // fits the driver gate, the whole append runs as THREE bounded jobs
@@ -1221,11 +1220,9 @@ object IncrementalDedup {
     * merge-log closure. Equals the one-shot [[Dedup.clusters]] over the
     * cumulative pair multiset. */
   def resolvedClusters(spark: SparkSession, indexDir: String): DataFrame = {
-    recoverCompactLeftover(new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      s"$indexDir/labels")
-    val closure = remapClosure(spark, s"$indexDir/remaps")
-    spark.read.parquet(s"$indexDir/labels")
+    val cl = part(spark, indexDir, "clusters")
+    val closure = remapClosure(spark, cl.path("remaps"))
+    spark.read.parquet(cl.path("labels"))
       .join(closure, col("label") === closure("src"), "left")
       .select(col("id"), coalesce(col("dst"), col("label")).as("cluster_id"))
   }
@@ -1411,23 +1408,38 @@ object IncrementalDedup {
     m
   }
 
-  /** `refreshIvfModel`: opt-in RE-CLUSTER of the embedding index's frozen
-    * IVF model at compaction time. [[embedDedupAppend]] fits its
-    * centroids once on the first batch and freezes them — correct at any
-    * quality (the cell-pair bound is lossless under ANY fixed centroid
-    * set) but under DRIFT the first-batch model's cells skew: a few cells
-    * absorb most of the corpus and their ever-growing radii make the
-    * pruning keep almost every cell pair. The refresh rebuilds centroids
-    * from the index's OWN vectors (index-sized work, never a corpus
-    * rescan), re-assigns every indexed vector, and recomputes radii
-    * EXACTLY from the members (tighter than the grown running maxima).
-    * Dedup decisions are unaffected — past survivors are already
-    * recorded, and future batches verify exact cosine inside the (still
-    * lossless) pruned pairs; only pruning efficiency changes. The three
-    * dirs (model/radii/vecs) must stay mutually consistent, so the
-    * refresh stages complete copies first, then commits via a READY
-    * marker + per-dir swaps; [[recoverIvfRefresh]] replays an
-    * interrupted commit idempotently at the next lease acquisition. */
+  // --------------------------------------------------- index compaction
+
+  /** Rewrite every table of a dedup index to one row per DISTINCT entry —
+    * crash-rerun hygiene: an append that ran after its batch's result
+    * was materialized but crashed before completion can leave duplicate
+    * index rows on a re-run. Duplicates never change dedup decisions
+    * (every lookup is a semi/anti join), but they grow the index and its
+    * per-batch scan forever; one compaction pass reclaims them, like
+    * [[graft.sources.Layouts.compact]] does for corpora.
+    *
+    * Handles every part this module writes (see the object doc); a part
+    * keeps its layout (a bucketed part is compacted THROUGH its catalog
+    * table and rewritten bucketed). Each rewrite writes a complete new
+    * data dir and commits it with one meta rename, so readers and a
+    * crash see the old version or the new one. Runs under the same
+    * single-writer contract as the appends.
+    *
+    * `refreshIvfModel`: opt-in RE-CLUSTER of the embedding index's frozen
+    * IVF model. [[embedDedupAppend]] fits its centroids once on the first
+    * batch and freezes them — correct at any quality (the cell-pair bound
+    * is lossless under ANY fixed centroid set) but under DRIFT the
+    * first-batch model's cells skew: a few cells absorb most of the
+    * corpus and their ever-growing radii make the pruning keep almost
+    * every cell pair. The refresh rebuilds centroids from the index's OWN
+    * vectors (index-sized work, never a corpus rescan), re-assigns every
+    * indexed vector, and recomputes radii EXACTLY from the members
+    * (tighter than the grown running maxima). Dedup decisions are
+    * unaffected — past survivors are already recorded, and future batches
+    * verify exact cosine inside the (still lossless) pruned pairs; only
+    * pruning efficiency changes. The triple commits as one version.
+    *
+    * @return per compacted table: path -> (rowsBefore, rowsAfter) */
   def compactIndex(spark: SparkSession, indexDir: String,
       indexBuckets: Int = 32,
       refreshIvfModel: Boolean = false,
@@ -1435,97 +1447,47 @@ object IncrementalDedup {
       refreshIters: Int = 6,
       refreshSeed: Long = 42L): Map[String, (Long, Long)] =
       graft.util.WriterLease.withLease(spark, indexDir, "compactIndex") {
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def exists(p: String) = fs.exists(new Path(p))
     val out = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    recoverIvfRefresh(spark, fs, indexDir)
 
-    def compactPlain(dir: String,
+    // one part's table `table`, reported as `key`: distinct rows (after
+    // `xform`), rewritten in the head's layout when that drops any
+    def compact(name: String, table: String, key: String,
+        carry: Seq[String] = Nil,
         xform: DataFrame => DataFrame = identity): Unit = {
-      recoverCompactLeftover(fs, dir)
-      if (exists(dir)) {
-        val df = spark.read.parquet(dir)
-        val before = df.count()
-        val d = xform(df).distinct().localCheckpoint()
+      val p = part(spark, indexDir, name)
+      p.head.foreach { h =>
+        val src = readPart(spark, p, table)
+        val before = src.count()
+        val d = xform(src).distinct().localCheckpoint()
         val after = d.count()
-        if (after < before) swapInPlace(fs, dir, d)
-        out(dir) = (before, after)
+        if (after < before)
+          rewrite(spark, p, table, d, h.bucketBy, h.buckets, carry)
+        out(key) = (before, after)
       }
     }
-    def compactBucketed(dir: String, part: String, bucketCols: Seq[String],
-        xform: DataFrame => DataFrame = identity): Unit = if (exists(dir)) {
-      val table = indexTableName(indexDir, part)
-      val src = if (spark.catalog.tableExists(table)) spark.table(table)
-        else spark.read.parquet(dir)
-      val before = src.count()
-      val d = xform(src).distinct().localCheckpoint()
-      val after = d.count()
-      if (after < before) {
-        // same tmp-dir-then-swap discipline as promoteToBucketed: the
-        // compacted bucketed copy becomes durable at a sibling path while
-        // the live files stay put (the checkpointed `d` lives in executor
-        // storage — never the only copy of index state)
-        val tmp = new Path(dir + ".compact")
-        val tmpTable = table + "_tmp"
-        fs.delete(tmp, true)
-        spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-        d.write.mode("overwrite").format("parquet")
-          .option("path", tmp.toString)
-          .bucketBy(indexBuckets, bucketCols.head, bucketCols.tail: _*)
-          .sortBy(bucketCols.head, bucketCols.tail: _*)
-          .saveAsTable(tmpTable)
-        val ddl = spark.table(tmpTable).schema.toDDL
-        spark.sql(s"DROP TABLE $tmpTable") // external: the files stay put
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        fs.delete(new Path(dir), true)
-        if (!fs.rename(tmp, new Path(dir)))
-          throw new java.io.IOException(s"compaction rename $tmp -> $dir failed")
-        val cols = bucketCols.mkString(", ")
-        spark.sql(s"CREATE TABLE $table ($ddl) USING parquet " +
-          s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $indexBuckets BUCKETS " +
-          s"LOCATION '$dir'")
+
+    // exact-dedup keys. Outstanding [[dedupRemove]] tombstones drop
+    // PHYSICALLY here (the rewrite anti-joins them away) and the snapshot
+    // resets — after compaction every surviving index row is live again.
+    val gone = goneKeys(spark, indexDir)
+    val ra = readdedKeys(spark, indexDir)
+    compact("keys", "keys", indexDir, xform = df => {
+      val d1 = gone.fold(df)(g =>
+        df.join(broadcast(g), Seq("_h1", "_h2"), "left_anti"))
+      // re-admitted keys: keep only the CURRENT keeper's row — the
+      // stale pre-removal rows drop here, after which the ledger can
+      // clear (the plain index-row keeper match is exact again)
+      ra.fold(d1) { r =>
+        val idName = d1.columns.filterNot(Seq("_h1", "_h2").contains).head
+        d1.join(broadcast(r.withColumnRenamed("_id", "_ra_id")),
+            Seq("_h1", "_h2"), "left")
+          .filter(col("_ra_id").isNull || col("_ra_id") === col(idName))
+          .drop("_ra_id")
       }
-      out(dir) = (before, after)
-    }
-
-    // layout-aware: a dir whose catalog table exists compacts THROUGH
-    // the table (preserving the bucketed layout); a still-plain dir
-    // compacts as bare parquet and stays plain
-    def compactAuto(dir: String, part: String, bucketCols: Seq[String],
-        xform: DataFrame => DataFrame = identity): Unit =
-      if (spark.catalog.tableExists(indexTableName(indexDir, part)))
-        compactBucketed(dir, part, bucketCols, xform)
-      else compactPlain(dir, xform)
-
-    // flat exact-dedup index: parquet files directly under indexDir.
-    // Outstanding [[dedupRemove]] tombstones drop PHYSICALLY here (the
-    // rewrite anti-joins them away) and the snapshot resets — after
-    // compaction every surviving index row is live again.
-    val flatFiles = exists(indexDir) &&
-      fs.listStatus(new Path(indexDir)).exists(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (flatFiles) {
-      val gone = goneKeys(spark, indexDir)
-      val ra = readdedKeys(spark, indexDir)
-      compactAuto(indexDir, "keys", Seq("_h1", "_h2"), df => {
-        val d1 = gone.fold(df)(g =>
-          df.join(broadcast(g), Seq("_h1", "_h2"), "left_anti"))
-        // re-admitted keys: keep only the CURRENT keeper's row — the
-        // stale pre-removal rows drop here, after which the ledger can
-        // clear (the plain index-row keeper match is exact again)
-        ra.fold(d1) { r =>
-          val idName = d1.columns.filterNot(Seq("_h1", "_h2").contains).head
-          d1.join(broadcast(r.withColumnRenamed("_id", "_ra_id")),
-              Seq("_h1", "_h2"), "left")
-            .filter(col("_ra_id").isNull || col("_ra_id") === col(idName))
-            .drop("_ra_id")
-        }
-      })
-      if (gone.isDefined) dropGone(spark, indexDir)
-      if (ra.isDefined) dropSnap(spark, readdedDir(indexDir))
-    }
-    compactAuto(s"$indexDir/grams", "grams", Seq("h"))
+    })
+    if (gone.isDefined) dropSnap(spark, indexDir, "gone")
+    if (ra.isDefined) dropSnap(spark, indexDir, "readded")
+    compact("grams", "grams", s"$indexDir/grams")
     // id tombstones (nearDedupRemove / embedDedupRemove) drop PHYSICALLY
     // here from every id-keyed table — but the gone_ids snapshot itself
     // SURVIVES: ids are permanent handles, and a crash-replayed OLD
@@ -1536,21 +1498,18 @@ object IncrementalDedup {
     val goneI = goneIds(spark, indexDir)
     def dropIds(df: DataFrame): DataFrame =
       goneI.fold(df)(g => df.join(broadcast(g), Seq("id"), "left_anti"))
-    compactAuto(s"$indexDir/bands", "bands", Seq("band_idx", "band_hash"),
-      dropIds)
-    compactAuto(s"$indexDir/sigs", "sigs", Seq("id"), dropIds)
-    compactAuto(s"$indexDir/vecs", "vecs", Seq("cell"), dropIds)
+    compact("bands", "bands", s"$indexDir/bands", xform = dropIds)
+    compact("sigs", "sigs", s"$indexDir/sigs", xform = dropIds)
+    compact("ivf", "vecs", s"$indexDir/vecs", Seq("model", "radii"), dropIds)
     // opt-in IVF model re-cluster (see the method doc): rebuild
     // centroids from the index's own vectors, re-assign, recompute radii
-    // exactly, and commit the consistent (model, radii, vecs) triple via
-    // staged copies + READY marker
-    if (refreshIvfModel && exists(s"$indexDir/model") &&
-        indexBytes(fs, s"$indexDir/vecs") > 0) {
+    // exactly, and commit the consistent (model, radii, vecs) triple
+    val ivf = part(spark, indexDir, "ivf")
+    if (refreshIvfModel && ivf.bytes("vecs") > 0) {
       import graft.functions.functions.cosine_similarity
-      val vecsTable = indexTableName(indexDir, "vecs")
-      val oldModel = loadCentroids(spark, s"$indexDir/model")
-      val src = if (spark.catalog.tableExists(vecsTable)) spark.table(vecsTable)
-        else spark.read.parquet(s"$indexDir/vecs")
+      val h = ivf.head.get
+      val oldModel = loadCentroids(spark, ivf.path("model"))
+      val src = readPart(spark, ivf, "vecs")
       val nVecs = src.count()
       val m2 = IVF.fit(src, oldModel.centroids.length, refreshSampleN,
         refreshIters, refreshSeed, "id", "e")
@@ -1567,132 +1526,28 @@ object IncrementalDedup {
           element_at(centsLit, col("cell") + 1))).as("mc"))
         .collect().map(r => r.getInt(0) -> math.acos(clamp(r.getDouble(1))))
         .toMap
-      val stageModel = s"$indexDir/model.refresh"
-      val stageRadii = s"$indexDir/radii.refresh"
-      val stageVecs = s"$indexDir/vecs.refresh"
-      Seq(stageModel, stageRadii, stageVecs)
-        .foreach(p => fs.delete(new Path(p), true))
-      saveCentroids(spark, stageModel, m2)
-      saveRadii(spark, stageRadii, radii2)
-      // preserve the vecs layout: bucketed-by-cell when the catalog table
-      // exists (same bucket spec ⇒ the external table's metadata stays
-      // valid across the file swap), plain parquet otherwise
-      if (spark.catalog.tableExists(vecsTable)) {
-        val tmpTable = vecsTable + "_refresh"
-        spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-        // repartition by the bucket column first (the promoteToBucketed
-        // discipline): without it every input partition writes its own
-        // file per bucket and the refreshed layout fragments into up to
-        // partitions × buckets small files
-        reassigned.repartition(indexBuckets, col("cell"))
-          .write.mode("overwrite").format("parquet")
-          .option("path", stageVecs)
-          .bucketBy(indexBuckets, "cell").sortBy("cell")
-          .saveAsTable(tmpTable)
-        spark.sql(s"DROP TABLE $tmpTable") // external: the files stay put
-      } else reassigned.write.mode("overwrite").parquet(stageVecs)
-      // READY marker only after every staged copy is complete; the swaps
-      // below (and their crash recovery) are then idempotent
-      val marker = new Path(indexDir, IvfRefreshMarker)
-      val mo = fs.create(marker, true); mo.close()
-      commitIvfRefresh(fs, indexDir)
-      // the external table's LOCATION is unchanged but its files are
-      // new — drop Spark's cached file listing or the next reader
-      // resolves the swapped-out part files (observed FAILED_READ_FILE)
-      if (spark.catalog.tableExists(vecsTable))
-        spark.sql(s"REFRESH TABLE $vecsTable")
-      out(s"$indexDir/ivf.refresh") = (nVecs, nVecs)
+      // the vecs layout is preserved: bucketed-by-cell when the head is
+      commitVersion(spark, ivf, "vecs", h.bucketBy, h.buckets) { dir =>
+        saveCentroids(spark, s"$dir/model", m2)
+        saveRadii(spark, s"$dir/radii", radii2)
+        writeTable(spark, reassigned, s"$dir/vecs", ivf.catalogName("vecs"),
+          h.bucketBy, h.buckets)
+      }
+      out(s"$indexDir/ivf") = (nVecs, nVecs)
     }
     // incremental-cluster state: fold the merge log into labels/ so the
-    // read-time remap closure resets to depth zero. labels/ is the SOLE
-    // durable copy of every cluster membership ever recorded, so the
-    // folded copy is written to a sibling dir and rename-swapped (a plain
-    // overwrite deletes-then-writes: a crash mid-write would lose it
-    // unrecoverably, unlike clusterAppend whose contract is batch
-    // re-send). remaps/ is deleted only after the swap completes — a
-    // crash before that point replays the fold idempotently.
-    val remapsDir = s"$indexDir/remaps"
-    recoverCompactLeftover(fs, s"$indexDir/labels")
-    if (indexBytes(fs, remapsDir) > 0 && indexBytes(fs, s"$indexDir/labels") > 0) {
-      val before = spark.read.parquet(remapsDir).count()
+    // read-time remap closure resets to depth zero — a new version with
+    // the folded labels and no merge log
+    val cl = part(spark, indexDir, "clusters")
+    if (cl.bytes("remaps") > 0 && cl.bytes("labels") > 0) {
+      val before = spark.read.parquet(cl.path("remaps")).count()
       val folded = resolvedClusters(spark, indexDir)
         .select(col("id"), col("cluster_id").as("label")).localCheckpoint()
-      swapInPlace(fs, s"$indexDir/labels", folded)
-      fs.delete(new Path(remapsDir), true)
-      out(remapsDir) = (before, 0L)
+      commitVersion(spark, cl, "labels", Nil, 0)(dir =>
+        writeTable(spark, folded, s"$dir/labels", "", Nil, 0))
+      out(s"$indexDir/remaps") = (before, 0L)
     }
     out.toMap
-  }
-
-  /** Crash-safe in-place rewrite (the promoteToBucketed discipline): the
-    * new copy is written COMPLETE to a durable `.compact` sibling while
-    * the live files stay put, then swapped in with two metadata ops. At
-    * no point is the only durable copy a half-written dir; the window
-    * between delete and rename is healed by [[recoverCompactLeftover]]. */
-  private def swapInPlace(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, d: DataFrame): Unit = {
-    val tmp = new Path(dir + ".compact")
-    val dst = new Path(dir)
-    fs.delete(tmp, true) // leftovers of an interrupted earlier attempt
-    d.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"compaction rename $tmp -> $dir failed")
-  }
-
-  /** marker proving every `.refresh`-staged dir of an IVF model refresh
-    * is COMPLETE — swaps after it are replayable */
-  private val IvfRefreshMarker = "ivf.refresh.READY"
-
-  /** Swap each staged `.refresh` dir into place and drop the marker.
-    * Idempotent: a dir whose stage is already gone was swapped by the
-    * interrupted run. Only called with the marker present (all stages
-    * complete) — under the writer lease. */
-  private def commitIvfRefresh(fs: org.apache.hadoop.fs.FileSystem,
-      indexDir: String): Unit = {
-    Seq("model", "radii", "vecs").foreach { part =>
-      val stage = new Path(s"$indexDir/$part.refresh")
-      val live = new Path(s"$indexDir/$part")
-      if (fs.exists(stage)) {
-        fs.delete(live, true)
-        if (!fs.rename(stage, live)) throw new java.io.IOException(
-          s"IVF refresh rename $stage -> $live failed")
-      }
-    }
-    fs.delete(new Path(indexDir, IvfRefreshMarker), false)
-    ()
-  }
-
-  /** Heal an interrupted IVF model refresh at lease acquisition: with
-    * the READY marker present the staged triple is complete — finish the
-    * swaps; without it any leftover stage is an incomplete write — the
-    * live triple is authoritative, discard the stages. */
-  private def recoverIvfRefresh(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, indexDir: String): Unit = {
-    if (fs.exists(new Path(indexDir, IvfRefreshMarker))) {
-      commitIvfRefresh(fs, indexDir)
-      val vecsTable = indexTableName(indexDir, "vecs")
-      if (spark.catalog.tableExists(vecsTable))
-        spark.sql(s"REFRESH TABLE $vecsTable")
-    } else Seq("model", "radii", "vecs").foreach(p =>
-      fs.delete(new Path(s"$indexDir/$p.refresh"), true))
-  }
-
-  /** Heal an interrupted [[swapInPlace]]. Only-tmp-exists means the
-    * original was already deleted, which only happens AFTER the tmp copy
-    * is complete — rename it into place. Both-exist means the crash hit
-    * during the tmp write; the original is intact and authoritative
-    * (compaction is idempotent), so drop the partial tmp. */
-  private def recoverCompactLeftover(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Unit = {
-    val tmp = new Path(dir + ".compact")
-    val dst = new Path(dir)
-    if (fs.exists(tmp)) {
-      if (!fs.exists(dst)) {
-        if (!fs.rename(tmp, dst)) throw new java.io.IOException(
-          s"compaction recovery rename $tmp -> $dir failed")
-      } else fs.delete(tmp, true)
-    }
   }
 
   /** Fresh per-run index dir under java.io.tmpdir (test/query scaffold). */
@@ -1701,9 +1556,6 @@ object IncrementalDedup {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    // the sibling tombstone + re-admission snapshots go with it
-    dropGone(spark, dir)
-    dropSnap(spark, readdedDir(dir))
     dir
   }
 }

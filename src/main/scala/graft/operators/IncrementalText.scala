@@ -4,29 +4,37 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.VersionedDir
+
 /** Incremental retrieval-index maintenance — the durable sibling of
   * [[TextAnalysis.bm25]], following the durable-index discipline of
   * [[IncrementalDedup]]: a corpus should never be re-tokenized, so each
   * batch tokenizes once into a durable index and scoring runs against the
   * index alone.
   *
-  * Index layout under `indexDir` — one subdirectory per committed batch:
+  * Index layout under `indexDir`: `committed/` is a
+  * [[graft.util.VersionedDir]] whose head names the index's batch set,
+  * one data dir per batch:
   *
   * {{{
-  *   committed/<batchId>/tf/     (idCol, token, tf, ver)  inverted index
-  *   committed/<batchId>/dl/     (idCol, dl, ver, fp)     doc lengths (0
-  *                                                        for token-free
-  *                                                        docs) + content
-  *                                                        fingerprint
-  *   committed/<batchId>/gone/   (idCol, ver)             deletions
-  *   committed/<batchId>/stats/  (n_docs, total_dl, ver)  ADDITIVE deltas
+  *   committed/meta-<v>.json          the batch set of version v
+  *   committed/data-<v>-<uuid>/tf/    (idCol, token, tf, ver)  inverted index
+  *   committed/data-<v>-<uuid>/dl/    (idCol, dl, ver, fp)     doc lengths (0
+  *                                                             for token-free
+  *                                                             docs) + content
+  *                                                             fingerprint
+  *   committed/data-<v>-<uuid>/gone/  (idCol, ver)             deletions
+  *   committed/data-<v>-<uuid>/stats/ (n_docs, total_dl, ver)  ADDITIVE deltas
   * }}}
   *
-  * A batch is staged under `staging/<batchId>` and COMMITTED by a single
-  * directory rename — readers glob only the committed batch dirs, so a crash
-  * mid-append leaves staging garbage, never a half-indexed batch (the
-  * same all-or-nothing move [[graft.cache.ParquetQueryCache]] uses for
-  * state versions).
+  * A batch (an append, upsert or delete) writes its data dir complete and
+  * COMMITS by one meta rename naming the old set plus the new batch; a
+  * compaction commits a set of one. A reader resolves the head once and
+  * reads exactly its set, so a crash anywhere leaves the previous set or
+  * the new one, never a half-indexed batch or a partial corpus (the
+  * protocol [[graft.cache.ParquetQueryCache]] commits state versions
+  * with); superseded batch dirs age out through the deferred cleanup. The
+  * batch set's version is the batch's `ver` below.
   *
   * MUTATIONS, not just appends: every indexed doc-version carries `ver`
   * (the writing batch's sequence, allocated under the writer lease) and
@@ -51,46 +59,46 @@ import org.apache.spark.sql.functions._
   * only the matched docs, and the corpus stats are a sum over one tiny
   * row per batch. Nothing rescans the corpus, ever.
   *
-  * Single-writer contract (as in [[IncrementalDedup]]): parquet renames
-  * are not coordinated, so serialize appends/upserts/deletes/compactions
-  * per index (the writer lease enforces it — it also makes `ver`
-  * allocation race-free); readers may run concurrently with appends
-  * (they see the last committed prefix) but not with [[compactIndex]],
-  * which replaces batch dirs.
+  * Single-writer contract (as in [[IncrementalDedup]]): serialize
+  * appends/upserts/deletes/compactions per index (the writer lease
+  * enforces it — it also makes `ver` allocation race-free); readers take
+  * no lease and may run concurrently with any of them.
   */
 object IncrementalText {
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def committedDir(indexDir: String) = s"$indexDir/committed"
+  /** One resolved head of the index: the batch set every read of one
+    * call goes through, so a concurrent commit cannot mix two sets. */
+  private final case class Batches(vd: VersionedDir,
+      head: Option[VersionedDir.Head]) {
+    def nonEmpty: Boolean = dirs.nonEmpty
+    def dataDirs: Seq[String] = head.toSeq.flatMap(_.dataDirs)
+    def dirs: Seq[String] = dataDirs.map(vd.path)
 
-  private def hasBatches(spark: SparkSession, indexDir: String): Boolean = {
-    val fs = fsOf(spark, indexDir)
-    val p = new Path(committedDir(indexDir))
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+    /** the batch dirs' tables `sub` (explicit paths — a glob over a
+      * table only SOME batches have would throw) */
+    def sub(name: String): Seq[String] = dirs
+      .filter(d => vd.fs.exists(new Path(d, name))).map(d => s"$d/$name")
+
+    /** the next batch set's step: its version is the batch's `ver`,
+      * one past every committed batch (1 for the first) */
+    def next(): vd.Next = vd.next(head.map(_.version), atLeast = 1L)
   }
 
-  /** batch dirs currently committed that contain `sub` (explicit paths —
-    * a glob over a subdir only SOME batches have would throw) */
-  private def subDirs(spark: SparkSession, indexDir: String,
-      sub: String): Seq[String] = {
-    val fs = fsOf(spark, indexDir)
-    val p = new Path(committedDir(indexDir))
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath).toSeq
-      .filter(d => fs.exists(new Path(d, sub)))
-      .map(d => new Path(d, sub).toString)
+  private def batches(spark: SparkSession, indexDir: String): Batches = {
+    val vd = VersionedDir(fsOf(spark, indexDir), new Path(indexDir, "committed"))
+    Batches(vd, vd.head)
   }
 
   /** The id column's type, probed from ONE file footer of the first dl
     * dir (driver-side, no Spark job — mergeSchema=false inference reads
     * a single footer). Every table of one index shares the id type (one
     * writer), so one probe covers dl/tf/gone. */
-  private def idType(spark: SparkSession, indexDir: String, idCol: String)
+  private def idType(spark: SparkSession, b: Batches, idCol: String)
       : org.apache.spark.sql.types.DataType =
-    spark.read.parquet(subDirs(spark, indexDir, "dl").head)
-      .schema(idCol).dataType
+    spark.read.parquet(b.sub("dl").head).schema(idCol).dataType
 
   /** Explicit-schema read with back-compat defaults: batches written
     * before the mutation format lack ver/fp — under an explicit schema
@@ -101,26 +109,26 @@ object IncrementalText {
     * fixed cost on every append/upsert/delete/score (optimization guide
     * §1/§5: don't spend scheduler round-trips on schemas the writer
     * already knows). */
-  private def readDl(spark: SparkSession, indexDir: String,
+  private def readDl(spark: SparkSession, b: Batches,
       idCol: String): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
-      StructField(idCol, idType(spark, indexDir, idCol)),
+      StructField(idCol, idType(spark, b, idCol)),
       StructField("dl", LongType), StructField("ver", LongType),
       StructField("fp", LongType)))
-    spark.read.schema(schema).parquet(subDirs(spark, indexDir, "dl"): _*)
+    spark.read.schema(schema).parquet(b.sub("dl"): _*)
       .select(col(idCol), col("dl"),
         coalesce(col("ver"), lit(0L)).as("ver"), col("fp"))
   }
 
-  private def readTf(spark: SparkSession, indexDir: String,
+  private def readTf(spark: SparkSession, b: Batches,
       idCol: String): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
-      StructField(idCol, idType(spark, indexDir, idCol)),
+      StructField(idCol, idType(spark, b, idCol)),
       StructField("token", StringType), StructField("tf", LongType),
       StructField("ver", LongType)))
-    spark.read.schema(schema).parquet(subDirs(spark, indexDir, "tf"): _*)
+    spark.read.schema(schema).parquet(b.sub("tf"): _*)
       .select(col(idCol), col("token"), col("tf"),
         coalesce(col("ver"), lit(0L)).as("ver"))
   }
@@ -133,58 +141,31 @@ object IncrementalText {
     org.apache.spark.sql.types.StructField("ver",
       org.apache.spark.sql.types.LongType)))
 
-  private def readStats(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.schema(statsSchema)
-      .parquet(subDirs(spark, indexDir, "stats"): _*)
+  private def readStats(spark: SparkSession, b: Batches): DataFrame =
+    spark.read.schema(statsSchema).parquet(b.sub("stats"): _*)
 
-  private def readGone(spark: SparkSession, indexDir: String,
+  private def readGone(spark: SparkSession, b: Batches,
       idCol: String): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    val dirs = subDirs(spark, indexDir, "gone")
+    val dirs = b.sub("gone")
     if (dirs.isEmpty) None
     else {
       val schema = StructType(Seq(
-        StructField(idCol, idType(spark, indexDir, idCol)),
+        StructField(idCol, idType(spark, b, idCol)),
         StructField("ver", LongType)))
       Some(spark.read.schema(schema).parquet(dirs: _*)
         .select(col(idCol), col("ver")))
     }
   }
 
-  /** committed batch dirs are named `v<%016d ver>_<uuid>` so the next
-    * version is readable from the LISTING alone (no Spark job per
-    * mutation); legacy names fall back to the stats read below */
-  private val verName = """^v(\d{16})_.*""".r
-
-  /** next batch sequence — one past the highest committed (batch dir
-    * names carry their ver; legacy/pre-mutation dirs fall back to the
-    * stats rows, counting as 0). Safe because every writer holds the
-    * lease. */
-  private def nextVer(spark: SparkSession, indexDir: String): Long =
-    if (!hasBatches(spark, indexDir)) 1L
-    else {
-      val fs = fsOf(spark, indexDir)
-      val names = fs.listStatus(new Path(committedDir(indexDir)))
-        .map(_.getPath.getName).toSeq
-      val parsed = names.map {
-        case verName(v) => Some(v.toLong)
-        case _ => None
-      }
-      if (parsed.forall(_.isDefined)) parsed.flatten.max + 1L
-      else {
-        val st = readStats(spark, indexDir)
-        st.agg(max(coalesce(col("ver"), lit(0L)))).first().getLong(0) + 1L
-      }
-    }
-
   /** LIVE doc-versions among `ids` (or all docs when None): for each id
     * the highest-ver row across dl ∪ gone wins; a gone winner means the
     * doc is deleted and yields no row. Output: (idCol, ver, dl, fp). */
-  private def liveDocs(spark: SparkSession, indexDir: String, idCol: String,
+  private def liveDocs(spark: SparkSession, b: Batches, idCol: String,
       ids: Option[DataFrame]): DataFrame = {
-    val dl0 = readDl(spark, indexDir, idCol)
+    val dl0 = readDl(spark, b, idCol)
     val dl = ids.fold(dl0)(i => dl0.join(i, Seq(idCol), "left_semi"))
-    val cand = readGone(spark, indexDir, idCol) match {
+    val cand = readGone(spark, b, idCol) match {
       case None => dl.withColumn("alive", lit(true))
       case Some(g0) =>
         val g = ids.fold(g0)(i => g0.join(i, Seq(idCol), "left_semi"))
@@ -205,8 +186,9 @@ object IncrementalText {
     * versions of the SAME doc id) */
   private def fpCol(textCol: String) = xxhash64(col(textCol))
 
-  /** tokenize + stage + commit one batch of `docs` (already deduped, one
-    * row per id) stamped with `ver`; the batch's additive stats row
+  /** tokenize + write + commit one batch of `docs` (already deduped, one
+    * row per id) onto the set `b`, stamped with the batch's `ver`; the
+    * batch's additive stats row
     * carries `statsDocsDelta` docs and (Σ dl − `statsDlAdjust`) length.
     * Returns the indexed count.
     *
@@ -214,10 +196,11 @@ object IncrementalText {
     * (it also materializes the lazy checkpoint) — the former separate
     * count()-then-sum() pair cost a scheduler round-trip per mutation
     * for identical answers. */
-  private def commitBatch(spark: SparkSession, indexDir: String,
-      docs: DataFrame, textCol: String, idCol: String, ver: Long,
+  private def commitBatch(spark: SparkSession, b: Batches,
+      docs: DataFrame, textCol: String, idCol: String,
       statsDocsDelta: Long, statsDlAdjust: Long = 0L): Long = {
-    val fs = fsOf(spark, indexDir)
+    val next = b.next()
+    val ver = next.version
     val toks = docs
       .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("token"))
       .filter(col("token") =!= "")
@@ -242,9 +225,8 @@ object IncrementalText {
     val n = head.getLong(0)
     if (n == 0L) return 0L
     val dlDelta = head.getLong(1) - statsDlAdjust
-    val batchId = "v%016d_".format(ver) +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = s"$indexDir/staging/$batchId"
+    val batch = next.dataDir()
+    val out = b.vd.path(batch)
     // token-sorted within files so parquet row-group stats prune scoring
     // scans of terms the file does not contain
     // tf stays at the shuffle's own parallelism (NOT size-coalesced):
@@ -253,15 +235,12 @@ object IncrementalText {
     // sort and the parquet encode — and serializing that into one task
     // cost more than the saved task commits (bench A/B: text family
     // +16-34% with the coalesce vs +10% machine drift; reverted)
-    tf.sortWithinPartitions(col("token")).write.parquet(s"$staging/tf")
-    dl.write.parquet(s"$staging/dl")
+    tf.sortWithinPartitions(col("token")).write.parquet(s"$out/tf")
+    dl.write.parquet(s"$out/dl")
     spark.range(1).select(lit(statsDocsDelta).as("n_docs"),
       lit(dlDelta).as("total_dl"), lit(ver).as("ver"))
-      .coalesce(1).write.parquet(s"$staging/stats")
-    val dest = new Path(s"${committedDir(indexDir)}/$batchId")
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(new Path(staging), dest),
-      s"commit rename failed for batch $batchId")
+      .coalesce(1).write.parquet(s"$out/stats")
+    b.vd.commit(next, b.dataDirs :+ batch)
     n
   }
 
@@ -281,16 +260,15 @@ object IncrementalText {
     // the novelty anti-join then runs over one row per id, and the
     // checkpoint feeds commitBatch without recomputing the join
     val docsIn = batch.groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-    val novelDocs = (if (hasBatches(spark, indexDir))
-        docsIn.join(liveDocs(spark, indexDir, idCol,
+    val b = batches(spark, indexDir)
+    val novelDocs = (if (b.nonEmpty)
+        docsIn.join(liveDocs(spark, b, idCol,
           Some(docsIn.select(col(idCol)))).select(col(idCol)),
           Seq(idCol), "left_anti")
       else docsIn).localCheckpoint(eager = false) // count() materializes
     val n = novelDocs.count()
     if (n == 0L) return 0L
-    val ver = nextVer(spark, indexDir)
-    commitBatch(spark, indexDir, novelDocs, textCol, idCol, ver,
-      statsDocsDelta = n)
+    commitBatch(spark, b, novelDocs, textCol, idCol, statsDocsDelta = n)
   }
 
   /** UPSERT one batch: novel ids are indexed like [[bm25Append]], ids
@@ -306,17 +284,18 @@ object IncrementalText {
       textCol: String = "text", idCol: String = "doc_id"): (Long, Long) =
       graft.util.WriterLease.withLease(spark, indexDir, "bm25Upsert") {
     val docsIn = batch.groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-    if (!hasBatches(spark, indexDir)) {
+    val b = batches(spark, indexDir)
+    if (!b.nonEmpty) {
       // first batch: every doc is novel
       val docs = docsIn.localCheckpoint(eager = false)
       val n0 = docs.count()
       if (n0 == 0L) return (0L, 0L)
-      val n = commitBatch(spark, indexDir, docs, textCol, idCol,
-        ver = 1L, statsDocsDelta = n0)
+      val n = commitBatch(spark, b, docs, textCol, idCol,
+        statsDocsDelta = n0)
       return (n, 0L)
     }
     val ids = docsIn.select(col(idCol))
-    val live = liveDocs(spark, indexDir, idCol, Some(ids))
+    val live = liveDocs(spark, b, idCol, Some(ids))
       .select(col(idCol), col("dl").as("_old_dl"), col("fp").as("_old_fp"))
     // novel: no live version; changed: live fp differs from the batch's
     val joined = docsIn.join(live, Seq(idCol), "left")
@@ -334,10 +313,8 @@ object IncrementalText {
     val changed = total - novel
     if (total == 0L) return (0L, 0L)
     val supersededDl = head.getLong(2)
-    val ver = nextVer(spark, indexDir)
-    commitBatch(spark, indexDir,
-      toIndex.select(col(idCol), col(textCol)), textCol, idCol, ver,
-      statsDocsDelta = novel, statsDlAdjust = supersededDl)
+    commitBatch(spark, b, toIndex.select(col(idCol), col(textCol)), textCol,
+      idCol, statsDocsDelta = novel, statsDlAdjust = supersededDl)
     (novel, changed)
   }
 
@@ -349,12 +326,12 @@ object IncrementalText {
   def bm25Delete(spark: SparkSession, indexDir: String, ids: DataFrame,
       idCol: String = "doc_id"): Long =
       graft.util.WriterLease.withLease(spark, indexDir, "bm25Delete") {
-    if (!hasBatches(spark, indexDir)) return 0L
-    val fs = fsOf(spark, indexDir)
+    val b = batches(spark, indexDir)
+    if (!b.nonEmpty) return 0L
     // size-coalesced (see commitBatch): the tombstone write below reuses
     // this checkpoint's layout
     val targets = graft.util.SizedWrites.sizeCoalesced(
-        liveDocs(spark, indexDir, idCol,
+        liveDocs(spark, b, idCol,
           Some(ids.select(col(idCol)).distinct())))
       .localCheckpoint(eager = false) // the agg below materializes
     // one aggregation job for count + deleted length (was two)
@@ -363,19 +340,15 @@ object IncrementalText {
     val n = head.getLong(0)
     if (n == 0L) return 0L
     val deletedDl = head.getLong(1)
-    val ver = nextVer(spark, indexDir)
-    val batchId = "v%016d_".format(ver) +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = s"$indexDir/staging/$batchId"
+    val next = b.next()
+    val ver = next.version
+    val batch = next.dataDir()
     targets.select(col(idCol), lit(ver).as("ver"))
-      .write.parquet(s"$staging/gone")
+      .write.parquet(s"${b.vd.path(batch)}/gone")
     spark.range(1).select(lit(-n).as("n_docs"),
       lit(-deletedDl).as("total_dl"), lit(ver).as("ver"))
-      .coalesce(1).write.parquet(s"$staging/stats")
-    val dest = new Path(s"${committedDir(indexDir)}/$batchId")
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(new Path(staging), dest),
-      s"commit rename failed for delete batch $batchId")
+      .coalesce(1).write.parquet(s"${b.vd.path(batch)}/stats")
+    b.vd.commit(next, b.dataDirs :+ batch)
     n
   }
 
@@ -389,18 +362,19 @@ object IncrementalText {
       topK: Int = 20, idCol: String = "doc_id"): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms == queryTerms.distinct, "queryTerms must be distinct")
-    require(hasBatches(spark, indexDir), s"empty index at $indexDir")
-    val tf0 = readTf(spark, indexDir, idCol)
+    val set = batches(spark, indexDir)
+    require(set.nonEmpty, s"empty index at $indexDir")
+    val tf0 = readTf(spark, set, idCol)
       .filter(col("token").isin(queryTerms: _*))
     // drop superseded/deleted doc-versions: join on (id, ver) against
     // the live set of exactly the matched ids
-    val live = liveDocs(spark, indexDir, idCol,
+    val live = liveDocs(spark, set, idCol,
       Some(tf0.select(col(idCol)).distinct()))
     val tf = tf0.join(live.select(col(idCol), col("ver")),
       Seq(idCol, "ver"), "left_semi")
       .select(col(idCol), col("token"), col("tf"))
     val dl = live.select(col(idCol), col("dl"))
-    val stats = readStats(spark, indexDir)
+    val stats = readStats(spark, set)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_dl")).as("total_dl"))
       .select(col("n_docs"),
         (col("total_dl").cast("double") / col("n_docs").cast("double"))
@@ -419,19 +393,20 @@ object IncrementalText {
       queryTerms: DataFrame, perLeg: Int = 50,
       k1: Double = 1.2, b: Double = 0.75,
       idCol: String = "doc_id", qidCol: String = "qid"): DataFrame = {
-    require(hasBatches(spark, indexDir), s"empty index at $indexDir")
+    val set = batches(spark, indexDir)
+    require(set.nonEmpty, s"empty index at $indexDir")
     val termList = queryTerms.select(col("token")).distinct()
       .collect().map(_.getString(0)).toSeq
     require(termList.nonEmpty, "queryTerms must be non-empty")
-    val tf0 = readTf(spark, indexDir, idCol)
+    val tf0 = readTf(spark, set, idCol)
       .filter(col("token").isin(termList: _*))
-    val live = liveDocs(spark, indexDir, idCol,
+    val live = liveDocs(spark, set, idCol,
       Some(tf0.select(col(idCol)).distinct()))
     val tf = tf0.join(live.select(col(idCol), col("ver")),
       Seq(idCol, "ver"), "left_semi")
       .select(col(idCol), col("token"), col("tf"))
     val dl = live.select(col(idCol), col("dl"))
-    val stats = readStats(spark, indexDir)
+    val stats = readStats(spark, set)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_dl")).as("total_dl"))
       .select(col("n_docs"),
         (col("total_dl").cast("double") / col("n_docs").cast("double"))
@@ -448,9 +423,10 @@ object IncrementalText {
   def tfidfTopTermsFromIndex(spark: SparkSession, indexDir: String,
       topK: Int = 3, idCol: String = "doc_id"): DataFrame = {
     require(topK > 0, s"topK=$topK")
-    require(hasBatches(spark, indexDir), s"empty index at $indexDir")
-    val live = liveDocs(spark, indexDir, idCol, None)
-    val tf = readTf(spark, indexDir, idCol)
+    val set = batches(spark, indexDir)
+    require(set.nonEmpty, s"empty index at $indexDir")
+    val live = liveDocs(spark, set, idCol, None)
+    val tf = readTf(spark, set, idCol)
       .join(live.select(col(idCol), col("ver")), Seq(idCol, "ver"),
         "left_semi")
       .select(col(idCol), col("token"), col("tf"))
@@ -459,48 +435,44 @@ object IncrementalText {
 
   /** Number of LIVE documents the index currently covers (per-batch
     * stats rows are additive under upserts/deletes). */
-  def indexedDocs(spark: SparkSession, indexDir: String): Long =
-    if (!hasBatches(spark, indexDir)) 0L
-    else readStats(spark, indexDir)
-      .agg(sum(col("n_docs"))).first().getLong(0)
+  def indexedDocs(spark: SparkSession, indexDir: String): Long = {
+    val b = batches(spark, indexDir)
+    if (!b.nonEmpty) 0L
+    else readStats(spark, b).agg(sum(col("n_docs"))).first().getLong(0)
+  }
 
   /** Rewrite the accumulated batch dirs as ONE batch holding only the
     * LIVE doc-versions, with `tf` clustered by token (repartition +
     * sort) — superseded postings and tombstones are physically dropped,
     * listing cost resets to O(1), and term-filtered scoring scans
     * approach one partition per term. Per-row `ver`s are PRESERVED (tf
-    * and dl rows must keep agreeing on the live version). Requires the
-    * single-writer lock to also exclude READERS for its duration (the
-    * old batch dirs are removed before the compacted one commits). */
+    * and dl rows must keep agreeing on the live version). The compacted
+    * batch commits as a set of one by one meta rename: readers keep
+    * seeing the old set until then. */
   def compactIndex(spark: SparkSession, indexDir: String,
       partitions: Int = 0, idCol: String = "doc_id"): Unit =
       graft.util.WriterLease.withLease(spark, indexDir, "compactIndex") {
-    if (!hasBatches(spark, indexDir)) return
-    val fs = fsOf(spark, indexDir)
-    // staging writes below materialize while the old batch dirs still
-    // exist; only `live` is reused twice, so only it is pinned
-    val live = liveDocs(spark, indexDir, idCol, None).localCheckpoint()
-    val tf0 = readTf(spark, indexDir, idCol)
+    val b = batches(spark, indexDir)
+    if (!b.nonEmpty) return
+    // only `live` is reused twice, so only it is pinned
+    val live = liveDocs(spark, b, idCol, None).localCheckpoint()
+    val tf0 = readTf(spark, b, idCol)
       .join(live.select(col(idCol), col("ver")), Seq(idCol, "ver"),
         "left_semi")
     val dl0 = live.select(col(idCol), col("dl"), col("ver"), col("fp"))
-    val maxVer = nextVer(spark, indexDir) - 1L
+    val maxVer = b.head.get.version
     val p = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
-    val batchId = "v%016d_compact".format(maxVer) +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = s"$indexDir/staging/$batchId"
+    val next = b.next()
+    val batch = next.dataDir("compact-")
+    val out = b.vd.path(batch)
     tf0.repartition(p, col("token")).sortWithinPartitions(col("token"))
-      .write.parquet(s"$staging/tf")
-    dl0.write.parquet(s"$staging/dl")
+      .write.parquet(s"$out/tf")
+    dl0.write.parquet(s"$out/dl")
     dl0.agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
       .select(col("n_docs"), col("total_dl"), lit(maxVer).as("ver"))
-      .coalesce(1).write.parquet(s"$staging/stats")
-    val committed = new Path(committedDir(indexDir))
-    fs.listStatus(committed).foreach(st => fs.delete(st.getPath, true))
-    require(fs.rename(new Path(staging),
-      new Path(s"${committedDir(indexDir)}/$batchId")),
-      s"compaction commit rename failed for $batchId")
+      .coalesce(1).write.parquet(s"$out/stats")
+    b.vd.commit(next, Seq(batch))
   }
 }

@@ -7,15 +7,15 @@ import org.apache.spark.sql.SparkSession
   *
   * Every durable index in this library (dedup key/band/vector indexes,
   * cluster labels, the BM25 inverted index) documents a SINGLE-WRITER
-  * contract: mutations are append-only plus occasional swap-compactions,
-  * and two concurrent writers could interleave appends with a compaction
-  * and corrupt the only durable copy. This lease makes the contract
+  * contract: mutations are appends into the head version plus occasional
+  * rewrites committed as new versions ([[VersionedDir]]), and two
+  * concurrent writers could interleave appends with a rewrite and lose
+  * an append. This lease makes the contract
   * ENFORCED instead of documented: the second writer fails fast with
   * [[ConcurrentWriterException]] rather than corrupting state.
   *
   * Mechanics: `<dir>.writer.lease` — a SIBLING of the index dir, never
-  * inside it: layout promotion and compaction rename-swap the dir
-  * wholesale, which would silently drop an in-dir lease mid-hold — is
+  * inside it, so nothing that lists or reaps the index sees it — is
   * created with `FileSystem.create(p, overwrite = false)`, an atomic
   * create-if-absent on HDFS-compatible filesystems (local, HDFS; object
   * stores without atomic create fall back to best-effort, the same caveat
@@ -39,8 +39,8 @@ import org.apache.spark.sql.SparkSession
   * carries THIS holder's id, so a holder that was (wrongly or rightly)
   * broken and superseded cannot delete the successor's lease on exit.
   *
-  * Readers never take the lease — index reads are snapshot-consistent
-  * against append-only dirs and rename-swapped compactions.
+  * Readers never take the lease — an index read resolves each part's
+  * committed head once and reads only the data it names.
   */
 object WriterLease {
 

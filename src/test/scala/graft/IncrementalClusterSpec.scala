@@ -98,50 +98,13 @@ class IncrementalClusterSpec extends AnyFunSuite {
     val stats = IncrementalDedup.compactIndex(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/remaps")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(
+      indexTable(dir, "clusters", "remaps").get)),
       "merge log survived compaction")
     assert(stats.contains(s"$dir/remaps"), stats)
     assert(resolved(dir) == before)
     // post-compact appends still merge against the folded labels
     IncrementalDedup.clusterAppend(spark, dir, pairsDF(Seq((4L, 5L))))
     assert(resolved(dir)(5L) == 1L)
-  }
-
-  test("interrupted compaction swap is healed on read (crash recovery)") {
-    val fsOf = (d: String) => new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // crash AFTER the tmp copy completed but BEFORE the rename: only the
-    // .compact sibling exists — the next read must rename it into place
-    val dir1 = tmpDir("cluster-crash1")
-    IncrementalDedup.clusterAppend(spark, dir1, pairsDF(Seq((1L, 2L), (3L, 4L))))
-    IncrementalDedup.clusterAppend(spark, dir1, pairsDF(Seq((2L, 3L))))
-    val expect = resolved(dir1)
-    val fs1 = fsOf(dir1)
-    val labels = new org.apache.hadoop.fs.Path(s"$dir1/labels")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir1/labels.compact")
-    // simulate: the complete new copy sits at the sibling, original gone
-    assert(fs1.rename(labels, tmp), "fixture rename failed")
-    assert(resolved(dir1) == expect,
-      "read did not heal the interrupted swap (only-tmp case)")
-    assert(fs1.exists(labels) && !fs1.exists(tmp))
-
-    // crash DURING the tmp write: both exist, original is authoritative —
-    // the partial tmp must be dropped, never read
-    val dir2 = tmpDir("cluster-crash2")
-    IncrementalDedup.clusterAppend(spark, dir2, pairsDF(Seq((1L, 2L), (3L, 4L))))
-    val expect2 = resolved(dir2)
-    val fs2 = fsOf(dir2)
-    val tmp2 = new org.apache.hadoop.fs.Path(s"$dir2/labels.compact")
-    fs2.mkdirs(tmp2)
-    val out = fs2.create(new org.apache.hadoop.fs.Path(tmp2, "garbage.bin"))
-    out.write(Array[Byte](1, 2, 3)); out.close()
-    assert(resolved(dir2) == expect2,
-      "partial tmp leaked into the read (both-exist case)")
-    assert(!fs2.exists(tmp2), "partial tmp not cleaned up")
-    // and a subsequent compaction runs clean
-    IncrementalDedup.clusterAppend(spark, dir2, pairsDF(Seq((2L, 3L))))
-    IncrementalDedup.compactIndex(spark, dir2)
-    assert(resolved(dir2)(4L) == 1L)
   }
 }

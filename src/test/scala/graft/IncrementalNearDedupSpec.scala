@@ -142,7 +142,7 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
         iso.read.parquet(sf0001 + "/documents.parquet")
           .filter(pmod(col("doc_id"), lit(2)) === 1),
         3, 64, 16, "doc_id", "text")
-      val dropped = IncrementalDedup.crossDropped(iso, idx, bnd, sh, 0.5, 32)
+      val dropped = IncrementalDedup.crossDropped(iso, idx, bnd, sh, 0.5)
       val plan = dropped.queryExecution.executedPlan
       pinBucketedScan(plan, "/bands")
       pinBucketedScan(plan, "/sigs")
@@ -203,16 +203,15 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false") { iso =>
       val batch = iso.read.parquet(sf0001 + "/documents.parquet")
-      val kName = kIdx.substring(kIdx.lastIndexOf('/'))
       val w = IncrementalDedup.winners(batch, "doc_id", "text")
-      val novel = IncrementalDedup.keysNovel(iso, kIdx, w, bucketed = true)
-      pinBucketedScan(novel.queryExecution.executedPlan, kName)
+      val novel = IncrementalDedup.keysNovel(iso, kIdx, w)
+      pinBucketedScan(novel.queryExecution.executedPlan, "/keys")
       assert(novel.count() == 0) // resend: nothing novel, plan ran
 
       val distinctH = graft.operators.Dedup.gramHashes(batch, 8, "doc_id", "text")
         .select(col("h")).distinct()
       val (dupSemi, novelAnti) =
-        IncrementalDedup.spanIndexLookups(iso, sIdx, distinctH, bucketed = true)
+        IncrementalDedup.spanIndexLookups(iso, sIdx, distinctH)
       pinBucketedScan(dupSemi.queryExecution.executedPlan, "/grams")
       pinBucketedScan(novelAnti.queryExecution.executedPlan, "/grams")
       assert(dupSemi.count() > 0) // resent windows are all in the index
@@ -227,10 +226,11 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
     // simulate a pre-v2 index: sigs/ rewritten with string shingles (the
     // old format); long-vs-string would coerce to array<string> and turn
     // every cross-history Jaccard into 0 — silent duplicate passthrough
-    val old = spark.read.parquet(s"$idx/sigs")
+    val sigs = indexTable(idx, "sigs", "sigs").get
+    val old = spark.read.parquet(sigs)
       .select(col("id"), transform(col("sh"), _.cast("string")).as("sh"))
       .localCheckpoint()
-    old.write.mode("overwrite").parquet(s"$idx/sigs")
+    old.write.mode("overwrite").parquet(sigs)
     val e = intercept[IllegalStateException] {
       IncrementalDedup.nearDedupAppend(spark, idx, docs, 0.5).collect()
     }
@@ -370,7 +370,8 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/gone_ids")),
       "id tombstones must survive compaction")
-    val sigIds = spark.read.parquet(s"$idx/sigs").select("id")
+    val sigIds = spark.read.parquet(indexTable(idx, "sigs", "sigs").get)
+      .select("id")
       .collect().map(_.getLong(0)).toSet
     assert(tgt.forall(t => !sigIds.contains(t) && !sigIds.contains(t + 1000L)),
       "tombstoned ids still in sigs after compaction")
@@ -436,7 +437,7 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
           // the model (pruning is lossless under any fixed centroid set)
           val report = IncrementalDedup.compactIndex(spark, idx,
             refreshIvfModel = true, refreshSeed = 7L)
-          assert(report.contains(s"$idx/ivf.refresh"), report.toString)
+          assert(report.contains(s"$idx/ivf"), report.toString)
         }
         kept
       }.reduce(_ ++ _)
@@ -451,7 +452,8 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
     val vecsTable = IncrementalDedup.indexTableName(idx, "vecs")
     val cells = spark.table(vecsTable).select("cell").distinct()
       .collect().map(_.getInt(0)).toSet
-    val radii = spark.read.parquet(s"$idx/radii").select("cell")
+    val radii = spark.read.parquet(indexTable(idx, "ivf", "radii").get)
+      .select("cell")
       .collect().map(_.getInt(0)).toSet
     assert(cells.subsetOf(radii), s"cells $cells not covered by radii $radii")
     // the refresh preserved the bucketed layout: the cross-history join
@@ -538,7 +540,7 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
     // bucketed index side still reads pre-partitioned with zero shuffle
     val w = IncrementalDedup.winners(docs.filter(col("phase") === 2),
       "doc_id", "text")
-    val plan = IncrementalDedup.keysNovel(spark, idx, w, bucketed = true)
+    val plan = IncrementalDedup.keysNovel(spark, idx, w)
       .queryExecution.executedPlan.toString
     val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
     // one exchange at most: the batch's winners; never the index scan
@@ -560,10 +562,10 @@ class IncrementalNearDedupSpec extends AnyFunSuite {
     val idx = IncrementalDedup.scratchIndexDir(spark, "span-growth")
     val docs = Tables.documents(spark, sf0001).limit(50)
     IncrementalDedup.spanDedupAppend(spark, idx, docs)
-    val n1 = spark.read.parquet(s"$idx/grams").count()
+    val n1 = spark.read.parquet(indexTable(idx, "grams", "grams").get).count()
     // re-sending the identical batch must not re-append its hashes
     IncrementalDedup.spanDedupAppend(spark, idx, docs)
-    val n2 = spark.read.parquet(s"$idx/grams").count()
+    val n2 = spark.read.parquet(indexTable(idx, "grams", "grams").get).count()
     assert(n2 == n1, s"index grew $n1 -> $n2 on an all-duplicate batch")
     // and compactIndex on the exact + span indexes is a no-op when clean
     val report = IncrementalDedup.compactIndex(spark, idx)

@@ -1371,9 +1371,7 @@ class PipelineSpec extends AnyFunSuite {
     val n2 = rm2.count()
     assert(IncrementalDedup.dedupRemove(spark, idx, rm2) == n2)
     IncrementalDedup.compactIndex(spark, idx)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + "_gone")),
+    assert(indexTable(idx, "gone", "gone").isEmpty,
       "compaction must reset the tombstone snapshot")
     assert(IncrementalDedup.indexSize(spark, idx) == total - n2)
     assert(IncrementalDedup.dedupAppend(spark, idx,

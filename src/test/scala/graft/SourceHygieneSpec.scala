@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-tree hygiene: no control bytes hiding in .scala files, and
-  * the cache layer reporting through one channel.
+/** Source-tree hygiene: no control bytes hiding in .scala files, the
+  * cache layer reporting through one channel, and durable structures
+  * committing through one helper.
   *
   * A raw NUL (or other C0 control byte) inside a source file makes git
   * treat the file as BINARY — diffs collapse to "Bin X -> Y bytes" and the
@@ -54,6 +55,27 @@ class SourceHygieneSpec extends AnyFunSuite {
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
       if banned.findFirstIn(line).isDefined
     } yield s"$p:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("durable structures commit through VersionedDir: no other rename") {
+    // a rename is how a durable structure publishes a version; every
+    // structure in the cache and operators layers commits through
+    // graft.util.VersionedDir. The one exception is IVF's durable model
+    // cache: content-keyed and best-effort, a lost file there costs a
+    // re-fit, never a wrong answer.
+    val dirs = Seq("cache", "operators")
+      .map(d => Paths.get(s"src/main/scala/graft/$d"))
+    assert(dirs.forall(Files.isDirectory(_)), "expected to run from the repo root")
+    val allowed = Set("src/main/scala/graft/operators/IVF.scala: " +
+      "if (!f.rename(tmp, dest)) f.delete(tmp, false)")
+    val offenders = for {
+      p <- dirs.flatMap(sourceFiles)
+      line <- Files.readAllLines(p).asScala
+      if """\brename\(""".r.findFirstIn(line).isDefined
+      entry = s"$p: ${line.trim}"
+      if !allowed(entry)
+    } yield entry
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

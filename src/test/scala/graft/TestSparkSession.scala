@@ -39,6 +39,18 @@ object TestSparkSession {
     try f finally ParquetQueryCache.driverStateMaxBytes = old
   }
 
+  /** the table `table` of the live head of the index part `part` (see
+    * [[graft.operators.IncrementalDedup]]'s layout), None when the part
+    * has no live head */
+  def indexTable(indexDir: String, part: String, table: String)
+      : Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(indexDir, part)
+    val vd = graft.util.VersionedDir(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    vd.head.filterNot(_.tombstone)
+      .map(h => s"${vd.path(h.dataDirs.head)}/$table")
+  }
+
   def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft-$tag-")
     d.toFile.deleteOnExit()
