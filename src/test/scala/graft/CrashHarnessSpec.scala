@@ -61,7 +61,7 @@ class CrashHarnessSpec extends AnyFunSuite {
       open: (String, Boolean) => Run)
 
   private def newDir(tag: String): String =
-    s"${tmpDir(s"crash-$tag")}/s"
+    s"${tmpDir(s"crash-${tag.replaceAll("[^A-Za-z0-9-]", "")}")}/s"
 
   /** a copy of the fixture directory tree of `fixture` (the structure's
     * dir `s` and whatever sits next to it) at a new structure dir */
