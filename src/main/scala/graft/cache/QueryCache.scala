@@ -1179,19 +1179,14 @@ final class ParquetQueryCache(rootDir: String,
     final case class Live(dir: Path, lastWriteMs: Long, bytes: Long)
     val live = fs.listStatus(root).filter(_.isDirectory).flatMap { d =>
       try {
-        val metas = fs.listStatus(d.getPath).filter(e =>
-          e.getPath.getName.startsWith("meta-") &&
-            e.getPath.getName.endsWith(".json"))
-        if (metas.isEmpty) None
-        else {
-          val head = metas.maxBy(e => e.getPath.getName.stripPrefix("meta-")
-            .stripSuffix(".json").toLongOption.getOrElse(-1L))
-          if (readMeta(fs, head.getPath).tombstone) None // already dead
+        versioned(fs, d.getPath).latest.flatMap { head =>
+          if (readMeta(fs, head).tombstone) None // already dead
           else {
             val bytes =
               if (maxBytes > 0L) fs.getContentSummary(d.getPath).getLength
               else 0L
-            Some(Live(d.getPath, head.getModificationTime, bytes))
+            Some(Live(d.getPath, fs.getFileStatus(head).getModificationTime,
+              bytes))
           }
         }
       } catch { case _: Exception => None }

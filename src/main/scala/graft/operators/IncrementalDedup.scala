@@ -648,6 +648,12 @@ object IncrementalDedup {
 
     def next(): vd.Next = vd.next(raw.map(_.version))
 
+    /** reap what the head superseded once the grace window has passed
+      * ([[VersionedDir.cleanup]]): a rewrite's commit runs it, and so does
+      * every append, so an append-only part does not keep its pre-rewrite
+      * copy until its next rewrite */
+    def reap(): Unit = try vd.cleanup() catch { case _: Exception => () }
+
     /** the part after committing `h` */
     def committed(h: VersionedDir.Head): Part = Part(indexDir, vd, Some(h))
   }
@@ -765,7 +771,10 @@ object IncrementalDedup {
       readPart(spark, p, table) // (re-)registers the table over the head
       appendBucketed(spark, df, p.path(table), p.catalogName(table),
         h.bucketBy, h.buckets)
-    case Some(_) => df.write.mode("append").parquet(p.path(table))
+      p.reap()
+    case Some(_) =>
+      df.write.mode("append").parquet(p.path(table))
+      p.reap()
     case None => rewrite(spark, p, table, df, Nil, 0)
   }
 
@@ -809,8 +818,9 @@ object IncrementalDedup {
     *     is lossless under any fixed centroid set, so model quality
     *     only affects pruning efficiency, never recall;
     *   - `radii/`: per-cell max member-to-centroid angle over every
-    *     vector ever seen — radii only GROW, so each batch APPENDS its
-    *     merged map and a read takes the max per cell; the
+    *     vector ever seen — radii only GROW, so each batch adds its
+    *     merged map, drops the file it supersedes, and a read takes the
+    *     max per cell; the
     *     triangle-inequality bound stays valid as cells accumulate
     *     members beyond the fit sample;
     *   - `vecs/`: (id, e, cell) for every vector ever seen.
@@ -924,7 +934,7 @@ object IncrementalDedup {
         // vectors not yet indexed — conservatively large, still lossless.
         // The reverse order could leave indexed vectors OUTSIDE the
         // stored radii, silently losing recall on every later batch.
-        saveRadii(spark, ivf.path("radii"), radii, "append")
+        saveRadii(spark, ivf.path("radii"), radii, replace = true)
         appendPart(spark, ivf, "vecs", placeable)
       } else commitVersion(spark, ivf, "vecs", Nil, 0) { dir =>
         saveCentroids(spark, s"$dir/model", model)
@@ -974,13 +984,22 @@ object IncrementalDedup {
     IVF.Model(cents)
   }
 
-  /** radii are k tiny driver-held rows: one file per write (`mode`
-    * append adds a batch's merged map to the head's) */
+  /** radii are k tiny driver-held rows, one file per write. With
+    * `replace`, a batch adds its merged map (the per-cell max over the
+    * stored files and the batch) to the head's table, then deletes the
+    * files it supersedes, so the table stays one file: every set of
+    * files holding the newest gives the same per-cell max, so a crash
+    * between the two steps loses nothing. Only lease holders read it. */
   private def saveRadii(spark: SparkSession, dir: String,
-      radii: Map[Int, Double], mode: String = "errorifexists"): Unit = {
+      radii: Map[Int, Double], replace: Boolean = false): Unit = {
     import spark.implicits._
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val superseded = if (!replace) Array.empty[Path]
+      else fs.listStatus(new Path(dir)).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
     radii.toSeq.toDF("cell", "radius").coalesce(1)
-      .write.mode(mode).parquet(dir)
+      .write.mode(if (replace) "append" else "errorifexists").parquet(dir)
+    superseded.foreach(fs.delete(_, false))
   }
 
   /** the max radius per cell over every file written */
@@ -1128,8 +1147,10 @@ object IncrementalDedup {
     val dir = first.fold(cl.dir)(f => cl.vd.path(f._2))
     clusterAppendTo(spark, fs, s"$dir/labels", s"$dir/remaps", pairs,
       maxDriverEdges)
-    first.foreach { case (next, d) =>
-      if (fs.exists(new Path(dir))) cl.vd.commit(next, Seq(d))
+    first match {
+      case Some((next, d)) =>
+        if (fs.exists(new Path(dir))) cl.vd.commit(next, Seq(d))
+      case None => cl.reap()
     }
   }
 
@@ -1441,7 +1462,6 @@ object IncrementalDedup {
     *
     * @return per compacted table: path -> (rowsBefore, rowsAfter) */
   def compactIndex(spark: SparkSession, indexDir: String,
-      indexBuckets: Int = 32,
       refreshIvfModel: Boolean = false,
       refreshSampleN: Int = 1024,
       refreshIters: Int = 6,

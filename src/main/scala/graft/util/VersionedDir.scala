@@ -19,8 +19,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * never writes. A crash before the rename leaves an orphan data dir (or
   * temp file) no meta names; a crash after it leaves the new version.
   * Superseded versions are not deleted at commit: [[cleanup]] drops them
-  * once they are `keepVersions` behind the head AND older than `graceMs`
-  * (a reader that resolved them may still be scanning), and reaps
+  * once they are `keepVersions` behind the head AND were superseded more
+  * than `graceMs` ago (a reader that resolved them may still be
+  * scanning); every writer of the structure runs it, and it reaps
   * orphans and abandoned temp files. A version whose data dir ends in
   * `-tomb` is a tombstone: the structure is dead, and everything below
   * it ages out.
@@ -118,8 +119,11 @@ final class VersionedDir(val fs: FileSystem, val dir: Path,
       metas.take(keepN).flatMap(m => metaDataDirs.getOrElse(m._1, Nil)).toSet
     val referencedDirs: Set[String] = metaDataDirs.values.flatten.toSet
     val cutoff = now - graceMs
-    metas.drop(keepN).foreach { case (v, e) =>
-      if (e.getModificationTime < cutoff) {
+    // the grace window runs from when a version was SUPERSEDED (its
+    // successor's commit), not from its own commit: a reader may have
+    // resolved it as the head until that moment
+    metas.zip(metas.drop(1)).drop(keepN - 1).foreach { case (succ, (v, e)) =>
+      if (succ._2.getModificationTime < cutoff) {
         try {
           metaDataDirs.getOrElse(v, Nil).filterNot(liveDataDirs.contains)
             .foreach(d => fs.delete(new Path(dir, d), true))
@@ -210,7 +214,8 @@ object VersionedDir {
   }
 
   /** a plain-head directory: the dirs of its indexes, BM25 batch sets
-    * and snapshots */
+    * and snapshots. Nothing reads a superseded plain version on purpose,
+    * so only the head is kept past the grace window. */
   def apply(fs: FileSystem, dir: Path): VersionedDir =
-    new VersionedDir(fs, dir, p => readHead(fs, p).dataDirs)
+    new VersionedDir(fs, dir, p => readHead(fs, p).dataDirs, keepVersions = 1)
 }

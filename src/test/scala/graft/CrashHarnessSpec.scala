@@ -84,6 +84,7 @@ class CrashHarnessSpec extends AnyFunSuite {
     CrashingFs.arm(d, 0L)
     after.mutate()
     val ops = CrashingFs.log.asScala.toSeq
+      .map(_.replace(new Path(d).getParent.toString, ""))
     CrashingFs.disarm()
     val a1 = after.check()
     val a2 = if (after.next()) after.check() else Nil
@@ -136,14 +137,16 @@ class CrashHarnessSpec extends AnyFunSuite {
       .map(masked.replaceAllIn(_, "*")).toSeq.sorted
   }
 
-  /** every crash point of `p`: (N, same-session outcome, restarted) */
-  private def crashPoints(p: Protocol): Seq[(Int, String, String)] = {
+  /** every crash point of `p`: (N, same-session outcome, restarted),
+    * with the un-crashed run's operations */
+  private def crashPoints(p: Protocol)
+      : (Seq[(Int, String, String)], Seq[String]) = {
     val fixture = newDir(p.name)
     p.open(CrashingFs.uri(fixture), true)
     val (first, then, ops) = reference(p, fixture)
     assert(ops.nonEmpty, s"${p.name}: the mutation issued no operation")
     val seen = scala.collection.mutable.Map.empty[Seq[String], (Int, String, String)]
-    (1 to ops.size).map { n =>
+    ((1 to ops.size).map { n =>
       if (ops(n - 1).contains("/_temporary/") &&
           !ops(n - 1).startsWith("rename")) (n, "staging, not re-run", "staging, not re-run")
       else {
@@ -163,12 +166,13 @@ class CrashHarnessSpec extends AnyFunSuite {
           out
       }
       }
-    }
+    }, ops)
   }
 
   private def harness(p: Protocol): Unit = withShufflePartitions {
-    val points = crashPoints(p)
-    points.foreach { case (n, a, b) => info(s"${p.name} op $n: $a | $b") }
+    val (points, ops) = crashPoints(p)
+    points.foreach { case (n, a, b) =>
+      info(s"${p.name} op $n (${ops(n - 1)}): $a | $b") }
     val wrong = points.filter { case (_, a, b) =>
       !ok(a) || !ok(b) }
     assert(wrong.isEmpty, s"${p.name}: ${wrong.mkString("; ")}")
@@ -207,7 +211,7 @@ class CrashHarnessSpec extends AnyFunSuite {
       }
       new Run {
         def mutate(): Unit =
-          IncrementalDedup.compactIndex(spark, dir, indexBuckets = 2)
+          IncrementalDedup.compactIndex(spark, dir)
         def check(): Seq[String] = ids(append(docs.filter(col("doc_id") >= 20)
           .withColumn("doc_id", col("doc_id") + 1000L)), "doc_id")
         def read(): Unit = ()
